@@ -3781,8 +3781,10 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent DuckDB oracle reproduces the float32 values bit-for-bit
     from the same closed forms (the rFFT spectral features and gradient
     energies stay pytest-covered; their float sums are order-sensitive).
-    Plan: two map-only Arrow stages (synth, decode+featurize), zero
-    shuffle before the tiny final projection."""
+    Plan: two map-only Arrow stages (synth, decode+featurize), then the
+    final sort's range exchange. ``fan_scan`` adds one round-robin
+    exchange ahead of the synth stage when the id scan yields fewer
+    partitions than cores (small inputs); at scale it adds none."""
     from global_stock_data_warehouse_spark.operators.multimodal import (
         extract_features_typed,
         synth_media_fixture,

@@ -22,6 +22,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from global_stock_data_warehouse_spark.storage.compact import table_exists
+
 
 def delta_available() -> bool:
     try:  # delta-spark is optional in this environment
@@ -59,11 +61,19 @@ def upsert_keyed(
     path: str,
     key_cols: Sequence[str],
     order_col: str = "_ingest_ts",
-) -> None:
+    existing: DataFrame | None = None,
+) -> DataFrame:
     """Idempotent last-writer-wins upsert of ``new_rows`` into ``path``.
 
     Adds ``order_col`` (ingest timestamp) if absent. Prefers Delta MERGE;
-    falls back to read-union-dedup-overwrite on plain Parquet.
+    falls back to read-union-dedup-overwrite on plain Parquet, where
+    ``existing`` is the stored table when the caller has already read it,
+    so the store is listed once. Without it the table is read here if
+    ``path`` exists; a table that exists but cannot be read raises.
+
+    Returns the table as written: on Parquet the materialised rows of the
+    overwrite, so callers aggregate them without reading the store again;
+    on Delta the table after the merge.
     """
     if order_col not in new_rows.columns:
         new_rows = new_rows.withColumn(order_col, F.current_timestamp())
@@ -81,17 +91,16 @@ def upsert_keyed(
                 .whenNotMatchedInsertAll()
                 .execute()
             )
-            return
-        new_rows.write.format("delta").mode("overwrite").save(path)
-        return
+        else:
+            new_rows.write.format("delta").mode("overwrite").save(path)
+        return DeltaTable.forPath(spark, path).toDF()
 
     # Parquet fallback: read-modify-overwrite with window dedup.
-    try:
+    if existing is None and table_exists(spark, path):
         existing = spark.read.parquet(path)
-    except Exception:
-        existing = None
     combined = new_rows if existing is None else existing.unionByName(new_rows, allowMissingColumns=True)
-    deduped = dedup_last_writer(combined, key_cols, order_col)
     # Materialize before overwrite: lazy plans must not read the path being
     # replaced mid-write. localCheckpoint severs lineage to the source files.
-    deduped.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
+    written = dedup_last_writer(combined, key_cols, order_col).localCheckpoint(eager=True)
+    written.write.mode("overwrite").parquet(path)
+    return written

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from global_stock_data_warehouse_spark.operators.upsert import upsert_keyed
 from global_stock_data_warehouse_spark.operators.validate import needs_update
 from global_stock_data_warehouse_spark.sources.fetch import fetch_timeseries, split_quarantine
+from global_stock_data_warehouse_spark.storage.compact import table_exists
 
 BAR_SCHEMA = (
     "date string, open double, high double, low double, close double, "
@@ -60,27 +61,25 @@ def sync_market(
 ) -> dict:
     """One market sync run. ``as_of`` drives the incremental gate: if the
     stored watermark already covers it, the fetch is skipped entirely
-    (main.py:101-112 intent, without the bare-except)."""
-    existing = None
-    try:
-        existing = spark.read.parquet(bars_path)
-    except Exception:
-        pass  # first run: nothing stored yet
+    (main.py:101-112 intent, without the bare-except). A bars store that
+    exists but cannot be read raises instead of passing for empty."""
+    existing = spark.read.parquet(bars_path) if table_exists(spark, bars_path) else None
 
     if as_of is not None and existing is not None and not needs_update(
         existing, str(as_of), date_col="date"
     ):
         return {"skipped": True, "has_changed": False, **get_summary(existing)}
 
+    # Materialised once: the dead letters and the upsert read the same
+    # rows, and fetch_fn runs once per symbol.
     fetched = fetch_timeseries(
         symbols, fetch_fn, schema, max_concurrency=max_workers
-    )
+    ).localCheckpoint(eager=True)
     ok, dead = split_quarantine(fetched)
     fail_list = [r.symbol for r in dead.select("symbol").limit(10).collect()]
     ok = ok.filter(F.col("date").isNotNull())
-    upsert_keyed(spark, ok, bars_path, ("date", "symbol"))
+    stored = upsert_keyed(spark, ok, bars_path, ("date", "symbol"), existing=existing)
 
-    stored = spark.read.parquet(bars_path)
     n_requested = symbols.count()
     summary = get_summary(stored)
     return {

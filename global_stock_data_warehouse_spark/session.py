@@ -17,6 +17,22 @@ from pyspark.sql import SparkSession
 # coalesces down when partitions are small, so erring high is safe at scale.
 _DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# Generated-code cache (Spark's default: 100 classes, evicted least recently
+# used). A working set that cycles through more classes than the cache holds
+# misses on every lookup, so Janino and then the JIT recompile the same
+# classes on every repeat. Measured with the perfbench workloads on a 4-core
+# host, Janino compiles per op at each size:
+#
+#   cache size           100    200    400    1000
+#   daily_sync (a day)   140      4      4       4
+#   query_mix (a query)   21      0      0       0
+#
+# A daily_sync day cycles through about 144 classes and a pass over the
+# query sample through about 150. The 4 a day left are two stages compiled
+# twice each that inline a run-time timestamp as a literal: the upsert's
+# ingest time and the W/M/Y audit record's execution time. 200 is the
+# smallest size that stops the repeats; 400 holds both working sets at once.
+_CODEGEN_CACHE_MAX_ENTRIES = 400
 
 
 def get_spark(app_name: str = "gsdw-spark", master: str | None = None) -> SparkSession:
@@ -54,6 +70,7 @@ def get_spark(app_name: str = "gsdw-spark", master: str | None = None) -> SparkS
         # ANSI off: the reference's semantics are permissive (nulls flow
         # through); ANSI-on would raise on e.g. bad casts the pipeline gates.
         .config("spark.sql.ansi.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_MAX_ENTRIES))
     )
     if master is not None:
         builder = builder.master(master)

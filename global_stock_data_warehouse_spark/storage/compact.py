@@ -25,6 +25,15 @@ import uuid
 from pyspark.sql import SparkSession
 
 
+def table_exists(spark: SparkSession, path: str) -> bool:
+    """Whether anything is stored at ``path``, asked of the Hadoop
+    FileSystem (any scheme Spark reads). Writers decide "first run" from
+    this, not from a failed read: a store that exists but cannot be read
+    must raise, not pass for empty and be overwritten."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
+
+
 def table_file_stats(spark: SparkSession, path: str) -> tuple[int, int]:
     """(n_files, total_bytes) of the parquet table at ``path``.
 

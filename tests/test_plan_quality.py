@@ -75,6 +75,7 @@ def test_corpus_clean_single_scan_whole_stage_codegen(spark, sf_dir):
         plan.count("Exchange") == keyed_or_rr + bcast + reused + range_x + single
     ), plan
     assert range_x == 0 and single == 0, plan
+    assert bcast == 0 and reused == 0, plan
 
 
 def test_profile_has_no_expand_either_mode(spark, sf_dir):

@@ -211,6 +211,9 @@ def test_delta_merge_contract(spark, tmp_path, monkeypatch):
             calls["cond"] = cond
             return FakeMergeBuilder()
 
+        def toDF(self):
+            return "merged table"
+
     class FakeDeltaTable:
         @staticmethod
         def isDeltaTable(s, p):
@@ -231,10 +234,11 @@ def test_delta_merge_contract(spark, tmp_path, monkeypatch):
     new_rows = spark.createDataFrame(
         [("2024-01-02", "2330.TW", 10.0)], "date string, symbol string, close double"
     )
-    upsert_mod.upsert_keyed(spark, new_rows, str(tmp_path / "delta_t"), ("date", "symbol"))
+    written = upsert_mod.upsert_keyed(spark, new_rows, str(tmp_path / "delta_t"), ("date", "symbol"))
 
     assert calls["cond"] == "t.date = s.date AND t.symbol = s.symbol"
     assert calls.get("matched") and calls.get("not_matched") and calls.get("executed")
+    assert written == "merged table"  # the table after the merge, for the summary
 
 
 # ---------------------------------------------------------------------------
