@@ -81,29 +81,7 @@ from global_stock_data_warehouse_spark.operators.timeseries import (
     tech_indicators,
 )
 from global_stock_data_warehouse_spark.operators.upsert import dedup_last_writer
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if name != "events":
-        return spark.read.parquet(path)
-    # events.ts has shipped as parquet TIMESTAMP(NANOS) in some testdata
-    # generations (Spark's vectorized reader rejects it outright) and as
-    # TIMESTAMP(MICROS) without isAdjustedToUTC (read as TIMESTAMP_NTZ,
-    # which refuses casts like ts.cast('long')) in others. Normalize BOTH
-    # to session-tz TIMESTAMP (session tz is UTC) so every query sees one
-    # type regardless of which generation is on disk.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    ts_type = dict(df.dtypes).get("ts")
-    if ts_type in ("bigint", "long"):
-        # integer DIV, not /1000: float division of ~1.7e18 nanos loses
-        # sub-microsecond precision (53-bit mantissa) and shifts timestamps
-        # by ±1us vs the oracle
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    elif ts_type == "timestamp_ntz":
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+from global_stock_data_warehouse_spark.sources.registry import load_table
 
 
 def _event_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -118,7 +96,7 @@ def _event_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     poisons OHLC aggregates, and a NULL entity becomes a phantom
     symbol."""
     return (
-        _t(spark, sf_dir, "events")
+        load_table(spark, "events", sf_dir)
         .filter(
             F.col("user_id").isNotNull()
             & F.col("ts").isNotNull()
@@ -279,7 +257,7 @@ def q_wmy_gold_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_agg_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1-A4: single-pass COUNT DISTINCT + MAX + COUNT(*) (main.py:118)."""
-    return _t(spark, sf_dir, "lineitem").agg(
+    return load_table(spark, "lineitem", sf_dir).agg(
         F.countDistinct("l_partkey").alias("n_parts"),
         F.max("l_shipdate").alias("max_shipdate"),
         F.count(F.lit(1)).alias("n_rows"),
@@ -288,7 +266,7 @@ def q_agg_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5-analog grouped multi-agg with arithmetic (TPC-H Q1 shape)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -308,7 +286,7 @@ def q_dedup_last_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiebreak is a column SEQUENCE, not a struct — a struct order column
     re-ships its fields through the window shuffle next to the bare
     output columns (21.2 -> 12.9 MB at sf0.1)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     out = dedup_last_writer(
         li, ("l_partkey", "l_suppkey"), ("l_shipdate", "l_orderkey", "l_linenumber")
     )
@@ -317,7 +295,7 @@ def q_dedup_last_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_filter_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P4-P7 + F1/F2: predicate chain + canonicalization on part."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, "part", sf_dir)
     return (
         p.filter(
             (F.col("p_size") >= 4)
@@ -335,8 +313,8 @@ def q_filter_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_join_broadcast_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1: broadcast dim lookup + coalesce default (KR industry join)."""
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation").select(
+    cust = load_table(spark, "customer", sf_dir)
+    nation = load_table(spark, "nation", sf_dir).select(
         F.col("n_nationkey").alias("c_nationkey"), F.col("n_name").alias("nation_name")
     )
     out = broadcast_lookup(
@@ -350,8 +328,8 @@ def q_join_broadcast_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_join_facts_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2: fact x dim equi-join + grouped rollup (orders x customer)."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = load_table(spark, "orders", sf_dir)
+    c = load_table(spark, "customer", sf_dir)
     return (
         o.join(c, o.o_custkey == c.c_custkey, "inner")
         .groupBy("c_mktsegment")
@@ -364,21 +342,21 @@ def q_join_facts_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_join_anti_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anti-join: customers with zero orders (coverage/fail_list)."""
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    o = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("c_custkey"))
+    c = load_table(spark, "customer", sf_dir).select("c_custkey", "c_name")
+    o = load_table(spark, "orders", sf_dir).select(F.col("o_custkey").alias("c_custkey"))
     return anti_missing(c, o, "c_custkey")
 
 
 def q_join_semi_active(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-join: suppliers with at least one lineitem."""
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    li = _t(spark, sf_dir, "lineitem").select(F.col("l_suppkey").alias("s_suppkey"))
+    s = load_table(spark, "supplier", sf_dir).select("s_suppkey", "s_name")
+    li = load_table(spark, "lineitem", sf_dir).select(F.col("l_suppkey").alias("s_suppkey"))
     return semi_active(s, li, "s_suppkey")
 
 
 def q_win_rank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Engine op win_rank_topk: top-3 orders per priority by totalprice."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     w = Window.partitionBy("o_orderpriority").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
     )
@@ -398,7 +376,7 @@ def q_agg_gap_max(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_agg_boolean_any(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8: per-group boolean gates (any(cond)) as max(when)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     return li.groupBy("l_returnflag").agg(
         F.max(F.when(F.col("l_discount") > 0.08, 1).otherwise(0)).cast("boolean").alias("any_deep_discount"),
         F.max(F.when(F.col("l_quantity") <= 0, 1).otherwise(0)).cast("boolean").alias("any_nonpositive_qty"),
@@ -407,7 +385,7 @@ def q_agg_boolean_any(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_agg_groupwise_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6+F10+F12: success counts, 2-dp rate, status flag per group."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     agg = o.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("total"),
         F.sum(F.when(F.col("o_orderstatus") == "F", 1).otherwise(0)).alias("finished"),
@@ -421,7 +399,7 @@ def q_agg_groupwise_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_scalar_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1-F9: string/date/math scalar expressions in one projection."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     return o.select(
         "o_orderkey",
         F.upper(F.trim(F.col("o_orderpriority"))).alias("prio_canon"),
@@ -437,7 +415,7 @@ def q_scalar_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F13: JSON path extraction + grouped count on events.props."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, "events", sf_dir)
     k = F.get_json_object("props", "$.k").cast("bigint")
     return (
         ev.select(k.alias("k"))
@@ -448,7 +426,7 @@ def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_sort_limit_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O1+O2: global deterministic sort + limit."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     return (
         li.orderBy(F.col("l_extendedprice").desc(), F.col("l_orderkey"), F.col("l_linenumber"))
         .select("l_orderkey", "l_linenumber", "l_extendedprice")
@@ -458,7 +436,7 @@ def q_sort_limit_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_filter_date_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P10: partition-prunable date-range filter + monthly rollup."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     return (
         li.filter(F.col("l_shipdate") >= F.lit("1996-01-01"))
         .groupBy(F.trunc(F.to_date("l_shipdate"), "month").alias("ship_month"))
@@ -468,9 +446,9 @@ def q_filter_date_range(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_summary_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """get_db_summary composite (A1-A4+A6+F12): per-nation coverage report."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    n = _t(spark, sf_dir, "nation")
+    c = load_table(spark, "customer", sf_dir)
+    o = load_table(spark, "orders", sf_dir)
+    n = load_table(spark, "nation", sf_dir)
     per_cust = o.groupBy("o_custkey").agg(F.count(F.lit(1)).alias("n_orders"))
     joined = c.join(per_cust, c.c_custkey == per_cust.o_custkey, "left")
     agg = (
@@ -541,7 +519,7 @@ def q_sessionize_skewsafe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, "events", sf_dir)
         .filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
         .select("user_id", "event_id", "ts", "value")
     )
@@ -563,7 +541,7 @@ def q_drift_alert_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     beyond the availableNow pytest harness."""
     from global_stock_data_warehouse_spark.streaming.pipeline import drift_alerts
 
-    ev = _t(spark, sf_dir, "events").filter(
+    ev = load_table(spark, "events", sf_dir).filter(
         F.col("event_type").isNotNull()
         & F.col("value").isNotNull()
         & F.col("event_id").isNotNull()
@@ -599,7 +577,7 @@ def q_pps_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return pps_systematic_sample(
-        _t(spark, sf_dir, "documents"), k=100, weight_col="n_chars"
+        load_table(spark, "documents", sf_dir), k=100, weight_col="n_chars"
     )
 
 
@@ -616,7 +594,7 @@ def q_gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         gopher_quality_flags,
     )
 
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id").isNotNull())
+    docs = load_table(spark, "documents", sf_dir).filter(F.col("doc_id").isNotNull())
     return gopher_quality_flags(docs, min_words=20).orderBy("doc_id")
 
 
@@ -631,7 +609,7 @@ def q_mixture_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         mixture_epoch_plan,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, "documents", sf_dir)
     return mixture_epoch_plan(
         docs,
         token_budget=1_000_000,
@@ -649,7 +627,7 @@ def q_stratified_quota_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         stratified_quota_split,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, "documents", sf_dir)
     return stratified_quota_split(
         docs, quotas={"val": 100, "test": 50}
     ).orderBy("doc_id")
@@ -680,8 +658,8 @@ def q_win_rolling_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cube_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE grouping sets over nation x mktsegment with grouping_id —
     map-side partial agg + one shuffle; Catalyst expands the sets."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
+    c = load_table(spark, "customer", sf_dir)
+    n = load_table(spark, "nation", sf_dir)
     joined = c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey).select(
         F.col("n_name").alias("nation"), F.col("c_mktsegment").alias("segment"), "c_acctbal"
     )
@@ -708,8 +686,8 @@ def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set-operation battery: INTERSECT ALL / EXCEPT ALL multiset semantics
     plus U1+U2 (union frames then distinct keys, downloader_tw.py:47-76
     intent), tagged and unioned into one checked result."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
+    c = load_table(spark, "customer", sf_dir).select(F.col("c_nationkey").alias("nationkey"))
+    s = load_table(spark, "supplier", sf_dir).select(F.col("s_nationkey").alias("nationkey"))
     both = c.intersectAll(s).withColumn("op", F.lit("intersect"))
     only_c = c.exceptAll(s).withColumn("op", F.lit("except"))
     uni = c.unionByName(s).distinct().withColumn("op", F.lit("union"))
@@ -724,7 +702,7 @@ def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot with an EXPLICIT value list (no extra distinct-scan job):
     order counts per priority x status."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     piv = (
         o.groupBy("o_orderpriority")
         .pivot("o_orderstatus", ["F", "O", "P"])
@@ -743,7 +721,7 @@ def q_window_tumbling_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets per user via F.window (same semantics as streaming/pipeline)."""
     # same uniform NULL exclusion as hopping_window_agg/decayed_totals,
     # plus the entity key; mirrored in the oracle's WHERE
-    ev = _t(spark, sf_dir, "events").filter(
+    ev = load_table(spark, "events", sf_dir).filter(
         F.col("user_id").isNotNull()
         & F.col("ts").isNotNull()
         & F.col("value").isNotNull()
@@ -764,9 +742,9 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: 3-way selective join + grouped revenue + top-10.
     Filters reach every scan (pushdown); AQE picks join strategy; the
     top-k is a TakeOrderedAndProject, not a global sort."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < F.lit("1997-01-01"))
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > F.lit("1997-01-01"))
+    c = load_table(spark, "customer", sf_dir).filter(F.col("c_mktsegment") == "BUILDING")
+    o = load_table(spark, "orders", sf_dir).filter(F.col("o_orderdate") < F.lit("1997-01-01"))
+    li = load_table(spark, "lineitem", sf_dir).filter(F.col("l_shipdate") > F.lit("1997-01-01"))
     return (
         c.join(o, c.c_custkey == o.o_custkey)
         .join(li, o.o_orderkey == li.l_orderkey)
@@ -784,15 +762,15 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape: 5-way join through the region/nation snowflake with
     the customer-nation == supplier-nation constraint, grouped revenue."""
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    n = _t(spark, sf_dir, "nation")
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    r = load_table(spark, "region", sf_dir).filter(F.col("r_name") == "ASIA")
+    n = load_table(spark, "nation", sf_dir)
+    c = load_table(spark, "customer", sf_dir)
+    o = load_table(spark, "orders", sf_dir).filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01"))
         & (F.col("o_orderdate") < F.lit("1997-01-01"))
     )
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
+    li = load_table(spark, "lineitem", sf_dir)
+    s = load_table(spark, "supplier", sf_dir)
     return (
         c.join(o, c.c_custkey == o.o_custkey)
         .join(li, o.o_orderkey == li.l_orderkey)
@@ -815,11 +793,11 @@ def q_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed only over the ~1/25th of lineitem that can matter, and both
     the part dim and the tiny avg table broadcast."""
     p = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, "part", sf_dir)
         .filter(F.col("p_brand") == "Brand#1")
         .select("p_partkey")
     )
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, "lineitem", sf_dir).select(
         "l_partkey", "l_quantity", "l_extendedprice"
     )
     li_b = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
@@ -839,14 +817,14 @@ def q_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     price. The HAVING aggregate runs map-side-partial on l_orderkey; the
     surviving key set is tiny and broadcasts into the main join; ordering
     tie-broken by unique o_orderkey for determinism."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
+    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_quantity")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("sum_qty"))
         .filter(F.col("sum_qty") > 250)
     )
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = load_table(spark, "orders", sf_dir)
+    c = load_table(spark, "customer", sf_dir)
     return (
         o.join(F.broadcast(big), o.o_orderkey == big.l_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -869,11 +847,11 @@ def q_order_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     rest), the LEFT SEMI join stops probing an order at its first late
     line (no fan-out, no distinct), and the final 5-group count is
     map-side partial."""
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, "orders", sf_dir).filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01"))
         & (F.col("o_orderdate") < F.lit("1996-04-01"))
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_shipdate")
     late = o.join(
         li,
         (o.o_orderkey == li.l_orderkey)
@@ -903,8 +881,8 @@ def q_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     adapted)."""
     from global_stock_data_warehouse_spark.operators.skew import fan_keyed
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_suppkey", "l_shipdate")
+    o = load_table(spark, "orders", sf_dir).select("o_orderkey", "o_orderdate")
     # parallelism floor on the join key (r13; guide §2.5): the join, the
     # (order, supplier) dedup aggregate, and the per-order aggregate all
     # cluster on l_orderkey, so ONE pinned-wide exchange (AQE coalesces
@@ -929,7 +907,7 @@ def q_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.when(F.col("is_late") == 1, F.col("l_suppkey"))).alias("late_supp"),
     )
     qual = per_order.filter((F.col("n_supp") > 1) & (F.col("n_late") == 1))
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    s = load_table(spark, "supplier", sf_dir).select("s_suppkey", "s_name")
     return (
         qual.join(F.broadcast(s), qual.late_supp == s.s_suppkey)
         .groupBy("s_name")
@@ -948,12 +926,12 @@ def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     (round(x*10000) bigint sums) so both numerator and denominator are
     order-independent integers — the share division is then bit-stable
     across engines."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    li = load_table(spark, "lineitem", sf_dir)
+    o = load_table(spark, "orders", sf_dir).select("o_orderkey", "o_custkey", "o_orderdate")
+    c = load_table(spark, "customer", sf_dir).select("c_custkey", "c_nationkey")
+    n = load_table(spark, "nation", sf_dir)
+    r = load_table(spark, "region", sf_dir)
+    s = load_table(spark, "supplier", sf_dir).select("s_suppkey", "s_nationkey")
     cust_nat = c.join(
         F.broadcast(n.select("n_nationkey", "n_regionkey")),
         c.c_nationkey == F.col("n_nationkey"),
@@ -990,7 +968,7 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     PK, null-safe compare, insert/update/delete classification; unchanged
     rows die in the join stage. Snapshots are deterministic slices of
     lineitem (ln<=4 vs ln>=2 with quantity bumped on returned rows)."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, "lineitem", sf_dir).select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_returnflag"
     )
     old = li.filter(F.col("l_linenumber") <= 4).select(
@@ -1010,7 +988,7 @@ def q_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-scan data-quality profile of orders: per-column null count,
     distinct count, min/max — single wide aggregation + stack unpivot."""
     return profile_table(
-        _t(spark, sf_dir, "orders"),
+        load_table(spark, "orders", sf_dir),
         ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority"],
     )
 
@@ -1021,7 +999,7 @@ def q_range_join_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
     per point, interval exploded to overlapped buckets) + residual range
     predicate — never a nested-loop theta join."""
     o = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, "orders", sf_dir)
         .filter(F.col("o_orderpriority") == "1-URGENT")
         .select(
             "o_orderkey",
@@ -1029,7 +1007,7 @@ def q_range_join_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("o_orderdate") + F.expr("INTERVAL 7 DAYS")).alias("_end"),
         )
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_shipdate", "l_quantity")
+    li = load_table(spark, "lineitem", sf_dir).select("l_shipdate", "l_quantity")
     # Decisive scale move: the join predicate AND both outputs depend only
     # on l_shipdate, so the fact side pre-aggregates LOSSLESSLY to one row
     # per ship day (count + qty sum; quantities are integral, so partial
@@ -1059,7 +1037,7 @@ def q_multi_res_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hypertable-style continuous aggregate: day/week/month rollups of
     events in ONE grouping-sets pass (one scan, one shuffle, shared
     map-side partials) instead of three separate aggregations."""
-    ev = _t(spark, sf_dir, "events").select("user_id", "ts", "value")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "ts", "value")
     out = multi_resolution_rollup(ev)
     return out.withColumn("bucket_start", F.to_date("bucket_start"))
 
@@ -1069,7 +1047,7 @@ def q_tech_indicators(spark: SparkSession, sf_dir: str) -> DataFrame:
     20-day volatility of log returns, RSI(14), Bollinger(20,2). One
     shuffle for the whole chain (HashPartitioning(user_id) satisfies the
     daily groupBy AND every window)."""
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
     return tech_indicators(ev)
 
 
@@ -1083,14 +1061,14 @@ def q_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
         autocorrelation,
     )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
     return autocorrelation(daily_close(ev))
 
 
 def q_drawdown_cumret(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-entity max drawdown (min close/running-peak - 1) and total
     cumulative return — running-max window + one final agg, one shuffle."""
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
     return drawdown_stats(daily_close(ev))
 
 
@@ -1106,7 +1084,7 @@ def q_split_adjusted_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
         split_adjusted_prices,
     )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
     return split_adjusted_prices(daily_close(ev)).select(
         "user_id", "d", "close", "split_ratio", "adj_factor", "adj_close"
     )
@@ -1120,7 +1098,7 @@ def q_range_position(spark: SparkSession, sf_dir: str) -> DataFrame:
         range_position_summary,
     )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
     return range_position_summary(daily_close(ev), window=20)
 
 
@@ -1133,7 +1111,7 @@ def q_overnight_intraday(spark: SparkSession, sf_dir: str) -> DataFrame:
         overnight_intraday_split,
     )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
     return overnight_intraday_split(ev)
 
 
@@ -1147,7 +1125,7 @@ def q_liquidity_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         liquidity_screen,
     )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
     return liquidity_screen(ev, window=20, n_tiles=10)
 
 
@@ -1160,7 +1138,7 @@ def q_stale_price_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
         stale_price_runs,
     )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
     return stale_price_runs(daily_close(ev), grid=2.0, min_run=2)
 
 
@@ -1173,7 +1151,7 @@ def q_amihud_illiquidity(spark: SparkSession, sf_dir: str) -> DataFrame:
         amihud_illiquidity,
     )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
     return amihud_illiquidity(ev)
 
 
@@ -1187,7 +1165,7 @@ def q_underwater_spells(spark: SparkSession, sf_dir: str) -> DataFrame:
         underwater_spells,
     )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
     return underwater_spells(daily_close(ev))
 
 
@@ -1199,7 +1177,7 @@ def q_turn_of_month(spark: SparkSession, sf_dir: str) -> DataFrame:
         turn_of_month_effect,
     )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
     return turn_of_month_effect(daily_close(ev), edge_days=3)
 
 
@@ -1213,7 +1191,7 @@ def q_calendar_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         trading_calendar_coverage,
     )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
     return trading_calendar_coverage(daily_close(ev), min_coverage=0.95)
 
 
@@ -1225,7 +1203,7 @@ def q_volume_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         volume_profile_by_hour,
     )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
     return volume_profile_by_hour(ev)
 
 
@@ -1235,7 +1213,7 @@ def q_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     group-bounded aggregate; |langs|^2 cells out, ever."""
     from global_stock_data_warehouse_spark.operators.text import lang_confusion
 
-    return lang_confusion(_t(spark, sf_dir, "documents"))
+    return lang_confusion(load_table(spark, "documents", sf_dir))
 
 
 def q_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1246,7 +1224,7 @@ def q_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         lexical_diversity,
     )
 
-    return lexical_diversity(_t(spark, sf_dir, "documents"), low_ttr=0.5)
+    return lexical_diversity(load_table(spark, "documents", sf_dir), low_ttr=0.5)
 
 
 def q_index_daily_return(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1258,7 +1236,7 @@ def q_index_daily_return(spark: SparkSession, sf_dir: str) -> DataFrame:
         index_daily_return,
     )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
     return index_daily_return(daily_close(ev))
 
 
@@ -1270,7 +1248,7 @@ def q_factor_rank_ic(spark: SparkSession, sf_dir: str) -> DataFrame:
         factor_rank_ic,
     )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
     return factor_rank_ic(daily_close(ev), min_members=3)
 
 
@@ -1280,7 +1258,7 @@ def q_risk_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned percentile/quantile_cont pairing."""
     from global_stock_data_warehouse_spark.operators.pricing import risk_summary
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
     return risk_summary(daily_close(ev), min_days=5)
 
 
@@ -1293,7 +1271,7 @@ def q_decile_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
         decile_spread_backtest,
     )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
     return decile_spread_backtest(daily_close(ev), n_tiles=5, min_members=10)
 
 
@@ -1306,7 +1284,7 @@ def q_packing_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return packing_efficiency(
-        _t(spark, sf_dir, "documents"), ctx_len=64, n_shards=8, seed=42
+        load_table(spark, "documents", sf_dir), ctx_len=64, n_shards=8, seed=42
     )
 
 
@@ -1316,7 +1294,7 @@ def q_beta_vs_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     slope/alpha are single closed-form double divisions."""
     from global_stock_data_warehouse_spark.operators.pricing import beta_vs_index
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
     return beta_vs_index(daily_close(ev), min_days=5)
 
 
@@ -1328,7 +1306,7 @@ def q_calendar_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
         calendar_anomalies,
     )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
     return calendar_anomalies(daily_close(ev))
 
 
@@ -1341,7 +1319,7 @@ def q_market_regime_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
         market_regime_streaks,
     )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
     return market_regime_streaks(daily_close(ev))
 
 
@@ -1357,7 +1335,7 @@ def q_funnel_3step(spark: SparkSession, sf_dir: str) -> DataFrame:
     tools/explain_audit.py; this shape is 2 exchanges). Per-user arrays
     are bounded by per-entity activity; a power-user skew cap would
     pre-filter to the funnel's event types (done below) and window."""
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_type", "ts")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_type", "ts")
     per_user = (
         ev.filter(F.col("event_type").isin("view", "click", "purchase"))
         .groupBy("user_id")
@@ -1411,7 +1389,7 @@ def _sessionized(spark: SparkSession, sf_dir: str, extra_cols: tuple = ()) -> Da
     # would otherwise split sessions differently per engine (Spark
     # sorts NULLS FIRST, DuckDB NULLS LAST)
     ev = (
-        _t(spark, sf_dir, "events")
+        load_table(spark, "events", sf_dir)
         .filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
         .select(*cols)
     )
@@ -1450,7 +1428,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Statistical aggregates: correlation, sample stddev/variance, exact
     interpolated median and p75 per group."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     # one percentile(col, array(...)) = one sort-agg for both quantiles,
     # instead of separate median + percentile sort-aggregates
     pcts = F.percentile("l_extendedprice", F.array(F.lit(0.5), F.lit(0.75)))
@@ -1476,7 +1454,7 @@ def q_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 scale path: HyperLogLog++ approx distinct vs exact, per
     returnflag (sketch-based -> rows-only check, no SQL oracle)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     return li.groupBy("l_returnflag").agg(
         F.approx_count_distinct("l_partkey", 0.02).alias("approx_parts"),
         F.countDistinct("l_partkey").alias("exact_parts"),
@@ -1490,14 +1468,14 @@ def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text battery: token counts, quality ratios, lang-ID, fingerprint."""
-    return text_stats(_t(spark, sf_dir, "documents"))
+    return text_stats(load_table(spark, "documents", sf_dir))
 
 
 def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LLM-pipeline chunking: 32-token windows, 8-token overlap. Map-only
     (split + sequence + explode), no shuffle."""
     return chunk_documents(
-        _t(spark, sf_dir, "documents"), chunk_tokens=32, overlap=8
+        load_table(spark, "documents", sf_dir), chunk_tokens=32, overlap=8
     )
 
 
@@ -1505,14 +1483,14 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprints (Schleimer et al., SIGMOD'03): min-hash of
     each sliding window of k-shingle hashes. Hash values are
     xxhash64-specific -> rows-only check, no SQL oracle."""
-    return winnow_fingerprints(_t(spark, sf_dir, "documents"), k=3, window=4)
+    return winnow_fingerprints(load_table(spark, "documents", sf_dir), k=3, window=4)
 
 
 def q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composed training-data pipeline: score -> quality-gate -> exact
     dedup keep-one. One scan, one narrow projection chain, one window on
     the fingerprint — the minimal-shuffle shape of a corpus-cleaning job."""
-    st = text_stats(_t(spark, sf_dir, "documents"))
+    st = text_stats(load_table(spark, "documents", sf_dir))
     w = Window.partitionBy("fingerprint").orderBy("doc_id")
     return (
         st.filter(F.col("quality") >= 0.5)
@@ -1540,7 +1518,7 @@ def q_llm_gold_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from global_stock_data_warehouse_spark.plans.llm_gold import llm_gold_pipeline
 
     return llm_gold_pipeline(
-        _t(spark, sf_dir, "documents"),
+        load_table(spark, "documents", sf_dir),
         eval_pred=F.col("doc_id") % 20 == 0,
         weights={"train": 90, "val": 5, "test": 5},
     ).orderBy("doc_id")
@@ -1548,18 +1526,18 @@ def q_llm_gold_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup groups by normalized-text md5 fingerprint."""
-    return dedup_exact(_t(spark, sf_dir, "documents"))
+    return dedup_exact(load_table(spark, "documents", sf_dir))
 
 
 def q_ngram_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact bigram-Jaccard near-dup pairs via inverted-index join."""
-    return ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.2)
+    return ngram_jaccard_pairs(load_table(spark, "documents", sf_dir), threshold=0.2)
 
 
 def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition filters: distinct-bigram share and
     top-bigram share per doc (exploded two-level agg, doc_id-keyed)."""
-    return repetition_stats(_t(spark, sf_dir, "documents"), n=2)
+    return repetition_stats(load_table(spark, "documents", sf_dir), n=2)
 
 
 def q_sample_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1567,7 +1545,7 @@ def q_sample_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     order of the id — engine-portable pseudo-randomness (rand()/TABLESAMPLE
     streams are not reproducible across engines; md5 order is)."""
     return sample_per_group(
-        _t(spark, sf_dir, "events"), group_col="event_type", k=100, id_col="event_id"
+        load_table(spark, "events", sf_dir), group_col="event_type", k=100, id_col="event_id"
     )
 
 
@@ -1575,7 +1553,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs -> connected components -> dedup groups (keep min
     doc per cluster). Iterative min-label propagation, checkpointed per
     round; converges in diameter rounds (near-dup clusters are cliques)."""
-    pairs = ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.2)
+    pairs = ngram_jaccard_pairs(load_table(spark, "documents", sf_dir), threshold=0.2)
     groups = dedup_groups(pairs)
     return groups.select(
         "keep_id",
@@ -1593,7 +1571,7 @@ def q_dup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the doc-level dedup yield (docs removable = size - 1 per cluster).
     Composes the oracled near-dup components (same pair threshold) with
     a group-bounded size rollup — all exact integers."""
-    pairs = ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.2)
+    pairs = ngram_jaccard_pairs(load_table(spark, "documents", sf_dir), threshold=0.2)
     groups = dedup_groups(pairs)
     return (
         groups.groupBy(F.col("group_size").alias("cluster_size"))
@@ -1616,7 +1594,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     C4/Dolma keep-policy, vs dedup_components' keep-min-id."""
     from global_stock_data_warehouse_spark.operators.graph import dedup_keep_best
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, "documents", sf_dir)
     pairs = ngram_jaccard_pairs(docs, threshold=0.2)
     return dedup_keep_best(docs, pairs, score_col="n_chars").orderBy("doc_id")
 
@@ -1625,13 +1603,13 @@ def q_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidates verified by exact Jaccard (approximate recall
     by design -> rows-only check, no oracle)."""
     return minhash_neardup(
-        _t(spark, sf_dir, "documents"), num_hashes=32, bands=16, threshold=0.5
+        load_table(spark, "documents", sf_dir), num_hashes=32, bands=16, threshold=0.5
     )
 
 
 def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash Hamming<=3 near-dup pairs (chunk-blocked; rows-only check)."""
-    return simhash_neardup(_t(spark, sf_dir, "documents"), max_hamming=3)
+    return simhash_neardup(load_table(spark, "documents", sf_dir), max_hamming=3)
 
 
 def q_simhash_multi_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1641,13 +1619,13 @@ def q_simhash_multi_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     IDENTICAL to the chunk scheme (equivalence-tested), rows-only here
     because signature hash values are engine-specific."""
     return simhash_neardup(
-        _t(spark, sf_dir, "documents"), max_hamming=3, strategy="multi_index"
+        load_table(spark, "documents", sf_dir), max_hamming=3, strategy="multi_index"
     )
 
 
 def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 for the first 8 vectors as queries."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, "embeddings", sf_dir)
     queries_df = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("embedding")
     )
@@ -1665,7 +1643,7 @@ def q_ann_projected_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         random_projection,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, "embeddings", sf_dir)
     low = random_projection(emb, out_dim=16)
     # project the pre-filtered query frame separately: the projection is
     # row-wise/deterministic, so this is identical to filtering `low` but
@@ -1679,7 +1657,7 @@ def q_ann_projected_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed approximate top-5 (scale path; rows-only check)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, "embeddings", sf_dir)
     queries_df = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("embedding")
     )
@@ -1689,7 +1667,7 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-5: sample-trained coarse quantizer, probe 4 of 16 cells
     (~25% scan fraction; rows-only check)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, "embeddings", sf_dir)
     queries_df = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("embedding")
     )
@@ -1704,7 +1682,7 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     no driver collect, no whole-corpus broadcast); above it, the
     sub-quadratic LSH candidates+verify path. At oracle scale this always
     resolves to exact, so the DuckDB comparison stays bit-exact."""
-    return embedding_neardup(_t(spark, sf_dir, "embeddings"), threshold=0.4)
+    return embedding_neardup(load_table(spark, "embeddings", sf_dir), threshold=0.4)
 
 
 def q_neardup_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1722,9 +1700,9 @@ def q_neardup_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     tp = ngram_jaccard_pairs(
-        _t(spark, sf_dir, "documents"), threshold=0.2
+        load_table(spark, "documents", sf_dir), threshold=0.2
     ).select("id_a", "id_b", "jaccard")
-    ep = embedding_neardup(_t(spark, sf_dir, "embeddings"), threshold=0.4)
+    ep = embedding_neardup(load_table(spark, "embeddings", sf_dir), threshold=0.4)
     both = F.col("jaccard").isNotNull() & F.col("cosine_sim").isNotNull()
     return (
         tp.join(ep, ["id_a", "id_b"], "full_outer")
@@ -1748,7 +1726,7 @@ def q_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sub-quadratic scale path: multi-table LSH candidates + exact cosine
     verify (approximate recall by design -> rows-only check)."""
     return embedding_neardup_lsh(
-        _t(spark, sf_dir, "embeddings"), threshold=0.4, dim=64, planes=6, tables=4
+        load_table(spark, "embeddings", sf_dir), threshold=0.4, dim=64, planes=6, tables=4
     )
 
 
@@ -1756,7 +1734,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: flag train docs (doc_id % 20 != 0)
     sharing any word 5-gram with the eval split (doc_id % 20 == 0). Eval
     gram set broadcasts; the train side never self-shuffles."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, "documents", sf_dir)
     out = decontaminate(
         docs.filter(F.col("doc_id") % 20 != 0),
         docs.filter(F.col("doc_id") % 20 == 0),
@@ -1776,7 +1754,7 @@ def q_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         semantic_decontaminate,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load_table(spark, "embeddings", sf_dir)
     return semantic_decontaminate(
         emb.filter(F.col("vec_id") % 20 != 0),
         emb.filter(F.col("vec_id") % 20 == 0),
@@ -1793,7 +1771,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would vanish for a NULL-text doc) while DuckDB's concat skips
     # NULL args — both sides salt coalesce(text, '') so the engines
     # agree and the NULL-text doc still exercises the redaction
-    salted = _t(spark, sf_dir, "documents").select(
+    salted = load_table(spark, "documents", sf_dir).select(
         "doc_id",
         F.concat(
             F.coalesce(F.col("text"), F.lit("")),
@@ -1819,7 +1797,7 @@ def q_bm25_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 against a fixed term set: one corpus pass + a single-row
     stats aggregate broadcast back. Score rounded to 6dp in BOTH twins
     (ln() is libm-dependent in the last ulp across engines)."""
-    out = bm25_score(_t(spark, sf_dir, "documents"), ["spark", "hash", "table"])
+    out = bm25_score(load_table(spark, "documents", sf_dir), ["spark", "hash", "table"])
     return (
         out.withColumn("dl", F.col("dl").cast("long"))
         .withColumn("score", F.round("score", 6))
@@ -1830,7 +1808,7 @@ def q_bm25_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GPT-style context-window packing map (ctx=64 tokens): per-shard
     window cumsum, all-integer arithmetic — engine-portable bit-for-bit."""
-    out = pack_sequences(_t(spark, sf_dir, "documents"), ctx_len=64)
+    out = pack_sequences(load_table(spark, "documents", sf_dir), ctx_len=64)
     return out.withColumn("n_tokens", F.col("n_tokens").cast("long")).orderBy(
         "source", "doc_id"
     )
@@ -1841,7 +1819,7 @@ def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     price. The correlated-min subquery decorrelates into ONE grouped agg +
     `min_by` over a struct with a deterministic (price, suppkey) tiebreak
     — no self-join, no window over the whole fact table."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     # fixed-point average: prices are exact 2dp quantities, so the cent
     # sum is an exact integer double (order-independent) and
     # floor(sum/n + 0.5) rounds deterministically — round(avg(), 2)
@@ -1876,9 +1854,9 @@ def q_nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     share of GLOBAL revenue clears a threshold. The scalar global total is
     a single-row agg broadcast back over the per-nation rows (no second
     scan of the fact side; the share predicate is decorrelated)."""
-    li = _t(spark, sf_dir, "lineitem")
-    sup = _t(spark, sf_dir, "supplier")
-    nat = _t(spark, sf_dir, "nation")
+    li = load_table(spark, "lineitem", sf_dir)
+    sup = load_table(spark, "supplier", sf_dir)
+    nat = load_table(spark, "nation", sf_dir)
     rev = (
         li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
         .join(F.broadcast(nat), sup.s_nationkey == nat.n_nationkey)
@@ -1903,8 +1881,8 @@ def q_dormant_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     URGENT order — scalar-subquery threshold (single-row broadcast) +
     anti-join with the filter PUSHED BELOW it (the match set shrinks
     before the join, never after), grouped by market segment."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = load_table(spark, "customer", sf_dir)
+    orders = load_table(spark, "orders", sf_dir)
     avg_bal = cust.agg(F.avg("c_acctbal").alias("avg_bal"))
     rich = cust.crossJoin(F.broadcast(avg_bal)).filter(
         F.col("c_acctbal") > F.col("avg_bal")
@@ -1933,7 +1911,7 @@ def q_rolling_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same NULL-row exclusion contract as daily_close/_event_bars,
     # mirrored by the oracle's WHERE (a NULL user would otherwise be a
     # phantom entity in `daily` while still feeding the market index)
-    ev = _t(spark, sf_dir, "events").filter(
+    ev = load_table(spark, "events", sf_dir).filter(
         F.col("user_id").isNotNull()
         & F.col("ts").isNotNull()
         & F.col("value").isNotNull()
@@ -1962,7 +1940,7 @@ def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-runs and other engines assign identically — no rand(), no
     sampling-state leakage between runs. Map-only until one small count
     agg."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, "documents", sf_dir)
     return (
         with_split(docs, {"train": 90, "val": 5, "test": 5})
         .groupBy("lang", "split")
@@ -1978,7 +1956,7 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     the eval-leakage guard a per-doc hash split silently lacks."""
     from global_stock_data_warehouse_spark.operators.corpus import leakage_safe_split
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, "documents", sf_dir)
     pairs = ngram_jaccard_pairs(docs, threshold=0.2)
     return leakage_safe_split(
         docs, pairs, weights={"train": 90, "val": 5, "test": 5}
@@ -1992,7 +1970,7 @@ def q_source_mix_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame (single scan)."""
     from global_stock_data_warehouse_spark.operators.corpus import source_mix_report
 
-    return source_mix_report(_t(spark, sf_dir, "documents"), token_budget=1_000_000)
+    return source_mix_report(load_table(spark, "documents", sf_dir), token_budget=1_000_000)
 
 
 def q_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2004,7 +1982,7 @@ def q_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializing any intermediate corpus."""
     from global_stock_data_warehouse_spark.operators.graph import dedup_groups
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, "documents", sf_dir)
     groups = dedup_exact(docs)  # (fp, keep_id, n_dups)
     survivors = docs.join(
         groups.select(F.col("keep_id").alias("doc_id")), "doc_id"
@@ -2047,7 +2025,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         incremental_dedup,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, "documents", sf_dir)
     store = fingerprint_store(docs.filter(F.col("doc_id") % 3 == 0))
     batch = docs.filter(F.col("doc_id") % 3 != 0)
     return incremental_dedup(batch, store).orderBy("doc_id")
@@ -2066,7 +2044,7 @@ def q_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_store,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, "documents", sf_dir)
     # materialize the ledger once (r12): the probe reads the store frame
     # three times (param guard, bucket join, band-0 signature lookup) —
     # against the REAL contract (a persisted parquet ledger) those are
@@ -2085,7 +2063,7 @@ def _dsir_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed uni+bigram models."""
     from global_stock_data_warehouse_spark.operators.corpus import dsir_weights
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, "documents", sf_dir)
     return dsir_weights(
         docs.filter(F.col("lang") != "en"),
         docs.filter(F.col("lang") == "en"),
@@ -2121,8 +2099,8 @@ def q_contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         semantic_decontaminate,
     )
 
-    docs = _t(spark, sf_dir, "documents")
-    emb = _t(spark, sf_dir, "embeddings")
+    docs = load_table(spark, "documents", sf_dir)
+    emb = load_table(spark, "embeddings", sf_dir)
     ng = decontaminate(
         docs.filter(F.col("doc_id") % 20 != 0),
         docs.filter(F.col("doc_id") % 20 == 0),
@@ -2168,7 +2146,7 @@ def q_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the floor(budget * w/sum) arithmetic is engine-portable); selection
     is the deterministic md5 order."""
     return temperature_sample(
-        _t(spark, sf_dir, "documents"), budget=200, alpha=0.5, group_col="lang"
+        load_table(spark, "documents", sf_dir), budget=200, alpha=0.5, group_col="lang"
     )
 
 
@@ -2178,7 +2156,7 @@ def q_rebalance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast. The language-distribution step of a training-mixture
     build."""
     out = rebalance_sample(
-        _t(spark, sf_dir, "documents"),
+        load_table(spark, "documents", sf_dir),
         {"en": 100, "de": 30, "fr": 30},
         group_col="lang",
     )
@@ -2191,7 +2169,7 @@ def q_quantile_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACT `percentile` (sort-based within group) for oracle parity; the
     100 TB path swaps in `approx_percentile` (one-pass sketch, map-side
     combinable) — same query shape, bounded memory."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, "orders", sf_dir)
     # one percentile(col, array(...)) per group: all three order
     # statistics from a single per-group digest instead of three
     qs = F.percentile(
@@ -2215,7 +2193,7 @@ def q_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-doc repeated 4-token spans (boilerplate detection): spans in
     >=2 distinct docs ranked by spread, member lists capped+sorted."""
     return duplicate_spans(
-        _t(spark, sf_dir, "documents"), n=4, min_docs=2, k=100, max_members=20
+        load_table(spark, "documents", sf_dir), n=4, min_docs=2, k=100, max_members=20
     )
 
 
@@ -2224,7 +2202,7 @@ def q_remove_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans): non-first occurrences of corpus-duplicated spans are cut and
     the text reassembled. All string/integer logic -> bit-exact oracle."""
     return remove_duplicate_spans(
-        _t(spark, sf_dir, "documents"), n=4, min_count=2
+        load_table(spark, "documents", sf_dir), n=4, min_count=2
     )
 
 
@@ -2232,19 +2210,19 @@ def q_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First BPE merge iteration: corpus-weighted adjacent char-pair
     counts via the two-phase vocab trick (pair fan-out scales with
     |vocab|, not corpus size). Top-40, integer counts -> bit-exact."""
-    return bpe_merge_candidates(_t(spark, sf_dir, "documents"), k=40)
+    return bpe_merge_candidates(load_table(spark, "documents", sf_dir), k=40)
 
 
 def q_class_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label embedding centroids (long format), fixed-point BIGINT
     accumulation so float sum order can't drift between engines."""
-    return class_centroids(_t(spark, sf_dir, "embeddings"))
+    return class_centroids(load_table(spark, "embeddings", sf_dir))
 
 
 def q_quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global per-dim min/max int8 scalar quantization (SQ-compressed ANN
     prep); floor(x+0.5) tie-break, integral codes -> bit-exact."""
-    return quantize_embeddings(_t(spark, sf_dir, "embeddings"))
+    return quantize_embeddings(load_table(spark, "embeddings", sf_dir))
 
 
 def q_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2256,7 +2234,7 @@ def q_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         centroid_outliers,
     )
 
-    return centroid_outliers(_t(spark, sf_dir, "embeddings"), k=25)
+    return centroid_outliers(load_table(spark, "embeddings", sf_dir), k=25)
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2267,7 +2245,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         sorted_array_pairs,
     )
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_partkey")
     # r13 NOTE: a pinned-wide keyed exchange on l_orderkey (fan_keyed) was
     # A/B-measured ~neutral on every graph consumer warm (k_core -0.02,
     # pagerank +0.09, triangle +0.02, link_prediction +0.02) — the raw-row
@@ -2295,7 +2273,7 @@ def q_source_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
         source_kl_divergence,
     )
 
-    return source_kl_divergence(_t(spark, sf_dir, "documents"))
+    return source_kl_divergence(load_table(spark, "documents", sf_dir))
 
 
 def q_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2305,7 +2283,7 @@ def q_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed literals -> bit-exact."""
     from global_stock_data_warehouse_spark.operators.profile import benford_audit
 
-    return benford_audit(_t(spark, sf_dir, "orders"), "o_totalprice")
+    return benford_audit(load_table(spark, "orders", sf_dir), "o_totalprice")
 
 
 def q_collocations_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2315,7 +2293,7 @@ def q_collocations_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     computes all offsets; counts are integral -> bit-exact."""
     from global_stock_data_warehouse_spark.operators.corpus import collocations
 
-    return collocations(_t(spark, sf_dir, "documents"), window=3, k=50, min_count=2)
+    return collocations(load_table(spark, "documents", sf_dir), window=3, k=50, min_count=2)
 
 
 def q_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2325,7 +2303,7 @@ def q_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer aggregation; ratios rounded 6dp."""
     from global_stock_data_warehouse_spark.operators.corpus import vocab_growth
 
-    return vocab_growth(_t(spark, sf_dir, "documents"))
+    return vocab_growth(load_table(spark, "documents", sf_dir))
 
 
 def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2336,7 +2314,7 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         source_overlap_exact,
     )
 
-    return source_overlap_exact(_t(spark, sf_dir, "documents"))
+    return source_overlap_exact(load_table(spark, "documents", sf_dir))
 
 
 def q_source_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2348,7 +2326,7 @@ def q_source_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         source_overlap_kmv,
     )
 
-    return source_overlap_kmv(_t(spark, sf_dir, "documents"), k=128)
+    return source_overlap_kmv(load_table(spark, "documents", sf_dir), k=128)
 
 
 def q_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2362,7 +2340,7 @@ def q_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     from global_stock_data_warehouse_spark.operators.corpus import bpe_train
 
     merges, _ = bpe_train(
-        _t(spark, sf_dir, "documents"), n_merges=16, max_words=5000
+        load_table(spark, "documents", sf_dir), n_merges=16, max_words=5000
     )
     return spark.createDataFrame(
         [(i, a, b, a + b) for i, (a, b) in enumerate(merges)],
@@ -2382,7 +2360,7 @@ def q_bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from global_stock_data_warehouse_spark.operators.text import token_count
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, "documents", sf_dir)
     merges, _ = bpe_train(docs, n_merges=16, max_words=5000)
     words = docs.select("doc_id", token_count("text").alias("n_words"))
     return (
@@ -2400,7 +2378,7 @@ def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-exact."""
     from global_stock_data_warehouse_spark.operators.profile import skew_report
 
-    return skew_report(_t(spark, sf_dir, "lineitem"), keys=["l_suppkey"], top_n=10)
+    return skew_report(load_table(spark, "lineitem", sf_dir), keys=["l_suppkey"], top_n=10)
 
 
 def q_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2430,7 +2408,7 @@ def q_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide top-25 bigrams with min-support prune — wordcount at
     scale: map-side partial agg absorbs the explode, deterministic
     (count DESC, gram ASC) total order -> TakeOrderedAndProject."""
-    return ngram_topk(_t(spark, sf_dir, "documents"), n=2, k=25, min_count=2)
+    return ngram_topk(load_table(spark, "documents", sf_dir), n=2, k=25, min_count=2)
 
 
 def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2443,7 +2421,7 @@ def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vocab_size=16 < the corpus's 31 distinct tokens, so the OOV bucket
     # is genuinely exercised
     return unigram_logprob(
-        _t(spark, sf_dir, "documents"), vocab_size=16
+        load_table(spark, "documents", sf_dir), vocab_size=16
     ).orderBy("doc_id")
 
 
@@ -2455,7 +2433,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from global_stock_data_warehouse_spark.operators.similarity import semantic_dedup
 
     return semantic_dedup(
-        _t(spark, sf_dir, "embeddings"), threshold=0.97, n_cells=16
+        load_table(spark, "embeddings", sf_dir), threshold=0.97, n_cells=16
     ).orderBy("vec_id")
 
 
@@ -2468,7 +2446,7 @@ def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from global_stock_data_warehouse_spark.operators.dedup import paragraph_dedup
 
     return paragraph_dedup(
-        _t(spark, sf_dir, "documents"), sep=" the "
+        load_table(spark, "documents", sf_dir), sep=" the "
     ).orderBy("doc_id")
 
 
@@ -2486,7 +2464,7 @@ def q_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (PushedFilters) and the whole query is one WholeStageCodegen span
     with a map-side partial sum. Fixed-point sum for cross-engine
     stability."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, "lineitem", sf_dir).filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01"))
         & (F.col("l_shipdate") < F.lit("1997-01-01"))
         & (F.col("l_discount") >= 0.04)
@@ -2506,19 +2484,19 @@ def q_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both nation maps broadcast; the only shuffle of the fact table is the
     lineitem->orders join + final tiny group. The symmetric pair filter
     ((N1,N2) or (N2,N1)) is applied as soon as both nations are bound."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, "lineitem", sf_dir).select(
         "l_orderkey", "l_suppkey", "l_shipdate", "l_extendedprice", "l_discount"
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    o = load_table(spark, "orders", sf_dir).select("o_orderkey", "o_custkey")
+    n = load_table(spark, "nation", sf_dir).select("n_nationkey", "n_name")
     s = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, "supplier", sf_dir)
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
         .filter(F.col("supp_nation").isin("NATION_1", "NATION_2"))
     )
     c = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, "customer", sf_dir)
         .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
         .select("c_custkey", F.col("n_name").alias("cust_nation"))
         .filter(F.col("cust_nation").isin("NATION_1", "NATION_2"))
@@ -2547,18 +2525,18 @@ def q_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     proxy). The selective part filter broadcasts into the fact scan
     BEFORE the big lineitem->orders join, shrinking the shuffle."""
     p = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, "part", sf_dir)
         .filter(F.col("p_name").contains("gear"))
         .select("p_partkey", "p_retailprice")
     )
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, "lineitem", sf_dir).select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
         "l_extendedprice", "l_discount",
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    o = load_table(spark, "orders", sf_dir).select("o_orderkey", "o_orderdate")
+    n = load_table(spark, "nation", sf_dir).select("n_nationkey", "n_name")
     s = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, "supplier", sf_dir)
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
     )
@@ -2581,17 +2559,17 @@ def q_returned_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     quarter. Orders carries the date filter; the R-flag filter rides the
     lineitem scan; customer+nation broadcast; deterministic (revenue DESC,
     custkey) TakeOrderedAndProject instead of a global sort."""
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R").select(
+    li = load_table(spark, "lineitem", sf_dir).filter(F.col("l_returnflag") == "R").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, "orders", sf_dir).filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01"))
         & (F.col("o_orderdate") < F.lit("1996-04-01"))
     ).select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select(
+    c = load_table(spark, "customer", sf_dir).select(
         "c_custkey", "c_name", "c_acctbal", "c_nationkey"
     )
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    n = load_table(spark, "nation", sf_dir).select("n_nationkey", "n_name")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -2615,11 +2593,11 @@ def q_priority_linestatus(spark: SparkSession, sf_dir: str) -> DataFrame:
     low-priority orders — the canonical conditional-count (CASE WHEN
     inside SUM) pattern, one fact shuffle for the join, map-side partials
     for the 2-row group."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, "lineitem", sf_dir).filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01"))
         & (F.col("l_shipdate") < F.lit("1998-01-01"))
     ).select("l_orderkey", "l_linestatus")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
+    o = load_table(spark, "orders", sf_dir).select("o_orderkey", "o_orderpriority")
     is_high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
@@ -2637,8 +2615,8 @@ def q_custdist(spark: SparkSession, sf_dir: str) -> DataFrame:
     INCLUDING zero-order customers — a left outer join whose unmatched
     side must survive into count(o_orderkey)=0, then a second tiny
     aggregation over the per-customer counts."""
-    c = _t(spark, sf_dir, "customer").select("c_custkey")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, "customer", sf_dir).select("c_custkey")
+    o = load_table(spark, "orders", sf_dir).filter(
         F.col("o_orderpriority") != "4-NOT SPECIFIED"
     ).select("o_orderkey", "o_custkey")
     per_cust = (
@@ -2657,11 +2635,11 @@ def q_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape: percentage of one month's revenue from PROMO
     parts. Part dim broadcasts; numerator and denominator are exact
     bigint sums in ONE aggregate pass, so the ratio is bit-stable."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, "lineitem", sf_dir).filter(
         (F.col("l_shipdate") >= F.lit("1996-03-01"))
         & (F.col("l_shipdate") < F.lit("1996-04-01"))
     ).select("l_partkey", "l_extendedprice", "l_discount")
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
+    p = load_table(spark, "part", sf_dir).select("p_partkey", "p_type")
     rev = _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
@@ -2682,7 +2660,7 @@ def q_top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     max over the tiny per-supplier aggregate (|suppliers| rows), never a
     second scan of the fact table. Exact bigint revenue makes the
     max-equality tie semantics identical across engines."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, "lineitem", sf_dir).filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01"))
         & (F.col("l_shipdate") < F.lit("1996-04-01"))
     ).select("l_suppkey", "l_extendedprice", "l_discount")
@@ -2692,7 +2670,7 @@ def q_top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     max_rev = F.max("rev_cents").over(Window.partitionBy())
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    s = load_table(spark, "supplier", sf_dir).select("s_suppkey", "s_name")
     return (
         per_supp.withColumn("_max", max_rev)
         .filter(F.col("rev_cents") == F.col("_max"))
@@ -2712,15 +2690,15 @@ def q_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the distinct). The part-supplier association comes from lineitem
     (no partsupp table in this schema); the brand/size filters broadcast
     with the part dim."""
-    p = _t(spark, sf_dir, "part").filter(
+    p = load_table(spark, "part", sf_dir).filter(
         (F.col("p_brand") != "Brand#1")
         & F.col("p_size").isin(1, 5, 10, 15, 20, 25, 30, 35, 40, 45)
     ).select("p_partkey", "p_brand", "p_type", "p_size")
-    bad_supp = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
+    bad_supp = load_table(spark, "supplier", sf_dir).filter(F.col("s_acctbal") < 0).select(
         "s_suppkey"
     )
     assoc = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, "lineitem", sf_dir)
         .select("l_partkey", "l_suppkey")
         .join(F.broadcast(bad_supp), F.col("l_suppkey") == F.col("s_suppkey"), "left_anti")
         .join(F.broadcast(p), F.col("l_partkey") == p.p_partkey)
@@ -2739,12 +2717,12 @@ def q_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluates post-join — but the IMPLIED union of the per-branch part
     filters (brand IN ..., size ranges) is applied to the broadcast part
     dim up front, the classic Q19 pre-filter derivation."""
-    p = _t(spark, sf_dir, "part").filter(
+    p = load_table(spark, "part", sf_dir).filter(
         F.col("p_brand").isin("Brand#1", "Brand#2", "Brand#3")
         & (F.col("p_size") >= 1)
         & (F.col("p_size") <= 35)
     ).select("p_partkey", "p_brand", "p_size")
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, "lineitem", sf_dir).filter(
         (F.col("l_quantity") >= 1) & (F.col("l_quantity") <= 30)
     ).select("l_partkey", "l_quantity", "l_extendedprice", "l_discount")
     branch = (
@@ -2784,8 +2762,8 @@ def q_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — partitioned by part, so it scales with the widest part,
     not the table. Suppliers shipping a majority of any PROMO part's
     volume semi-join into the supplier dim (distinct BEFORE the join)."""
-    p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO").select("p_partkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey", "l_quantity")
+    p = load_table(spark, "part", sf_dir).filter(F.col("p_type") == "PROMO").select("p_partkey")
+    li = load_table(spark, "lineitem", sf_dir).select("l_partkey", "l_suppkey", "l_quantity")
     per_ps = (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .groupBy("l_partkey", "l_suppkey")
@@ -2802,8 +2780,8 @@ def q_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_suppkey")
         .distinct()
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    s = load_table(spark, "supplier", sf_dir).select("s_suppkey", "s_name", "s_nationkey")
+    n = load_table(spark, "nation", sf_dir).select("n_nationkey", "n_name")
     return (
         s.join(F.broadcast(dominant), s.s_suppkey == F.col("l_suppkey"), "left_semi")
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
@@ -2961,7 +2939,7 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic only — bit-exact across engines."""
     from global_stock_data_warehouse_spark.operators.behavior import cohort_retention
 
-    return cohort_retention(_t(spark, sf_dir, "events"), period_days=7)
+    return cohort_retention(load_table(spark, "events", sf_dir), period_days=7)
 
 
 def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2971,7 +2949,7 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     division — order-independent, so exact at 6dp."""
     from global_stock_data_warehouse_spark.operators.behavior import event_transitions
 
-    return event_transitions(_t(spark, sf_dir, "events"))
+    return event_transitions(load_table(spark, "events", sf_dir))
 
 
 def q_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2982,7 +2960,7 @@ def q_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     from global_stock_data_warehouse_spark.operators.behavior import hopping_window_agg
 
     return hopping_window_agg(
-        _t(spark, sf_dir, "events"), size="14 days", slide="7 days"
+        load_table(spark, "events", sf_dir), size="14 days", slide="7 days"
     )
 
 
@@ -2994,7 +2972,7 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from global_stock_data_warehouse_spark.operators.behavior import mad_outliers
 
     return mad_outliers(
-        _t(spark, sf_dir, "documents"), group_cols=("source",), value_col="n_chars", k=3.0
+        load_table(spark, "documents", sf_dir), group_cols=("source",), value_col="n_chars", k=3.0
     )
 
 
@@ -3004,7 +2982,7 @@ def q_hist_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     one tiny aggregate."""
     from global_stock_data_warehouse_spark.operators.behavior import histogram_fixed
 
-    return histogram_fixed(_t(spark, sf_dir, "lineitem"), "l_extendedprice", 500.0)
+    return histogram_fixed(load_table(spark, "lineitem", sf_dir), "l_extendedprice", 500.0)
 
 
 def q_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3018,7 +2996,7 @@ def q_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         keyword_search,
     )
 
-    idx = inverted_index(_t(spark, sf_dir, "documents"))
+    idx = inverted_index(load_table(spark, "documents", sf_dir))
     return keyword_search(idx, ["spark", "hash"], k=15)
 
 
@@ -3028,7 +3006,7 @@ def q_dense_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids are stable across runs and engines (monotonically_increasing_id
     is neither contiguous nor rerun-stable; this is the warehouse-grade
     alternative). The rank window runs over one-row-per-distinct-value."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, "documents", sf_dir)
     counts = d.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
     w = Window.orderBy(F.col("n_docs").desc(), F.col("source").asc())
     return counts.select(
@@ -3043,7 +3021,7 @@ def q_equi_depth_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     value comparison (deterministic, unlike ntile over a non-unique
     order). Two passes: one tiny percentile agg broadcast back, one
     bucket count."""
-    o = _t(spark, sf_dir, "orders").select("o_totalprice")
+    o = load_table(spark, "orders", sf_dir).select("o_totalprice")
     probs = [i / 10.0 for i in range(1, 10)]
     # ONE percentile aggregate over the array of probabilities: all nine
     # order statistics come from a single value-counts digest (nine
@@ -3095,7 +3073,7 @@ def q_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     with (weight DESC, term ASC) total order."""
     from global_stock_data_warehouse_spark.operators.corpus import inverted_index
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, "documents", sf_dir)
     n_docs = docs.count()
     idx = inverted_index(docs)
     weighted = idx.withColumn(
@@ -3133,7 +3111,7 @@ def q_longest_up_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups share one user-key shuffle. Integer output — bit-exact."""
     from global_stock_data_warehouse_spark.operators.timeseries import daily_close
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
     d = daily_close(ev)
     w = Window.partitionBy("user_id").orderBy("d")
     up = (F.col("close") > F.lag("close").over(w)).cast("int")
@@ -3163,7 +3141,7 @@ def q_salted_flag_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fixed-point sums keep the merge exact."""
     from global_stock_data_warehouse_spark.operators.skew import salted_agg
 
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, "lineitem", sf_dir).select(
         "l_returnflag",
         _cents(F.col("l_extendedprice"), 100).alias("cents"),
         "l_quantity",
@@ -3192,8 +3170,8 @@ def q_latency_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentiles (order statistics — identical IEEE interpolation on both
     engines) over integer day gaps; one fact co-partitioned join + one
     grouped percentile pass."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate", "o_orderpriority")
+    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_shipdate")
+    o = load_table(spark, "orders", sf_dir).select("o_orderkey", "o_orderdate", "o_orderpriority")
     lat = li.join(o, li.l_orderkey == o.o_orderkey).select(
         "o_orderpriority",
         F.datediff("l_shipdate", "o_orderdate").alias("lat"),
@@ -3228,8 +3206,8 @@ def q_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     divisions of exact integer counts."""
     from global_stock_data_warehouse_spark.operators.behavior import basket_rules
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_partkey")
+    p = load_table(spark, "part", sf_dir).select("p_partkey", "p_brand")
     baskets = li.join(F.broadcast(p), li.l_partkey == p.p_partkey).select(
         F.col("l_orderkey").alias("basket_id"), F.col("p_brand").alias("item")
     )
@@ -3241,10 +3219,10 @@ def q_vwap_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (VWAP) — numerator and denominator both integer-exact
     (price cents x integral quantity), ONE broadcast dim join + one fact
     shuffle; the ratio is a single division, engine-exact at 6dp."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, "lineitem", sf_dir).select(
         "l_partkey", "l_quantity", "l_extendedprice"
     )
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    p = load_table(spark, "part", sf_dir).select("p_partkey", "p_brand")
     j = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
     qty = F.round(F.col("l_quantity"), 0)
     return j.groupBy("p_brand").agg(
@@ -3265,7 +3243,7 @@ def q_market_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-exact."""
     from global_stock_data_warehouse_spark.operators.timeseries import daily_close
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
     d = daily_close(ev)
     w = Window.partitionBy("user_id").orderBy("d")
     prev = F.lag("close").over(w)
@@ -3306,7 +3284,7 @@ def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-exact."""
     from global_stock_data_warehouse_spark.operators.cdc import scd2_history
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, "events", sf_dir)
     return scd2_history(
         ev,
         key_cols=("user_id",),
@@ -3329,7 +3307,7 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # orders' o_orderkey is a true PK (the synthetic lineitem's
     # (orderkey, linenumber) is NOT unique — CDC apply requires keyed rows)
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderdate", "o_orderstatus", "o_totalprice"
     )
     old = o.filter(F.col("o_orderdate") < F.lit("1997-01-01")).select(
@@ -3351,8 +3329,8 @@ def q_repeat_purchase_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface is first-class, same Catalyst plan as the DataFrame path.
     Date-windowed LEFT JOIN keeps zero-order customers in the base;
     single-division rate at 6dp is engine-exact."""
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("v_customer")
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
+    load_table(spark, "customer", sf_dir).createOrReplaceTempView("v_customer")
+    load_table(spark, "orders", sf_dir).createOrReplaceTempView("v_orders")
     return spark.sql(
         """
         WITH per_cust AS (
@@ -3380,7 +3358,7 @@ def q_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from global_stock_data_warehouse_spark.operators.dedup import record_linkage
 
     return record_linkage(
-        _t(spark, sf_dir, "part"),
+        load_table(spark, "part", sf_dir),
         name_col="p_name",
         block_cols=["p_brand"],
         max_distance=2,
@@ -3393,7 +3371,7 @@ def q_price_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     value within each priority class — orderkey tiebreak makes both
     order-sensitive functions engine-exact. One window shuffle over the
     orders table."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, "orders", sf_dir)
     w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
     return o.select(
         "o_orderkey",
@@ -3413,7 +3391,7 @@ def q_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
         attribution_last_touch,
     )
 
-    return attribution_last_touch(_t(spark, sf_dir, "events"))
+    return attribution_last_touch(load_table(spark, "events", sf_dir))
 
 
 def q_gap_fill_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3427,7 +3405,7 @@ def q_gap_fill_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         gap_fill_ffill,
     )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
     out = gap_fill_ffill(daily_close(ev), method="linear")
     return out.select(
         "user_id", "d", F.round("close", 6).alias("close"), "is_filled"
@@ -3441,7 +3419,7 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment engine-exact). Fixed-point monetary sums."""
     from global_stock_data_warehouse_spark.operators.behavior import rfm_segments
 
-    return rfm_segments(_t(spark, sf_dir, "orders"))
+    return rfm_segments(load_table(spark, "orders", sf_dir))
 
 
 def q_rolling_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3453,7 +3431,7 @@ def q_rolling_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         rolling_distinct_users,
     )
 
-    return rolling_distinct_users(_t(spark, sf_dir, "events"), window_days=7)
+    return rolling_distinct_users(load_table(spark, "events", sf_dir), window_days=7)
 
 
 def q_ngram_topk_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3465,7 +3443,7 @@ def q_ngram_topk_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     is property-tested."""
     from global_stock_data_warehouse_spark.operators.corpus import ngram_topk_sketch
 
-    return ngram_topk_sketch(_t(spark, sf_dir, "documents"), n=2, k=25, min_count=2)
+    return ngram_topk_sketch(load_table(spark, "documents", sf_dir), n=2, k=25, min_count=2)
 
 
 def q_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3479,7 +3457,7 @@ def q_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
         trend_ols,
     )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
     return trend_ols(daily_close(ev))
 
 
@@ -3493,7 +3471,7 @@ def q_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
         gap_fill_ffill,
     )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
     return gap_fill_ffill(daily_close(ev)).select(
         "user_id", "d", "close", "is_filled"
     )
@@ -3508,8 +3486,8 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form two-node fixpoint, mass conservation)."""
     from global_stock_data_warehouse_spark.operators.graph import pagerank
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_suppkey")
+    o = load_table(spark, "orders", sf_dir).select("o_orderkey", "o_custkey")
     # distinct on the INT pair, namespace-prefix afterwards: the distinct
     # shuffles 16B keys instead of two strings (15.9 -> ~11 MB at sf0.1);
     # the concat is a map-side projection over the already-unique rows
@@ -3537,7 +3515,7 @@ def q_autocorrelation_fx(spark: SparkSession, sf_dir: str) -> DataFrame:
         daily_close,
     )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
     return autocorrelation_fx(daily_close(ev))
 
 
@@ -3550,7 +3528,7 @@ def q_rolling_beta_fx(spark: SparkSession, sf_dir: str) -> DataFrame:
         rolling_beta_fx,
     )
 
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_id", "ts", "value")
+    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
     return rolling_beta_fx(ev)
 
 
@@ -3562,7 +3540,7 @@ def q_source_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ln() ulp denies it."""
     from global_stock_data_warehouse_spark.operators.corpus import source_chi2_drift
 
-    return source_chi2_drift(_t(spark, sf_dir, "documents"))
+    return source_chi2_drift(load_table(spark, "documents", sf_dir))
 
 
 def q_unigram_prob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3573,7 +3551,7 @@ def q_unigram_prob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_unigram_logprob."""
     from global_stock_data_warehouse_spark.operators.corpus import unigram_prob_score
 
-    return unigram_prob_score(_t(spark, sf_dir, "documents"), vocab_size=16)
+    return unigram_prob_score(load_table(spark, "documents", sf_dir), vocab_size=16)
 
 
 def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3586,7 +3564,7 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from global_stock_data_warehouse_spark.operators.similarity import kmeans
 
     return kmeans(
-        _t(spark, sf_dir, "embeddings"), k=8, n_iter=10
+        load_table(spark, "embeddings", sf_dir), k=8, n_iter=10
     ).orderBy("vec_id")
 
 
@@ -3600,7 +3578,7 @@ def q_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return cluster_balanced_sample(
-        _t(spark, sf_dir, "embeddings"), per_cluster=32, k=8, n_iter=10
+        load_table(spark, "embeddings", sf_dir), per_cluster=32, k=8, n_iter=10
     ).orderBy("vec_id")
 
 
@@ -3614,7 +3592,7 @@ def q_embedding_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the floor(+0.5) idiom every fx twin here uses."""
     fx = F.expr("CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT)")
     return (
-        _t(spark, sf_dir, "embeddings")
+        load_table(spark, "embeddings", sf_dir)
         .select(F.posexplode("embedding").alias("dim", "x"))
         .select(F.col("dim").cast("bigint").alias("dim"), fx.alias("q"))
         .groupBy("dim")
@@ -3637,7 +3615,7 @@ def q_pca_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     repartition determinism are tested in tests/test_pca.py."""
     from global_stock_data_warehouse_spark.operators.similarity import pca_variance
 
-    return pca_variance(_t(spark, sf_dir, "embeddings"), k=8)
+    return pca_variance(load_table(spark, "embeddings", sf_dir), k=8)
 
 
 def q_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3654,7 +3632,7 @@ def q_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return training_prep_pipeline(
-        _t(spark, sf_dir, "documents"),
+        load_table(spark, "documents", sf_dir),
         ctx_len=512,
         n_merges=16,
         max_words=5000,
@@ -3670,7 +3648,7 @@ def q_shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     from global_stock_data_warehouse_spark.operators.corpus import shard_shuffle
 
     return shard_shuffle(
-        _t(spark, sf_dir, "documents"), n_shards=8, seed=42
+        load_table(spark, "documents", sf_dir), n_shards=8, seed=42
     ).orderBy("shard", "pos")
 
 
@@ -3686,7 +3664,7 @@ def q_packed_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         shard_shuffle,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, "documents", sf_dir)
     order = shard_shuffle(docs, n_shards=8, seed=42)
     packed = pack_token_sequences(
         docs.join(order, "doc_id"), ctx_len=64
@@ -3709,7 +3687,7 @@ def q_token_vote_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         token_vote_classify,
     )
 
-    return token_vote_classify(_t(spark, sf_dir, "documents"), vocab_size=64)
+    return token_vote_classify(load_table(spark, "documents", sf_dir), vocab_size=64)
 
 
 def q_classifier_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3728,7 +3706,7 @@ def q_classifier_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # classifier output once or the full vote plan executes twice
     # (PLANS.md showed 25 exchanges vs token_vote's 12 before this cut)
     out = token_vote_classify(
-        _t(spark, sf_dir, "documents"), vocab_size=64
+        load_table(spark, "documents", sf_dir), vocab_size=64
     ).localCheckpoint(eager=True)
     per_label = out.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -3765,7 +3743,7 @@ def q_nb_self_loglik(spark: SparkSession, sf_dir: str) -> DataFrame:
     EPS-compared (ln is libm territory), like unigram_logprob."""
     from global_stock_data_warehouse_spark.operators.classify import nb_self_loglik
 
-    return nb_self_loglik(_t(spark, sf_dir, "documents"), vocab_size=64)
+    return nb_self_loglik(load_table(spark, "documents", sf_dir), vocab_size=64)
 
 
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3790,7 +3768,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_media_fixture,
     )
 
-    media = synth_media_fixture(_t(spark, sf_dir, "documents"))
+    media = synth_media_fixture(load_table(spark, "documents", sf_dir))
     feats = extract_features_typed(media)
     is_img = F.col("media_type") == "image"
 
@@ -3818,11 +3796,11 @@ def q_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     join of a single-row agg, never a partition-less window over the
     fact) + share filter. The supplier side is a broadcast dim filter;
     the only fact shuffle is the per-part agg."""
-    n = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_7")
-    s = _t(spark, sf_dir, "supplier").join(
+    n = load_table(spark, "nation", sf_dir).filter(F.col("n_name") == "NATION_7")
+    s = load_table(spark, "supplier", sf_dir).join(
         F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey")
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, "lineitem", sf_dir)
     per_part = (
         li.join(F.broadcast(s.select("s_suppkey")), li.l_suppkey == F.col("s_suppkey"))
         .groupBy("l_partkey")
@@ -3864,7 +3842,7 @@ def q_decay_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     decay weighting without the exp() that would be EPS-only forever."""
     from global_stock_data_warehouse_spark.operators.behavior import decayed_totals
 
-    return decayed_totals(_t(spark, sf_dir, "events"))
+    return decayed_totals(load_table(spark, "events", sf_dir))
 
 
 def q_snapshot_diff_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3885,7 +3863,7 @@ def q_snapshot_diff_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate",
         "o_orderpriority",
     ]
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", *cols)
+    o = load_table(spark, "orders", sf_dir).select("o_orderkey", *cols)
     old = o.filter(F.col("o_orderkey") % 7 != 0)
     new = o.filter(F.col("o_orderkey") % 5 != 0).withColumn(
         "o_totalprice",
@@ -3966,7 +3944,7 @@ def q_agg_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_diff,
     )
 
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, "orders", sf_dir).select(
         "o_orderkey",
         "o_custkey",
         F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
@@ -3997,8 +3975,8 @@ def q_dup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigram-Jaccard pair set with the doc->source dim, canonicalizes the
     unordered source pair, and aggregates integer counts + max jaccard
     (max is order-independent, unlike a float mean) -> bit-exact."""
-    pairs = ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.2)
-    src = _t(spark, sf_dir, "documents").select("doc_id", "source")
+    pairs = ngram_jaccard_pairs(load_table(spark, "documents", sf_dir), threshold=0.2)
+    src = load_table(spark, "documents", sf_dir).select("doc_id", "source")
     sa = src.select(F.col("doc_id").alias("id_a"), F.col("source").alias("_sa"))
     sb = src.select(F.col("doc_id").alias("id_b"), F.col("source").alias("_sb"))
     return (
@@ -4030,7 +4008,7 @@ def q_bigram_prob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vocab_size=16 / bigram_size=64 < the corpus's distinct counts so
     # both OOV paths (unknown bigram, unknown context) are exercised
     return bigram_prob_score(
-        _t(spark, sf_dir, "documents"), vocab_size=16, bigram_size=64
+        load_table(spark, "documents", sf_dir), vocab_size=16, bigram_size=64
     )
 
 
@@ -4041,7 +4019,7 @@ def q_length_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     domain). Integer ECDF counts divided once -> engine bit-exact."""
     from global_stock_data_warehouse_spark.operators.profile import ks_drift
 
-    return ks_drift(_t(spark, sf_dir, "documents"), "source", "n_chars")
+    return ks_drift(load_table(spark, "documents", sf_dir), "source", "n_chars")
 
 
 def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4056,7 +4034,7 @@ def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         bloom_decontaminate,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load_table(spark, "documents", sf_dir)
     return bloom_decontaminate(
         docs.filter(F.col("doc_id") % 20 != 0),
         docs.filter(F.col("doc_id") % 20 == 0),
@@ -4071,7 +4049,7 @@ def q_term_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     rational arithmetic — no transcendental — rounded at 6dp."""
     from global_stock_data_warehouse_spark.operators.corpus import term_class_chi2
 
-    return term_class_chi2(_t(spark, sf_dir, "documents"), top_k=10, min_df=5)
+    return term_class_chi2(load_table(spark, "documents", sf_dir), top_k=10, min_df=5)
 
 
 def q_line_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4084,7 +4062,7 @@ def q_line_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return line_boilerplate_stats(
-        _t(spark, sf_dir, "documents"), sep=" the ", min_docs=3
+        load_table(spark, "documents", sf_dir), sep=" the ", min_docs=3
     )
 
 
@@ -4097,7 +4075,7 @@ def q_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return quality_percentile_gate(
-        _t(spark, sf_dir, "documents"), keep_frac=0.6
+        load_table(spark, "documents", sf_dir), keep_frac=0.6
     )
 
 
@@ -4109,7 +4087,7 @@ def q_novelty_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         novelty_timeline,
     )
 
-    return novelty_timeline(_t(spark, sf_dir, "documents"), n_buckets=10)
+    return novelty_timeline(load_table(spark, "documents", sf_dir), n_buckets=10)
 
 
 def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4118,7 +4096,7 @@ def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject; regression runs on <= 200 rows."""
     from global_stock_data_warehouse_spark.operators.curation import zipf_slope
 
-    return zipf_slope(_t(spark, sf_dir, "documents"), top_n=200)
+    return zipf_slope(load_table(spark, "documents", sf_dir), top_n=200)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -39,6 +39,7 @@ sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod
 from global_stock_data_warehouse_spark.session import get_spark
+from global_stock_data_warehouse_spark.sources.registry import TABLES, load_table
 
 
 def main() -> None:
@@ -104,12 +105,9 @@ def main() -> None:
         .collect()
     )
 
-    for t in (
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ):
+    for t in TABLES:
         try:
-            entrymod._t(spark, sf_dir, t).limit(1024).collect()
+            load_table(spark, t, sf_dir).limit(1024).collect()
         except Exception:
             pass
 

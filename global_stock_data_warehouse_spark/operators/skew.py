@@ -114,6 +114,10 @@ def fan_scan(df: DataFrame, multiplier: int = 1) -> DataFrame:
     scale-adaptive partitioning, never a constant), which also makes the
     fan idempotent — a chain that already fanned upstream skips it.
 
+    The input must be scan-side (no join, aggregate or repartition in its
+    plan): ``rdd.getNumPartitions()`` finalizes the physical plan, and AQE
+    runs every exchange stage already in it just to answer the guard.
+
     Round-robin (no key) gives perfectly balanced partitions; Spark's
     sort-before-repartition keeps task retries deterministic. Only use
     ahead of ORDER-INSENSITIVE work (per-row maps, integer/min-max
@@ -148,10 +152,12 @@ def fan_keyed(df: DataFrame, *cols: str) -> DataFrame:
     guard reads the actual physical partitioning of the scan-side input,
     so a 100 TB scan arriving in >= cores splits returns the input
     untouched and the downstream aggregate plans its normal AQE-managed
-    exchange). Only use where the keyed work is order-insensitive
-    (integer/fixed-point aggregates, sorted collect_set, keyed windows
-    with total ordering) — the partial-aggregation step the explicit
-    repartition bypasses also changes float-sum grouping.
+    exchange). As for fan_scan, the input must be scan-side, or AQE runs
+    the exchange stages already in its plan to answer the guard. Only use
+    where the keyed work is order-insensitive (integer/fixed-point
+    aggregates, sorted collect_set, keyed windows with total ordering) —
+    the partial-aggregation step the explicit repartition bypasses also
+    changes float-sum grouping.
     """
     if df.isStreaming:
         return df

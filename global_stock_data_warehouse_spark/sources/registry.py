@@ -33,9 +33,13 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
     """Scan one table. Parquet scan => vectorized reader + pushdown.
 
-    ``events.ts`` is parquet TIMESTAMP(NANOS), which Spark's reader rejects
-    outright; read it as raw nanos (legacy conf) and convert with integer
-    DIV (float division loses sub-us precision at 1e18 nanos).
+    ``events.ts`` has shipped as parquet TIMESTAMP(NANOS), which Spark's
+    reader rejects outright, and as TIMESTAMP(MICROS) without
+    isAdjustedToUTC, which Spark reads as TIMESTAMP_NTZ (it refuses casts
+    like ``ts.cast('long')``). Both become session-tz TIMESTAMP (the
+    session tz is UTC), so every query sees one type. Nanos are read raw
+    (legacy conf) and converted with integer DIV: float division of ~1.7e18
+    nanos loses sub-microsecond precision and shifts timestamps by ±1 µs.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
@@ -44,8 +48,11 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
         return spark.read.parquet(path)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(path)
-    if dict(df.dtypes).get("ts") in ("bigint", "long"):
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type in ("bigint", "long"):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    elif ts_type == "timestamp_ntz":
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 

@@ -213,3 +213,30 @@ def test_minhash_ledger_bucketed_probe_skips_store_shuffle(spark, tmp_path):
     assert "Bucketed: true" in plan_b, plan_b
     n_b, n_p = plan_b.count("Exchange"), plan_p.count("Exchange")
     assert n_b < n_p, f"bucketed probe should drop the store-side shuffle: {n_b} vs {n_p}\n{plan_b}"
+
+
+def test_fan_guards_start_no_jobs_on_scan_input(spark, sf_dir):
+    """fan_scan / fan_keyed read the input's partition count. On the
+    scan-side input they are meant for, that starts no Spark job; on a
+    frame whose plan already holds an exchange, AQE runs that stage to
+    answer (the control), which is why both demand scan-side input."""
+    from global_stock_data_warehouse_spark.operators.skew import fan_keyed, fan_scan
+    from global_stock_data_warehouse_spark.sources.registry import load_table
+
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs_started(fn):
+        group = f"fan-guard-{id(fn)}"
+        spark.sparkContext.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description"):
+                spark.sparkContext.setLocalProperty(prop, None)
+        return len(tracker.getJobIdsForGroup(group))
+
+    scan = load_table(spark, "lineitem", sf_dir)
+    assert jobs_started(lambda: fan_scan(scan)) == 0
+    assert jobs_started(lambda: fan_keyed(scan, "l_orderkey")) == 0
+    aggregated = scan.groupBy("l_orderkey").count()
+    assert jobs_started(lambda: fan_scan(aggregated)) > 0

@@ -1,58 +1,25 @@
 """Empty-corpus oracle-mirror pins: run representative queries against
-0-row copies of every fixture table (shared injection with
-tools/empty_sweep.py) and compare spark vs oracle. Guards the two
-empty-input failure classes: a driver-side scalar probe crashing on an
-empty frame (anchor max-dates, quota derivations, centroid samples) and
-an engine-semantics divergence (Spark's cube() emits no grand-total row
+0-row copies of every fixture table (the ``empty`` axis of
+tools/sweep.py) and compare spark vs oracle. Guards the two empty-input
+failure classes: a driver-side scalar probe crashing on an empty frame
+(anchor max-dates, quota derivations, centroid samples) and an
+engine-semantics divergence (Spark's cube() emits no grand-total row
 over zero rows while ANSI CUBE emits one — found by the r8 sweep).
-The full 155-query sweep stays a tool run."""
+The full-surface sweep is the slow-tier test_every_query_on_degenerate_axis."""
 
 from __future__ import annotations
 
-import math
-import os
-import sys
-
-import duckdb
 import pytest
 
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
-
-
-def _norm(rows, cols):
-    def cell(v):
-        if isinstance(v, float):
-            if math.isnan(v):
-                return "NaN"
-            if v == 0:
-                return 0.0
-            return round(v, 9 - int(math.floor(math.log10(abs(v)))) - 1)
-        if hasattr(v, "isoformat"):
-            return v.isoformat()[:26]
-        return v
-
-    return (
-        sorted(
-            (tuple(cell(v) for v in row) for row in rows),
-            key=lambda r: tuple(repr(v) for v in r),
-        ),
-        sorted(c.lower() for c in cols),
-    )
+from tools.check_correctness import run
+from tools.sweep import build
 
 
 @pytest.fixture(scope="module")
 def empty_sf_dir(spark, tmp_path_factory):
-    from empty_sweep import TABLES, build_empty_dir
-
-    out = tmp_path_factory.mktemp("empty_sf")
-    build_empty_dir(spark, str(out))
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{out}/{t}.parquet/*.parquet')"
-        )
-    return str(out), con
+    out = str(tmp_path_factory.mktemp("empty_sf"))
+    build(spark, "empty", out)
+    return out
 
 
 # cube_rollup: the engine-divergence find; the rest are the queries with
@@ -72,15 +39,4 @@ EMPTY_PINS = [
 
 @pytest.mark.parametrize("name", EMPTY_PINS)
 def test_empty_mirror(spark, empty_sf_dir, name):
-    import __spark_entry__ as entrymod
-
-    out, con = empty_sf_dir
-    sdf = entrymod.queries()[name](spark, out)
-    srows, scols = [tuple(r) for r in sdf.collect()], sdf.columns
-    cur = con.execute(entrymod.oracle_sql()[name])
-    dcols = [d[0] for d in cur.description]
-    drows = cur.fetchall()
-    sn, sc = _norm(srows, scols)
-    dn, dc = _norm(drows, dcols)
-    assert sc == dc, f"{name}: schema spark={sc} duck={dc}"
-    assert sn == dn, f"{name}: spark={sn[:3]} duck={dn[:3]}"
+    assert run(spark, empty_sf_dir, [name]) == []

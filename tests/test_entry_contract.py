@@ -2,7 +2,8 @@
 stable schema; oracle_sql() keys must be a subset of queries() keys.
 
 This is the cheap tripwire for contract breaks — full value parity vs the
-DuckDB oracle runs in tools/check_correctness.py at sf0.01.
+DuckDB oracle runs in tools/check_correctness.py at sf0.01, and on each
+degenerate axis of tools/sweep.py in the slow tier.
 """
 
 from __future__ import annotations
@@ -10,6 +11,9 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entrymod
+from global_stock_data_warehouse_spark.sources.registry import TABLES, load_table
+from tools.check_correctness import run
+from tools.sweep import AXES, build
 
 
 def test_oracle_keys_subset_of_queries():
@@ -82,30 +86,18 @@ def test_every_query_runs_at_sf0001(spark, sf_dir):
     assert not failures, failures
 
 
-@pytest.mark.slow  # full-surface sweep (~1.5 min): representative empty-
-# input pins stay in tests/test_empty_mirror.py and the 155-query sweep
-# is the committed tools/empty_sweep.py artifact (EMPTY_SWEEP_r11.json)
-def test_every_query_is_total_on_empty_tables(spark, tmp_path, sf_dir):
-    """Totality gate: all declared queries must run (returning 0+ rows,
-    never raising) against schemally-identical but EMPTY input tables —
-    the empty-partition / empty-source edge every production pipeline
-    eventually feeds an operator."""
-    src = sf_dir
-    dst = str(tmp_path / "sf_empty")
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
-        entrymod._t(spark, src, t).limit(0).write.mode("overwrite").parquet(
-            f"{dst}/{t}.parquet"
-        )
-    failures = []
-    for name, fn in entrymod.queries().items():
-        try:
-            fn(spark, dst).write.format("noop").mode("overwrite").save()
-        except Exception as ex:  # noqa: BLE001 - collecting all failures
-            failures.append(f"{name}: {type(ex).__name__}: {str(ex).splitlines()[0][:90]}")
-    assert not failures, "queries not total on empty input:\n" + "\n".join(failures)
+@pytest.mark.slow  # full surface on every degenerate axis (3-7 min each);
+# the in-tier representatives are tests/test_null_mirror.py and
+# tests/test_empty_mirror.py
+@pytest.mark.parametrize("axis", sorted(AXES))
+def test_every_query_on_degenerate_axis(spark, tmp_path, axis):
+    """Every declared query on each degenerate axis of tools/sweep.py:
+    oracled queries match DuckDB, rows-only queries keep their pinned
+    columns and stay deterministic, and none throws. The empty axis is
+    the totality gate (empty partitions, empty sources, a filter that
+    eliminated everything)."""
+    build(spark, axis, str(tmp_path))
+    assert run(spark, str(tmp_path), []) == []
 
 
 def test_vector_and_text_queries_survive_null_cells(spark, tmp_path, sf_dir):
@@ -117,11 +109,8 @@ def test_vector_and_text_queries_survive_null_cells(spark, tmp_path, sf_dir):
 
     src = sf_dir
     dst = str(tmp_path / "sf_nulls")
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
-        df = entrymod._t(spark, src, t)
+    for t in TABLES:
+        df = load_table(spark, t, src)
         if t == "documents":
             df = df.withColumn(
                 "text",

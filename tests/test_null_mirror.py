@@ -1,69 +1,31 @@
 """NULL-injected oracle-mirror regression: the driver fixtures carry no
 NULLs in documents.source/n_chars/text or events.user_id/ts/value, so a
 Spark operator and its DuckDB oracle can encode DIFFERENT NULL contracts
-and still pass the gate. The r8 sweep (tools/null_sweep.py) found 28
-such divergences; this suite pins one representative query per fixed
-family so a regression surfaces here instead of on the first NULL-
-bearing production fixture. The full 155-query sweep remains a tool run
-(~4 min), not a per-commit test."""
+and still pass the gate. The r8 NULL sweep (now the ``null`` axis of
+tools/sweep.py) found 28 such divergences; this suite pins one
+representative query per fixed family so a regression surfaces here
+instead of on the first NULL-bearing production fixture. The
+full-surface sweep is the slow-tier test_every_query_on_degenerate_axis."""
 
 from __future__ import annotations
 
-import math
 import os
-import sys
 
-import duckdb
 import pytest
 
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
-
-
-def _norm(rows, cols):
-    def cell(v):
-        if isinstance(v, float):
-            if math.isnan(v):
-                return "NaN"
-            if v == 0:
-                return 0.0
-            return round(v, 9 - int(math.floor(math.log10(abs(v)))) - 1)
-        if hasattr(v, "isoformat"):
-            return v.isoformat()[:26]
-        return v
-
-    return (
-        sorted(
-            (tuple(cell(v) for v in row) for row in rows),
-            key=lambda r: tuple(repr(v) for v in r),
-        ),
-        sorted(c.lower() for c in cols),
-    )
+from global_stock_data_warehouse_spark.sources.registry import TABLES, load_table
+from tools.check_correctness import run
+from tools.sweep import build
 
 
 @pytest.fixture(scope="module")
 def null_sf_dir(spark, tmp_path_factory):
     """sf0.001 tables with NULLs injected into exactly the columns whose
-    exclusion/normalization contracts the operators document (same
-    injection as tools/null_sweep.py — one definition, imported)."""
-    from null_sweep import build_null_dir
-
-    out = tmp_path_factory.mktemp("null_sf")
-    build_null_dir(spark, str(out))
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem "
-        "events documents embeddings"
-    ).split():
-        p = os.path.join(str(out), f"{t}.parquet")
-        glob = (
-            f"{p}/*.parquet"
-            if os.path.isdir(p) and not os.path.islink(p)
-            else p
-        )
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{glob}')"
-        )
-    return str(out), con
+    exclusion/normalization contracts the operators document (the same
+    injection as the sweep's ``null`` axis — one definition, imported)."""
+    out = str(tmp_path_factory.mktemp("null_sf"))
+    build(spark, "null", out)
+    return out
 
 
 # one per fixed family:
@@ -92,20 +54,7 @@ FAMILY_PINS = [
 
 @pytest.mark.parametrize("name", FAMILY_PINS)
 def test_null_mirror(spark, null_sf_dir, name):
-    import __spark_entry__ as entrymod
-
-    out, con = null_sf_dir
-    sdf = entrymod.queries()[name](spark, out)
-    srows, scols = [tuple(r) for r in sdf.collect()], sdf.columns
-    cur = con.execute(entrymod.oracle_sql()[name])
-    dcols = [d[0] for d in cur.description]
-    drows = cur.fetchall()
-    sn, sc = _norm(srows, scols)
-    dn, dc = _norm(drows, dcols)
-    assert sc == dc, f"{name}: schema spark={sc} duck={dc}"
-    assert len(sn) == len(dn), f"{name}: rows spark={len(sn)} duck={len(dn)}"
-    diffs = [(a, b) for a, b in zip(sn, dn) if a != b][:3]
-    assert not diffs, f"{name}: value diffs {diffs}"
+    assert run(spark, null_sf_dir, [name]) == []
 
 
 def test_json_extract_malformed_props_mirror(spark, tmp_path):
@@ -114,11 +63,10 @@ def test_json_extract_malformed_props_mirror(spark, tmp_path):
     CAST throws on '[1,2]') where Spark's get_json_object + non-ANSI
     cast return NULL — the oracle carries json_valid + TRY_CAST guards
     for exactly this (found by the r8 malformed-props probe)."""
-    import __spark_entry__ as entrymod
     from pyspark.sql import functions as F
 
     src = "/root/testdata/sf0.001"
-    ev = entrymod._t(spark, src, "events")
+    ev = load_table(spark, "events", src)
     extra = spark.createDataFrame(
         [
             (900001 + i, "2024-02-01 00:00:00", 5, "click", 1.0, p)
@@ -131,27 +79,10 @@ def test_json_extract_malformed_props_mirror(spark, tmp_path):
         "event_id long, ts string, user_id long, event_type string, "
         "value double, props string",
     ).withColumn("ts", F.col("ts").cast("timestamp"))
-    out = str(tmp_path / "ev")
+    out = str(tmp_path)
     ev.unionByName(extra).write.parquet(out + "/events.parquet")
 
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM "
-        f"read_parquet('{out}/events.parquet/*.parquet')"
-    )
-    _compare_inline(spark, con, "json_extract", out)
-
-
-def _compare_inline(spark, con, name, sf_dir):
-    import __spark_entry__ as entrymod
-
-    sdf = entrymod.queries()[name](spark, sf_dir)
-    srows, scols = [tuple(r) for r in sdf.collect()], sdf.columns
-    cur = con.execute(entrymod.oracle_sql()[name])
-    dcols = [d[0] for d in cur.description]
-    drows = cur.fetchall()
-    sn, sc = _norm(srows, scols)
-    dn, dc = _norm(drows, dcols)
-    assert sc == dc and len(sn) == len(dn)
-    diffs = [(a, b) for a, b in zip(sn, dn) if a != b][:3]
-    assert not diffs, f"{name}: {diffs}"
+    for t in TABLES:
+        if t != "events":
+            os.symlink(os.path.join(src, f"{t}.parquet"), os.path.join(out, f"{t}.parquet"))
+    assert run(spark, out, ["json_extract"]) == []

@@ -166,7 +166,8 @@ def test_decontaminate_marks_exactly_eval_overlaps(rows):
 
 
 def test_sql_view_surface(spark):
-    """register_views exposes every table to spark.sql."""
+    """register_views exposes every table to spark.sql, with the same
+    column types the queries see."""
     import os
 
     from global_stock_data_warehouse_spark.sources.registry import register_views
@@ -179,6 +180,9 @@ def test_sql_view_surface(spark):
         """
     ).first()
     assert row.n > 0
+    # one reader: events.ts is session-tz TIMESTAMP whatever the parquet
+    # generation on disk (NTZ micros here), so ts.cast('long') works
+    assert dict(spark.table("events").dtypes)["ts"] == "timestamp"
 
 
 # ---------------------------------------------------------------------------

@@ -16,8 +16,8 @@ domain (the engine's behavior is the contract; DuckDB is the checker):
 
 These tests PIN the Spark-side behavior so an engine upgrade that
 changes the mapping is caught; the fixture text stays out of the
-oracle-compared corpora by design (documented in tools/null_sweep.py's
-sibling note in COVERAGE.md)."""
+oracle-compared corpora by design (see the ``unicode`` axis of
+tools/sweep.py)."""
 
 from __future__ import annotations
 

@@ -1,10 +1,20 @@
-"""Local mirror of the driver's DuckDB-oracle correctness gate.
+"""Local mirror of the driver's DuckDB-oracle correctness gate, and the
+one comparator every degenerate-input sweep (``tools/sweep.py``) runs on.
 
-Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
-DuckDB at sf0.01, then compares row count, column names, and
-order-insensitive values (floats rounded to 6 significant-ish digits).
+``run(spark, sf_dir, names)`` checks each declared query on the tables in
+``sf_dir``:
+
+- an oracled query runs on Spark and its ``oracle_sql()`` twin on DuckDB;
+  row count, column names and order-insensitive values must agree (floats
+  rounded to ~9 significant digits, bit-exact under ``CHECK_EXACT=1``);
+- a rows-only query (no DuckDB twin) must not throw, must return the
+  column names pinned in ``ROWSONLY_SNAPSHOTS.json``, and must give the
+  same value md5 on two runs.
 
 Usage: python tools/check_correctness.py [name ...]
+  CHECK_SF_DIR=dir   tables to check (default: the sf0.01 fixtures)
+  CHECK_EXACT=1      bit-exact floats, as the driver's value hash
+  CHECK_REPORT=path  also write the per-query outcomes as JSON
 """
 
 from __future__ import annotations
@@ -22,11 +32,14 @@ import duckdb
 
 import __spark_entry__ as entrymod
 from global_stock_data_warehouse_spark.session import get_spark
+from global_stock_data_warehouse_spark.sources.registry import TABLES
+from tools.snapshot_rowsonly import snapshot_df
 
 SF_DIR = os.environ.get("CHECK_SF_DIR", "/root/testdata/sf0.01")
 # CHECK_EXACT=1: bit-exact float comparison (mirrors the driver's value
 # hash, which has NO tolerance); default rounds to ~9 significant digits.
 EXACT = os.environ.get("CHECK_EXACT", "0") == "1"
+SNAP_PATH = os.path.join(REPO, "ROWSONLY_SNAPSHOTS.json")
 
 # Queries whose float columns are ROUNDED INSIDE the query (e.g. 4dp):
 # Spark's moving-frame covar/var/corr and DuckDB's segment-tree window
@@ -34,7 +47,8 @@ EXACT = os.environ.get("CHECK_EXACT", "0") == "1"
 # rounding boundary can flip its last digit between engines on unlucky
 # data. These queries live OUTSIDE the driver's hash window by design;
 # compare their float cells with a one-last-digit epsilon instead of
-# bit equality so the local mirror isn't flaky.
+# bit equality so the local mirror isn't flaky. Only the pristine mirror
+# (``sf_dir == SF_DIR``) uses them; the degenerate sweeps stay strict.
 EPS_QUERIES = {"rolling_beta": 2e-4, "unigram_logprob": 2e-4, "source_kl": 2e-4, "autocorrelation": 2e-4, "dsir_weights": 2e-4, "nb_self_loglik": 2e-4}
 
 
@@ -114,90 +128,92 @@ def _eps_compare(srows, scols, drows, dcols, eps):
     return None
 
 
-def main(names: list[str]) -> int:
-    spark = get_spark("check-correctness")
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+def _vs_oracle(con, sql, sdf, eps):
+    """(None or a mismatch description, Spark row count) for one oracled
+    query's Spark frame against its DuckDB twin."""
+    srows, scols = [tuple(r) for r in sdf.collect()], sdf.columns
+    if EXACT:
+        # the driver materializes the oracle through pandas, where HUGEINT
+        # (DuckDB's integer-sum result type) becomes float64 and
+        # hash-mismatches Spark's bigint even for equal values
+        huge = [r[0] for r in con.execute(f"DESCRIBE {sql}").fetchall()
+                if "HUGEINT" in str(r[1]).upper()]
+        if huge:
+            return f"oracle emits HUGEINT columns {huge}", len(srows)
+    cur = con.execute(sql)
+    dcols = [d[0] for d in cur.description]
+    drows = cur.fetchall()
+    sn, sc = _normalize(srows, scols)
+    dn, dc = _normalize(drows, dcols)
+    if sc != dc:
+        return f"SCHEMA MISMATCH spark={sc} duck={dc}", len(sn)
+    if len(sn) != len(dn):
+        return f"ROWCOUNT MISMATCH spark={len(sn)} duck={len(dn)}", len(sn)
+    if eps is not None:
+        err = _eps_compare(srows, scols, drows, dcols, eps)
+        return err and f"EPS MISMATCH {err}", len(sn)
+    if sn != dn:
+        diffs = [(a, b) for a, b in zip(sn, dn) if a != b][:3]
+        return f"VALUE MISMATCH first-diffs={diffs}", len(sn)
+    return None, len(sn)
 
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
+
+def _rows_only(fn, spark, sf_dir, pinned_cols):
+    """(None or a failure description, row count) for a rows-only query:
+    it must keep its pinned column names and be deterministic."""
+    h1, n1, cols = snapshot_df(fn(spark, sf_dir))
+    h2, n2, _ = snapshot_df(fn(spark, sf_dir))
+    if cols != pinned_cols:
+        return f"SCHEMA {cols} vs pinned {pinned_cols}", n1
+    if (h1, n1) != (h2, n2):
+        return f"NONDETERMINISTIC {h1}/{n1} vs {h2}/{n2}", n1
+    return None, n1
+
+
+def run(spark, sf_dir: str, names) -> list[str]:
+    """Check ``names`` (empty: every declared query) on the tables in
+    ``sf_dir``; print one line per query and return the failing names.
+    ``CHECK_REPORT=path`` also writes the per-query outcomes as JSON."""
+    con = duckdb.connect()
+    for t in TABLES:
+        p = os.path.join(sf_dir, f"{t}.parquet")
+        # a table Spark wrote is a directory of part files
+        src = os.path.join(p, "*.parquet") if os.path.isdir(p) else p
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
+    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    with open(SNAP_PATH) as fh:
+        snaps = json.load(fh)
+    eps_queries = EPS_QUERIES if sf_dir == SF_DIR else {}
     targets = names or list(qs)
-    failures = []
-    # CHECK_REPORT=path: persist a per-query JSON record so mirror-only
-    # verification claims are auditable in-repo (r9 ADVICE), not just
-    # stdout lines lost to the session.
     report: dict = {}
     for name in targets:
         t0 = time.time()
         try:
-            sdf = qs[name](spark, SF_DIR)
-            srows = [tuple(r) for r in sdf.collect()]
-            scols = sdf.columns
+            if name in oracles:
+                err, n = _vs_oracle(con, oracles[name], qs[name](spark, sf_dir),
+                                    eps_queries.get(name))
+            else:
+                err, n = _rows_only(qs[name], spark, sf_dir,
+                                    snaps.get(name, {}).get("cols"))
         except Exception as e:
-            failures.append(name)
-            report[name] = {"status": f"SPARK_ERROR: {str(e)[:200]}"}
-            print(f"FAIL {name}: spark error: {e}")
-            continue
-        if name not in oracles:
-            report[name] = {"status": "ROWS_ONLY", "rows": len(srows)}
-            print(f"SKIP {name}: no oracle (rows-only: {len(srows)} rows, {time.time()-t0:.1f}s)")
-            continue
-        try:
-            if EXACT:
-                # the driver materializes the oracle through pandas, where
-                # HUGEINT (DuckDB's integer-sum result type) becomes float64
-                # and hash-mismatches Spark's bigint even for equal values —
-                # flag any oracle emitting one
-                desc = con.execute(f"DESCRIBE {oracles[name]}").fetchall()
-                huge = [r[0] for r in desc if "HUGEINT" in str(r[1]).upper()]
-                if huge:
-                    failures.append(name)
-                    report[name] = {"status": f"HUGEINT: {huge}"}
-                    print(f"FAIL {name}: oracle emits HUGEINT columns {huge} "
-                          "(float64 under the driver's pandas fetch)")
-                    continue
-            cur = con.execute(oracles[name])
-            dcols = [d[0] for d in cur.description]
-            drows = cur.fetchall()
-        except Exception as e:
-            failures.append(name)
-            report[name] = {"status": f"DUCK_ERROR: {str(e)[:200]}"}
-            print(f"FAIL {name}: duckdb error: {e}")
-            continue
-        sn, sc = _normalize(srows, scols)
-        dn, dc = _normalize(drows, dcols)
-        status = "OK"
-        if sc != dc:
-            status = f"SCHEMA MISMATCH spark={sc} duck={dc}"
-        elif len(sn) != len(dn):
-            status = f"ROWCOUNT MISMATCH spark={len(sn)} duck={len(dn)}"
-        elif name in EPS_QUERIES:
-            err = _eps_compare(srows, scols, drows, dcols, EPS_QUERIES[name])
-            if err:
-                status = f"EPS MISMATCH {err}"
-        elif sn != dn:
-            diffs = [(a, b) for a, b in zip(sn, dn) if a != b][:3]
-            status = f"VALUE MISMATCH first-diffs={diffs}"
-        report[name] = {"status": status if status == "OK" else f"FAIL: {status[:200]}",
-                        "rows": len(sn)}
-        if name in EPS_QUERIES and status == "OK":
-            report[name]["eps"] = EPS_QUERIES[name]
-        if status != "OK":
-            failures.append(name)
-            print(f"FAIL {name}: {status}")
+            err, n = f"ERROR {type(e).__name__}: {str(e)[:300]}", None
+        kind = "oracle" if name in oracles else "rows-only"
+        report[name] = {"status": f"FAIL: {err[:200]}" if err else "OK",
+                        "kind": kind, "rows": n}
+        if name in eps_queries and not err:
+            report[name]["eps"] = eps_queries[name]
+        if err:
+            print(f"FAIL {name}: {err}")
         else:
-            print(f"OK   {name} ({len(sn)} rows, {time.time()-t0:.1f}s)")
-
-    print(f"\n{len(targets) - len(failures)}/{len(targets)} passed")
+            print(f"OK   {name} ({kind}, {n} rows, {time.time()-t0:.1f}s)")
+    failures = [n for n, r in report.items() if r["status"] != "OK"]
+    print(f"\n{len(targets) - len(failures)}/{len(targets)} passed on {sf_dir}")
+    if failures:
+        print("failing:", " ".join(failures))
     out_path = os.environ.get("CHECK_REPORT")
     if out_path:
         payload = {
-            "sf_dir": SF_DIR,
+            "sf_dir": sf_dir,
             "exact": EXACT,
             "n_targets": len(targets),
             "n_passed": len(targets) - len(failures),
@@ -206,8 +222,8 @@ def main(names: list[str]) -> int:
         with open(out_path, "w") as fh:
             json.dump(payload, fh, indent=1, sort_keys=True)
         print(f"report -> {out_path}")
-    return 1 if failures else 0
+    return failures
 
 
 if __name__ == "__main__":
-    raise SystemExit(main(sys.argv[1:]))
+    raise SystemExit(1 if run(get_spark("check-correctness"), SF_DIR, sys.argv[1:]) else 0)
