@@ -212,9 +212,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def q_wmy_gold_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FULL flagship plan (plans/wmy.py): validation gates -> broadcast
-    anti-join quarantine -> W+M resample -> per-(stock,freq) returns, as
-    one oracle-checked query (events mapped to bars: value = OHLC)."""
+    """The FULL flagship plan (plans/wmy.py): per-symbol window gates -> one
+    W+M resample aggregate -> OHLC gate -> per-(stock,freq) returns, all on
+    one hash exchange on the symbol, as one oracle-checked query (events
+    mapped to bars: value = OHLC)."""
     from global_stock_data_warehouse_spark.plans.wmy import wmy_pipeline
 
     bars = _event_bars(spark, sf_dir).select(

@@ -9,8 +9,8 @@ expressions (whole-stage codegen) or, where genuinely procedural
 from global_stock_data_warehouse_spark.operators.resample import ohlc_resample  # noqa: F401
 from global_stock_data_warehouse_spark.operators.returns import with_period_return  # noqa: F401
 from global_stock_data_warehouse_spark.operators.validate import (  # noqa: F401
-    gate_summary,
-    quarantine,
+    ohlc_violation,
+    with_series_gates,
 )
 from global_stock_data_warehouse_spark.operators.upsert import upsert_keyed  # noqa: F401
 from global_stock_data_warehouse_spark.operators.joins import (  # noqa: F401

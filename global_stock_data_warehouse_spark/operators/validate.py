@@ -1,4 +1,4 @@
-"""Per-entity data-quality gates + quarantine (A8/A9 + the wmy SKIP gates).
+"""Per-entity data-quality gates (A8/A9 + the wmy SKIP gates).
 
 The reference validates each symbol's series before resampling and silently
 skips failures (downloader_wmy.py:94-122):
@@ -7,32 +7,34 @@ skips failures (downloader_wmy.py:94-122):
   gate 4: any(close > high or close < low)     -> ohlc_violation  (post-resample)
 (gate 1, empty file, is vacuous in a table-scan world: no rows, no group.)
 
-Spark-first: gates are ONE grouped aggregation producing a per-entity
-verdict dim; quarantine is a broadcast anti-join of facts against the failed
-set. At scale the verdict table is tiny (one row per symbol), so the
-anti-join broadcasts — no second shuffle of the fact table.
+Spark-first: gates 2-3 are per-entity window columns, so every row carries
+its entity's verdict and a caller filters or aggregates on it over the
+partitioning the windows already need — no verdict dim, no join back.
+Gate 4 is a row expression; callers aggregate it per entity wherever the
+frame it must see (the resampled one) is built.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import broadcast
+
+SERIES_GATES = ("invalid_price", "gap_too_large", "n_rows")
 
 
-def gate_summary(
+def with_series_gates(
     df: DataFrame,
     key_cols: Sequence[str] = ("symbol",),
     date_col: str = "date",
     close_col: str = "close",
-    high_col: str = "high",
-    low_col: str = "low",
     gap_since: str = "2024-01-01",
     max_gap_days: int = 14,
 ) -> DataFrame:
-    """One row per entity with boolean gate columns and a pass verdict.
+    """Add the pre-resample gates as per-entity window columns
+    (``SERIES_GATES``): ``invalid_price`` (gate 2), ``gap_too_large``
+    (gate 3) and ``n_rows``; every row of an entity carries the same values.
 
     Gap semantics mirror the reference exactly (downloader_wmy.py:103-107):
     the series is FIRST restricted to dates >= ``gap_since`` and gaps are
@@ -41,25 +43,35 @@ def gate_summary(
     Because dates are monotone under the window order, "previous row is
     also post-cutoff" (lag(date) >= gap_since) selects exactly the
     subset-internal diffs without a second pass over the data.
+
+    Both windows need only a clustering on ``key_cols``, so on input
+    already hash-partitioned by them they add a sort and no exchange.
     """
-    w = Window.partitionBy(*key_cols).orderBy(date_col)
-    prev = F.lag(F.col(date_col)).over(w)
+    prev = F.lag(F.col(date_col)).over(Window.partitionBy(*key_cols).orderBy(date_col))
     gap = F.when(prev >= F.lit(gap_since), F.datediff(F.col(date_col), prev))
-    with_gap = df.withColumn("_gap", gap)
-    agg = with_gap.groupBy(*key_cols).agg(
-        F.max(F.when(F.col(close_col) <= 0, 1).otherwise(0)).cast("boolean").alias("invalid_price"),
-        F.coalesce(F.max("_gap") > max_gap_days, F.lit(False)).alias("gap_too_large"),
-        F.max(
-            F.when((F.col(close_col) > F.col(high_col)) | (F.col(close_col) < F.col(low_col)), 1).otherwise(0)
+    entity = Window.partitionBy(*key_cols)
+    return (
+        df.withColumn("_gap", gap)
+        .withColumns(
+            {
+                "invalid_price": F.max(F.when(F.col(close_col) <= 0, 1).otherwise(0))
+                .over(entity)
+                .cast("boolean"),
+                "gap_too_large": F.coalesce(
+                    F.max("_gap").over(entity) > max_gap_days, F.lit(False)
+                ),
+                "n_rows": F.count(F.lit(1)).over(entity),
+            }
         )
-        .cast("boolean")
-        .alias("ohlc_violation"),
-        F.count(F.lit(1)).alias("n_rows"),
+        .drop("_gap")
     )
-    return agg.withColumn(
-        "passed",
-        ~F.col("invalid_price") & ~F.col("gap_too_large") & ~F.col("ohlc_violation"),
-    )
+
+
+def ohlc_violation(close_col: str = "close", high_col: str = "high", low_col: str = "low") -> Column:
+    """Gate 4 on one row: close outside [low, high]. NULL prices do not
+    violate, so the column is never NULL."""
+    close = F.col(close_col)
+    return F.coalesce((close > F.col(high_col)) | (close < F.col(low_col)), F.lit(False))
 
 
 def freshness_watermark(
@@ -84,19 +96,3 @@ def needs_update(df: DataFrame, as_of, date_col: str = "date") -> bool:
     (main.py:112), which silently re-ran a possibly-corrupt pipeline."""
     row = freshness_watermark(df, date_col).first()
     return row is None or row.watermark is None or row.watermark < as_of
-
-
-def quarantine(
-    facts: DataFrame,
-    verdicts: DataFrame,
-    key_cols: Sequence[str] = ("symbol",),
-) -> tuple[DataFrame, DataFrame]:
-    """Split facts into (clean, quarantined) by the verdict dim.
-
-    The verdict side is per-entity (small) -> broadcast semi/anti join,
-    which AQE would pick anyway but we pin it for plan stability.
-    """
-    failed = broadcast(verdicts.filter(~F.col("passed")).select(*key_cols))
-    clean = facts.join(failed, list(key_cols), "left_anti")
-    bad = facts.join(failed, list(key_cols), "left_semi")
-    return clean, bad

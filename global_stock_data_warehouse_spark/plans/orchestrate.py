@@ -37,9 +37,11 @@ BAR_SCHEMA = (
 
 
 def get_summary(bars: DataFrame) -> dict:
-    """get_db_summary (main.py:114-137): one single-pass multi-aggregate."""
+    """get_db_summary (main.py:114-137): one single-pass multi-aggregate.
+    The distinct count is the size of a set aggregate, so the plan holds one
+    exchange; ``countDistinct`` plans a second, and a job of its own."""
     row = bars.agg(
-        F.countDistinct("symbol").alias("total_stocks"),
+        F.size(F.collect_set("symbol")).alias("total_stocks"),
         F.max("date").alias("latest_date"),
         F.count(F.lit(1)).alias("total_records"),
     ).first()
@@ -76,7 +78,8 @@ def sync_market(
         symbols, fetch_fn, schema, max_concurrency=max_workers
     ).localCheckpoint(eager=True)
     ok, dead = split_quarantine(fetched)
-    fail_list = [r.symbol for r in dead.select("symbol").limit(10).collect()]
+    # one job; limit() would scan the partitions in growing rounds
+    fail_list = [r.symbol for r in dead.select("symbol").collect()][:10]
     ok = ok.filter(F.col("date").isNotNull())
     stored = upsert_keyed(spark, ok, bars_path, ("date", "symbol"), existing=existing)
 

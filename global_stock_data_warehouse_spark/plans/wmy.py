@@ -1,15 +1,15 @@
 """The flagship pipeline: validate -> quarantine -> W/M/Y resample -> returns.
 
 Re-expresses the reference's per-file thread-pool pipeline
-(downloader_wmy.py:130-179) as ONE distributed job:
+(downloader_wmy.py:130-179) as ONE distributed job over ONE hash exchange
+on the symbol:
 
-    daily bars ──gate_summary──> per-symbol verdicts (tiny)
-        │                             │
-        └──quarantine (broadcast anti-join)──> clean bars
-                │
-                ├─ ohlc_resample 'W' ─┐
-                ├─ ohlc_resample 'M' ─┼─ unionByName ─ with_period_return ─> gold
-                └─ ohlc_resample 'Y' ─┘
+    daily bars ─ repartition(symbol) ─ series gates (per-symbol windows)
+        │
+        └─ ohlc_resample(W, M, Y): one aggregate on (symbol, freq, period_end)
+              │
+              ├─ OHLC gate (per-symbol window) ─ filter ─ with_period_return ─> gold
+              └─ groupBy(symbol) ──────────────────────────────────────────> verdicts
 
 Semantics order matters and matches the reference: returns are computed
 AFTER quarantine, per (stock, freq), on the resampled series
@@ -20,11 +20,14 @@ close>high, not vice versa) and would quarantine symbols the reference
 keeps. A symbol violating in ANY frequency frame is dropped from ALL
 frequencies, like the reference's whole-file skip.
 
-Scale: one shuffle on (symbol) for gates, one hash-agg shuffle per freq on
-(symbol, bucket) with map-side partials, one window shuffle on (symbol) for
-the post-resample OHLC gate which the returns window then reuses
-(HashPartitioning(stock_id) satisfies ClusteredDistribution(stock_id, freq)).
-The verdict join broadcasts. No driver-side loops.
+Scale: every step is per symbol, so HashPartitioning(symbol) satisfies
+them all (the windows, the resample aggregate keyed on a superset of the
+symbol, the verdict groupBy and the returns window on (stock_id, freq)).
+Symbols failing the series gates are resampled too and filtered out of
+gold afterwards, which gives the same gold as filtering first since no
+symbol's buckets depend on another's; gold and verdicts then both come
+from the one aggregate, with no join.
+No broadcast, no driver-side loops.
 """
 
 from __future__ import annotations
@@ -36,7 +39,11 @@ from pyspark.sql import functions as F
 
 from global_stock_data_warehouse_spark.operators.resample import ohlc_resample
 from global_stock_data_warehouse_spark.operators.returns import with_period_return
-from global_stock_data_warehouse_spark.operators.validate import gate_summary, quarantine
+from global_stock_data_warehouse_spark.operators.validate import (
+    SERIES_GATES,
+    ohlc_violation,
+    with_series_gates,
+)
 
 
 def wmy_pipeline(
@@ -53,74 +60,52 @@ def wmy_pipeline(
     gold: period_end, open, high, low, close, volume, freq, stock_id,
     period_return — the reference's W/M/Y parquet schema (FIXTURES.md §B4).
     verdicts: one row per symbol with gate booleans (feeds the audit table).
+
+    A NULL symbol is one series to every window and aggregate, but, as a
+    NULL key matches no verdict in a join on the symbol, its bars pass the
+    series gates and its ``ohlc_violation`` is False; gold still drops it
+    on a resampled OHLC violation (pinned in tests/test_wmy_pipeline.py).
     """
-    # Single hash partition on the symbol: HashPartitioning(symbol) satisfies
-    # the clustering requirement of the gate aggregation AND every per-freq
-    # resample agg (grouping keys are supersets of the partition key), so
-    # the whole validate->resample fan-out shares one exchange.
-    bars = bars.repartition(key_col)
-    raw_verdicts = gate_summary(
-        bars,
+    gated = with_series_gates(
+        bars.repartition(key_col),
         key_cols=(key_col,),
         date_col=time_col,
         gap_since=gap_since,
         max_gap_days=max_gap_days,
     )
-    # pre-resample gates only (empty/price/gap); OHLC is checked on the
-    # resampled frames below, matching the reference's gate order
-    pre = raw_verdicts.withColumn(
-        "passed", ~F.col("invalid_price") & ~F.col("gap_too_large")
+    resampled = ohlc_resample(
+        gated,
+        tuple(freqs),
+        time_col=time_col,
+        key_cols=(key_col, *SERIES_GATES),
+        tiebreak_cols=tiebreak_cols,
     )
-    clean, _ = quarantine(bars, pre, key_cols=(key_col,))
-
-    resampled = None
-    for freq in freqs:
-        r = ohlc_resample(
-            clean,
-            freq,
-            time_col=time_col,
-            key_cols=(key_col,),
-            tiebreak_cols=tiebreak_cols,
-        )
-        resampled = r if resampled is None else resampled.unionByName(r)
+    key = F.col(key_col)
+    series_ok = ~F.col("invalid_price") & ~F.col("gap_too_large")
 
     # post-resample OHLC gate (downloader_wmy.py:118-122): any violating
-    # bucket in ANY freq drops the symbol everywhere. Whole-partition max
-    # over a window keyed on the symbol — computed in the same pass as the
-    # resample output, no second scan of the raw bars.
-    ohlc_bad = F.max(
-        F.when(
-            (F.col("close") > F.col("high")) | (F.col("close") < F.col("low")), 1
-        ).otherwise(0)
-    ).over(Window.partitionBy(key_col))
+    # bucket in ANY freq drops the symbol everywhere
+    ohlc_bad = F.max(ohlc_violation()).over(Window.partitionBy(key_col))
     kept = (
-        resampled.withColumn("_ohlc_viol", ohlc_bad)
-        .filter(F.col("_ohlc_viol") == 0)
-        .drop("_ohlc_viol")
-    )
-
-    gold = with_period_return(
-        kept.withColumnRenamed(key_col, "stock_id"),
-        key_cols=("stock_id", "freq"),
-    )
-
-    # verdict dim (monitoring path): fold the post-resample OHLC verdict in;
-    # quarantined symbols were never resampled -> ohlc_violation = False,
-    # exactly like the reference (gate 4 only runs past gates 1-3)
-    post = resampled.groupBy(key_col).agg(
-        F.max(
-            F.when(
-                (F.col("close") > F.col("high")) | (F.col("close") < F.col("low")), 1
-            ).otherwise(0)
+        resampled.withColumn("_ohlc_bad", ohlc_bad)
+        .filter((series_ok | key.isNull()) & ~F.col("_ohlc_bad"))
+        .select(
+            key.alias("stock_id"), "period_end", "open", "high", "low", "close", "volume", "freq"
         )
-        .cast("boolean")
-        .alias("ohlc_violation")
     )
+    gold = with_period_return(kept, key_cols=("stock_id", "freq"))
+
+    # gate 4 only runs past gates 2-3, like the reference's skip order
+    ohlc = key.isNotNull() & series_ok & F.col("_ohlc_bad")
     verdicts = (
-        pre.drop("ohlc_violation")
-        .join(post, key_col, "left")
-        .withColumn("ohlc_violation", F.coalesce("ohlc_violation", F.lit(False)))
-        .withColumn("passed", F.col("passed") & ~F.col("ohlc_violation"))
+        resampled.groupBy(key_col, *SERIES_GATES)
+        .agg(F.max(ohlc_violation()).alias("_ohlc_bad"))
+        .select(
+            key_col,
+            *SERIES_GATES,
+            (series_ok & ~ohlc).alias("passed"),
+            ohlc.alias("ohlc_violation"),
+        )
     )
     return gold, verdicts
 

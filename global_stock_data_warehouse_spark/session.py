@@ -57,8 +57,6 @@ def get_spark(app_name: str = "gsdw-spark", master: str | None = None) -> SparkS
         # at 100 TB this is the difference between shuffling a table and
         # shuffling a filter's survivors.
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        # Push count/min/max straight into parquet footer statistics.
-        .config("spark.sql.parquet.aggregatePushdown", "true")
         # Keep completed-stage metrics around for the full bench sweep:
         # bench.py diffs shuffle-write bytes via the REST stage listing,
         # and the default retention (1000 stages) can start evicting

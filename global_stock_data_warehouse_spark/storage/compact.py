@@ -37,20 +37,26 @@ def table_exists(spark: SparkSession, path: str) -> bool:
 def table_file_stats(spark: SparkSession, path: str) -> tuple[int, int]:
     """(n_files, total_bytes) of the parquet table at ``path``.
 
-    Sizes come from the Hadoop FileSystem API, so any scheme Spark can
-    read (file:, hdfs:, s3a:, ...) reports true bytes — the previous
-    ``os.path.getsize`` version silently returned 0 for every non-local
-    URI, which made ``compact_parquet`` always rewrite to a single file.
-    A missing file now raises instead of being skipped."""
-    files = spark.read.parquet(path).inputFiles()
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    total = 0
-    for f in files:
-        p = jvm.org.apache.hadoop.fs.Path(f)
-        fs = p.getFileSystem(hconf)
-        total += fs.getFileStatus(p).getLen()
-    return len(files), total
+    Listed through the Hadoop FileSystem API, so any scheme Spark can read
+    (file:, hdfs:, s3a:, ...) reports true bytes, and no Spark job runs.
+    Names starting with ``_`` or ``.`` (``_SUCCESS``, checksum files) are
+    skipped at every level, as Spark's file index skips them. A missing
+    path raises."""
+    root = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    n_files = total = 0
+    dirs = [root]
+    while dirs:
+        for status in fs.listStatus(dirs.pop()):
+            name = status.getPath().getName()
+            if name.startswith(("_", ".")):
+                continue
+            if status.isDirectory():
+                dirs.append(status.getPath())
+            else:
+                n_files += 1
+                total += status.getLen()
+    return n_files, total
 
 
 def compact_parquet(

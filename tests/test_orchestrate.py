@@ -117,3 +117,56 @@ def test_repeated_sync_compiles_almost_nothing(spark, tmp_path):
     daily_job()
     compiles = metrics.METRIC_COMPILATION_TIME().getCount() - c0
     assert compiles <= 4, compiles
+
+
+def test_second_day_sync_and_compaction_job_counts(spark, tmp_path, monkeypatch):
+    """Spark jobs of one day's sync on an existing store, then its
+    compaction, counted by job group: the dead-letter list is one job, the
+    whole sync 13, and the compaction, which lists the files and finds
+    nothing to rewrite, none."""
+    from global_stock_data_warehouse_spark.plans import orchestrate
+    from global_stock_data_warehouse_spark.storage.compact import compact_parquet
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    path = str(tmp_path / "bars")
+    syms = spark.createDataFrame([("AAA",), ("BBB",), ("DEAD",)], "symbol string")
+    days = ["2024-01-02", "2024-01-03", "2024-01-04"]
+    sync_market(spark, syms, _bars_fetch(days[:2]), path, as_of=days[1], max_workers=2)
+
+    def group(name):
+        sc.setJobGroup(name, name)
+
+    def after(fn, name):
+        def wrapped(*args, **kwargs):
+            out = fn(*args, **kwargs)
+            group(name)
+            return out
+
+        return wrapped
+
+    def before(fn, name):
+        def wrapped(*args, **kwargs):
+            group(name)
+            return fn(*args, **kwargs)
+
+        return wrapped
+
+    # jobs between the dead-letter split and the upsert list the dead letters
+    monkeypatch.setattr(orchestrate, "split_quarantine", after(orchestrate.split_quarantine, "dead"))
+    monkeypatch.setattr(orchestrate, "upsert_keyed", before(orchestrate.upsert_keyed, "rest"))
+    try:
+        group("sync")
+        r = sync_market(spark, syms, _bars_fetch(days[1:]), path, as_of=days[2], max_workers=2)
+        group("compact")
+        compacted = compact_parquet(spark, path)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    jobs = {g: len(tracker.getJobIdsForGroup(g)) for g in ("sync", "dead", "rest", "compact")}
+    assert r["fail_list"] == ["DEAD"] and r["total_records"] == 6
+    assert jobs["dead"] == 1, jobs
+    assert jobs["sync"] + jobs["dead"] + jobs["rest"] == 13, jobs
+    assert jobs["compact"] == 0, jobs
+    # the listing skips what Spark's file index skips (_SUCCESS, .crc files)
+    assert compacted["files_after"] == len(spark.read.parquet(path).inputFiles())

@@ -141,6 +141,29 @@ def test_important_stock_broadcasts_dims_and_total(spark, sf_dir):
     assert plan.count("Exchange hashpartitioning") <= 2, plan
 
 
+def test_wmy_pipeline_one_keyed_exchange(spark, tmp_path):
+    """Gold and verdicts each run on the one hash exchange on the symbol:
+    the series gates are windows and every frequency is one aggregate over
+    that partitioning, so no per-freq branch, no broadcast quarantine and a
+    single scan of the bars."""
+    import datetime as dt
+
+    from global_stock_data_warehouse_spark.plans.wmy import wmy_pipeline
+
+    path = str(tmp_path / "bars")
+    days = [dt.date(2024, 1, 2) + dt.timedelta(days=i) for i in range(30)]
+    spark.createDataFrame(
+        [(s, d, 10.0, 11.0, 9.0, 10.0, 100) for s in ("AAA", "BBB") for d in days],
+        "symbol string, date date, open double, high double, low double, close double, volume long",
+    ).write.parquet(path)
+    for out in wmy_pipeline(spark.read.parquet(path)):
+        plan = _plan(out)
+        assert plan.count("Exchange hashpartitioning") == 1, plan
+        assert plan.count("Exchange") == 1, plan
+        assert "BroadcastExchange" not in plan, plan
+        assert plan.count("FileScan") == 1, plan
+
+
 def test_no_plan_antipatterns_in_any_query(spark):
     """Global physical-plan gate over EVERY declared query: no
     CartesianProduct (an unconstrained pair blowup at scale) and no

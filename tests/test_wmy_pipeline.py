@@ -135,3 +135,29 @@ def test_ohlc_invariant(gold_and_verdicts):
     gold, _ = gold_and_verdicts
     assert ((gold["low"] <= gold["close"]) & (gold["close"] <= gold["high"])).all()
     assert ((gold["low"] <= gold["open"]) & (gold["open"] <= gold["high"])).all()
+
+
+def test_null_symbol_semantics(spark):
+    """A NULL symbol is one series to the gates, but its bars are never
+    quarantined by the series gates and its verdict never reports an OHLC
+    violation; gold still drops it on a resampled OHLC violation."""
+    schema = "symbol string, date date, open double, high double, low double, close double, volume long"
+    days = [dt.date(2024, 1, 2) + dt.timedelta(days=i) for i in range(10)]
+    clean = [("AAA.TW", d, 10.0, 11.0, 9.0, 10.0, 100) for d in days]
+
+    def run(null_rows):
+        gold, verdicts = wmy_pipeline(spark.createDataFrame(clean + null_rows, schema))
+        null_verdict = [r for r in verdicts.collect() if r.symbol is None]
+        return gold.filter(F.col("stock_id").isNull()).count(), null_verdict
+
+    # a zero close mid-week: the invalid-price gate fails, the bars stay
+    zero_close = [(None, d, 10.0, 11.0, 9.0, 0.0 if i == 1 else 10.0, 100) for i, d in enumerate(days)]
+    n_gold, [v] = run(zero_close)
+    assert n_gold == 2 + 1 + 1  # W, M and Y buckets of 2024-01-02..11
+    assert v.invalid_price and not v.passed and not v.ohlc_violation and v.n_rows == 10
+
+    # the last close above the high: its W, M and Y buckets violate
+    above_high = [(None, d, 10.0, 11.0, 9.0, 12.0 if i == 9 else 10.0, 100) for i, d in enumerate(days)]
+    n_gold, [v] = run(above_high)
+    assert n_gold == 0
+    assert v.passed and not v.ohlc_violation and not v.invalid_price
