@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Row, Window
 from pyspark.sql import functions as F
 
 SERIES_GATES = ("invalid_price", "gap_too_large", "n_rows")
@@ -80,13 +80,25 @@ def freshness_watermark(
     key_cols: Sequence[str] = (),
 ) -> DataFrame:
     """MAX(date) freshness watermark (A2 / main.py:101-112 intent) —
-    overall, or per key when ``key_cols`` given. The driver-side
-    incremental gate: skip (or bound) the ingest job when the watermark is
-    already current. One aggregate; on a date-partitioned table Catalyst
-    answers it from partition metadata without scanning rows."""
+    overall, or per key when ``key_cols`` given, as a frame. The
+    driver-side incremental gate on the same MAX is ``needs_update``."""
     if key_cols:
         return df.groupBy(*key_cols).agg(F.max(date_col).alias("watermark"))
     return df.agg(F.max(date_col).alias("watermark"))
+
+
+def observed(df: DataFrame, *aggs: Column) -> Row:
+    """The global aggregates ``aggs`` of ``df``, as ``df.agg(*aggs).first()``
+    gives them, with no exchange of their own: they are observed on a
+    no-op write of ``df``, so a ``df`` without an exchange takes ONE Spark
+    job. Each task's partial aggregates are folded in the job's result
+    stage, which applies each task's update exactly once. Under AQE a
+    global ``agg(...).first()`` is two jobs, a map stage and a result
+    stage. The aggregates come back to the driver whole, so a set
+    aggregate must be bounded (e.g. by the symbol universe)."""
+    obs = Observation()
+    df.observe(obs, *aggs).select().write.format("noop").mode("overwrite").save()
+    return Row(**obs.get)
 
 
 def needs_update(df: DataFrame, as_of, date_col: str = "date") -> bool:
@@ -94,5 +106,5 @@ def needs_update(df: DataFrame, as_of, date_col: str = "date") -> bool:
     table -> True (never synced). NOT swallowed on error — a broken scan
     must fail the run, unlike the reference's bare ``except: return True``
     (main.py:112), which silently re-ran a possibly-corrupt pipeline."""
-    row = freshness_watermark(df, date_col).first()
-    return row is None or row.watermark is None or row.watermark < as_of
+    watermark = observed(df, F.max(date_col).alias("watermark")).watermark
+    return watermark is None or watermark < as_of

@@ -22,11 +22,11 @@ from collections.abc import Callable
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from global_stock_data_warehouse_spark.operators.upsert import upsert_keyed
-from global_stock_data_warehouse_spark.operators.validate import needs_update
+from global_stock_data_warehouse_spark.operators.validate import needs_update, observed
 from global_stock_data_warehouse_spark.sources.fetch import fetch_timeseries, split_quarantine
 from global_stock_data_warehouse_spark.storage.compact import table_exists
 
@@ -37,19 +37,16 @@ BAR_SCHEMA = (
 
 
 def get_summary(bars: DataFrame) -> dict:
-    """get_db_summary (main.py:114-137): one single-pass multi-aggregate.
-    The distinct count is the size of a set aggregate, so the plan holds one
-    exchange; ``countDistinct`` plans a second, and a job of its own."""
-    row = bars.agg(
+    """get_db_summary (main.py:114-137): the three aggregates, observed in
+    one Spark job with no exchange (``validate.observed``); the distinct
+    count is the size of a set aggregate, which the symbol universe
+    bounds."""
+    return observed(
+        bars,
         F.size(F.collect_set("symbol")).alias("total_stocks"),
         F.max("date").alias("latest_date"),
         F.count(F.lit(1)).alias("total_records"),
-    ).first()
-    return {
-        "total_stocks": row.total_stocks,
-        "latest_date": row.latest_date,
-        "total_records": row.total_records,
-    }
+    ).asDict()
 
 
 def sync_market(
@@ -64,7 +61,8 @@ def sync_market(
     """One market sync run. ``as_of`` drives the incremental gate: if the
     stored watermark already covers it, the fetch is skipped entirely
     (main.py:101-112 intent, without the bare-except). A bars store that
-    exists but cannot be read raises instead of passing for empty."""
+    exists but cannot be read raises instead of passing for empty.
+    ``fail_list`` holds the first 10 dead letters in symbol order."""
     existing = spark.read.parquet(bars_path) if table_exists(spark, bars_path) else None
 
     if as_of is not None and existing is not None and not needs_update(
@@ -72,18 +70,24 @@ def sync_market(
     ):
         return {"skipped": True, "has_changed": False, **get_summary(existing)}
 
-    # Materialised once: the dead letters and the upsert read the same
-    # rows, and fetch_fn runs once per symbol.
-    fetched = fetch_timeseries(
-        symbols, fetch_fn, schema, max_concurrency=max_workers
-    ).localCheckpoint(eager=True)
-    ok, dead = split_quarantine(fetched)
-    # one job; limit() would scan the partitions in growing rounds
-    fail_list = [r.symbol for r in dead.select("symbol").collect()][:10]
+    # Materialised once, so fetch_fn runs once per symbol. The dead letters
+    # are observed on the checkpoint's job: its last stage is a result
+    # stage, so a retried task cannot list a symbol twice.
+    dead = Observation()
+    dead_symbol = F.when(F.col("_fetch_error").isNotNull(), F.col("symbol"))
+    fetched = (
+        fetch_timeseries(symbols, fetch_fn, schema, max_concurrency=max_workers)
+        .observe(dead, F.collect_list(dead_symbol).alias("symbols"))
+        .localCheckpoint(eager=True)
+    )
+    fail_list = sorted(dead.get["symbols"])[:10]
+    ok, _ = split_quarantine(fetched)
     ok = ok.filter(F.col("date").isNotNull())
     stored = upsert_keyed(spark, ok, bars_path, ("date", "symbol"), existing=existing)
 
-    n_requested = symbols.count()
+    # counted on its own job: on the fetch's side of the round-robin
+    # exchange it would be a map stage, which a retry counts twice
+    n_requested = observed(symbols, F.count(F.lit(1)).alias("n")).n
     summary = get_summary(stored)
     return {
         "skipped": False,

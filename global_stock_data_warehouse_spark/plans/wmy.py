@@ -41,6 +41,7 @@ from global_stock_data_warehouse_spark.operators.resample import ohlc_resample
 from global_stock_data_warehouse_spark.operators.returns import with_period_return
 from global_stock_data_warehouse_spark.operators.validate import (
     SERIES_GATES,
+    observed,
     ohlc_violation,
     with_series_gates,
 )
@@ -130,23 +131,25 @@ def incremental_wmy(
     recompute frontier — results are bit-identical to a full rerun
     (asserted in tests/test_wmy_pipeline.py).
 
-    Scale: the changed-symbol dim is tiny (one row per touched symbol) ->
-    broadcast semi-join prunes the fact scan to changed partitions;
-    untouched gold/verdict rows pass through with an equally broadcast
-    anti-join. Work scales with the delta, not the table.
+    Scale: the changed-symbol set is collected once, in one Spark job
+    (``validate.observed``); it is bounded by the symbol universe. The
+    fact scan is then filtered to it (an ``In``/``InSet`` predicate, which
+    Parquet can push down), and untouched gold/verdict rows pass through a
+    filter on its complement: no join, no broadcast. Work scales with the
+    delta, not the table. A NULL symbol is never recomputed, and NULL-key
+    rows of the previous run pass through.
     """
-    changed = delta.select(key_col).distinct()
-    changed_b = F.broadcast(changed)
+    changed = observed(delta, F.collect_set(key_col).alias("changed")).changed
     gold_changed, verdicts_changed = wmy_pipeline(
-        bars.join(changed_b, key_col, "left_semi"), key_col=key_col, **wmy_kwargs
+        bars.filter(F.col(key_col).isin(changed)), key_col=key_col, **wmy_kwargs
     )
-    gold_kept = gold_prev.join(
-        changed_b.withColumnRenamed(key_col, "stock_id"), "stock_id", "left_anti"
-    )
-    verdicts_kept = verdicts_prev.join(changed_b, key_col, "left_anti")
+
+    def untouched(col: str):
+        return F.col(col).isNull() | ~F.col(col).isin(changed)
+
     return (
-        gold_kept.unionByName(gold_changed),
-        verdicts_kept.unionByName(verdicts_changed),
+        gold_prev.filter(untouched("stock_id")).unionByName(gold_changed),
+        verdicts_prev.filter(untouched(key_col)).unionByName(verdicts_changed),
     )
 
 

@@ -111,6 +111,46 @@ def test_freshness_gate(spark):
     assert needs_update(empty, dt.date(2024, 1, 1)) is True
 
 
+def test_observed_matches_agg_in_one_job_without_exchange(spark, tmp_path):
+    """``observed`` returns ``df.agg(*aggs).first()`` in one Spark job of one
+    stage (no exchange), on a scan, an empty table, an all-NULL column and
+    an input the optimizer prunes to empty, where it must not block."""
+    from global_stock_data_warehouse_spark.operators.validate import observed
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    schema = "s string, v long"
+    path = str(tmp_path / "t")
+    spark.createDataFrame([("A", 1), ("B", 3), ("A", 2), (None, 4)], schema).write.parquet(path)
+    scan = spark.read.parquet(path)
+    inputs = {
+        "parquet scan": scan,
+        "empty table": spark.createDataFrame([], schema),
+        "all-NULL columns": spark.createDataFrame([(None, None)] * 3, schema),
+        "pruned to empty": scan.filter(F.lit(False)),
+    }
+
+    def aggs():
+        # collect_set's order depends on how partial sets merge
+        return (
+            F.count(F.lit(1)).alias("n"),
+            F.max("v").alias("hi"),
+            F.array_sort(F.collect_set("s")).alias("keys"),
+        )
+
+    for name, df in inputs.items():
+        sc.setJobGroup(name, name)
+        try:
+            got = observed(df, *aggs())
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(prop, None)
+        assert got == df.agg(*aggs()).first(), name
+        [job] = tracker.getJobIdsForGroup(name)
+        assert len(tracker.getJobInfo(job).stageIds) == 1, name
+    assert observed(scan, *aggs()) == (4, 4, ["A", "B"])
+
+
 def test_rename_i18n_export_edge(spark):
     from global_stock_data_warehouse_spark.functions.normalize import rename_i18n
 

@@ -12,18 +12,18 @@ from pyspark.sql import functions as F
 
 from global_stock_data_warehouse_spark.operators.upsert import upsert_keyed
 from global_stock_data_warehouse_spark.plans.orchestrate import sync_market
-from global_stock_data_warehouse_spark.plans.wmy import wmy_pipeline
+from global_stock_data_warehouse_spark.plans.wmy import incremental_wmy, wmy_pipeline
 from global_stock_data_warehouse_spark.sources.fetch import fetch_timeseries
 
 
 def _bars_fetch(days, calls=None):
-    """A fake fetch_fn: ``days`` bars per symbol, raising for ``DEAD``;
+    """A fake fetch_fn: ``days`` bars per symbol, raising for ``DEAD*``;
     every call adds one to the ``calls`` accumulator."""
 
     def fetch(sym: str) -> pd.DataFrame:
         if calls is not None:
             calls.add(1)
-        if sym == "DEAD":
+        if sym.startswith("DEAD"):
             raise RuntimeError("no such symbol")
         n = len(days)
         return pd.DataFrame(
@@ -92,38 +92,54 @@ def test_sync_market_corrupt_store_raises_and_keeps_history(spark, tmp_path):
     pd.testing.assert_frame_equal(after, rows)
 
 
+def test_sync_market_fail_list_is_first_ten_in_symbol_order(spark, tmp_path):
+    """With more than 10 dead letters, ``fail_list`` is the first 10 in
+    symbol order, whatever partition of the fetch each one failed in."""
+    dead = [f"DEAD{i:02d}" for i in range(12)]
+    syms = spark.createDataFrame([(s,) for s in ["AAA", *reversed(dead), "BBB"]], "symbol string")
+    r = sync_market(spark, syms, _bars_fetch(["2024-01-02"]), str(tmp_path / "bars"), max_workers=4)
+    assert r["fail_list"] == dead[:10]
+    assert r["success"] == 2 and r["total"] == 14
+
+
 def test_repeated_sync_compiles_almost_nothing(spark, tmp_path):
     """The reference's daily job, a sync and then the W/M/Y rebuild, cycles
     through more generated classes than Spark's default codegen cache holds
     (100, evicted least recently used), so every repeat recompiled 110 to
     130 of them. With the session's cache a repeat finds them all; what
     still compiles is the upsert stage that inlines the
-    ``current_timestamp()`` ingest time as a literal (2 compiles)."""
+    ``current_timestamp()`` ingest time as a literal (2 compiles). The
+    incremental refresh filters on a changed-symbol set that differs each
+    day; string literals reach generated code as references, so a set of
+    the same size compiles nothing."""
     path = str(tmp_path / "bars")
-    syms = spark.createDataFrame([("AAA",), ("BBB",), ("DEAD",)], "symbol string")
+    syms = spark.createDataFrame([("AAA",), ("BBB",), ("CCC",), ("DEAD",)], "symbol string")
     fetch = _bars_fetch(["2024-01-02", "2024-01-03"])
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
 
-    def daily_job():
+    def daily_job(changed):
         sync_market(spark, syms, fetch, path, as_of="2024-01-04", max_workers=2)
         bars = spark.read.parquet(path).withColumn("date", F.to_date("date"))
-        for out in wmy_pipeline(bars):
+        gold, verdicts = wmy_pipeline(bars)
+        delta = bars.filter(F.col("symbol").isin(changed))
+        for out in (gold, verdicts, *incremental_wmy(bars, delta, gold, verdicts)):
             out.write.format("noop").mode("overwrite").save()
 
     # the first run creates the store; the next two take the same plans
-    for _ in range(2):
-        daily_job()
+    for changed in (["AAA", "BBB"], ["BBB", "CCC"]):
+        daily_job(changed)
     c0 = metrics.METRIC_COMPILATION_TIME().getCount()
-    daily_job()
+    daily_job(["AAA", "CCC"])
     compiles = metrics.METRIC_COMPILATION_TIME().getCount() - c0
     assert compiles <= 4, compiles
 
 
 def test_second_day_sync_and_compaction_job_counts(spark, tmp_path, monkeypatch):
-    """Spark jobs of one day's sync on an existing store, then its
-    compaction, counted by job group: the dead-letter list is one job, the
-    whole sync 13, and the compaction, which lists the files and finds
-    nothing to rewrite, none."""
+    """Spark jobs of one day on an existing store, counted by job group:
+    the sync (9), with no job between the dead-letter split and the upsert;
+    its compaction, which lists the files and finds nothing to rewrite
+    (none); then the incremental W/M/Y refresh, where the changed-symbol
+    set is one job and each write two, with no broadcast."""
     from global_stock_data_warehouse_spark.plans import orchestrate
     from global_stock_data_warehouse_spark.storage.compact import compact_parquet
 
@@ -133,6 +149,13 @@ def test_second_day_sync_and_compaction_job_counts(spark, tmp_path, monkeypatch)
     syms = spark.createDataFrame([("AAA",), ("BBB",), ("DEAD",)], "symbol string")
     days = ["2024-01-02", "2024-01-03", "2024-01-04"]
     sync_market(spark, syms, _bars_fetch(days[:2]), path, as_of=days[1], max_workers=2)
+
+    def bars():
+        return spark.read.parquet(path).withColumn("date", F.to_date("date"))
+
+    prev = {"gold": str(tmp_path / "gold"), "verdicts": str(tmp_path / "verdicts")}
+    for out, p in zip(wmy_pipeline(bars()), prev.values()):
+        out.write.parquet(p)
 
     def group(name):
         sc.setJobGroup(name, name)
@@ -152,21 +175,36 @@ def test_second_day_sync_and_compaction_job_counts(spark, tmp_path, monkeypatch)
 
         return wrapped
 
-    # jobs between the dead-letter split and the upsert list the dead letters
+    # a job between the dead-letter split and the upsert would list the dead
+    # letters; they are observed on the fetch's checkpoint job instead
     monkeypatch.setattr(orchestrate, "split_quarantine", after(orchestrate.split_quarantine, "dead"))
     monkeypatch.setattr(orchestrate, "upsert_keyed", before(orchestrate.upsert_keyed, "rest"))
+    plans = []
     try:
         group("sync")
         r = sync_market(spark, syms, _bars_fetch(days[1:]), path, as_of=days[2], max_workers=2)
         group("compact")
         compacted = compact_parquet(spark, path)
+        # schema inference of each read: one job, not counted
+        group("read")
+        day = bars()
+        gold_prev, verdicts_prev = (spark.read.parquet(p) for p in prev.values())
+        group("changed")
+        outs = incremental_wmy(day, day.filter(F.col("date") >= days[1]), gold_prev, verdicts_prev)
+        for name, out in zip(prev, outs):
+            group(name)
+            out.write.format("noop").mode("overwrite").save()
+            plans.append(out._jdf.queryExecution().executedPlan().toString())
     finally:
         for prop in ("spark.jobGroup.id", "spark.job.description"):
             sc.setLocalProperty(prop, None)
-    jobs = {g: len(tracker.getJobIdsForGroup(g)) for g in ("sync", "dead", "rest", "compact")}
+    groups = ("sync", "dead", "rest", "compact", "changed", "gold", "verdicts")
+    jobs = {g: len(tracker.getJobIdsForGroup(g)) for g in groups}
     assert r["fail_list"] == ["DEAD"] and r["total_records"] == 6
-    assert jobs["dead"] == 1, jobs
-    assert jobs["sync"] + jobs["dead"] + jobs["rest"] == 13, jobs
+    assert jobs["dead"] == 0, jobs
+    assert jobs["sync"] + jobs["dead"] + jobs["rest"] == 9, jobs
     assert jobs["compact"] == 0, jobs
+    assert (jobs["changed"], jobs["gold"], jobs["verdicts"]) == (1, 2, 2), jobs
+    assert not any("BroadcastExchange" in p for p in plans)
     # the listing skips what Spark's file index skips (_SUCCESS, .crc files)
     assert compacted["files_after"] == len(spark.read.parquet(path).inputFiles())

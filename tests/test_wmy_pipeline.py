@@ -16,6 +16,9 @@ from pyspark.sql import functions as F
 from global_stock_data_warehouse_spark.plans.wmy import audit_record, wmy_pipeline
 
 
+BAR_SCHEMA = "symbol string, date date, open double, high double, low double, close double, volume long"
+
+
 def _mk_bars(spark):
     """Crafted daily bars: AAA clean, BBB close<=0, CCC 15-day gap, EEE dups."""
     rows = []
@@ -35,40 +38,88 @@ def _mk_bars(spark):
     # CCC.TW: 15-day hole after 2024-01-10 -> gap gate
     for d in [dt.date(2024, 1, 8), dt.date(2024, 1, 9), dt.date(2024, 1, 10), dt.date(2024, 1, 26)]:
         rows.append(("CCC.TW", d, 10.0, 11.0, 9.0, 10.5, 100))
-    return spark.createDataFrame(
-        rows, "symbol string, date date, open double, high double, low double, close double, volume long"
+    return spark.createDataFrame(rows, BAR_SCHEMA)
+
+
+def _clean_bars(symbol, start, n, px0=10.0):
+    """``n`` clean weekday bars of ``symbol`` from ``start``."""
+    rows, d = [], start
+    while len(rows) < n:
+        if d.weekday() < 5:
+            px = px0 + len(rows)
+            rows.append((symbol, d, px - 0.5, px + 1.0, px - 1.0, px, 100))
+        d += dt.timedelta(days=1)
+    return rows
+
+
+def _splice_case(spark, case):
+    """(bars the previous run saw, bars now, delta) for one splice input."""
+    base = _mk_bars(spark)
+
+    def mk(rows):
+        return spark.createDataFrame(rows, BAR_SCHEMA)
+
+    aaa_march = mk(
+        [
+            ("AAA.TW", dt.date(2024, 3, 1), 142.0, 144.0, 141.0, 143.0, 1000),
+            ("AAA.TW", dt.date(2024, 3, 4), 143.0, 145.0, 142.0, 144.0, 1000),
+        ]
     )
+    if case == "new_rows":
+        # AAA gets two fresh March bars, plus a brand-new symbol DDD: two
+        # changed symbols, so Spark plans an In list, not an InSet
+        delta = aaa_march.unionByName(
+            mk(
+                [
+                    ("DDD.TW", dt.date(2024, 2, 1), 20.0, 21.0, 19.0, 20.5, 300),
+                    ("DDD.TW", dt.date(2024, 2, 2), 20.5, 21.5, 19.5, 21.0, 300),
+                ]
+            )
+        )
+        return base, base.unionByName(delta), delta
+    if case == "null_symbol":
+        # a NULL series, stored and re-downloaded unchanged: it reaches gold
+        # and the verdicts of the previous run, and the delta
+        nulls = mk(_clean_bars(None, dt.date(2024, 1, 2), 10))
+        prev = base.unionByName(nulls)
+        return prev, prev.unionByName(aaa_march), aaa_march.unionByName(nulls)
+    if case == "empty_delta":
+        return base, base, mk([])
+    if case == "wide_delta":
+        # more changed symbols than spark.sql.optimizer.inSetConversionThreshold
+        # (10): an InSet
+        syms = [f"S{i:02d}.TW" for i in range(12)]
+        hist = mk([r for s in syms for r in _clean_bars(s, dt.date(2024, 1, 2), 20)])
+        delta = mk([r for s in syms for r in _clean_bars(s, dt.date(2024, 2, 1), 2, 40.0)])
+        prev = base.unionByName(hist)
+        return prev, prev.unionByName(delta), delta
+    raise ValueError(case)
 
 
 def test_incremental_wmy_matches_full_rerun(spark):
     from global_stock_data_warehouse_spark.plans.wmy import incremental_wmy
 
-    base = _mk_bars(spark)
-    # delta: AAA gets two fresh March bars, plus a brand-new symbol DDD
-    delta = spark.createDataFrame(
-        [
-            ("AAA.TW", dt.date(2024, 3, 1), 142.0, 144.0, 141.0, 143.0, 1000),
-            ("AAA.TW", dt.date(2024, 3, 4), 143.0, 145.0, 142.0, 144.0, 1000),
-            ("DDD.TW", dt.date(2024, 2, 1), 20.0, 21.0, 19.0, 20.5, 300),
-            ("DDD.TW", dt.date(2024, 2, 2), 20.5, 21.5, 19.5, 21.0, 300),
-        ],
-        "symbol string, date date, open double, high double, low double, close double, volume long",
-    )
-    full = base.unionByName(delta)
-    gold_prev, verdicts_prev = wmy_pipeline(base)
-    inc_gold, inc_verdicts = incremental_wmy(full, delta, gold_prev, verdicts_prev)
-    full_gold, full_verdicts = wmy_pipeline(full)
-
     def norm(df):
         return sorted(map(tuple, df.collect()), key=lambda t: tuple(map(str, t)))
 
-    assert norm(inc_gold) == norm(full_gold)
-    assert norm(inc_verdicts) == norm(full_verdicts)
-    # untouched symbols were spliced through, not recomputed: BBB/CCC
-    # verdict rows must be present and unchanged
-    vp = {r.symbol: r for r in inc_verdicts.collect()}
-    assert not vp["BBB.TW"].passed and not vp["CCC.TW"].passed
-    assert vp["DDD.TW"].passed
+    for case in ("new_rows", "null_symbol", "empty_delta", "wide_delta"):
+        prev, bars, delta = _splice_case(spark, case)
+        gold_prev, verdicts_prev = wmy_pipeline(prev)
+        inc_gold, inc_verdicts = incremental_wmy(bars, delta, gold_prev, verdicts_prev)
+        full_gold, full_verdicts = wmy_pipeline(bars)
+
+        assert norm(inc_gold) == norm(full_gold), case
+        assert norm(inc_verdicts) == norm(full_verdicts), case
+        vp = {r.symbol: r for r in inc_verdicts.collect()}
+        if case == "null_symbol":
+            assert vp[None].passed
+            # 2024-01-02..15: three weeks, one month, one year
+            assert inc_gold.filter(F.col("stock_id").isNull()).count() == 3 + 1 + 1
+        if case == "new_rows":
+            # untouched symbols were spliced through, not recomputed: BBB/CCC
+            # verdict rows must be present and unchanged
+            assert not vp["BBB.TW"].passed and not vp["CCC.TW"].passed
+            assert vp["DDD.TW"].passed
 
 
 @pytest.fixture(scope="module")
@@ -141,12 +192,11 @@ def test_null_symbol_semantics(spark):
     """A NULL symbol is one series to the gates, but its bars are never
     quarantined by the series gates and its verdict never reports an OHLC
     violation; gold still drops it on a resampled OHLC violation."""
-    schema = "symbol string, date date, open double, high double, low double, close double, volume long"
     days = [dt.date(2024, 1, 2) + dt.timedelta(days=i) for i in range(10)]
     clean = [("AAA.TW", d, 10.0, 11.0, 9.0, 10.0, 100) for d in days]
 
     def run(null_rows):
-        gold, verdicts = wmy_pipeline(spark.createDataFrame(clean + null_rows, schema))
+        gold, verdicts = wmy_pipeline(spark.createDataFrame(clean + null_rows, BAR_SCHEMA))
         null_verdict = [r for r in verdicts.collect() if r.symbol is None]
         return gold.filter(F.col("stock_id").isNull()).count(), null_verdict
 
