@@ -22,6 +22,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from global_stock_data_warehouse_spark.sources.registry import read_parquet, remember_schema
 from global_stock_data_warehouse_spark.storage.compact import table_exists
 
 
@@ -72,8 +73,10 @@ def upsert_keyed(
     ``path`` exists; a table that exists but cannot be read raises.
 
     Returns the table as written: on Parquet the materialised rows of the
-    overwrite, so callers aggregate them without reading the store again;
-    on Delta the table after the merge.
+    overwrite, so callers aggregate them without reading the store again,
+    and their schema is recorded for the new files, so the next
+    ``read_parquet`` of the store infers nothing; on Delta the table after
+    the merge.
     """
     if order_col not in new_rows.columns:
         new_rows = new_rows.withColumn(order_col, F.current_timestamp())
@@ -97,10 +100,11 @@ def upsert_keyed(
 
     # Parquet fallback: read-modify-overwrite with window dedup.
     if existing is None and table_exists(spark, path):
-        existing = spark.read.parquet(path)
+        existing = read_parquet(spark, path)
     combined = new_rows if existing is None else existing.unionByName(new_rows, allowMissingColumns=True)
     # Materialize before overwrite: lazy plans must not read the path being
     # replaced mid-write. localCheckpoint severs lineage to the source files.
     written = dedup_last_writer(combined, key_cols, order_col).localCheckpoint(eager=True)
     written.write.mode("overwrite").parquet(path)
+    remember_schema(spark, path, written.schema)
     return written

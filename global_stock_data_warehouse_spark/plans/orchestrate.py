@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from global_stock_data_warehouse_spark.operators.upsert import upsert_keyed
 from global_stock_data_warehouse_spark.operators.validate import needs_update, observed
 from global_stock_data_warehouse_spark.sources.fetch import fetch_timeseries, split_quarantine
+from global_stock_data_warehouse_spark.sources.registry import read_parquet
 from global_stock_data_warehouse_spark.storage.compact import table_exists
 
 BAR_SCHEMA = (
@@ -63,7 +64,7 @@ def sync_market(
     (main.py:101-112 intent, without the bare-except). A bars store that
     exists but cannot be read raises instead of passing for empty.
     ``fail_list`` holds the first 10 dead letters in symbol order."""
-    existing = spark.read.parquet(bars_path) if table_exists(spark, bars_path) else None
+    existing = read_parquet(spark, bars_path) if table_exists(spark, bars_path) else None
 
     if as_of is not None and existing is not None and not needs_update(
         existing, str(as_of), date_col="date"

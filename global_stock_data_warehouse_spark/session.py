@@ -65,6 +65,9 @@ def get_spark(app_name: str = "gsdw-spark", master: str | None = None) -> SparkS
         # Timestamps in the data are naive; keep session TZ stable so
         # date_trunc/window bucketing is deterministic across environments.
         .config("spark.sql.session.timeZone", "UTC")
+        # Parquet TIMESTAMP(NANOS) columns are refused unless read as raw
+        # longs; sources.registry.load_table converts them to timestamps.
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # ANSI off: the reference's semantics are permissive (nulls flow
         # through); ANSI-on would raise on e.g. bad casts the pipeline gates.
         .config("spark.sql.ansi.enabled", "false")

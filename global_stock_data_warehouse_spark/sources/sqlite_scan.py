@@ -24,6 +24,8 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from global_stock_data_warehouse_spark.sources.registry import read_parquet
+
 # SQLite declared-type affinity (simplified per sqlite3 docs §3.1) -> Spark
 _AFFINITY = (
     ("INT", "bigint"),
@@ -152,5 +154,5 @@ def migrate_sqlite_to_parquet(
     for t in tables if tables is not None else list_tables(db_path):
         df = scan_sqlite(spark, db_path, t, num_partitions)
         df.write.mode("overwrite").parquet(f"{out_dir}/{t}.parquet")
-        counts[t] = spark.read.parquet(f"{out_dir}/{t}.parquet").count()
+        counts[t] = read_parquet(spark, f"{out_dir}/{t}.parquet").count()
     return counts

@@ -34,29 +34,35 @@ def table_exists(spark: SparkSession, path: str) -> bool:
     return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
 
 
-def table_file_stats(spark: SparkSession, path: str) -> tuple[int, int]:
-    """(n_files, total_bytes) of the parquet table at ``path``.
+def data_files(spark: SparkSession, path: str) -> list:
+    """The Hadoop ``FileStatus`` of every data file of the table at ``path``.
 
     Listed through the Hadoop FileSystem API, so any scheme Spark can read
-    (file:, hdfs:, s3a:, ...) reports true bytes, and no Spark job runs.
-    Names starting with ``_`` or ``.`` (``_SUCCESS``, checksum files) are
-    skipped at every level, as Spark's file index skips them. A missing
-    path raises."""
+    (file:, hdfs:, s3a:, ...) answers, and no Spark job runs. Names
+    starting with ``_`` or ``.`` (``_SUCCESS``, checksum files) are skipped
+    at every level, as Spark's file index skips them. A missing path
+    raises."""
     root = spark._jvm.org.apache.hadoop.fs.Path(path)
     fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    n_files = total = 0
+    files = []
     dirs = [root]
     while dirs:
         for status in fs.listStatus(dirs.pop()):
-            name = status.getPath().getName()
-            if name.startswith(("_", ".")):
+            p = status.getPath()
+            if p.getName().startswith(("_", ".")):
                 continue
             if status.isDirectory():
-                dirs.append(status.getPath())
+                dirs.append(p)
             else:
-                n_files += 1
-                total += status.getLen()
-    return n_files, total
+                files.append(status)
+    return files
+
+
+def table_file_stats(spark: SparkSession, path: str) -> tuple[int, int]:
+    """(n_files, total_bytes) of the parquet table at ``path``, from
+    ``data_files``: true bytes on any scheme, no Spark job."""
+    files = data_files(spark, path)
+    return len(files), sum(status.getLen() for status in files)
 
 
 def compact_parquet(

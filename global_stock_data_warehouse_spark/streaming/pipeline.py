@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
 from global_stock_data_warehouse_spark.operators.upsert import upsert_keyed
+from global_stock_data_warehouse_spark.sources.registry import read_parquet
 
 
 def read_bar_stream(
@@ -202,13 +203,13 @@ def incremental_gold_sink(
             return
         spark = batch.sparkSession
         upsert_keyed(spark, batch, bars_path, list(key_cols))
-        bars = spark.read.parquet(bars_path)
+        bars = read_parquet(spark, bars_path)
         if os.path.exists(gold_path) and os.path.exists(verdicts_path):
             gold, verdicts = incremental_wmy(
                 bars,
                 batch,
-                spark.read.parquet(gold_path),
-                spark.read.parquet(verdicts_path),
+                read_parquet(spark, gold_path),
+                read_parquet(spark, verdicts_path),
                 **wmy_kwargs,
             )
         else:
@@ -350,7 +351,7 @@ def neardup_gate_sink(
         spark = batch.sparkSession
         batch = batch.localCheckpoint(eager=True)
         try:
-            store = spark.read.parquet(ledger_path)
+            store = read_parquet(spark, ledger_path)
         except Exception:
             store = minhash_store(
                 batch.limit(0), text_col, id_col, num_hashes, bands, ngram
@@ -612,7 +613,7 @@ def read_breadth(spark, breadth_path: str) -> DataFrame:
     over the per-batch contributions (associative — replayed or
     compacted partitions fold identically), ONE division for the
     weighted mean return, the engine-shared floor rounding."""
-    raw = spark.read.parquet(breadth_path)
+    raw = read_parquet(spark, breadth_path)
     return (
         raw.groupBy("window_start", "window_end")
         .agg(

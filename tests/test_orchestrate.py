@@ -92,6 +92,24 @@ def test_sync_market_corrupt_store_raises_and_keeps_history(spark, tmp_path):
     pd.testing.assert_frame_equal(after, rows)
 
 
+def test_sync_market_keeps_extra_store_columns(spark, tmp_path):
+    """A store with a column the bar schema lacks keeps it, and its values,
+    through two daily syncs: the store is read with the schema of its
+    files, not forced to the bar schema."""
+    path = str(tmp_path / "bars")
+    hist = spark.createDataFrame(
+        [("2024-01-02", "AAA", 1.5, "kept")], "date string, symbol string, close double, note string"
+    )
+    upsert_keyed(spark, hist, path, ("date", "symbol"))
+    syms = spark.createDataFrame([("AAA",), ("BBB",)], "symbol string")
+    for day in ("2024-01-03", "2024-01-04"):
+        r = sync_market(spark, syms, _bars_fetch([day]), path, as_of=day, max_workers=2)
+        assert r["skipped"] is False
+    rows = pd.read_parquet(path).sort_values(["date", "symbol"], ignore_index=True)
+    assert len(rows) == 5 and "note" in rows.columns
+    assert rows["note"].tolist() == ["kept", None, None, None, None]
+
+
 def test_sync_market_fail_list_is_first_ten_in_symbol_order(spark, tmp_path):
     """With more than 10 dead letters, ``fail_list`` is the first 10 in
     symbol order, whatever partition of the fetch each one failed in."""
@@ -136,7 +154,9 @@ def test_repeated_sync_compiles_almost_nothing(spark, tmp_path):
 
 def test_second_day_sync_and_compaction_job_counts(spark, tmp_path, monkeypatch):
     """Spark jobs of one day on an existing store, counted by job group:
-    the sync (9), with no job between the dead-letter split and the upsert;
+    the sync (8: the store's schema was recorded by the previous day's
+    upsert, so reading it infers nothing), with no job between the
+    dead-letter split and the upsert;
     its compaction, which lists the files and finds nothing to rewrite
     (none); then the incremental W/M/Y refresh, where the changed-symbol
     set is one job and each write two, with no broadcast."""
@@ -202,7 +222,7 @@ def test_second_day_sync_and_compaction_job_counts(spark, tmp_path, monkeypatch)
     jobs = {g: len(tracker.getJobIdsForGroup(g)) for g in groups}
     assert r["fail_list"] == ["DEAD"] and r["total_records"] == 6
     assert jobs["dead"] == 0, jobs
-    assert jobs["sync"] + jobs["dead"] + jobs["rest"] == 9, jobs
+    assert jobs["sync"] + jobs["dead"] + jobs["rest"] == 8, jobs
     assert jobs["compact"] == 0, jobs
     assert (jobs["changed"], jobs["gold"], jobs["verdicts"]) == (1, 2, 2), jobs
     assert not any("BroadcastExchange" in p for p in plans)

@@ -13,6 +13,7 @@ from global_stock_data_warehouse_spark.operators.timeseries import (
     tech_indicators,
     with_ewma,
 )
+from global_stock_data_warehouse_spark.sources.registry import load_table
 
 
 def _bars(spark, vals, user=1):
@@ -74,10 +75,7 @@ def test_bollinger_brackets_the_mean(spark):
 
 
 def test_battery_single_shuffle_plan(spark, sf_dir):
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    if dict(ev.dtypes).get("ts") in ("bigint", "long"):
-        ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    ev = load_table(spark, "events", sf_dir)
     plan = (
         tech_indicators(ev.select("user_id", "event_id", "ts", "value"))
         ._jdf.queryExecution()
