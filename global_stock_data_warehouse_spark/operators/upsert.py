@@ -2,12 +2,11 @@
 
 The reference's storage contract is ``INSERT OR REPLACE`` on PK
 ``(date, symbol)`` (downloader_tw.py:118-120): re-ingesting a batch is
-idempotent and newer writes win. Spark-first equivalents, preferred order:
-
-1. Delta ``MERGE INTO`` when delta-spark is importable (true in-place upsert,
-   transactional, scales via partition pruning on the merge condition);
-2. plain-Parquet fallback: union old+new, keep the winner per key via a
-   ``row_number`` window ordered by a version/ingest column, overwrite.
+idempotent and newer writes win. The Spark-first equivalent on plain
+Parquet: union old+new, keep the winner per key via a ``row_number``
+window ordered by a version/ingest column, and replace the stored table
+with the result through ``storage.compact.replace_table`` (a staged write
+and an atomic flip, so a failed write leaves the history in place).
 
 ``dedup_last_writer`` (the window kernel) is also exposed standalone — it is
 the engine's general keyed-dedup operator. At scale the window shuffle
@@ -22,17 +21,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from global_stock_data_warehouse_spark.sources.registry import read_parquet, remember_schema
-from global_stock_data_warehouse_spark.storage.compact import table_exists
-
-
-def delta_available() -> bool:
-    try:  # delta-spark is optional in this environment
-        import delta  # noqa: F401
-
-        return True
-    except Exception:
-        return False
+from global_stock_data_warehouse_spark.sources.registry import read_parquet
+from global_stock_data_warehouse_spark.storage.compact import replace_table, table_exists
 
 
 def dedup_last_writer(
@@ -66,45 +56,19 @@ def upsert_keyed(
 ) -> DataFrame:
     """Idempotent last-writer-wins upsert of ``new_rows`` into ``path``.
 
-    Adds ``order_col`` (ingest timestamp) if absent. Prefers Delta MERGE;
-    falls back to read-union-dedup-overwrite on plain Parquet, where
-    ``existing`` is the stored table when the caller has already read it,
-    so the store is listed once. Without it the table is read here if
-    ``path`` exists; a table that exists but cannot be read raises.
+    Adds ``order_col`` (ingest timestamp) if absent. ``existing`` is the
+    stored table when the caller has already read it, so the store is
+    listed once. Without it the table is read here if ``path`` exists; a
+    table that exists but cannot be read raises, and the stored table is
+    left as it was.
 
-    Returns the table as written: on Parquet the materialised rows of the
-    overwrite, so callers aggregate them without reading the store again,
-    and their schema is recorded for the new files, so the next
-    ``read_parquet`` of the store infers nothing; on Delta the table after
-    the merge.
+    Returns the table as written, read back from ``path``: its schema was
+    recorded by the write, so the read starts no job.
     """
     if order_col not in new_rows.columns:
         new_rows = new_rows.withColumn(order_col, F.current_timestamp())
-
-    if delta_available():
-        from delta.tables import DeltaTable
-
-        if DeltaTable.isDeltaTable(spark, path):
-            target = DeltaTable.forPath(spark, path)
-            cond = " AND ".join(f"t.{k} = s.{k}" for k in key_cols)
-            (
-                target.alias("t")
-                .merge(new_rows.alias("s"), cond)
-                .whenMatchedUpdateAll()
-                .whenNotMatchedInsertAll()
-                .execute()
-            )
-        else:
-            new_rows.write.format("delta").mode("overwrite").save(path)
-        return DeltaTable.forPath(spark, path).toDF()
-
-    # Parquet fallback: read-modify-overwrite with window dedup.
     if existing is None and table_exists(spark, path):
         existing = read_parquet(spark, path)
     combined = new_rows if existing is None else existing.unionByName(new_rows, allowMissingColumns=True)
-    # Materialize before overwrite: lazy plans must not read the path being
-    # replaced mid-write. localCheckpoint severs lineage to the source files.
-    written = dedup_last_writer(combined, key_cols, order_col).localCheckpoint(eager=True)
-    written.write.mode("overwrite").parquet(path)
-    remember_schema(spark, path, written.schema)
-    return written
+    replace_table(spark, dedup_last_writer(combined, key_cols, order_col), path)
+    return read_parquet(spark, path)

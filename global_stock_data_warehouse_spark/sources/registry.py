@@ -6,12 +6,13 @@ schema, TESTDATA.md / FIXTURES.md §A) and the engine's own stores. Given no
 schema, ``spark.read.parquet`` starts a Spark job to read a footer, so the
 reader keeps each path's schema, keyed on the path's Hadoop ``FileSystem``
 listing: every data file's path, length and modification time
-(``storage.compact.data_files``, which starts no job). A read whose listing
+(``data_files``, which starts no job). A read whose listing
 equals the kept one passes the schema and starts no job. A read misses and
 infers when the path is new to the session or its files changed: a table
-rewritten in place gets new file names. Writers record the schema of the
-files they just wrote (``remember_schema``), so the next read of a store
-the engine rewrites skips inference too.
+rewritten in place gets new file names. The engine's table replacement,
+``storage.compact.replace_table``, records the schema of the files it
+wrote (``remember_schema``), so the next read of a store it replaced
+skips inference too.
 
 Loading stays lazy and per-path, so the scan node Catalyst builds gets
 column pruning and filter pushdown for free — ``.explain`` on any engine
@@ -27,8 +28,6 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
-
-from global_stock_data_warehouse_spark.storage.compact import data_files
 
 TABLES = (
     "region",
@@ -49,6 +48,30 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # reads, dropped with the session object. Each entry is stored whole, so
 # threads racing on one path cost at most a repeated inference.
 _SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def data_files(spark: SparkSession, path: str) -> list:
+    """The Hadoop ``FileStatus`` of every data file of the table at ``path``.
+
+    Listed through the Hadoop FileSystem API, so any scheme Spark can read
+    (file:, hdfs:, s3a:, ...) answers, and no Spark job runs. Names
+    starting with ``_`` or ``.`` (``_SUCCESS``, checksum files) are skipped
+    at every level, as Spark's file index skips them. A missing path
+    raises."""
+    root = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    files = []
+    dirs = [root]
+    while dirs:
+        for status in fs.listStatus(dirs.pop()):
+            p = status.getPath()
+            if p.getName().startswith(("_", ".")):
+                continue
+            if status.isDirectory():
+                dirs.append(p)
+            else:
+                files.append(status)
+    return files
 
 
 def _listing(spark: SparkSession, path: str) -> tuple | None:

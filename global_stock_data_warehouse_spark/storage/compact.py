@@ -1,18 +1,25 @@
-"""Small-files compaction (the reference's VACUUM intent, Spark-native).
+"""Table replacement and small-files compaction (the reference's VACUUM
+intent, Spark-native).
+
+``replace_table`` is the engine's one way to replace a stored table: the
+keyed upsert, both compactions and the streaming gold sink write through
+it. The new table is written whole to a version directory, then the
+table's path, a symlink, is repointed with one atomic ``rename``, so a
+failed write leaves the old table in place and readers never find the
+path missing.
 
 The reference VACUUMs every SQLite shard after every sync (main.py:192,
 downloader_tw.py:126) to reclaim space and keep scans fast. The lakehouse
 analog is the SMALL-FILES problem: incremental appends and streaming
 micro-batches leave thousands of KB-sized parquet files, and at 100 TB the
-per-file open/footer cost comes to dominate scan time. On Delta this is
-``OPTIMIZE`` (+ ``VACUUM`` for dead files); on plain parquet it is a
-periodic rewrite job — this module.
+per-file open/footer cost comes to dominate scan time. The compactions
+here are periodic rewrite jobs.
 
 Scale notes: the rewrite is one distributed read + repartition + write; the
 file-count target derives from total bytes / target file size so output
-files land near the parquet sweet spot (~128 MB). The swap is
-rename-based, which is atomic on a real filesystem; object stores should
-compact partition-by-partition or move to a table format with a manifest.
+files land near the parquet sweet spot (~128 MB). The symlink flip needs a
+local filesystem and a single writer; object stores would need a pointer
+file (manifest) in its place.
 """
 
 from __future__ import annotations
@@ -21,8 +28,11 @@ import math
 import os
 import shutil
 import uuid
+from urllib.parse import urlparse
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+from global_stock_data_warehouse_spark.sources.registry import data_files, remember_schema
 
 
 def table_exists(spark: SparkSession, path: str) -> bool:
@@ -34,28 +44,45 @@ def table_exists(spark: SparkSession, path: str) -> bool:
     return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
 
 
-def data_files(spark: SparkSession, path: str) -> list:
-    """The Hadoop ``FileStatus`` of every data file of the table at ``path``.
+def replace_table(spark: SparkSession, df: DataFrame, path: str) -> None:
+    """Replace the parquet table at ``path`` with the rows of ``df``.
 
-    Listed through the Hadoop FileSystem API, so any scheme Spark can read
-    (file:, hdfs:, s3a:, ...) answers, and no Spark job runs. Names
-    starting with ``_`` or ``.`` (``_SUCCESS``, checksum files) are skipped
-    at every level, as Spark's file index skips them. A missing path
-    raises."""
-    root = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    files = []
-    dirs = [root]
-    while dirs:
-        for status in fs.listStatus(dirs.pop()):
-            p = status.getPath()
-            if p.getName().startswith(("_", ".")):
-                continue
-            if status.isDirectory():
-                dirs.append(p)
-            else:
-                files.append(status)
-    return files
+    ``df`` is written whole to a new ``{path}__versions/v_*`` directory
+    first, so a plan that reads ``path`` itself has finished reading it
+    before anything changes; then ``path`` (a symlink) is repointed with
+    one atomic ``rename``. Readers see the old table or the new one, never
+    neither, and a write that fails leaves the old table in place. The new
+    version and the one before it (for readers mid-scan) are kept; every
+    other version, a failed write's partial one included, is pruned. A
+    real directory at ``path`` (a table written before this layout) is
+    moved into the versions once, the one moment ``path`` is briefly
+    missing. The schema written is recorded, so the next ``read_parquet``
+    of ``path`` infers nothing."""
+    if urlparse(path).scheme:
+        raise ValueError(
+            f"replace_table flips a symlink, which needs a local filesystem path, not {path!r}"
+        )
+    base = f"{path}__versions"
+    os.makedirs(base, exist_ok=True)
+    version = os.path.join(base, f"v_{uuid.uuid4().hex[:8]}")
+    df.write.parquet(version)
+    if os.path.islink(path):
+        previous = os.path.realpath(path)
+    elif os.path.exists(path):
+        previous = os.path.join(base, f"v_legacy_{uuid.uuid4().hex[:8]}")
+        os.rename(path, previous)
+    else:
+        previous = None
+    link = f"{path}__link_{uuid.uuid4().hex[:8]}"
+    os.symlink(os.path.abspath(version), link)
+    os.rename(link, path)
+    remember_schema(spark, path, df.schema)
+    # realpath on both sides: a symlinked parent directory (/tmp ->
+    # /private/tmp) would otherwise never match and prune the kept version
+    keep = {os.path.realpath(version), previous and os.path.realpath(previous)}
+    for name in os.listdir(base):
+        if os.path.realpath(os.path.join(base, name)) not in keep:
+            shutil.rmtree(os.path.join(base, name))
 
 
 def table_file_stats(spark: SparkSession, path: str) -> tuple[int, int]:
@@ -85,18 +112,11 @@ def compact_parquet(
     No-op (returns the stats) when the table is already at or below the
     computed file count. Returns {"files_before", "files_after", "bytes"}.
     """
-    if "://" in path and not path.startswith("file:"):
-        raise ValueError(
-            "compact_parquet's rename swap requires a local filesystem path; "
-            "on object stores compact partition-by-partition or use a "
-            "manifest-based table format (Delta OPTIMIZE)"
-        )
     n_files, total = table_file_stats(spark, path)
     want = max(1, math.ceil(total / target_file_bytes))
     if n_files < min_files_to_compact or (n_files <= want and not cluster_by):
         return {"files_before": n_files, "files_after": n_files, "bytes": total}
 
-    tmp = f"{path}__compact_{uuid.uuid4().hex[:8]}"
     # mergeSchema: compaction must not silently drop columns added by
     # schema evolution after the oldest files were written
     df = spark.read.option("mergeSchema", "true").parquet(path)
@@ -106,13 +126,7 @@ def compact_parquet(
         df = df.repartitionByRange(want, *cluster_by).sortWithinPartitions(*cluster_by)
     else:
         df = df.repartition(want)
-    df.write.mode("overwrite").parquet(tmp)
-
-    old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-
+    replace_table(spark, df, path)
     after, _ = table_file_stats(spark, path)
     return {"files_before": n_files, "files_after": after, "bytes": total}
 
@@ -195,13 +209,8 @@ def compact_parquet_zorder(
 ) -> dict:
     """OPTIMIZE ZORDER for plain parquet: rewrite the table clustered on
     the Morton key of ``zorder_by`` so point/range predicates on ANY of
-    those columns prune files via row-group statistics. Same local-FS
-    rename-swap contract (and caveat) as ``compact_parquet``."""
-    if "://" in path and not path.startswith("file:"):
-        raise ValueError(
-            "compact_parquet_zorder's rename swap requires a local "
-            "filesystem path (see compact_parquet)"
-        )
+    those columns prune files via row-group statistics. Replaces the
+    table through ``replace_table``, like ``compact_parquet``."""
     n_files, total = table_file_stats(spark, path)
     want = max(1, math.ceil(total / target_file_bytes))
     df = spark.read.option("mergeSchema", "true").parquet(path)
@@ -212,11 +221,6 @@ def compact_parquet_zorder(
         .sortWithinPartitions("__zkey")
         .drop("__zkey")
     )
-    tmp = f"{path}__zorder_{uuid.uuid4().hex[:8]}"
-    out.write.mode("overwrite").parquet(tmp)
-    old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    replace_table(spark, out, path)
     after, _ = table_file_stats(spark, path)
     return {"files_before": n_files, "files_after": after, "bytes": total}

@@ -23,17 +23,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from global_stock_data_warehouse_spark.storage.compact import table_exists
+
 
 def table_schema(spark: SparkSession, path: str) -> StructType | None:
     """Current merged schema of the table at ``path`` (None if absent).
 
     ``mergeSchema`` unions the footers of every file, so a table mid-way
-    through an evolution (old + new files mixed) reports the union.
+    through an evolution (old + new files mixed) reports the union. A
+    table that exists but cannot be read raises.
     """
-    try:
-        return spark.read.option("mergeSchema", "true").parquet(path).schema
-    except Exception:
+    if not table_exists(spark, path):
         return None
+    return spark.read.option("mergeSchema", "true").parquet(path).schema
 
 
 def align_schema(df: DataFrame, target: StructType) -> DataFrame:

@@ -24,6 +24,7 @@ from pyspark.sql.streaming import DataStreamWriter
 
 from global_stock_data_warehouse_spark.operators.upsert import upsert_keyed
 from global_stock_data_warehouse_spark.sources.registry import read_parquet
+from global_stock_data_warehouse_spark.storage.compact import replace_table, table_exists
 
 
 def read_bar_stream(
@@ -114,10 +115,10 @@ def upsert_sink(
     checkpoint: str,
     available_now: bool = True,
 ) -> DataStreamWriter:
-    """foreachBatch keyed-upsert sink: each micro-batch MERGEs into the
-    target (Delta) or window-dedups + overwrites (parquet fallback) —
-    idempotent under replay, the streaming equivalent of INSERT OR
-    REPLACE."""
+    """foreachBatch keyed-upsert sink: each micro-batch is window-deduped
+    into the target by ``upsert_keyed``, which replaces the stored table
+    through one staged write and atomic flip — idempotent under replay,
+    the streaming equivalent of INSERT OR REPLACE."""
 
     def do_upsert(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
@@ -146,65 +147,21 @@ def incremental_gold_sink(
     (`plans.wmy.incremental_wmy` splice — work scales with the batch, not
     the table). First batch bootstraps with a full pipeline build.
 
-    Outputs are rewritten via versioned-directory + atomic symlink flip:
-    the refresh READS the previous gold from the same path it replaces, so
-    an in-place overwrite would clobber its own input mid-plan, and the
-    old rename-pair swap left a window where the path didn't exist at all.
-    Now each refresh writes an immutable `{path}__versions/v_*` directory
-    and repoints `path` (a symlink) with one atomic ``rename`` — readers
-    always resolve a complete table. The immediately-previous version is
-    retained one cycle for readers mid-scan; older ones are pruned.
-    Single-writer + local-FS assumption (like `storage/compact.py`): on an
-    object store, use a pointer FILE (manifest) instead of a symlink.
-    Replay-safe: re-running a batch upserts the same bars and recomputes
-    the same symbols.
+    Gold and verdicts are replaced through ``storage.compact.replace_table``,
+    like the bars store: the refresh READS the previous gold from the path
+    it replaces, and the staged write finishes that read before the
+    path's symlink is flipped, so readers always resolve a complete
+    table. Replay-safe: re-running a batch upserts the same bars and
+    recomputes the same symbols.
     """
-    import shutil
-    import uuid
-
     from global_stock_data_warehouse_spark.plans.wmy import incremental_wmy, wmy_pipeline
 
-    def _swap_write(df: DataFrame, path: str) -> None:
-        import os
-
-        base = f"{path}__versions"
-        os.makedirs(base, exist_ok=True)
-        vdir = os.path.join(base, f"v_{uuid.uuid4().hex[:8]}")
-        df.write.mode("overwrite").parquet(vdir)  # executes the read-plan BEFORE any flip
-        prev_target: str | None = None
-        if os.path.islink(path):
-            # rename below REPLACES the symlink atomically; don't unlink it
-            # first (that would reopen the missing-path window)
-            prev_target = os.path.realpath(path)
-        elif os.path.exists(path):
-            # one-time migration of a legacy real-dir layout into the
-            # versioned scheme; this rename is the only remaining (brief)
-            # path-missing window and happens at most once per table
-            prev_target = os.path.join(base, f"v_legacy_{uuid.uuid4().hex[:8]}")
-            os.rename(path, prev_target)
-        tmp_link = f"{path}__link_{uuid.uuid4().hex[:8]}"
-        os.symlink(os.path.abspath(vdir), tmp_link)
-        os.rename(tmp_link, path)  # atomic repoint on POSIX
-        # realpath on BOTH sides: prev_target came from realpath, and a
-        # symlinked parent dir (e.g. /tmp -> /private/tmp) would otherwise
-        # never match the candidate paths, deleting the retained version
-        keep = {os.path.realpath(vdir)}
-        if prev_target:
-            keep.add(os.path.realpath(prev_target))
-        for v in os.listdir(base):
-            full = os.path.realpath(os.path.join(base, v))
-            if full not in keep:
-                shutil.rmtree(full, ignore_errors=True)
-
     def refresh(batch: DataFrame, batch_id: int) -> None:
-        import os
-
         if batch.isEmpty():
             return
         spark = batch.sparkSession
-        upsert_keyed(spark, batch, bars_path, list(key_cols))
-        bars = read_parquet(spark, bars_path)
-        if os.path.exists(gold_path) and os.path.exists(verdicts_path):
+        bars = upsert_keyed(spark, batch, bars_path, list(key_cols))
+        if table_exists(spark, gold_path) and table_exists(spark, verdicts_path):
             gold, verdicts = incremental_wmy(
                 bars,
                 batch,
@@ -214,8 +171,8 @@ def incremental_gold_sink(
             )
         else:
             gold, verdicts = wmy_pipeline(bars, **wmy_kwargs)
-        _swap_write(gold, gold_path)
-        _swap_write(verdicts, verdicts_path)
+        replace_table(spark, gold, gold_path)
+        replace_table(spark, verdicts, verdicts_path)
 
     writer = stream.writeStream.foreachBatch(refresh).option(
         "checkpointLocation", checkpoint
@@ -304,6 +261,21 @@ def enrich_stream_stream(
     return lw.join(rw, cond).drop(rw[on])
 
 
+def write_batch_partition(df: DataFrame, path: str, batch_id: int) -> None:
+    """Write ``df`` as the ``_batch_id=batch_id`` partition of the ledger
+    at ``path``, replacing that partition only: dynamic partition
+    overwrite, a per-write option rather than session conf. A micro-batch
+    that foreachBatch replays rewrites its own partition instead of
+    appending a second copy."""
+    (
+        df.withColumn("_batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("_batch_id")
+        .parquet(path)
+    )
+
+
 def neardup_gate_sink(
     stream: DataFrame,
     ledger_path: str,
@@ -350,12 +322,13 @@ def neardup_gate_sink(
     def gate(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         batch = batch.localCheckpoint(eager=True)
-        try:
-            store = read_parquet(spark, ledger_path)
-        except Exception:
-            store = minhash_store(
-                batch.limit(0), text_col, id_col, num_hashes, bands, ngram
-            )
+        # Only a missing ledger starts empty; an unreadable one raises.
+        # The ledger is read with its known schema: a batch whose docs
+        # have no shingles writes a partition with no data file to infer
+        # a schema from.
+        store = minhash_store(batch.limit(0), text_col, id_col, num_hashes, bands, ngram)
+        if table_exists(spark, ledger_path):
+            store = spark.read.schema(store.schema).parquet(ledger_path)
         verdicts = incremental_minhash_dedup(
             batch,
             store,
@@ -369,21 +342,12 @@ def neardup_gate_sink(
         kept = batch.join(
             verdicts.filter(F.col("keep")).select(id_col), id_col
         ).localCheckpoint(eager=True)
-
-        def write_batch_partition(df: DataFrame, path: str) -> None:
-            (
-                df.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(path)
-            )
-
         write_batch_partition(
             minhash_store(kept, text_col, id_col, num_hashes, bands, ngram),
             ledger_path,
+            batch_id,
         )
-        write_batch_partition(kept, out_path)
+        write_batch_partition(kept, out_path, batch_id)
 
     return (
         stream.writeStream.foreachBatch(gate)
@@ -486,9 +450,7 @@ def drift_monitor_sink(
         # must PROPAGATE, not masquerade as "no baseline yet" (the same
         # silent-empty failure class the blob_manifest fix closed —
         # here it would suppress every alert of the run).
-        jp = spark._jvm.org.apache.hadoop.fs.Path(state_path)
-        fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(jp):
+        if table_exists(spark, state_path):
             # Explicit schema (cur's columns + the _batch_id partition
             # key): an all-NULL batch leaves the ledger dir existing
             # with zero data files, and schema INFERENCE would throw on
@@ -516,24 +478,15 @@ def drift_monitor_sink(
             )
         else:
             state = None
-
-        def write_batch_partition(df: DataFrame, path: str) -> None:
-            (
-                df.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(path)
-            )
-
         if state is not None:
             write_batch_partition(
                 drift_alerts(
                     cur, state, rel_threshold, min_batch_n, group_col
                 ),
                 alerts_path,
+                batch_id,
             )
-        write_batch_partition(cur, state_path)
+        write_batch_partition(cur, state_path, batch_id)
 
     return (
         stream.writeStream.foreachBatch(monitor)
@@ -585,21 +538,14 @@ def breadth_sink(
             .withColumn("_w_d", w_d)
             .filter(F.col("_ret_fx").isNotNull())
         )
-        (
-            legs.groupBy("window_start", "window_end")
-            .agg(
-                F.count(F.lit(1)).alias("n_members"),
-                F.sum((F.col("_ret_fx") > 0).cast("int")).alias("n_advancers"),
-                F.sum((F.col("_ret_fx") < 0).cast("int")).alias("n_decliners"),
-                F.sum(F.col("_w_d") * F.col("_ret_fx")).alias("wret_sum_fx"),
-                F.sum("_w_d").alias("w_sum"),
-            )
-            .withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(breadth_path)
+        contributions = legs.groupBy("window_start", "window_end").agg(
+            F.count(F.lit(1)).alias("n_members"),
+            F.sum((F.col("_ret_fx") > 0).cast("int")).alias("n_advancers"),
+            F.sum((F.col("_ret_fx") < 0).cast("int")).alias("n_decliners"),
+            F.sum(F.col("_w_d") * F.col("_ret_fx")).alias("wret_sum_fx"),
+            F.sum("_w_d").alias("w_sum"),
         )
+        write_batch_partition(contributions, breadth_path, batch_id)
 
     return (
         ohlc_stream.writeStream.foreachBatch(compute)
@@ -701,10 +647,8 @@ def stale_feed_sink(
             )
             .localCheckpoint(eager=True)
         )
-        jp = spark._jvm.org.apache.hadoop.fs.Path(state_path)
-        fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
         prev = None
-        if fs.exists(jp):
+        if table_exists(spark, state_path):
             from pyspark.sql.types import LongType, StructField, StructType
 
             ledger_schema = StructType(
@@ -771,23 +715,14 @@ def stale_feed_sink(
         # would otherwise re-scan a directory being mutated (same
         # precedent as drift_monitor_sink's pre-overwrite checkpoint).
         state = state.localCheckpoint(eager=True)
-
-        def write_batch_partition(df: DataFrame, path: str) -> None:
-            (
-                df.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(path)
-            )
-
         write_batch_partition(
             state.filter(F.col("streak") >= min_flat_batches).select(
                 "sym", "qv", "streak"
             ),
             alerts_path,
+            batch_id,
         )
-        write_batch_partition(state, state_path)
+        write_batch_partition(state, state_path, batch_id)
 
     return (
         stream.writeStream.foreachBatch(monitor)

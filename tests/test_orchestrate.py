@@ -154,9 +154,10 @@ def test_repeated_sync_compiles_almost_nothing(spark, tmp_path):
 
 def test_second_day_sync_and_compaction_job_counts(spark, tmp_path, monkeypatch):
     """Spark jobs of one day on an existing store, counted by job group:
-    the sync (8: the store's schema was recorded by the previous day's
-    upsert, so reading it infers nothing), with no job between the
-    dead-letter split and the upsert;
+    the sync (7: the store's schema was recorded by the previous day's
+    upsert, so reading it infers nothing, and the upsert's staged write
+    reads the old store itself, with no checkpoint job first), with no job
+    between the dead-letter split and the upsert;
     its compaction, which lists the files and finds nothing to rewrite
     (none); then the incremental W/M/Y refresh, where the changed-symbol
     set is one job and each write two, with no broadcast."""
@@ -222,7 +223,7 @@ def test_second_day_sync_and_compaction_job_counts(spark, tmp_path, monkeypatch)
     jobs = {g: len(tracker.getJobIdsForGroup(g)) for g in groups}
     assert r["fail_list"] == ["DEAD"] and r["total_records"] == 6
     assert jobs["dead"] == 0, jobs
-    assert jobs["sync"] + jobs["dead"] + jobs["rest"] == 8, jobs
+    assert jobs["sync"] + jobs["dead"] + jobs["rest"] == 7, jobs
     assert jobs["compact"] == 0, jobs
     assert (jobs["changed"], jobs["gold"], jobs["verdicts"]) == (1, 2, 2), jobs
     assert not any("BroadcastExchange" in p for p in plans)

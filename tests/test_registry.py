@@ -10,9 +10,11 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+from global_stock_data_warehouse_spark.operators import upsert as upsert_mod
 from global_stock_data_warehouse_spark.operators.upsert import upsert_keyed
 from global_stock_data_warehouse_spark.sources import registry
 from global_stock_data_warehouse_spark.sources.registry import TABLES, load_table
+from global_stock_data_warehouse_spark.storage.compact import compact_parquet, replace_table
 
 
 def _jobs_started(spark, group, fn):
@@ -87,13 +89,35 @@ def test_table_rewritten_in_place_is_read_with_new_schema(spark, tmp_path):
     assert [tuple(r) for r in got] == [(1, micros, 2.5)]
 
 
-def test_upsert_records_the_schema_inference_returns(spark, tmp_path):
-    """The schema an upsert records for the files it wrote is the one a
-    fresh session infers from them: every field nullable, although the
-    written frame's ingest timestamp is not."""
+def test_upsert_records_the_schema_inference_returns(spark, tmp_path, monkeypatch):
+    """The schema an upsert or a compaction records for the files it
+    replaced the table with is the one a fresh session infers from them:
+    every field nullable, although the upsert's ingest timestamp is not.
+    So the next read of the table starts no job."""
+    written = []
+
+    def recording_replace(session, df, path):
+        written.append(df)
+        replace_table(session, df, path)
+
+    monkeypatch.setattr(upsert_mod, "replace_table", recording_replace)
     path = str(tmp_path / "store")
     rows = spark.createDataFrame([("2024-01-02", "AAA", [1.5])], "date string, symbol string, px array<double>")
-    written = upsert_keyed(spark, rows, path, ("date", "symbol"))
-    assert not written.schema["_ingest_ts"].nullable
-    inferred = spark.newSession().read.parquet(path).schema
-    assert registry._SCHEMAS[spark][path] == (registry._listing(spark, path), inferred)
+
+    def upsert():
+        upsert_keyed(spark, rows, path, ("date", "symbol"))
+        assert not written[-1].schema["_ingest_ts"].nullable
+
+    def compact():
+        # a second file, so the compaction rewrites the table
+        more = rows.withColumn("symbol", F.lit("BBB")).withColumn("_ingest_ts", F.current_timestamp())
+        more.write.mode("append").parquet(path)
+        stats = compact_parquet(spark, path)
+        assert stats["files_after"] < stats["files_before"]
+
+    for writer in (upsert, compact):
+        writer()
+        inferred = spark.newSession().read.parquet(path).schema
+        assert registry._SCHEMAS[spark][path] == (registry._listing(spark, path), inferred)
+        reads = _jobs_started(spark, f"registry-{writer.__name__}", lambda: registry.read_parquet(spark, path))
+        assert reads == 0, writer.__name__

@@ -1,4 +1,4 @@
-"""Schema evolution + compaction + Delta MERGE contract.
+"""Schema evolution, compaction and table replacement.
 
 Evolution mirrors the reference's manual migration (downloader_us.py:38-43
 adds a ``market`` column to ``stock_info`` via PRAGMA probe + ALTER TABLE):
@@ -7,15 +7,16 @@ the engine evolves additively on append and surfaces old rows with nulls.
 
 from __future__ import annotations
 
-import sys
-import types
+import os
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from global_stock_data_warehouse_spark.operators import upsert as upsert_mod
+from global_stock_data_warehouse_spark.sources.registry import read_parquet
 from global_stock_data_warehouse_spark.storage.compact import (
     compact_parquet,
+    replace_table,
     table_file_stats,
 )
 from global_stock_data_warehouse_spark.storage.evolution import (
@@ -184,61 +185,51 @@ def test_compact_cluster_by_gives_disjoint_file_ranges(spark, tmp_path):
     assert spark.read.parquet(path).count() == 160
 
 
-def test_delta_merge_contract(spark, tmp_path, monkeypatch):
-    """delta-spark is absent here, so the MERGE branch is exercised via a
-    recording fake: upsert_keyed must route to DeltaTable.merge with the
-    full PK equality condition and update+insert clauses."""
-    calls = {}
+def test_replace_table_failure_keeps_the_table(spark, tmp_path, monkeypatch):
+    """A raise inside the staged write, and another between the write and
+    the flip, each leave the table readable with the rows it had; the next
+    replace that succeeds prunes the partial versions they left."""
+    path = str(tmp_path / "t")
+    replace_table(spark, spark.range(5), path)
 
-    class FakeMergeBuilder:
-        def whenMatchedUpdateAll(self):
-            calls["matched"] = True
-            return self
+    def stored():
+        return sorted(pd.read_parquet(path)["id"])
 
-        def whenNotMatchedInsertAll(self):
-            calls["not_matched"] = True
-            return self
-
-        def execute(self):
-            calls["executed"] = True
-
-    class FakeTarget:
-        def alias(self, a):
-            calls["target_alias"] = a
-            return self
-
-        def merge(self, src, cond):
-            calls["cond"] = cond
-            return FakeMergeBuilder()
-
-        def toDF(self):
-            return "merged table"
-
-    class FakeDeltaTable:
-        @staticmethod
-        def isDeltaTable(s, p):
-            return True
-
-        @staticmethod
-        def forPath(s, p):
-            calls["path"] = p
-            return FakeTarget()
-
-    fake_delta = types.ModuleType("delta")
-    fake_tables = types.ModuleType("delta.tables")
-    fake_tables.DeltaTable = FakeDeltaTable
-    fake_delta.tables = fake_tables
-    monkeypatch.setitem(sys.modules, "delta", fake_delta)
-    monkeypatch.setitem(sys.modules, "delta.tables", fake_tables)
-
-    new_rows = spark.createDataFrame(
-        [("2024-01-02", "2330.TW", 10.0)], "date string, symbol string, close double"
+    failing_write = spark.range(10).withColumn(
+        "x", F.when(F.col("id") == 7, F.raise_error(F.lit("boom in write")))
     )
-    written = upsert_mod.upsert_keyed(spark, new_rows, str(tmp_path / "delta_t"), ("date", "symbol"))
+    with pytest.raises(Exception, match="boom in write"):
+        replace_table(spark, failing_write, path)
+    assert stored() == list(range(5))
 
-    assert calls["cond"] == "t.date = s.date AND t.symbol = s.symbol"
-    assert calls.get("matched") and calls.get("not_matched") and calls.get("executed")
-    assert written == "merged table"  # the table after the merge, for the summary
+    def failing_symlink(*args):
+        raise OSError("boom before flip")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "symlink", failing_symlink)
+        with pytest.raises(OSError, match="boom before flip"):
+            replace_table(spark, spark.range(3), path)
+    assert stored() == list(range(5))
+    assert sorted(r.id for r in read_parquet(spark, path).collect()) == list(range(5))
+
+    versions = f"{path}__versions"
+    previous = os.path.realpath(path)
+    assert len(os.listdir(versions)) == 3  # the table and two partial versions
+    replace_table(spark, spark.range(2), path)
+    assert stored() == [0, 1]
+    kept = {os.path.join(versions, v) for v in os.listdir(versions)}
+    assert kept == {os.path.realpath(path), previous}
+
+
+def test_evolve_append_onto_unreadable_table_raises(spark, tmp_path):
+    """A table that exists but cannot be read fails the append instead of
+    passing for absent and taking unaligned rows."""
+    path = str(tmp_path / "t")
+    evolve_append(spark, spark.createDataFrame([(1, "a")], "k bigint, v string"), path)
+    with open(os.path.join(path, "aaa-corrupt.parquet"), "wb") as fh:
+        fh.write(b"not a parquet file")
+    with pytest.raises(Exception, match="aaa-corrupt.parquet"):
+        evolve_append(spark, spark.createDataFrame([(2,)], "k bigint"), path)
 
 
 # ---------------------------------------------------------------------------

@@ -153,6 +153,74 @@ def test_neardup_gate_sink_cross_batch(spark, tmp_path):
     assert sorted({r.id for r in led.collect()}) == [1, 2, 12]
 
 
+def test_neardup_gate_sink_unreadable_ledger_raises(spark, tmp_path):
+    """A ledger that exists but cannot be read fails the micro-batch: it
+    must not pass for a first batch and re-admit a near-duplicate."""
+    import os
+
+    import pytest
+
+    from global_stock_data_warehouse_spark.streaming.pipeline import (
+        neardup_gate_sink,
+        read_bar_stream,
+    )
+
+    def text(seed, n=30, mutate=0):
+        words = [f"w{seed}_{i}" for i in range(n)]
+        for j in range(mutate):
+            words[j] = f"mut{seed}_{j}"
+        return " ".join(words)
+
+    schema = "doc_id long, text string"
+    src, out, ledger, ckpt = (
+        str(tmp_path / p) for p in ("src", "out", "ledger", "ckpt")
+    )
+
+    def run():
+        stream = read_bar_stream(spark, src, schema, max_files_per_trigger=1)
+        q = neardup_gate_sink(stream, ledger, out, ckpt, threshold=0.5).start()
+        try:
+            q.awaitTermination(180)
+        finally:
+            q.stop()
+
+    spark.createDataFrame(
+        [(1, text(10)), (2, text(20))], schema
+    ).coalesce(1).write.mode("append").parquet(src)
+    run()
+    # lists first, so schema inference and every scan hit it
+    with open(os.path.join(ledger, "_batch_id=0", "aaa-corrupt.parquet"), "wb") as fh:
+        fh.write(b"not a parquet file")
+    spark.createDataFrame(
+        [(11, text(10, mutate=1)), (12, text(99))], schema
+    ).coalesce(1).write.mode("append").parquet(src)
+    with pytest.raises(Exception, match="aaa-corrupt.parquet"):
+        run()
+    assert sorted(r.doc_id for r in spark.read.parquet(out).collect()) == [1, 2]
+
+
+def test_neardup_gate_sink_ledger_without_data_files(spark, tmp_path):
+    """A first batch whose docs have no shingles leaves a ledger with no
+    data file; the next batch reads it as empty instead of failing to
+    infer its schema."""
+    from global_stock_data_warehouse_spark.streaming.pipeline import (
+        neardup_gate_sink,
+        read_bar_stream,
+    )
+
+    schema = "doc_id long, text string"
+    src, out, ledger, ckpt = (
+        str(tmp_path / p) for p in ("src", "out", "ledger", "ckpt")
+    )
+    for doc in [(1, ""), (2, " ".join(f"w_{i}" for i in range(30)))]:
+        spark.createDataFrame([doc], schema).coalesce(1).write.mode("append").parquet(src)
+        stream = read_bar_stream(spark, src, schema, max_files_per_trigger=1)
+        q = neardup_gate_sink(stream, ledger, out, ckpt, threshold=0.5).start()
+        q.awaitTermination(180)
+        q.stop()
+    assert sorted(r.doc_id for r in spark.read.parquet(out).collect()) == [1, 2]
+
+
 def test_neardup_gate_sink_replay_idempotent(spark, tmp_path):
     """foreachBatch is at-least-once: force a replay of the last committed
     micro-batch (delete its checkpoint commit marker) and assert neither
