@@ -6,7 +6,7 @@ max_workers=8)`` (main.py:166-170) while its downloaders only accept
 ``mode='hot'`` — a latent TypeError (SURVEY §Defects-1). This module
 implements the contract the orchestrator intended:
 
-    freshness gate -> bounded fan-out fetch -> dead-letter quarantine ->
+    freshness gate -> bounded driver-thread fetch -> dead-letter quarantine ->
     keyed idempotent upsert -> summary aggregates
 
 as a composition of engine operators. The return dict mirrors
@@ -22,7 +22,7 @@ from collections.abc import Callable
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from global_stock_data_warehouse_spark.operators.upsert import upsert_keyed
@@ -63,7 +63,11 @@ def sync_market(
     stored watermark already covers it, the fetch is skipped entirely
     (main.py:101-112 intent, without the bare-except). A bars store that
     exists but cannot be read raises instead of passing for empty.
-    ``fail_list`` holds the first 10 dead letters in symbol order."""
+    ``fail_list`` holds the first 10 dead letters in symbol order. The
+    symbol universe is collected once (no job when pandas-built);
+    ``fetch_fn`` runs on up to ``max_workers`` driver threads, so it must
+    be thread-safe or ``max_workers`` 1. Into an existing store a day is 4
+    Spark jobs: gate, upsert dedup and staged write, summary."""
     existing = read_parquet(spark, bars_path) if table_exists(spark, bars_path) else None
 
     if as_of is not None and existing is not None and not needs_update(
@@ -71,30 +75,18 @@ def sync_market(
     ):
         return {"skipped": True, "has_changed": False, **get_summary(existing)}
 
-    # Materialised once, so fetch_fn runs once per symbol. The dead letters
-    # are observed on the checkpoint's job: its last stage is a result
-    # stage, so a retried task cannot list a symbol twice.
-    dead = Observation()
-    dead_symbol = F.when(F.col("_fetch_error").isNotNull(), F.col("symbol"))
-    fetched = (
-        fetch_timeseries(symbols, fetch_fn, schema, max_concurrency=max_workers)
-        .observe(dead, F.collect_list(dead_symbol).alias("symbols"))
-        .localCheckpoint(eager=True)
-    )
-    fail_list = sorted(dead.get["symbols"])[:10]
-    ok, _ = split_quarantine(fetched)
+    requested = [r.symbol for r in symbols.select("symbol").collect()]
+    fetched = fetch_timeseries(spark, requested, fetch_fn, schema, max_concurrency=max_workers)
+    ok, dead = split_quarantine(fetched)
+    fail_list = sorted(r.symbol for r in dead.select("symbol").collect())[:10]
     ok = ok.filter(F.col("date").isNotNull())
     stored = upsert_keyed(spark, ok, bars_path, ("date", "symbol"), existing=existing)
-
-    # counted on its own job: on the fetch's side of the round-robin
-    # exchange it would be a map stage, which a retry counts twice
-    n_requested = observed(symbols, F.count(F.lit(1)).alias("n")).n
     summary = get_summary(stored)
     return {
         "skipped": False,
         "has_changed": True,
         "success": summary["total_stocks"],
-        "total": n_requested,
+        "total": len(requested),
         "fail_list": fail_list,
         **summary,
     }

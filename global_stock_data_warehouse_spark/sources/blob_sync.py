@@ -181,9 +181,12 @@ def sink_blob_sync(
     """One-way sync ``src_root`` -> ``dst_root``; returns action counts.
     Copies overwrite atomically-enough for a landing zone (FileUtil.copy
     + overwrite flag); each file gets ``retries`` attempts like the
-    reference's 3-retry Drive loop. ``delete=True`` also removes
-    dst-only files (off by default: a sync should not destroy data it
-    never saw without being told)."""
+    reference's 3-retry Drive loop. A file that fails them all (a
+    directory where the file belongs included) counts in ``failed``, and
+    ``fail_list`` holds the first 10 such files in path order as
+    ``(rel_path, last error)``. ``delete=True`` also removes dst-only files
+    (off by default: a sync should not destroy data it never saw without
+    being told)."""
     plan = sync_plan(
         blob_manifest(spark, src_root, checksum),
         blob_manifest(spark, dst_root, checksum),
@@ -195,7 +198,8 @@ def sink_blob_sync(
     FileUtil = jvm.org.apache.hadoop.fs.FileUtil
     src_fs = HPath(src_root).getFileSystem(conf)
     dst_fs = HPath(dst_root).getFileSystem(conf)
-    counts = {"copy_new": 0, "copy_changed": 0, "delete": 0, "skip": 0, "failed": 0}
+    counts = {"copy_new": 0, "copy_changed": 0, "delete": 0, "skip": 0}
+    failures = []
     for row in plan:
         act = row["action"]
         if act == "skip":
@@ -210,14 +214,20 @@ def sink_blob_sync(
             continue
         sp = HPath(_norm_root(src_root) + row["rel_path"])
         dp = HPath(_norm_root(dst_root) + row["rel_path"])
-        ok = False
+        err = None
         for attempt in range(retries):
             try:
+                # FileUtil.copy would write into a directory at dp
+                if dst_fs.isDirectory(dp):
+                    raise IsADirectoryError(f"{dp} is a directory")
                 FileUtil.copy(src_fs, sp, dst_fs, dp, False, True, conf)
-                ok = True
+                counts[act] += 1
                 break
-            except Exception:
+            except Exception as exc:
+                java = getattr(exc, "java_exception", None)
+                err = java.toString() if java is not None else f"{type(exc).__name__}: {exc}"
                 if attempt + 1 < retries:
                     time.sleep(retry_wait_s)
-        counts[act if ok else "failed"] += 1
-    return counts
+        else:
+            failures.append((row["rel_path"], err))
+    return {**counts, "failed": len(failures), "fail_list": sorted(failures)[:10]}

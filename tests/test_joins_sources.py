@@ -1,7 +1,10 @@
 """Tests: as-of join semantics (ties, misses, tolerance) and the injected
-fan-out fetch source with dead-letter quarantine."""
+bounded-concurrency fetch source with dead-letter quarantine."""
 
 from __future__ import annotations
+
+import threading
+import time
 
 import pandas as pd
 import pytest
@@ -100,7 +103,6 @@ FETCH_SCHEMA = "date string, close double, symbol string, _fetch_error string"
 
 
 def test_fetch_timeseries_fanout_and_quarantine(spark):
-    # defined in-function so cloudpickle ships it by value to executors
     def _fake_fetch(sym: str) -> pd.DataFrame:
         if sym == "BOOM":
             raise RuntimeError("upstream 500")
@@ -110,9 +112,8 @@ def test_fetch_timeseries_fanout_and_quarantine(spark):
             {"date": ["2024-01-01", "2024-01-02"], "close": [float(len(sym)), float(len(sym)) + 1]}
         )
 
-    syms = spark.createDataFrame([("AAPL",), ("BOOM",), ("EMPTY",), ("TW",)], "symbol string")
     fetched = fetch_timeseries(
-        syms, _fake_fetch, FETCH_SCHEMA, max_concurrency=2, max_retries=1
+        spark, ["AAPL", "BOOM", "EMPTY", "TW"], _fake_fetch, FETCH_SCHEMA, max_concurrency=2, max_retries=1
     )
     ok, dead = split_quarantine(fetched)
     ok_rows = {(r.symbol, r.date): r.close for r in ok.collect()}
@@ -122,6 +123,66 @@ def test_fetch_timeseries_fanout_and_quarantine(spark):
     dead_rows = dead.collect()
     assert len(dead_rows) == 1
     assert dead_rows[0].symbol == "BOOM" and "upstream 500" in dead_rows[0]._fetch_error
+
+
+BIG = 2**53 + 1  # the first integer a float64 cannot hold
+
+
+@pytest.mark.parametrize(
+    "symbols, max_concurrency",
+    [
+        (["A", "B", "C", "D", "E", "F"], 1),
+        (["A", "B", "C", "D", "E", "F"], 3),
+        (["A", "NONE", "FAIL", "B", "EMPTY", "C"], 2),
+        ([], 4),
+        (["FAIL", "FAIL2"], 2),
+    ],
+    ids=["serial", "three-threads", "mixed", "no-symbols", "all-failing"],
+)
+def test_fetch_timeseries_pool(spark, symbols, max_concurrency):
+    """The driver pool: at most ``max_concurrency`` calls in flight (and more
+    than one when allowed), symbol order when serial, ``max_retries + 1``
+    calls for a failing symbol, empty and ``None`` results skipped, and an
+    empty frame with the schema when nothing was fetched. A bigint too wide
+    for a float64 survives a day that also has a dead letter."""
+    schema = "date string, volume bigint, symbol string, _fetch_error string"
+    lock = threading.Lock()
+    calls: list[str] = []
+    in_flight = [0, 0]  # now, peak
+
+    def fetch(sym: str):
+        with lock:
+            calls.append(sym)
+            in_flight[0] += 1
+            in_flight[1] = max(in_flight)
+        try:
+            time.sleep(0.05)
+            if sym.startswith("FAIL"):
+                raise RuntimeError(f"{sym} down")
+            if sym == "NONE":
+                return None
+            if sym == "EMPTY":
+                return pd.DataFrame(columns=["date", "volume"])
+            return pd.DataFrame({"date": ["2024-01-02"], "volume": [BIG]})
+        finally:
+            with lock:
+                in_flight[0] -= 1
+
+    fetched = fetch_timeseries(
+        spark, symbols, fetch, schema, max_concurrency=max_concurrency, max_retries=2
+    )
+    assert fetched.schema.simpleString() == "struct<date:string,volume:bigint,symbol:string,_fetch_error:string>"
+    rows = fetched.collect()
+    good = [s for s in symbols if s not in ("NONE", "EMPTY") and not s.startswith("FAIL")]
+    failing = [s for s in symbols if s.startswith("FAIL")]
+    assert [(r.symbol, r.volume) for r in rows if r._fetch_error is None] == [(s, BIG) for s in good]
+    assert [(r.symbol, r.volume) for r in rows if r._fetch_error] == [(s, None) for s in failing]
+    assert sorted(calls) == sorted([*symbols, *[s for s in failing for _ in range(2)]])
+    assert in_flight[1] <= max_concurrency
+    if max_concurrency > 1 and len(symbols) > 1:
+        assert in_flight[1] > 1
+    if max_concurrency == 1:
+        assert calls == symbols
 
 
 def test_scan_fixed_width_parses_typed_columns(spark, tmp_path):

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import inspect
 import os
+import re
+import threading
 
 import pandas as pd
 import pytest
@@ -16,13 +18,28 @@ from global_stock_data_warehouse_spark.plans.wmy import incremental_wmy, wmy_pip
 from global_stock_data_warehouse_spark.sources.fetch import fetch_timeseries
 
 
+class Calls:
+    """Calls of a fake fetch_fn and the pids they ran in, counted under a
+    lock: the fetch runs on a pool of driver threads."""
+
+    def __init__(self):
+        self.lock = threading.Lock()
+        self.n = 0
+        self.pids = set()
+
+    def add(self):
+        with self.lock:
+            self.n += 1
+            self.pids.add(os.getpid())
+
+
 def _bars_fetch(days, calls=None):
     """A fake fetch_fn: ``days`` bars per symbol, raising for ``DEAD*``;
-    every call adds one to the ``calls`` accumulator."""
+    every call is counted in ``calls``."""
 
     def fetch(sym: str) -> pd.DataFrame:
         if calls is not None:
-            calls.add(1)
+            calls.add()
         if sym.startswith("DEAD"):
             raise RuntimeError("no such symbol")
         n = len(days)
@@ -40,10 +57,10 @@ def _bars_fetch(days, calls=None):
 
 def test_sync_market_end_to_end(spark, tmp_path):
     path = str(tmp_path / "bars")
-    calls = spark.sparkContext.accumulator(0)
+    calls = Calls()
     fake_fetch = _bars_fetch(["2024-01-02", "2024-01-03"], calls)
-    # the dead letters and the upsert read one materialised fetch: one call
-    # per good symbol, max_retries + 1 per failing one
+    # the dead letters and the upsert read one local frame: one call per
+    # good symbol, max_retries + 1 per failing one
     max_retries = inspect.signature(fetch_timeseries).parameters["max_retries"].default
     per_sync = 2 + (max_retries + 1) * 1
 
@@ -53,17 +70,17 @@ def test_sync_market_end_to_end(spark, tmp_path):
     assert r1["success"] == 2 and r1["total"] == 3
     assert r1["fail_list"] == ["DEAD"]
     assert r1["total_records"] == 4 and r1["latest_date"] == "2024-01-03"
-    assert calls.value == per_sync
+    assert calls.n == per_sync
 
     # second run, same as_of: watermark current -> whole fetch skipped
     r2 = sync_market(spark, syms, fake_fetch, path, as_of="2024-01-03", max_workers=2)
     assert r2["skipped"] is True and r2["total_records"] == 4
-    assert calls.value == per_sync
+    assert calls.n == per_sync
 
     # forced re-run (later as_of): upsert is idempotent, count unchanged
     r3 = sync_market(spark, syms, fake_fetch, path, as_of="2024-01-04", max_workers=2)
     assert r3["skipped"] is False and r3["total_records"] == 4
-    assert calls.value == 2 * per_sync
+    assert calls.n == 2 * per_sync
 
 
 def test_sync_market_corrupt_store_raises_and_keeps_history(spark, tmp_path):
@@ -154,10 +171,13 @@ def test_repeated_sync_compiles_almost_nothing(spark, tmp_path):
 
 def test_second_day_sync_and_compaction_job_counts(spark, tmp_path, monkeypatch):
     """Spark jobs of one day on an existing store, counted by job group:
-    the sync (7: the store's schema was recorded by the previous day's
-    upsert, so reading it infers nothing, and the upsert's staged write
-    reads the old store itself, with no checkpoint job first), with no job
-    between the dead-letter split and the upsert;
+    the sync (4: freshness gate, upsert dedup window and staged write,
+    summary; the store's schema was recorded by the previous day's upsert,
+    so reading it infers nothing), plus 1 to collect a list-built symbol
+    universe and none for a pandas-built one. The fetch runs in this
+    process's threads and its rows are a local relation, so no plan of the
+    sync holds a Python node, and no job runs between the dead-letter
+    split and the upsert;
     its compaction, which lists the files and finds nothing to rewrite
     (none); then the incremental W/M/Y refresh, where the changed-symbol
     set is one job and each write two, with no broadcast."""
@@ -168,8 +188,29 @@ def test_second_day_sync_and_compaction_job_counts(spark, tmp_path, monkeypatch)
     tracker = sc.statusTracker()
     path = str(tmp_path / "bars")
     syms = spark.createDataFrame([("AAA",), ("BBB",), ("DEAD",)], "symbol string")
-    days = ["2024-01-02", "2024-01-03", "2024-01-04"]
+    pandas_syms = spark.createDataFrame(pd.DataFrame({"symbol": ["AAA", "BBB", "DEAD"]}))
+    days = ["2024-01-02", "2024-01-03", "2024-01-04", "2024-01-05"]
     sync_market(spark, syms, _bars_fetch(days[:2]), path, as_of=days[1], max_workers=2)
+    sql_store = spark._jsparkSession.sharedState().statusStore()
+
+    def sql_executions():
+        """The SQL executions the UI keeps, in id order, once the listener
+        has caught up."""
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return sql_store.executionsList()
+
+    def sql_plans(since):
+        """Physical plans of the SQL executions with an id above ``since``."""
+        execs, plans = sql_executions(), []
+        for i in reversed(range(execs.size())):
+            if execs.apply(i).executionId() <= since:
+                break
+            plans.append(execs.apply(i).physicalPlanDescription())
+        return plans
+
+    def last_sql_id():
+        execs = sql_executions()
+        return execs.apply(execs.size() - 1).executionId() if execs.size() else -1
 
     def bars():
         return spark.read.parquet(path).withColumn("date", F.to_date("date"))
@@ -196,14 +237,17 @@ def test_second_day_sync_and_compaction_job_counts(spark, tmp_path, monkeypatch)
 
         return wrapped
 
-    # a job between the dead-letter split and the upsert would list the dead
-    # letters; they are observed on the fetch's checkpoint job instead
+    # a job between the dead-letter split and the upsert would mean the
+    # fetched rows are not local
     monkeypatch.setattr(orchestrate, "split_quarantine", after(orchestrate.split_quarantine, "dead"))
     monkeypatch.setattr(orchestrate, "upsert_keyed", before(orchestrate.upsert_keyed, "rest"))
     plans = []
+    calls = Calls()
     try:
         group("sync")
-        r = sync_market(spark, syms, _bars_fetch(days[1:]), path, as_of=days[2], max_workers=2)
+        since = last_sql_id()
+        r = sync_market(spark, syms, _bars_fetch(days[1:3], calls), path, as_of=days[2], max_workers=2)
+        sync_plans = sql_plans(since)
         group("compact")
         compacted = compact_parquet(spark, path)
         # schema inference of each read: one job, not counted
@@ -216,14 +260,27 @@ def test_second_day_sync_and_compaction_job_counts(spark, tmp_path, monkeypatch)
             group(name)
             out.write.format("noop").mode("overwrite").save()
             plans.append(out._jdf.queryExecution().executedPlan().toString())
+        groups = ("sync", "dead", "rest", "compact", "changed", "gold", "verdicts")
+        jobs = {g: len(tracker.getJobIdsForGroup(g)) for g in groups}
+        # the next day with a pandas-built universe: its collect starts no job
+        group("sync_pandas")
+        since = last_sql_id()
+        r4 = sync_market(spark, pandas_syms, _bars_fetch(days[2:], calls), path, as_of=days[3], max_workers=2)
+        sync_plans += sql_plans(since)
+        pandas_jobs = sum(
+            len(tracker.getJobIdsForGroup(g)) - jobs.get(g, 0) for g in ("sync_pandas", "dead", "rest")
+        )
     finally:
         for prop in ("spark.jobGroup.id", "spark.job.description"):
             sc.setLocalProperty(prop, None)
-    groups = ("sync", "dead", "rest", "compact", "changed", "gold", "verdicts")
-    jobs = {g: len(tracker.getJobIdsForGroup(g)) for g in groups}
     assert r["fail_list"] == ["DEAD"] and r["total_records"] == 6
     assert jobs["dead"] == 0, jobs
-    assert jobs["sync"] + jobs["dead"] + jobs["rest"] == 7, jobs
+    assert jobs["sync"] + jobs["dead"] + jobs["rest"] == 5, jobs
+    assert r4["fail_list"] == ["DEAD"] and r4["total_records"] == 8
+    assert pandas_jobs == 4, pandas_jobs
+    assert calls.pids == {os.getpid()}
+    assert len(sync_plans) > 0
+    assert not [p for p in sync_plans if re.search(r"EvalPython|InPandas|InArrow", p)], sync_plans
     assert jobs["compact"] == 0, jobs
     assert (jobs["changed"], jobs["gold"], jobs["verdicts"]) == (1, 2, 2), jobs
     assert not any("BroadcastExchange" in p for p in plans)

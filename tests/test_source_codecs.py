@@ -294,7 +294,7 @@ def test_blob_sync_incremental_roundtrip(spark, tmp_path):
     (src / "nested" / "b.json").write_text('{"k": 1}')
 
     c1 = sink_blob_sync(spark, str(src), str(dst))
-    assert c1["copy_new"] == 2 and c1["failed"] == 0
+    assert c1["copy_new"] == 2 and c1["failed"] == 0 and c1["fail_list"] == []
     assert (dst / "a.csv").read_text() == "x,y\n1,2\n"
     assert (dst / "nested" / "b.json").exists()
 
@@ -324,6 +324,33 @@ def test_blob_sync_incremental_roundtrip(spark, tmp_path):
     assert (dst / "stale.txt").exists()
     c5 = sink_blob_sync(spark, str(src), str(dst), delete=True)
     assert c5["delete"] == 1 and not (dst / "stale.txt").exists()
+
+
+def test_blob_sync_reports_failed_copies(spark, tmp_path):
+    """A copy the destination cannot take is reported, not only counted:
+    ``fail_list`` names each such file with its last error, in path order.
+    A directory where the file belongs fails too, instead of the file
+    landing inside it."""
+    from global_stock_data_warehouse_spark.sources.blob_sync import sink_blob_sync
+
+    src = tmp_path / "src"
+    dst = tmp_path / "dst"
+    (src / "nested").mkdir(parents=True)
+    (src / "a.csv").write_text("a")
+    (src / "nested" / "b.json").write_text("b")
+    (src / "z.txt").write_text("z")
+    dst.mkdir()
+    (dst / "nested").write_text("a file where a directory belongs")
+    (dst / "z.txt").mkdir()
+    (dst / "z.txt" / "inner").write_text("kept")
+
+    c = sink_blob_sync(spark, str(src), str(dst), retries=2, retry_wait_s=0.0)
+    assert (c["copy_new"], c["failed"]) == (1, 2)
+    assert [p for p, _ in c["fail_list"]] == ["nested/b.json", "z.txt"]
+    assert "FileAlreadyExistsException" in c["fail_list"][0][1]
+    assert "is a directory" in c["fail_list"][1][1]
+    assert (dst / "a.csv").read_text() == "a"
+    assert sorted(p.name for p in (dst / "z.txt").iterdir()) == ["inner"]
 
 
 def test_blob_manifest_missing_vs_error_and_zero_byte(spark, tmp_path):
