@@ -1,9 +1,10 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Entry points of the engine (PySpark target).
 
 ``entry(spark)`` runs the flagship pipeline (weekly OHLC resample + lag
-returns — the reference's downloader_wmy.py:39-58 semantics) on sf0.001.
-``queries()``/``oracle_sql()`` expose every implemented SURVEY.md §2
-operator for the DuckDB correctness harness.
+returns, the reference's downloader_wmy.py:39-58 semantics) on sf0.001.
+``queries()``/``oracle_sql()`` expose every declared query and its DuckDB
+twin for the correctness harness. The queries live in
+``global_stock_data_warehouse_spark/queries/``, one module per family.
 """
 
 from __future__ import annotations
@@ -16,8224 +17,57 @@ _REPO = os.path.dirname(os.path.abspath(__file__))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from global_stock_data_warehouse_spark.functions.buckets import month_end, week_ending_friday
-from global_stock_data_warehouse_spark.functions.normalize import (
-    canonical_id,
-    default_if_missing,
-    status_flag,
-    zero_pad,
-)
-from global_stock_data_warehouse_spark.operators.joins import (
-    anti_missing,
-    asof_join,
-    broadcast_lookup,
-    range_join,
-    semi_active,
-)
-from global_stock_data_warehouse_spark.operators.rollup import multi_resolution_rollup
-from global_stock_data_warehouse_spark.operators.dedup import (
-    dedup_exact,
-    minhash_neardup,
-    ngram_jaccard_pairs,
-    sample_per_group,
-    simhash_neardup,
-)
-from global_stock_data_warehouse_spark.operators.resample import ohlc_resample
-from global_stock_data_warehouse_spark.operators.returns import with_date_gap, with_period_return
-from global_stock_data_warehouse_spark.operators.similarity import (
-    brute_force_topk,
-    class_centroids,
-    embedding_neardup,
-    embedding_neardup_lsh,
-    ivf_topk,
-    lsh_topk,
-    quantize_embeddings,
-)
-from global_stock_data_warehouse_spark.operators.text import (
-    chunk_documents,
-    repetition_stats,
-    text_stats,
-    winnow_fingerprints,
-)
-from global_stock_data_warehouse_spark.operators.cdc import snapshot_diff
-from global_stock_data_warehouse_spark.operators.corpus import (
-    PII_PATTERNS,
-    bm25_score,
-    bpe_merge_candidates,
-    decontaminate,
-    duplicate_spans,
-    ngram_topk,
-    pack_sequences,
-    pii_scrub,
-    rebalance_sample,
-    remove_duplicate_spans,
-    temperature_sample,
-    with_split,
-)
-from global_stock_data_warehouse_spark.operators.graph import dedup_groups
-from global_stock_data_warehouse_spark.operators.profile import profile_table
-from global_stock_data_warehouse_spark.operators.timeseries import (
-    daily_close,
-    drawdown_stats,
-    tech_indicators,
-)
-from global_stock_data_warehouse_spark.operators.upsert import dedup_last_writer
-from global_stock_data_warehouse_spark.sources.registry import load_table
+from global_stock_data_warehouse_spark.queries import declared
+from global_stock_data_warehouse_spark.queries.wmy import q_wmy_weekly_resample_returns
 
-
-def _event_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events as a bar stream: user_id=entity, ts=time, value=price.
-
-    A bar without an entity, a time, or a price is not a bar: NULL
-    user_id/ts/value rows are excluded at this shared root (one uniform
-    contract — mirrored by the `WHERE user_id IS NOT NULL AND ts IS NOT
-    NULL AND value IS NOT NULL` clause in every bar-family oracle), the
-    same policy the r7 hardening set for cohort/Markov event queries.
-    Without it a NULL ts lands a NULL period bucket, a NULL value
-    poisons OHLC aggregates, and a NULL entity becomes a phantom
-    symbol."""
-    return (
-        load_table(spark, "events", sf_dir)
-        .filter(
-            F.col("user_id").isNotNull()
-            & F.col("ts").isNotNull()
-            & F.col("value").isNotNull()
-        )
-        .select(
-            F.col("user_id"),
-            F.col("event_id"),
-            F.col("ts"),
-            F.to_date("ts").alias("d"),
-            F.col("value"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Flagship: weekly OHLC resample + period returns (A5 + W1 + W3)
-# ---------------------------------------------------------------------------
-
-
-def _wmy_resample_returns(spark: SparkSession, sf_dir: str, freq: str) -> DataFrame:
-    # One explicit hash partition on the entity key: HashPartitioning(user_id)
-    # satisfies ClusteredDistribution(user_id, bucket) for the resample agg
-    # AND the lag window's requirement, so the whole resample->returns chain
-    # runs on a single exchange instead of two (verified via explain).
-    bars = _event_bars(spark, sf_dir).repartition("user_id")
-    r = ohlc_resample(
-        bars,
-        freq,
-        time_col="d",
-        key_cols=("user_id",),
-        open_col="value",
-        high_col="value",
-        low_col="value",
-        close_col="value",
-        volume_col="value",
-        tiebreak_cols=("ts", "event_id"),
-    ).withColumnRenamed("volume", "sum_value")
-    out = with_period_return(r, key_cols=("user_id",)).drop("freq")
-    return out.select(
-        "user_id", "period_end", "open", "high", "low", "close", "sum_value", "period_return"
-    )
-
-
-def _acf_fx_oracle(lags: tuple[int, ...] = (1, 2, 3, 5)) -> str:
-    """DuckDB twin of autocorrelation_fx: per-lag Pearson ACF from
-    HUGEINT sums of integer daily-close cents (the exact arithmetic the
-    Spark side does in decimal(38,0)); floor(x*1e6+0.5) final round."""
-    lag_cols = ",\n         ".join(
-        f"lag(x, {k}) OVER (PARTITION BY user_id ORDER BY d) AS y{k}" for k in lags
-    )
-
-    def acf(k: int) -> str:
-        x = f"CASE WHEN y{k} IS NOT NULL THEN CAST(x AS HUGEINT) END"
-        y = f"CAST(y{k} AS HUGEINT)"
-        n, sx, sy = f"count(y{k})", f"sum({x})", f"sum({y})"
-        sxy, sxx, syy = f"sum(({x}) * y{k})", f"sum(({x}) * x)", f"sum({y} * y{k})"
-        num = f"({n}*{sxy} - {sx}*{sy})"
-        dx = f"({n}*{sxx} - {sx}*{sx})"
-        dy = f"({n}*{syy} - {sy}*{sy})"
-        return (
-            f"CASE WHEN {dx} > 0 AND {dy} > 0 THEN "
-            f"floor(CAST({num} AS DOUBLE) / (sqrt(CAST({dx} AS DOUBLE)) * "
-            f"sqrt(CAST({dy} AS DOUBLE))) * 1e6 + 0.5) / 1e6 END AS acf{k}"
-        )
-
-    accs = ",\n       ".join(acf(k) for k in lags)
-    return f"""
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         CAST(floor(last(value ORDER BY ts, event_id) * 100 + 0.5) AS BIGINT) AS x
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL
-  GROUP BY user_id, CAST(ts AS DATE)
-), lagged AS (
-  SELECT user_id, x,
-         {lag_cols}
-  FROM daily
-)
-SELECT user_id, CAST(count(*) AS BIGINT) AS n_days,
-       {accs}
-FROM lagged GROUP BY user_id ORDER BY user_id
-"""
-
-
-def _wmy_oracle(freq: str) -> str:
-    if freq == "W":
-        bucket = "CAST(ts AS DATE) + CAST((5 - isodow(CAST(ts AS DATE)) + 7) % 7 AS INTEGER)"
-    elif freq == "M":
-        bucket = "last_day(CAST(ts AS DATE))"
-    else:
-        bucket = "make_date(year(ts), 12, 31)"
-    return f"""
-WITH bars AS (
-  SELECT user_id,
-         {bucket} AS period_end,
-         first(value ORDER BY ts, event_id) AS open,
-         max(value) AS high,
-         min(value) AS low,
-         last(value ORDER BY ts, event_id) AS close,
-         sum(value) AS sum_value
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL GROUP BY 1, 2
-)
-SELECT user_id, period_end, open, high, low, close, sum_value,
-       round(close / lag(close) OVER (PARTITION BY user_id ORDER BY period_end) - 1, 4)
-         AS period_return
-FROM bars
-"""
+# The correctness harness hashes the first 50 queries() entries against
+# their DuckDB twins and keeps only a row count for the rest. Rules for
+# this window:
+#  1. only oracled queries sit in it;
+#  2. queries a change touched go first, then the stalest oracled ones
+#     by tools/rotation_ledger.py;
+#  3. every oracled query outside it must still pass the bit-exact mirror
+#     (CHECK_EXACT=1 python tools/check_correctness.py);
+#  4. queries with engine-order-sensitive rounded floats (EPS_QUERIES in
+#     tools/check_correctness.py) stay out: the hash has no tolerance.
+WINDOW = [
+    "token_vote_classify", "classifier_confusion", "classifier_calibration",
+    "ngram_topk", "ngram_topk_sketch", "collocations_topk",
+    "source_chi2_drift", "unigram_prob_score", "term_chi2",
+    "bigram_prob_score", "dsir_select", "remove_duplicate_spans",
+    "duplicate_spans", "decontaminate", "contamination_report",
+    "source_overlap", "repetition_stats", "text_stats", "chunk_documents",
+    "gopher_quality_flags", "lang_confusion", "corpus_clean", "pii_scrub",
+    "paragraph_dedup", "record_linkage", "dedup_components", "dedup_funnel",
+    "dedup_keep_best", "dup_cluster_stats", "dup_source_matrix",
+    "neardup_consensus", "ngram_jaccard_neardup", "embedding_neardup",
+    "leakage_safe_split", "llm_gold_pipeline", "packed_sequences",
+    "triangle_count", "link_prediction", "source_mix_report", "benford_audit",
+    "custdist", "embedding_moments", "important_stock", "incremental_dedup",
+    "priority_linestatus", "promo_revenue_share", "rebalance_sample",
+    "shard_shuffle", "split_assign", "temperature_sample",
+]
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return _wmy_resample_returns(spark, "/root/testdata/sf0.001", "W")
-
-
-def q_wmy_gold_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FULL flagship plan (plans/wmy.py): per-symbol window gates -> one
-    W+M resample aggregate -> OHLC gate -> per-(stock,freq) returns, all on
-    one hash exchange on the symbol, as one oracle-checked query (events
-    mapped to bars: value = OHLC)."""
-    from global_stock_data_warehouse_spark.plans.wmy import wmy_pipeline
-
-    bars = _event_bars(spark, sf_dir).select(
-        F.col("user_id").alias("symbol"),
-        F.col("d").alias("date"),
-        F.col("ts"),
-        F.col("event_id"),
-        F.col("value").alias("open"),
-        F.col("value").alias("high"),
-        F.col("value").alias("low"),
-        F.col("value").alias("close"),
-        F.col("value").alias("volume"),
-    )
-    gold, _ = wmy_pipeline(
-        bars,
-        time_col="date",
-        key_col="symbol",
-        freqs=("W", "M"),
-        gap_since="2024-01-01",
-        max_gap_days=14,
-        tiebreak_cols=("ts", "event_id"),
-    )
-    return gold.select(
-        F.col("stock_id").alias("user_id"),
-        "freq",
-        "period_end",
-        "open",
-        "high",
-        "low",
-        "close",
-        F.round("volume", 4).alias("sum_value"),
-        "period_return",
-    )
-
-
-# ---------------------------------------------------------------------------
-# Operator queries (SURVEY.md §2) over the driver tables
-# ---------------------------------------------------------------------------
-
-
-def q_agg_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1-A4: single-pass COUNT DISTINCT + MAX + COUNT(*) (main.py:118)."""
-    return load_table(spark, "lineitem", sf_dir).agg(
-        F.countDistinct("l_partkey").alias("n_parts"),
-        F.max("l_shipdate").alias("max_shipdate"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-
-
-def q_agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A5-analog grouped multi-agg with arithmetic (TPC-H Q1 shape)."""
-    li = load_table(spark, "lineitem", sf_dir)
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum("l_quantity").alias("sum_qty"),
-            F.sum("l_extendedprice").alias("sum_base_price"),
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("sum_disc_price"),
-            F.avg("l_quantity").alias("avg_qty"),
-            F.avg("l_discount").alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-def q_dedup_last_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A7/K1: last-writer-wins keyed dedup via row_number window. The
-    tiebreak is a column SEQUENCE, not a struct — a struct order column
-    re-ships its fields through the window shuffle next to the bare
-    output columns (21.2 -> 12.9 MB at sf0.1)."""
-    li = load_table(spark, "lineitem", sf_dir)
-    out = dedup_last_writer(
-        li, ("l_partkey", "l_suppkey"), ("l_shipdate", "l_orderkey", "l_linenumber")
-    )
-    return out.select("l_partkey", "l_suppkey", "l_orderkey", "l_linenumber", "l_shipdate")
-
-
-def q_filter_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P4-P7 + F1/F2: predicate chain + canonicalization on part."""
-    p = load_table(spark, "part", sf_dir)
-    return (
-        p.filter(
-            (F.col("p_size") >= 4)
-            & F.col("p_brand").rlike("^[A-Za-z0-9#]+$")
-            & ~F.upper(F.col("p_type")).rlike("ANODIZED|BURNISHED")
-        )
-        .select(
-            "p_partkey",
-            canonical_id("p_brand").alias("brand_id"),
-            zero_pad("p_size", 3).alias("size_code"),
-            F.substring_index("p_type", " ", 1).alias("type_head"),
-        )
-    )
-
-
-def q_join_broadcast_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1: broadcast dim lookup + coalesce default (KR industry join)."""
-    cust = load_table(spark, "customer", sf_dir)
-    nation = load_table(spark, "nation", sf_dir).select(
-        F.col("n_nationkey").alias("c_nationkey"), F.col("n_name").alias("nation_name")
-    )
-    out = broadcast_lookup(
-        cust,
-        nation,
-        on="c_nationkey",
-        coalesce_cols={"nation": ("nation_name", "c_mktsegment", "Unknown")},
-    )
-    return out.select("c_custkey", "nation")
-
-
-def q_join_facts_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2: fact x dim equi-join + grouped rollup (orders x customer)."""
-    o = load_table(spark, "orders", sf_dir)
-    c = load_table(spark, "customer", sf_dir)
-    return (
-        o.join(c, o.o_custkey == c.c_custkey, "inner")
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 2).alias("total_revenue"),
-        )
-    )
-
-
-def q_join_anti_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anti-join: customers with zero orders (coverage/fail_list)."""
-    c = load_table(spark, "customer", sf_dir).select("c_custkey", "c_name")
-    o = load_table(spark, "orders", sf_dir).select(F.col("o_custkey").alias("c_custkey"))
-    return anti_missing(c, o, "c_custkey")
-
-
-def q_join_semi_active(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-join: suppliers with at least one lineitem."""
-    s = load_table(spark, "supplier", sf_dir).select("s_suppkey", "s_name")
-    li = load_table(spark, "lineitem", sf_dir).select(F.col("l_suppkey").alias("s_suppkey"))
-    return semi_active(s, li, "s_suppkey")
-
-
-def q_win_rank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Engine op win_rank_topk: top-3 orders per priority by totalprice."""
-    o = load_table(spark, "orders", sf_dir)
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
-    )
-    return (
-        o.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("o_orderpriority", "rk", "o_orderkey", "o_totalprice")
-    )
-
-
-def q_agg_gap_max(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W2+A9: max day-gap between consecutive events per user."""
-    ev = _event_bars(spark, sf_dir)
-    gaps = with_date_gap(ev, date_col="d", key_cols=("user_id",))
-    return gaps.groupBy("user_id").agg(F.max("gap_days").alias("max_gap_days"))
-
-
-def q_agg_boolean_any(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A8: per-group boolean gates (any(cond)) as max(when)."""
-    li = load_table(spark, "lineitem", sf_dir)
-    return li.groupBy("l_returnflag").agg(
-        F.max(F.when(F.col("l_discount") > 0.08, 1).otherwise(0)).cast("boolean").alias("any_deep_discount"),
-        F.max(F.when(F.col("l_quantity") <= 0, 1).otherwise(0)).cast("boolean").alias("any_nonpositive_qty"),
-    )
-
-
-def q_agg_groupwise_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A6+F10+F12: success counts, 2-dp rate, status flag per group."""
-    o = load_table(spark, "orders", sf_dir)
-    agg = o.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("total"),
-        F.sum(F.when(F.col("o_orderstatus") == "F", 1).otherwise(0)).alias("finished"),
-    )
-    # multiply BEFORE dividing — (a*100.0)/b, matching the oracle's
-    # expression order exactly; (a/b)*100 differs in the last ulp and the
-    # driver's value hash is bit-exact
-    agg = agg.withColumn("success_rate", F.round(F.col("finished") * 100.0 / F.col("total"), 2))
-    return agg.withColumn("status", status_flag("success_rate", 30.0))
-
-
-def q_scalar_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F1-F9: string/date/math scalar expressions in one projection."""
-    o = load_table(spark, "orders", sf_dir)
-    return o.select(
-        "o_orderkey",
-        F.upper(F.trim(F.col("o_orderpriority"))).alias("prio_canon"),
-        F.lpad(F.col("o_orderkey").cast("string"), 12, "0").alias("key_padded"),
-        F.substring_index(F.col("o_orderpriority"), "-", 1).alias("prio_code"),
-        F.to_date("o_orderdate").alias("order_date"),
-        F.date_format(F.col("o_orderdate"), "yyyy-MM-dd").alias("order_date_str"),
-        F.round(F.col("o_totalprice") / 7.0, 4).alias("price_per_week"),
-        week_ending_friday(F.to_date("o_orderdate")).alias("week_end"),
-        month_end(F.to_date("o_orderdate")).alias("month_end"),
-    )
-
-
-def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F13: JSON path extraction + grouped count on events.props."""
-    ev = load_table(spark, "events", sf_dir)
-    k = F.get_json_object("props", "$.k").cast("bigint")
-    return (
-        ev.select(k.alias("k"))
-        .groupBy("k")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def q_sort_limit_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O1+O2: global deterministic sort + limit."""
-    li = load_table(spark, "lineitem", sf_dir)
-    return (
-        li.orderBy(F.col("l_extendedprice").desc(), F.col("l_orderkey"), F.col("l_linenumber"))
-        .select("l_orderkey", "l_linenumber", "l_extendedprice")
-        .limit(10)
-    )
-
-
-def q_filter_date_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P10: partition-prunable date-range filter + monthly rollup."""
-    li = load_table(spark, "lineitem", sf_dir)
-    return (
-        li.filter(F.col("l_shipdate") >= F.lit("1996-01-01"))
-        .groupBy(F.trunc(F.to_date("l_shipdate"), "month").alias("ship_month"))
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("l_extendedprice"), 2).alias("revenue"))
-    )
-
-
-def q_summary_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """get_db_summary composite (A1-A4+A6+F12): per-nation coverage report."""
-    c = load_table(spark, "customer", sf_dir)
-    o = load_table(spark, "orders", sf_dir)
-    n = load_table(spark, "nation", sf_dir)
-    per_cust = o.groupBy("o_custkey").agg(F.count(F.lit(1)).alias("n_orders"))
-    joined = c.join(per_cust, c.c_custkey == per_cust.o_custkey, "left")
-    agg = (
-        joined.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            F.count(F.lit(1)).alias("expected"),
-            F.sum(F.when(F.col("n_orders").isNotNull(), 1).otherwise(0)).alias("active"),
-        )
-    )
-    # (a*100.0)/b to match the oracle's expression order bit-exactly
-    agg = agg.withColumn("coverage", F.round(F.col("active") * 100.0 / F.col("expected"), 2))
-    return agg.withColumn("status", status_flag("coverage", 80.0))
-
-
-def q_asof_join_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join (engine extension): each event matched to the latest
-    weekly bar whose period_end <= the event date, per user. Union +
-    running-last window — one shuffle, no range-join pair explosion."""
-    ev = _event_bars(spark, sf_dir).select("user_id", "event_id", "d", "value")
-    bars = _wmy_resample_returns(spark, sf_dir, "W").select(
-        "user_id", "period_end", F.col("close").alias("bar_close")
-    )
-    out = asof_join(ev, bars, on="user_id", left_ts="d", right_ts="period_end")
-    return out.select(
-        "user_id",
-        "event_id",
-        "d",
-        "value",
-        F.col("r_bar_close").alias("bar_close"),
-        F.col("r_period_end").alias("bar_period_end"),
-    )
-
-
-def q_asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join with a staleness cap (tolerance_days=14): a match older
-    than two weeks is nulled out — the reference's freshness-gate intent
-    (main.py:101-112) as a join property. Same union + running-last plan
-    as q_asof_join_bars; the tolerance is a map-side post-filter, zero
-    extra shuffles."""
-    ev = _event_bars(spark, sf_dir).select("user_id", "event_id", "d", "value")
-    bars = _wmy_resample_returns(spark, sf_dir, "W").select(
-        "user_id", "period_end", F.col("close").alias("bar_close")
-    )
-    out = asof_join(
-        ev, bars, on="user_id", left_ts="d", right_ts="period_end",
-        tolerance_days=14,
-    )
-    return out.select(
-        "user_id",
-        "event_id",
-        "d",
-        "value",
-        F.col("r_bar_close").alias("bar_close"),
-        F.col("r_period_end").alias("bar_period_end"),
-    )
-
-
-def q_sessionize_skewsafe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The two-phase (skew-bounded) sessionization fold, oracled against
-    the SAME SQL as q_sessionize: per-task rows are bounded by one
-    (user, 30-day bucket) slice, so a power-law user cannot serialize
-    the stage — and the output is provably identical to the one-window
-    form (shared oracle = the equivalence is driver-hash-checked, not
-    just pytest-asserted)."""
-    from global_stock_data_warehouse_spark.operators.timeseries import (
-        sessionize_two_phase,
-    )
-
-    ev = (
-        load_table(spark, "events", sf_dir)
-        .filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
-        .select("user_id", "event_id", "ts", "value")
-    )
-    sess = sessionize_two_phase(ev, gap_sec=2 * 86400)
-    return sess.groupBy("user_id", "session_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-        (F.sum(F.round(F.col("value") * 100, 0)) / 100.0).alias("sum_value"),
-    )
-
-
-def q_drift_alert_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The streaming drift monitor's per-batch alert computation as a
-    batch query (event_id%5==0 plays the incoming micro-batch, the rest
-    the trailing state ledger): per-event_type mean-of-value shifts
-    beyond 25% on batches of >=20 rows alert with exact integer-sum
-    means. Gives `streaming.pipeline.drift_alerts` driver-hash evidence
-    beyond the availableNow pytest harness."""
-    from global_stock_data_warehouse_spark.streaming.pipeline import drift_alerts
-
-    ev = load_table(spark, "events", sf_dir).filter(
-        F.col("event_type").isNotNull()
-        & F.col("value").isNotNull()
-        & F.col("event_id").isNotNull()
-    )
-
-    def agg(df, n, vs):
-        return df.groupBy(F.col("event_type").alias("grp")).agg(
-            F.count(F.lit(1)).alias(n),
-            F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias(vs),
-        )
-
-    cur = agg(ev.filter(F.col("event_id") % 5 == 0), "n", "vsum")
-    state = (
-        agg(ev.filter(F.col("event_id") % 5 != 0), "base_n", "base_vsum")
-    )
-    # threshold 0.02: the fixture's uniform stream drifts only a little
-    # between the splits, so a realistic 0.25 would emit zero rows and
-    # prove nothing; 2% makes the report non-trivially populated
-    return drift_alerts(cur, state, 0.02, 20, "event_type").orderBy(
-        "event_type"
-    )
-
-
-def q_pps_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Systematic PPS sampling (k=100 strides over the n_chars weight
-    line): the weighted-mixture selection op without the
-    engine-divergent -ln(u)/w exponential keys — pure BIGINT stride
-    arithmetic, so the SELECTED ROWS are bit-identical across engines.
-    Cumsum decomposes into per-stratum windows + broadcast offsets (no
-    global single-task running sum)."""
-    from global_stock_data_warehouse_spark.operators.corpus import (
-        pps_systematic_sample,
-    )
-
-    return pps_systematic_sample(
-        load_table(spark, "documents", sf_dir), k=100, weight_col="n_chars"
-    )
-
-
-def q_gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The published Gopher rule battery (Rae et al. 2021 Table A1) as
-    per-doc booleans: word-count / mean-word-length bounds, symbol and
-    bullet/ellipsis ratios, alpha-word share, stopword presence —
-    separate flags (not a composite score) so mixture designers see
-    WHICH rule killed a doc. Map-only single scan, fixed-point ratios
-    rounded BEFORE the threshold compares so the booleans are
-    bit-identical across engines. min_words=20 (not the paper's 50) so
-    the fixture's ~25-word docs split non-trivially."""
-    from global_stock_data_warehouse_spark.operators.text import (
-        gopher_quality_flags,
-    )
-
-    docs = load_table(spark, "documents", sf_dir).filter(F.col("doc_id").isNotNull())
-    return gopher_quality_flags(docs, min_words=20).orderBy("doc_id")
-
-
-def q_mixture_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-budget mixture planning under TARGET weights (the
-    Pile/Dolma mixture-table step): BIGINT-exact allocation
-    (budget*w DIV W), ceil epochs, fixed-point sampling rate; corpus
-    sources absent from the weight table report weight 0 / epochs 0
-    instead of vanishing. One source-keyed agg + broadcast weight
-    join."""
-    from global_stock_data_warehouse_spark.operators.corpus import (
-        mixture_epoch_plan,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    return mixture_epoch_plan(
-        docs,
-        token_budget=1_000_000,
-        weights={"src0": 5, "src1": 3, "src2": 2, "src3": 1},
-    )
-
-
-def q_stratified_quota_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT-quota stratified split (val 10%, test 5% per source, by
-    per-mille ceil brackets over the md5-ranked stratum): unlike the
-    hash-bucket split_assign, every stratum hits its quota EXACTLY —
-    the eval-set-builder contract. Deterministic (md5 order), one
-    stratum-keyed window."""
-    from global_stock_data_warehouse_spark.operators.corpus import (
-        stratified_quota_split,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    return stratified_quota_split(
-        docs, quotas={"val": 100, "test": 50}
-    ).orderBy("doc_id")
-
-
-def q_win_rolling_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit window frames: 7-row rolling mean (ROWS BETWEEN) and
-    14-day trailing sum (RANGE BETWEEN on days-since-epoch)."""
-    ev = _event_bars(spark, sf_dir)
-    rows_w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-6, Window.currentRow)
-    )
-    range_w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.datediff("d", F.lit("1970-01-01")))
-        .rangeBetween(-13, Window.currentRow)
-    )
-    return ev.select(
-        "user_id",
-        "event_id",
-        F.round(F.avg("value").over(rows_w), 4).alias("avg_7row"),
-        F.round(F.sum("value").over(range_w), 4).alias("sum_14day"),
-    )
-
-
-def q_cube_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE grouping sets over nation x mktsegment with grouping_id —
-    map-side partial agg + one shuffle; Catalyst expands the sets."""
-    c = load_table(spark, "customer", sf_dir)
-    n = load_table(spark, "nation", sf_dir)
-    joined = c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey).select(
-        F.col("n_name").alias("nation"), F.col("c_mktsegment").alias("segment"), "c_acctbal"
-    )
-    return (
-        joined.cube("nation", "segment")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            F.round(F.sum("c_acctbal"), 2).alias("sum_acctbal"),
-            F.grouping_id().alias("gid"),
-        )
-        # sentinel instead of NULL grouping cells: drivers' order-insensitive
-        # hashers often can't totally order NULLs; gid still disambiguates
-        .select(
-            F.coalesce("nation", F.lit("(all)")).alias("nation"),
-            F.coalesce("segment", F.lit("(all)")).alias("segment"),
-            "n_customers",
-            "sum_acctbal",
-            "gid",
-        )
-    )
-
-
-def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set-operation battery: INTERSECT ALL / EXCEPT ALL multiset semantics
-    plus U1+U2 (union frames then distinct keys, downloader_tw.py:47-76
-    intent), tagged and unioned into one checked result."""
-    c = load_table(spark, "customer", sf_dir).select(F.col("c_nationkey").alias("nationkey"))
-    s = load_table(spark, "supplier", sf_dir).select(F.col("s_nationkey").alias("nationkey"))
-    both = c.intersectAll(s).withColumn("op", F.lit("intersect"))
-    only_c = c.exceptAll(s).withColumn("op", F.lit("except"))
-    uni = c.unionByName(s).distinct().withColumn("op", F.lit("union"))
-    return (
-        both.unionByName(only_c)
-        .unionByName(uni)
-        .groupBy("op", "nationkey")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def q_pivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot with an EXPLICIT value list (no extra distinct-scan job):
-    order counts per priority x status."""
-    o = load_table(spark, "orders", sf_dir)
-    piv = (
-        o.groupBy("o_orderpriority")
-        .pivot("o_orderstatus", ["F", "O", "P"])
-        .agg(F.count(F.lit(1)))
-    )
-    return piv.select(
-        "o_orderpriority",
-        F.coalesce("F", F.lit(0)).alias("n_f"),
-        F.coalesce("O", F.lit(0)).alias("n_o"),
-        F.coalesce("P", F.lit(0)).alias("n_p"),
-    )
-
-
-def q_window_tumbling_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the streaming tumbling window: epoch-aligned 7-day
-    buckets per user via F.window (same semantics as streaming/pipeline)."""
-    # same uniform NULL exclusion as hopping_window_agg/decayed_totals,
-    # plus the entity key; mirrored in the oracle's WHERE
-    ev = load_table(spark, "events", sf_dir).filter(
-        F.col("user_id").isNotNull()
-        & F.col("ts").isNotNull()
-        & F.col("value").isNotNull()
-    )
-    return (
-        ev.groupBy("user_id", F.window("ts", "7 days").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(
-            "user_id", F.col("w.start").alias("window_start"), "n_events", "sum_value"
-        )
-    )
-
-
-def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: 3-way selective join + grouped revenue + top-10.
-    Filters reach every scan (pushdown); AQE picks join strategy; the
-    top-k is a TakeOrderedAndProject, not a global sort."""
-    c = load_table(spark, "customer", sf_dir).filter(F.col("c_mktsegment") == "BUILDING")
-    o = load_table(spark, "orders", sf_dir).filter(F.col("o_orderdate") < F.lit("1997-01-01"))
-    li = load_table(spark, "lineitem", sf_dir).filter(F.col("l_shipdate") > F.lit("1997-01-01"))
-    return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(li, o.o_orderkey == li.l_orderkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-                "revenue"
-            )
-        )
-        .orderBy(F.col("revenue").desc(), "o_orderdate", "l_orderkey")
-        .limit(10)
-    )
-
-
-def q_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: 5-way join through the region/nation snowflake with
-    the customer-nation == supplier-nation constraint, grouped revenue."""
-    r = load_table(spark, "region", sf_dir).filter(F.col("r_name") == "ASIA")
-    n = load_table(spark, "nation", sf_dir)
-    c = load_table(spark, "customer", sf_dir)
-    o = load_table(spark, "orders", sf_dir).filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01"))
-    )
-    li = load_table(spark, "lineitem", sf_dir)
-    s = load_table(spark, "supplier", sf_dir)
-    return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(li, o.o_orderkey == li.l_orderkey)
-        .join(s, (li.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey))
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("n_name")
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias(
-                "revenue"
-            )
-        )
-    )
-
-
-def q_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape: correlated scalar subquery (per-part 0.2*avg qty)
-    decorrelated into a grouped agg + join. The selective brand filter is
-    applied BEFORE the per-part average (semi-join pushdown): the avg is
-    computed only over the ~1/25th of lineitem that can matter, and both
-    the part dim and the tiny avg table broadcast."""
-    p = (
-        load_table(spark, "part", sf_dir)
-        .filter(F.col("p_brand") == "Brand#1")
-        .select("p_partkey")
-    )
-    li = load_table(spark, "lineitem", sf_dir).select(
-        "l_partkey", "l_quantity", "l_extendedprice"
-    )
-    li_b = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-    avgq = li_b.groupBy("l_partkey").agg(
-        (0.2 * F.avg("l_quantity")).alias("qty_cap")
-    )
-    return (
-        li_b.join(F.broadcast(avgq), "l_partkey")
-        .filter(F.col("l_quantity") < F.col("qty_cap"))
-        .agg(F.round(F.sum("l_extendedprice") / 7.0, 4).alias("avg_yearly"))
-    )
-
-
-def q_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 shape: group-HAVING semi-join (orders whose total quantity
-    exceeds 250) re-joined to customer + orders + lineitem, top-100 by
-    price. The HAVING aggregate runs map-side-partial on l_orderkey; the
-    surviving key set is tiny and broadcasts into the main join; ordering
-    tie-broken by unique o_orderkey for determinism."""
-    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_quantity")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("sum_qty"))
-        .filter(F.col("sum_qty") > 250)
-    )
-    o = load_table(spark, "orders", sf_dir)
-    c = load_table(spark, "customer", sf_dir)
-    return (
-        o.join(F.broadcast(big), o.o_orderkey == big.l_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .select(
-            "c_name", "c_custkey", "o_orderkey", "o_orderdate", "o_totalprice", "sum_qty"
-        )
-        .orderBy(F.col("o_totalprice").desc(), "o_orderkey")
-        .limit(100)
-    )
-
-
-def q_order_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: per-priority count of orders in a 3-month window
-    having at least one LATE lineitem — a correlated EXISTS. The synthetic
-    lineitem has no commit/receipt dates, so "late" is a cross-table range
-    predicate (shipped >30 days after order date), which is STRICTLY
-    harder than Q4's own lineitem-local predicate: the semi-join carries
-    an equi key (orderkey) plus a range condition evaluated inside the
-    join. Plan: the date window prunes orders first (partition-prunable at
-    rest), the LEFT SEMI join stops probing an order at its first late
-    line (no fan-out, no distinct), and the final 5-group count is
-    map-side partial."""
-    o = load_table(spark, "orders", sf_dir).filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01"))
-        & (F.col("o_orderdate") < F.lit("1996-04-01"))
-    )
-    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_shipdate")
-    late = o.join(
-        li,
-        (o.o_orderkey == li.l_orderkey)
-        & (li.l_shipdate > F.col("o_orderdate") + F.expr("INTERVAL 30 DAYS")),
-        "left_semi",
-    )
-    return (
-        late.groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-        .orderBy("o_orderpriority")
-    )
-
-
-def q_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21 shape — the classic EXISTS + NOT EXISTS double
-    self-join — DECORRELATED to aggregation: per (order, supplier) dedup,
-    then one per-order agg computes supplier count, late-supplier count,
-    and the sole late supplier; "supplier kept everyone waiting" =
-    (n_supp > 1 AND n_late == 1). Counts distinct orders per supplier.
-
-    vs the textbook plan: four scans of lineitem and two correlated
-    subquery joins collapse into ONE lineitem scan, a (order, supplier)
-    pre-aggregation that shrinks before the per-order agg (no Expand from
-    dual count-distinct), and a broadcast dim join for the supplier name.
-    "Late" = shipped >60 days after order date (the synthetic lineitem has
-    no commit/receipt dates; reference shape preserved, predicate
-    adapted)."""
-    from global_stock_data_warehouse_spark.operators.skew import fan_keyed
-
-    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_suppkey", "l_shipdate")
-    o = load_table(spark, "orders", sf_dir).select("o_orderkey", "o_orderdate")
-    # parallelism floor on the join key (r13; guide §2.5): the join, the
-    # (order, supplier) dedup aggregate, and the per-order aggregate all
-    # cluster on l_orderkey, so ONE pinned-wide exchange (AQE coalesces
-    # the tiny-bytes shuffle to 1-3 compute-heavy tasks otherwise) serves
-    # all three; structural no-op at scale (fan_keyed guard). Integer
-    # counts/max only -> identical under any partitioning. A/B-measured
-    # 2.10 -> 1.49 s warm at sf0.1.
-    li = fan_keyed(li, "l_orderkey")
-    per_supp = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy("l_orderkey", "l_suppkey")
-        .agg(
-            F.max(
-                (F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS"))
-                .cast("int")
-            ).alias("is_late")
-        )
-    )
-    per_order = per_supp.groupBy("l_orderkey").agg(
-        F.count(F.lit(1)).alias("n_supp"),
-        F.sum("is_late").alias("n_late"),
-        F.max(F.when(F.col("is_late") == 1, F.col("l_suppkey"))).alias("late_supp"),
-    )
-    qual = per_order.filter((F.col("n_supp") > 1) & (F.col("n_late") == 1))
-    s = load_table(spark, "supplier", sf_dir).select("s_suppkey", "s_name")
-    return (
-        qual.join(F.broadcast(s), qual.late_supp == s.s_suppkey)
-        .groupBy("s_name")
-        .agg(F.count(F.lit(1)).alias("numwait"))
-        .orderBy(F.col("numwait").desc(), "s_name")
-        .limit(20)
-    )
-
-
-def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8 shape: one supplier nation's share of yearly revenue from
-    sales into one region — a 6-way snowflake join (fact -> orders ->
-    customer -> nation -> region filter; fact -> supplier -> nation) with
-    a CONDITIONAL-aggregate ratio. All five dims broadcast; the fact table
-    shuffles once for the year grouping. Revenue is fixed-point
-    (round(x*10000) bigint sums) so both numerator and denominator are
-    order-independent integers — the share division is then bit-stable
-    across engines."""
-    li = load_table(spark, "lineitem", sf_dir)
-    o = load_table(spark, "orders", sf_dir).select("o_orderkey", "o_custkey", "o_orderdate")
-    c = load_table(spark, "customer", sf_dir).select("c_custkey", "c_nationkey")
-    n = load_table(spark, "nation", sf_dir)
-    r = load_table(spark, "region", sf_dir)
-    s = load_table(spark, "supplier", sf_dir).select("s_suppkey", "s_nationkey")
-    cust_nat = c.join(
-        F.broadcast(n.select("n_nationkey", "n_regionkey")),
-        c.c_nationkey == F.col("n_nationkey"),
-    ).join(
-        F.broadcast(r.filter(F.col("r_name") == "ASIA").select("r_regionkey")),
-        F.col("n_regionkey") == F.col("r_regionkey"),
-    ).select("c_custkey")
-    supp_nat = s.join(
-        F.broadcast(n.select(F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation"))),
-        s.s_nationkey == F.col("sn_key"),
-    ).select("s_suppkey", "supp_nation")
-    rev_cents = F.round(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000, 0
-    ).cast("bigint")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(cust_nat), o.o_custkey == cust_nat.c_custkey)
-        .join(F.broadcast(supp_nat), li.l_suppkey == supp_nat.s_suppkey)
-        .groupBy(F.year("o_orderdate").alias("yr"))
-        .agg(
-            F.sum(F.when(F.col("supp_nation") == "NATION_3", rev_cents).otherwise(F.lit(0))).alias("_num"),
-            F.sum(rev_cents).alias("_den"),
-        )
-        .select(
-            "yr",
-            F.round(F.col("_num") / F.col("_den"), 6).alias("mkt_share"),
-        )
-        .orderBy("yr")
-    )
-
-
-def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row-level CDC between two keyed snapshots: full-outer join on the
-    PK, null-safe compare, insert/update/delete classification; unchanged
-    rows die in the join stage. Snapshots are deterministic slices of
-    lineitem (ln<=4 vs ln>=2 with quantity bumped on returned rows)."""
-    li = load_table(spark, "lineitem", sf_dir).select(
-        "l_orderkey", "l_linenumber", "l_quantity", "l_returnflag"
-    )
-    old = li.filter(F.col("l_linenumber") <= 4).select(
-        "l_orderkey", "l_linenumber", "l_quantity"
-    )
-    new = li.filter(F.col("l_linenumber") >= 2).select(
-        "l_orderkey",
-        "l_linenumber",
-        F.when(F.col("l_returnflag") == "R", F.col("l_quantity") + 5)
-        .otherwise(F.col("l_quantity"))
-        .alias("l_quantity"),
-    )
-    return snapshot_diff(old, new, ("l_orderkey", "l_linenumber"))
-
-
-def q_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-scan data-quality profile of orders: per-column null count,
-    distinct count, min/max — single wide aggregation + stack unpivot."""
-    return profile_table(
-        load_table(spark, "orders", sf_dir),
-        ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority"],
-    )
-
-
-def q_range_join_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval join at scale: shipments whose ship date falls in the
-    7-day window after an URGENT order. Bucketized equi-join (one bucket
-    per point, interval exploded to overlapped buckets) + residual range
-    predicate — never a nested-loop theta join."""
-    o = (
-        load_table(spark, "orders", sf_dir)
-        .filter(F.col("o_orderpriority") == "1-URGENT")
-        .select(
-            "o_orderkey",
-            "o_orderdate",
-            (F.col("o_orderdate") + F.expr("INTERVAL 7 DAYS")).alias("_end"),
-        )
-    )
-    li = load_table(spark, "lineitem", sf_dir).select("l_shipdate", "l_quantity")
-    # Decisive scale move: the join predicate AND both outputs depend only
-    # on l_shipdate, so the fact side pre-aggregates LOSSLESSLY to one row
-    # per ship day (count + qty sum; quantities are integral, so partial
-    # sums are exact) BEFORE the interval join. Candidate pairs shrink from
-    # |lineitem| x overlap to |distinct days| x overlap — at 100 TB the
-    # join input is calendar-sized, not fact-sized. A min/max bound from
-    # the (already filtered) interval set prunes days outside any window.
-    daily = li.groupBy("l_shipdate").agg(
-        F.count(F.lit(1)).alias("_n"), F.sum("l_quantity").alias("_q")
-    )
-    bounds = o.agg(F.min("o_orderdate").alias("_lo"), F.max("_end").alias("_hi"))
-    daily = daily.join(
-        F.broadcast(bounds),
-        (F.col("l_shipdate") >= F.col("_lo")) & (F.col("l_shipdate") < F.col("_hi")),
-    ).drop("_lo", "_hi")
-    return (
-        range_join(daily, o, "l_shipdate", "o_orderdate", "_end", bucket_seconds=86400)
-        .groupBy("o_orderkey")
-        .agg(
-            F.sum("_n").alias("n_shipments"),
-            F.round(F.sum("_q"), 2).alias("sum_qty"),
-        )
-    )
-
-
-def q_multi_res_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hypertable-style continuous aggregate: day/week/month rollups of
-    events in ONE grouping-sets pass (one scan, one shuffle, shared
-    map-side partials) instead of three separate aggregations."""
-    ev = load_table(spark, "events", sf_dir).select("user_id", "ts", "value")
-    out = multi_resolution_rollup(ev)
-    return out.withColumn("bucket_start", F.to_date("bucket_start"))
-
-
-def q_tech_indicators(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Market indicator battery over event ticks: daily close -> EWMA(20),
-    20-day volatility of log returns, RSI(14), Bollinger(20,2). One
-    shuffle for the whole chain (HashPartitioning(user_id) satisfies the
-    daily groupBy AND every window)."""
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
-    return tech_indicators(ev)
-
-
-def q_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-entity ACF at lags 1/2/3/5 over daily closes — the
-    mean-reversion/momentum diagnostic. One exchange serves every lag
-    window AND the final per-key corr agg. corr() sums floats in
-    partition order -> EPS-compared in the mirror (outside the driver
-    hash window)."""
-    from global_stock_data_warehouse_spark.operators.timeseries import (
-        autocorrelation,
-    )
-
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
-    return autocorrelation(daily_close(ev))
-
-
-def q_drawdown_cumret(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-entity max drawdown (min close/running-peak - 1) and total
-    cumulative return — running-max window + one final agg, one shuffle."""
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
-    return drawdown_stats(daily_close(ev))
-
-
-def q_split_adjusted_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corporate-action battery: infer k:1 splits from close-ratio
-    integer proximity, recover each bar's backward adjustment factor as
-    an EXACT integer (log-sum window + round; product << 2^53), emit
-    the adjusted series. The reference stores raw vendor closes and
-    leaves adjustment to every reader (`downloader_wmy.py:54-58`) —
-    this is that missing post-ingest step. One hash exchange serves
-    the daily groupBy, the lag window, and the desc factor window."""
-    from global_stock_data_warehouse_spark.operators.pricing import (
-        split_adjusted_prices,
-    )
-
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
-    return split_adjusted_prices(daily_close(ev)).select(
-        "user_id", "d", "close", "split_ratio", "adj_factor", "adj_close"
-    )
-
-
-def q_range_position(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing 20-day high/low channel summary per entity: new-high /
-    new-low counts and the latest close's position inside its channel.
-    min/max frames + one IEEE division — every cell engine-exact."""
-    from global_stock_data_warehouse_spark.operators.pricing import (
-        range_position_summary,
-    )
-
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
-    return range_position_summary(daily_close(ev), window=20)
-
-
-def q_overnight_intraday(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overnight-gap vs intraday-move return decomposition, per entity:
-    each day's two legs are 1e-8 fixed-point bigints before the mean,
-    so the per-entity averages are exact integer-sum / count — the
-    microstructure read the raw OHLC table exists to answer."""
-    from global_stock_data_warehouse_spark.operators.pricing import (
-        overnight_intraday_split,
-    )
-
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
-    return overnight_intraday_split(ev)
-
-
-def q_liquidity_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """20-day trailing average daily dollar volume (cents-exact),
-    snapshotted at each entity's latest bar and decile-ranked across
-    the universe; decile 1 = the liquid/tradeable set. The cross-entity
-    ntile sort runs over one row per entity — bounded by the universe,
-    not the bar count."""
-    from global_stock_data_warehouse_spark.operators.pricing import (
-        liquidity_screen,
-    )
-
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
-    return liquidity_screen(ev, window=20, n_tiles=10)
-
-
-def q_stale_price_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stale-quote audit: runs of consecutive days whose tick-grid-
-    quantized close never moves (halted listing / dead vendor feed).
-    Running-sum-over-change-flags run detection; integer equality
-    throughout — engine-exact."""
-    from global_stock_data_warehouse_spark.operators.pricing import (
-        stale_price_runs,
-    )
-
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
-    return stale_price_runs(daily_close(ev), grid=2.0, min_run=2)
-
-
-def q_amihud_illiquidity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NEW r10: Amihud (2002) price-impact illiquidity — mean |daily
-    return| per $1M traded, per entity, plus the worst day. Each day's
-    ratio is ONE bigint floor-division (numerator <= 1e14), so the sum
-    is exact-integer on both engines; one entity-keyed exchange."""
-    from global_stock_data_warehouse_spark.operators.pricing import (
-        amihud_illiquidity,
-    )
-
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
-    return amihud_illiquidity(ev)
-
-
-def q_underwater_spells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NEW r10: drawdown DURATION — per entity, days spent strictly
-    below the running peak, spell count, longest spell. Strict double
-    comparison against a running max (identical IEEE inputs both
-    engines) feeding the change-flag run-length pattern; all-integer
-    outputs."""
-    from global_stock_data_warehouse_spark.operators.pricing import (
-        underwater_spells,
-    )
-
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
-    return underwater_spells(daily_close(ev))
-
-
-def q_turn_of_month(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NEW r10: turn-of-month seasonality — mean return and up-share by
-    month-position bucket (first3/last3/middle via row_number within
-    (entity, month)). 1e-6 fixed-point sums; three rows out, ever."""
-    from global_stock_data_warehouse_spark.operators.pricing import (
-        turn_of_month_effect,
-    )
-
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
-    return turn_of_month_effect(daily_close(ev), edge_days=3)
-
-
-def q_calendar_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NEW r10: per-entity completeness vs the MARKET calendar (the
-    engine form of main.py:126-133's coverage floors). Calendar is
-    row_number-indexed once (bounded-by-calendar single partition);
-    expected days = two broadcast EQUI-joins on the span endpoints —
-    no range/NL join. Coverage = one bigint floor-division."""
-    from global_stock_data_warehouse_spark.operators.pricing import (
-        trading_calendar_coverage,
-    )
-
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
-    return trading_calendar_coverage(daily_close(ev), min_coverage=0.95)
-
-
-def q_volume_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NEW r10: hour-of-day volume seasonality (execution U-shape).
-    Cents bigints; per-hour share via DOLLAR-scaled bigint
-    floor-division (documented int64 headroom); 24-row output."""
-    from global_stock_data_warehouse_spark.operators.pricing import (
-        volume_profile_by_hour,
-    )
-
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
-    return volume_profile_by_hour(ev)
-
-
-def q_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NEW r10: declared-vs-detected language confusion matrix (feed
-    tag-rot audit). Pure-expression stopword argmax + one
-    group-bounded aggregate; |langs|^2 cells out, ever."""
-    from global_stock_data_warehouse_spark.operators.text import lang_confusion
-
-    return lang_confusion(load_table(spark, "documents", sf_dir))
-
-
-def q_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NEW r10: per-source type-token-ratio report — mean TTR and
-    low-diversity share (template spam screen; Gopher-adjacent). Per-doc
-    TTR is one bigint floor-division; one group-bounded source agg."""
-    from global_stock_data_warehouse_spark.operators.curation import (
-        lexical_diversity,
-    )
-
-    return lexical_diversity(load_table(spark, "documents", sf_dir), low_ttr=0.5)
-
-
-def q_index_daily_return(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cap-weighted market index daily return + breadth counts: weights
-    and returns become fixed-point bigints BEFORE the cross-sectional
-    sum, so the weighted mean is exact-integer arithmetic until one
-    final division. Group-bounded output (one row per date)."""
-    from global_stock_data_warehouse_spark.operators.pricing import (
-        index_daily_return,
-    )
-
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
-    return index_daily_return(daily_close(ev))
-
-
-def q_factor_rank_ic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily momentum rank IC: tie-broken Spearman between today's and
-    tomorrow's cross-sectional return ranks — all-integer arithmetic
-    until one final division (no float sums anywhere)."""
-    from global_stock_data_warehouse_spark.operators.pricing import (
-        factor_rank_ic,
-    )
-
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
-    return factor_rank_ic(daily_close(ev), min_members=3)
-
-
-def q_risk_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-entity risk report: mean/vol/Sharpe/skew from exact bigint
-    power sums of winsorized bp returns + 5% historical VaR via the
-    pinned percentile/quantile_cont pairing."""
-    from global_stock_data_warehouse_spark.operators.pricing import risk_summary
-
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
-    return risk_summary(daily_close(ev), min_days=5)
-
-
-def q_decile_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Momentum quintile long-short backtest: per date, equal-weighted
-    forward return of the top vs bottom return-quintile and the spread.
-    ntile selection is integer-deterministic; tile means are exact
-    fixed-point sums."""
-    from global_stock_data_warehouse_spark.operators.pricing import (
-        decile_spread_backtest,
-    )
-
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
-    return decile_spread_backtest(daily_close(ev), n_tiles=5, min_members=10)
-
-
-def q_packing_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Packing-yield audit: per md5 shard, sequence counts / tail waste
-    / fill rate for the concatenate-then-cut ctx_len=64 layout —
-    count-only arithmetic, no token ever shuffles."""
-    from global_stock_data_warehouse_spark.operators.corpus import (
-        packing_efficiency,
-    )
-
-    return packing_efficiency(
-        load_table(spark, "documents", sf_dir), ctx_len=64, n_shards=8, seed=42
-    )
-
-
-def q_beta_vs_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-entity market beta vs the cap-weighted index: winsorized
-    basis-point returns make every OLS sum exact bigint arithmetic;
-    slope/alpha are single closed-form double divisions."""
-    from global_stock_data_warehouse_spark.operators.pricing import beta_vs_index
-
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
-    return beta_vs_index(daily_close(ev), min_days=5)
-
-
-def q_calendar_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekday-seasonality screen: per ISO day-of-week, observation
-    count, fixed-point-exact mean return, positive-return share.
-    Seven-row group-bounded output."""
-    from global_stock_data_warehouse_spark.operators.pricing import (
-        calendar_anomalies,
-    )
-
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
-    return calendar_anomalies(daily_close(ev))
-
-
-def q_market_regime_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Breadth-momentum regimes (risk-on / risk-off / flat by
-    advancer-decliner majority) with per-regime day counts and longest
-    consecutive runs; run-length encoding on the one-row-per-date
-    frame."""
-    from global_stock_data_warehouse_spark.operators.pricing import (
-        market_regime_streaks,
-    )
-
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
-    return market_regime_streaks(daily_close(ev))
-
-
-def q_funnel_3step(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered 3-step funnel (view -> click -> purchase): each stage is the
-    min event time strictly AFTER the previous stage, per user; one row of
-    stage counts.
-
-    Single-pass formulation: ONE scan of events, ONE shuffle on user_id
-    (collect_list + a fold over the time-sorted per-user array computes
-    all three stage timestamps), then a single-row count agg — versus the
-    naive 3-scan/3-join/13-exchange staged plan (measured by
-    tools/explain_audit.py; this shape is 2 exchanges). Per-user arrays
-    are bounded by per-entity activity; a power-user skew cap would
-    pre-filter to the funnel's event types (done below) and window."""
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_type", "ts")
-    per_user = (
-        ev.filter(F.col("event_type").isin("view", "click", "purchase"))
-        .groupBy("user_id")
-        .agg(F.sort_array(F.collect_list(F.struct("ts", "event_type"))).alias("evs"))
-    )
-    zero = F.struct(
-        F.lit(None).cast("timestamp").alias("t1"),
-        F.lit(None).cast("timestamp").alias("t2"),
-        F.lit(None).cast("timestamp").alias("t3"),
-    )
-
-    def step(acc, e):
-        t1 = F.when(
-            acc["t1"].isNull() & (e["event_type"] == "view"), e["ts"]
-        ).otherwise(acc["t1"])
-        t2 = F.when(
-            acc["t2"].isNull()
-            & acc["t1"].isNotNull()
-            & (e["event_type"] == "click")
-            & (e["ts"] > acc["t1"]),
-            e["ts"],
-        ).otherwise(acc["t2"])
-        t3 = F.when(
-            acc["t3"].isNull()
-            & acc["t2"].isNotNull()
-            & (e["event_type"] == "purchase")
-            & (e["ts"] > acc["t2"]),
-            e["ts"],
-        ).otherwise(acc["t3"])
-        return F.struct(t1.alias("t1"), t2.alias("t2"), t3.alias("t3"))
-
-    folded = per_user.select(F.aggregate("evs", zero, step).alias("f"))
-    # count() counts non-nulls; per-user rows are unique, so these ARE the
-    # distinct-user stage counts
-    return folded.agg(
-        F.count(F.col("f.t1")).alias("n_viewed"),
-        F.count(F.col("f.t2")).alias("n_clicked"),
-        F.count(F.col("f.t3")).alias("n_purchased"),
-    )
-
-
-def _sessionized(spark: SparkSession, sf_dir: str, extra_cols: tuple = ()) -> DataFrame:
-    """Shared gap>2d sessionization (ONE definition for q_sessionize /
-    q_session_paths / q_max_concurrency — the window, gap rule, and
-    tiebreak must stay in lockstep with the matching oracle SQL):
-    events + a per-user running session_id."""
-    cols = ["user_id", "event_id", "ts", *extra_cols]
-    # a session needs an entity and a time: NULL user_id/ts rows are
-    # excluded at this shared root (mirrored by `WHERE user_id IS NOT
-    # NULL AND ts IS NOT NULL` in all three session oracles) — NULL ts
-    # would otherwise split sessions differently per engine (Spark
-    # sorts NULLS FIRST, DuckDB NULLS LAST)
-    ev = (
-        load_table(spark, "events", sf_dir)
-        .filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
-        .select(*cols)
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_sec = F.col("ts").cast("long") - F.lag(F.col("ts").cast("long")).over(w)
-    is_new = F.when(gap_sec.isNull() | (gap_sec > 2 * 86400), 1).otherwise(0)
-    return ev.withColumn(
-        "session_id",
-        F.sum(is_new).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-    )
-
-
-def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization: a new session starts after a >2-day quiet
-    period per user. Running-sum-over-flags window pattern; one shuffle.
-
-    Skew note: this single per-user window serializes a power-law user's
-    whole stream into one task. The engine ships the exact-equivalent
-    two-phase fold (`operators.timeseries.sessionize_two_phase`: heavy
-    window on (user, time-bucket) -> bounded per-task rows, tiny per-user
-    merge window) for hot-key corpora; this query keeps the one-shuffle
-    form because the driver fixture has no hot keys and the plan is
-    cheaper."""
-    sessions = _sessionized(spark, sf_dir, extra_cols=("value",))
-    # fixed-point sum: event values are exact 2-decimal quantities, so
-    # summing round(value*100) integers is ORDER-INDEPENDENT (exact integer
-    # doubles), unlike a float sum whose last-ulp depends on partial-sum
-    # order and drifts between engines
-    return sessions.groupBy("user_id", "session_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-        (F.sum(F.round(F.col("value") * 100, 0)) / 100.0).alias("sum_value"),
-    )
-
-def q_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Statistical aggregates: correlation, sample stddev/variance, exact
-    interpolated median and p75 per group."""
-    li = load_table(spark, "lineitem", sf_dir)
-    # one percentile(col, array(...)) = one sort-agg for both quantiles,
-    # instead of separate median + percentile sort-aggregates
-    pcts = F.percentile("l_extendedprice", F.array(F.lit(0.5), F.lit(0.75)))
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.round(F.corr("l_quantity", "l_extendedprice"), 6).alias("corr_qty_price"),
-            F.round(F.stddev_samp("l_discount"), 6).alias("sd_discount"),
-            F.round(F.var_samp("l_quantity"), 6).alias("var_qty"),
-            pcts.alias("_pcts"),
-        )
-        .select(
-            "l_returnflag",
-            "corr_qty_price",
-            "sd_discount",
-            "var_qty",
-            F.round(F.col("_pcts")[0], 6).alias("median_price"),
-            F.round(F.col("_pcts")[1], 6).alias("p75_price"),
-        )
-    )
-
-
-def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1 scale path: HyperLogLog++ approx distinct vs exact, per
-    returnflag (sketch-based -> rows-only check, no SQL oracle)."""
-    li = load_table(spark, "lineitem", sf_dir)
-    return li.groupBy("l_returnflag").agg(
-        F.approx_count_distinct("l_partkey", 0.02).alias("approx_parts"),
-        F.countDistinct("l_partkey").alias("exact_parts"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Training-data pipeline operators: dedup / similarity / text analysis
-# ---------------------------------------------------------------------------
-
-
-def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Text battery: token counts, quality ratios, lang-ID, fingerprint."""
-    return text_stats(load_table(spark, "documents", sf_dir))
-
-
-def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LLM-pipeline chunking: 32-token windows, 8-token overlap. Map-only
-    (split + sequence + explode), no shuffle."""
-    return chunk_documents(
-        load_table(spark, "documents", sf_dir), chunk_tokens=32, overlap=8
-    )
-
-
-def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing fingerprints (Schleimer et al., SIGMOD'03): min-hash of
-    each sliding window of k-shingle hashes. Hash values are
-    xxhash64-specific -> rows-only check, no SQL oracle."""
-    return winnow_fingerprints(load_table(spark, "documents", sf_dir), k=3, window=4)
-
-
-def q_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composed training-data pipeline: score -> quality-gate -> exact
-    dedup keep-one. One scan, one narrow projection chain, one window on
-    the fingerprint — the minimal-shuffle shape of a corpus-cleaning job."""
-    st = text_stats(load_table(spark, "documents", sf_dir))
-    w = Window.partitionBy("fingerprint").orderBy("doc_id")
-    return (
-        st.filter(F.col("quality") >= 0.5)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "n_tokens", "lang_pred", "quality")
-    )
-
-
-def q_llm_gold_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """END-TO-END LLM training-data gold pipeline — the documents-table
-    counterpart of the reference-derived wmy_gold_pipeline flagship:
-    quality-gate (score >= 0.5) -> exact dedup (keep-one per normalized
-    fingerprint) -> hold out the eval split (doc_id % 20 == 0) ->
-    5-gram decontaminate the survivors against it -> bigram-Jaccard
-    near-dup components -> leakage-safe 90/5/5 split on the component
-    min-id. Every stage is an already-oracled operator; this query is
-    the COMPOSITION, proving the stages chain without driver round-trips
-    (one plan end-to-end: gates and dedup share one scan; the eval gram
-    set and the component frame broadcast; the only wide exchanges are
-    the fingerprint window, the gram join's per-doc count, and the
-    near-dup inverted index — each individually scale-measured). The
-    composition lives in plans/llm_gold.py (the documents-table sibling
-    of plans/wmy.py) so the scale harness can run it on fixtures."""
-    from global_stock_data_warehouse_spark.plans.llm_gold import llm_gold_pipeline
-
-    return llm_gold_pipeline(
-        load_table(spark, "documents", sf_dir),
-        eval_pred=F.col("doc_id") % 20 == 0,
-        weights={"train": 90, "val": 5, "test": 5},
-    ).orderBy("doc_id")
-
-
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup groups by normalized-text md5 fingerprint."""
-    return dedup_exact(load_table(spark, "documents", sf_dir))
-
-
-def q_ngram_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact bigram-Jaccard near-dup pairs via inverted-index join."""
-    return ngram_jaccard_pairs(load_table(spark, "documents", sf_dir), threshold=0.2)
-
-
-def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition filters: distinct-bigram share and
-    top-bigram share per doc (exploded two-level agg, doc_id-keyed)."""
-    return repetition_stats(load_table(spark, "documents", sf_dir), n=2)
-
-
-def q_sample_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic stratified sample: 100 events per event_type by md5
-    order of the id — engine-portable pseudo-randomness (rand()/TABLESAMPLE
-    streams are not reproducible across engines; md5 order is)."""
-    return sample_per_group(
-        load_table(spark, "events", sf_dir), group_col="event_type", k=100, id_col="event_id"
-    )
-
-
-def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs -> connected components -> dedup groups (keep min
-    doc per cluster). Iterative min-label propagation, checkpointed per
-    round; converges in diameter rounds (near-dup clusters are cliques)."""
-    pairs = ngram_jaccard_pairs(load_table(spark, "documents", sf_dir), threshold=0.2)
-    groups = dedup_groups(pairs)
-    return groups.select(
-        "keep_id",
-        "group_size",
-        F.expr("array_join(transform(members, x -> cast(x as string)), ',')").alias(
-            "members"
-        ),
-    )
-
-
-def q_dup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate-cluster SIZE DISTRIBUTION — the "how duplicated is this
-    corpus" one-pager an ops team reads before sizing a dedup pass: per
-    cluster size, how many clusters and how many docs they cover, plus
-    the doc-level dedup yield (docs removable = size - 1 per cluster).
-    Composes the oracled near-dup components (same pair threshold) with
-    a group-bounded size rollup — all exact integers."""
-    pairs = ngram_jaccard_pairs(load_table(spark, "documents", sf_dir), threshold=0.2)
-    groups = dedup_groups(pairs)
-    return (
-        groups.groupBy(F.col("group_size").alias("cluster_size"))
-        .agg(
-            F.count(F.lit(1)).alias("n_clusters"),
-            (F.count(F.lit(1)) * F.col("group_size").cast("bigint")).alias(
-                "n_docs"
-            ),
-            (
-                F.count(F.lit(1)) * (F.col("group_size").cast("bigint") - 1)
-            ).alias("n_removable"),
-        )
-        .select("cluster_size", "n_clusters", "n_docs", "n_removable")
-    )
-
-
-def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-aware dedup verdicts: bigram-Jaccard near-dup clusters keep
-    their LONGEST member (n_chars score, ties -> lowest doc_id) — the
-    C4/Dolma keep-policy, vs dedup_components' keep-min-id."""
-    from global_stock_data_warehouse_spark.operators.graph import dedup_keep_best
-
-    docs = load_table(spark, "documents", sf_dir)
-    pairs = ngram_jaccard_pairs(docs, threshold=0.2)
-    return dedup_keep_best(docs, pairs, score_col="n_chars").orderBy("doc_id")
-
-
-def q_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH candidates verified by exact Jaccard (approximate recall
-    by design -> rows-only check, no oracle)."""
-    return minhash_neardup(
-        load_table(spark, "documents", sf_dir), num_hashes=32, bands=16, threshold=0.5
-    )
-
-
-def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash Hamming<=3 near-dup pairs (chunk-blocked; rows-only check)."""
-    return simhash_neardup(load_table(spark, "documents", sf_dir), max_hamming=3)
-
-
-def q_simhash_multi_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash Hamming<=3 via multi-index Hamming search (Norouzi et al.
-    CVPR'12; the past-10M-docs key-space path) — pinned to the
-    multi_index strategy so its plan runs at every SF; result set is
-    IDENTICAL to the chunk scheme (equivalence-tested), rows-only here
-    because signature hash values are engine-specific."""
-    return simhash_neardup(
-        load_table(spark, "documents", sf_dir), max_hamming=3, strategy="multi_index"
-    )
-
-
-def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-5 for the first 8 vectors as queries."""
-    emb = load_table(spark, "embeddings", sf_dir)
-    queries_df = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding")
-    )
-    return brute_force_topk(emb, queries_df, k=5)
-
-
-def q_ann_projected_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JL random projection (64 -> 16 dims) then brute-force cosine top-5
-    on the COMPRESSED vectors — the standard memory/recall trade for ANN
-    at scale (4x smaller vectors, one map-only Arrow pass; the seeded
-    projection matrix is rebuilt per task, nothing broadcast).
-    Approximate by construction -> rows-only; the distance-preservation
-    property test carries correctness."""
-    from global_stock_data_warehouse_spark.operators.similarity import (
-        random_projection,
-    )
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    low = random_projection(emb, out_dim=16)
-    # project the pre-filtered query frame separately: the projection is
-    # row-wise/deterministic, so this is identical to filtering `low` but
-    # avoids running the full-corpus projection a second time just to
-    # collect 8 query rows (the filter can't push below mapInPandas)
-    queries_df = random_projection(emb.filter(F.col("vec_id") < 8), out_dim=16).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding")
-    )
-    return brute_force_topk(low, queries_df, k=5)
-
-
-def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed approximate top-5 (scale path; rows-only check)."""
-    emb = load_table(spark, "embeddings", sf_dir)
-    queries_df = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding")
-    )
-    return lsh_topk(emb, queries_df, dim=64, k=5, planes=6)
-
-
-def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF top-5: sample-trained coarse quantizer, probe 4 of 16 cells
-    (~25% scan fraction; rows-only check)."""
-    emb = load_table(spark, "embeddings", sf_dir)
-    queries_df = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding")
-    )
-    return ivf_topk(emb, queries_df, k=5, n_cells=16, n_probe=4)
-
-
-def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs, auto-dispatched by corpus size
-    (planner-stats count probe): below exact_max_docs it runs the EXACT
-    blocked all-pairs path with n_blocks derived from the count, fully
-    distributed (hash-block x block-pair groups, one BLAS matmul each —
-    no driver collect, no whole-corpus broadcast); above it, the
-    sub-quadratic LSH candidates+verify path. At oracle scale this always
-    resolves to exact, so the DuckDB comparison stays bit-exact."""
-    return embedding_neardup(load_table(spark, "embeddings", sf_dir), threshold=0.4)
-
-
-def q_neardup_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-modal near-dup consensus (r6): the text-level bigram-Jaccard
-    pair set full-outer-joined with the embedding-cosine pair set
-    (doc_id = vec_id in the fixtures) — per candidate pair, which
-    modality flagged it and whether they agree. The triage view a dedup
-    operator reviews before choosing thresholds: 'both' pairs are
-    near-certain dups, single-modality pairs show where paraphrase
-    (semantic_only) or template noise (text_only) lives. Both inputs are
-    individually oracled bit-exact; the oracle here composes their SQL
-    as CTEs so the three can never drift apart."""
-    from global_stock_data_warehouse_spark.operators.similarity import (
-        embedding_neardup,
-    )
-
-    tp = ngram_jaccard_pairs(
-        load_table(spark, "documents", sf_dir), threshold=0.2
-    ).select("id_a", "id_b", "jaccard")
-    ep = embedding_neardup(load_table(spark, "embeddings", sf_dir), threshold=0.4)
-    both = F.col("jaccard").isNotNull() & F.col("cosine_sim").isNotNull()
-    return (
-        tp.join(ep, ["id_a", "id_b"], "full_outer")
-        .select(
-            "id_a",
-            "id_b",
-            "jaccard",
-            "cosine_sim",
-            F.col("jaccard").isNotNull().alias("text_dup"),
-            F.col("cosine_sim").isNotNull().alias("semantic_dup"),
-            F.when(both, F.lit("both"))
-            .when(F.col("jaccard").isNotNull(), F.lit("text_only"))
-            .otherwise(F.lit("semantic_only"))
-            .alias("agreement"),
-        )
-        .orderBy("id_a", "id_b")
-    )
-
-
-def q_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sub-quadratic scale path: multi-table LSH candidates + exact cosine
-    verify (approximate recall by design -> rows-only check)."""
-    return embedding_neardup_lsh(
-        load_table(spark, "embeddings", sf_dir), threshold=0.4, dim=64, planes=6, tables=4
-    )
-
-
-def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: flag train docs (doc_id % 20 != 0)
-    sharing any word 5-gram with the eval split (doc_id % 20 == 0). Eval
-    gram set broadcasts; the train side never self-shuffles."""
-    docs = load_table(spark, "documents", sf_dir)
-    out = decontaminate(
-        docs.filter(F.col("doc_id") % 20 != 0),
-        docs.filter(F.col("doc_id") % 20 == 0),
-        n=5,
-    )
-    return out.withColumn("n_collisions", F.col("n_collisions").cast("long")).orderBy(
-        "doc_id"
-    )
-
-
-def q_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fuzzy (embedding-space) decontamination: every train vector
-    (vec_id % 20 != 0) scored by max cosine against the eval split
-    (vec_id % 20 == 0) — broadcast eval matrix, ONE map-only Arrow pass,
-    zero shuffle. The semantic twin of q_decontaminate's n-gram check."""
-    from global_stock_data_warehouse_spark.operators.similarity import (
-        semantic_decontaminate,
-    )
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    return semantic_decontaminate(
-        emb.filter(F.col("vec_id") % 20 != 0),
-        emb.filter(F.col("vec_id") % 20 == 0),
-        threshold=0.3,
-    ).orderBy("vec_id")
-
-
-def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrubbing battery: count + redact emails/IPv4s/phones in one
-    codegen'd projection. The corpus text is salted with deterministic
-    synthetic PII (same expression mirrored in the oracle) so the
-    redaction paths actually fire."""
-    # coalesce: Spark's concat NULL-propagates (the whole salted text
-    # would vanish for a NULL-text doc) while DuckDB's concat skips
-    # NULL args — both sides salt coalesce(text, '') so the engines
-    # agree and the NULL-text doc still exercises the redaction
-    salted = load_table(spark, "documents", sf_dir).select(
-        "doc_id",
-        F.concat(
-            F.coalesce(F.col("text"), F.lit("")),
-            F.lit(" mail u"),
-            F.col("doc_id").cast("string"),
-            F.lit("@ex.com ip 10.0.0."),
-            (F.col("doc_id") % 200).cast("string"),
-            F.lit(" tel 555-123-"),
-            F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-        ).alias("text"),
-    )
-    out = pii_scrub(salted)
-    return out.select(
-        "doc_id",
-        F.col("n_emails").cast("long").alias("n_emails"),
-        F.col("n_ips").cast("long").alias("n_ips"),
-        F.col("n_phones").cast("long").alias("n_phones"),
-        "clean_text",
-    ).orderBy("doc_id")
-
-
-def q_bm25_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Okapi BM25 against a fixed term set: one corpus pass + a single-row
-    stats aggregate broadcast back. Score rounded to 6dp in BOTH twins
-    (ln() is libm-dependent in the last ulp across engines)."""
-    out = bm25_score(load_table(spark, "documents", sf_dir), ["spark", "hash", "table"])
-    return (
-        out.withColumn("dl", F.col("dl").cast("long"))
-        .withColumn("score", F.round("score", 6))
-        .orderBy("doc_id")
-    )
-
-
-def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GPT-style context-window packing map (ctx=64 tokens): per-shard
-    window cumsum, all-integer arithmetic — engine-portable bit-for-bit."""
-    out = pack_sequences(load_table(spark, "documents", sf_dir), ctx_len=64)
-    return out.withColumn("n_tokens", F.col("n_tokens").cast("long")).orderBy(
-        "source", "doc_id"
-    )
-
-
-def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2 shape: per part, the supplier offering the lowest average
-    price. The correlated-min subquery decorrelates into ONE grouped agg +
-    `min_by` over a struct with a deterministic (price, suppkey) tiebreak
-    — no self-join, no window over the whole fact table."""
-    li = load_table(spark, "lineitem", sf_dir)
-    # fixed-point average: prices are exact 2dp quantities, so the cent
-    # sum is an exact integer double (order-independent) and
-    # floor(sum/n + 0.5) rounds deterministically — round(avg(), 2)
-    # sat on a half-cent boundary at sf0.001 and flipped its last digit
-    # between engines on summation-order ulps
-    cents = F.round(F.col("l_extendedprice") * 100, 0)
-    per = li.groupBy("l_partkey", "l_suppkey").agg(
-        (
-            F.floor(F.sum(cents) / F.count(F.lit(1)) + 0.5) / 100.0
-        ).alias("avg_price")
-    )
-    best = per.groupBy("l_partkey").agg(
-        F.min_by(
-            F.struct("avg_price", "l_suppkey"), F.struct("avg_price", "l_suppkey")
-        ).alias("b"),
-        F.count(F.lit(1)).alias("n_suppliers"),
-    )
-    return (
-        best.select(
-            "l_partkey",
-            F.col("b.l_suppkey").alias("best_suppkey"),
-            F.col("b.avg_price").alias("best_price"),
-            "n_suppliers",
-        )
-        .orderBy("l_partkey")
-        .limit(500)
-    )
-
-
-def q_nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11 shape: revenue by supplier nation, kept only when its
-    share of GLOBAL revenue clears a threshold. The scalar global total is
-    a single-row agg broadcast back over the per-nation rows (no second
-    scan of the fact side; the share predicate is decorrelated)."""
-    li = load_table(spark, "lineitem", sf_dir)
-    sup = load_table(spark, "supplier", sf_dir)
-    nat = load_table(spark, "nation", sf_dir)
-    rev = (
-        li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
-        .join(F.broadcast(nat), sup.s_nationkey == nat.n_nationkey)
-        .groupBy("n_name")
-        .agg(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("rev"))
-    )
-    # global total as a window over the PER-NATION aggregate (|nations|
-    # rows — a deliberate single-partition window over a tiny frame):
-    # avoids re-executing the fact-side join+agg subtree that a separate
-    # scalar agg + cross join would duplicate in the static plan
-    total = F.sum("rev").over(Window.partitionBy())
-    return (
-        rev.withColumn("share_pct", F.round(F.col("rev") * 100.0 / total, 4))
-        .filter(F.col("share_pct") > 3.0)
-        .select("n_name", F.round("rev", 2).alias("revenue"), "share_pct")
-        .orderBy(F.col("share_pct").desc(), "n_name")
-    )
-
-
-def q_dormant_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 shape: customers with above-average balance and no
-    URGENT order — scalar-subquery threshold (single-row broadcast) +
-    anti-join with the filter PUSHED BELOW it (the match set shrinks
-    before the join, never after), grouped by market segment."""
-    cust = load_table(spark, "customer", sf_dir)
-    orders = load_table(spark, "orders", sf_dir)
-    avg_bal = cust.agg(F.avg("c_acctbal").alias("avg_bal"))
-    rich = cust.crossJoin(F.broadcast(avg_bal)).filter(
-        F.col("c_acctbal") > F.col("avg_bal")
-    )
-    dormant = rich.join(
-        orders.filter(F.col("o_orderpriority") == "1-URGENT").select("o_custkey"),
-        rich.c_custkey == F.col("o_custkey"),
-        "left_anti",
-    )
-    return (
-        dormant.groupBy("c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            F.round(F.sum("c_acctbal"), 2).alias("total_balance"),
-        )
-        .orderBy("c_mktsegment")
-    )
-
-
-def q_rolling_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling 20-day beta + correlation of each entity's daily series vs
-    the cross-sectional market index (downloader-era per-symbol analytics
-    the warehouse exists to serve). Plan: two hash aggs share the scan,
-    tiny index side broadcast back, then ONE window pass per entity —
-    covar/var/corr all ride the same frame."""
-    # same NULL-row exclusion contract as daily_close/_event_bars,
-    # mirrored by the oracle's WHERE (a NULL user would otherwise be a
-    # phantom entity in `daily` while still feeding the market index)
-    ev = load_table(spark, "events", sf_dir).filter(
-        F.col("user_id").isNotNull()
-        & F.col("ts").isNotNull()
-        & F.col("value").isNotNull()
-    )
-    daily = ev.groupBy("user_id", F.to_date("ts").alias("d")).agg(
-        F.avg("value").alias("v")
-    )
-    index = ev.groupBy(F.to_date("ts").alias("d")).agg(F.avg("value").alias("m"))
-    joined = daily.join(F.broadcast(index), "d")
-    w = Window.partitionBy("user_id").orderBy("d").rowsBetween(-19, Window.currentRow)
-    out = joined.select(
-        "user_id",
-        "d",
-        F.round(F.covar_samp("v", "m").over(w) / F.var_samp("m").over(w), 4).alias(
-            "beta"
-        ),
-        F.round(F.corr("v", "m").over(w), 4).alias("corr_vm"),
-        F.count(F.lit(1)).over(w).alias("n_obs"),
-    )
-    return out.filter(F.col("n_obs") >= 5).orderBy("user_id", "d")
-
-
-def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic train/val/test split (90/5/5) + per-(lang, split)
-    counts: the split is a pure function of the doc id (md5 bucket), so
-    re-runs and other engines assign identically — no rand(), no
-    sampling-state leakage between runs. Map-only until one small count
-    agg."""
-    docs = load_table(spark, "documents", sf_dir)
-    return (
-        with_split(docs, {"train": 90, "val": 5, "test": 5})
-        .groupBy("lang", "split")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy("lang", "split")
-    )
-
-
-def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Group-aware 90/5/5 split: near-dup components (2-gram Jaccard >=
-    0.2, same pair definition as dedup_components) hash as ONE unit on
-    the component min-id, so no near-dup pair straddles train/val/test —
-    the eval-leakage guard a per-doc hash split silently lacks."""
-    from global_stock_data_warehouse_spark.operators.corpus import leakage_safe_split
-
-    docs = load_table(spark, "documents", sf_dir)
-    pairs = ngram_jaccard_pairs(docs, threshold=0.2)
-    return leakage_safe_split(
-        docs, pairs, weights={"train": 90, "val": 5, "test": 5}
-    ).orderBy("doc_id")
-
-
-def q_source_mix_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pretraining mixture planning: per-source docs/tokens/share and the
-    effective epochs a 1M-token proportional sample implies. One
-    source-keyed agg + a partition-less window over the tiny per-source
-    frame (single scan)."""
-    from global_stock_data_warehouse_spark.operators.corpus import source_mix_report
-
-    return source_mix_report(load_table(spark, "documents", sf_dir), token_budget=1_000_000)
-
-
-def q_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus dedup funnel in ONE summary row: docs in -> exact-dup
-    removals (fingerprint keep-one) -> near-dup removals (bigram-Jaccard
-    components over the exact survivors, keep-one per component) ->
-    survivors + retention rate. The dataset-card diagnostic every dedup
-    pipeline reports; composes dedup_exact + dedup_groups counts without
-    materializing any intermediate corpus."""
-    from global_stock_data_warehouse_spark.operators.graph import dedup_groups
-
-    docs = load_table(spark, "documents", sf_dir)
-    groups = dedup_exact(docs)  # (fp, keep_id, n_dups)
-    survivors = docs.join(
-        groups.select(F.col("keep_id").alias("doc_id")), "doc_id"
-    ).localCheckpoint(eager=True)
-    nd = dedup_groups(ngram_jaccard_pairs(survivors, threshold=0.2))
-    exact_stats = groups.agg(
-        F.count(F.lit(1)).alias("_groups"),
-        F.sum("n_dups").cast("long").alias("_docs"),
-    )
-    nd_stats = nd.agg(
-        F.coalesce(F.sum(F.col("group_size") - 1), F.lit(0))
-        .cast("long")
-        .alias("_nd_removed")
-    )
-    return (
-        exact_stats.crossJoin(F.broadcast(nd_stats))
-        .select(
-            F.col("_docs").alias("n_docs"),
-            (F.col("_docs") - F.col("_groups")).cast("long").alias("n_exact_removed"),
-            F.col("_nd_removed").alias("n_neardup_removed"),
-            (F.col("_groups") - F.col("_nd_removed")).cast("long").alias("n_final"),
-            F.round(
-                (F.col("_groups") - F.col("_nd_removed"))
-                / F.greatest(F.col("_docs"), F.lit(1)),
-                6,
-            ).alias("retention_rate"),
-        )
-    )
-
-
-def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-run dedup: today's batch (doc_id % 3 != 0) checked against
-    yesterday's corpus fingerprint store (doc_id % 3 == 0) AND itself in
-    one pass — the continuous-ingestion shape where the standing corpus
-    is never rescanned. Per-doc verdict frame; the batch crosses the
-    wire once (the in-batch window's fp partitioning is reused by the
-    store probe join)."""
-    from global_stock_data_warehouse_spark.operators.dedup import (
-        fingerprint_store,
-        incremental_dedup,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    store = fingerprint_store(docs.filter(F.col("doc_id") % 3 == 0))
-    batch = docs.filter(F.col("doc_id") % 3 != 0)
-    return incremental_dedup(batch, store).orderBy("doc_id")
-
-
-def q_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-run NEAR-dedup (r6): today's batch probed against the
-    standing corpus' banded MinHash-LSH ledger AND itself in one pass —
-    the fuzzy sibling of incremental_dedup (same store/probe shape, but
-    the ledger holds band buckets + signatures, not exact fingerprints).
-    Rows-only (MinHash estimates); verdict semantics, greedy-policy
-    equivalence with minhash_neardup's pair list, and repartition
-    determinism are tested in tests/test_incremental_dsir.py."""
-    from global_stock_data_warehouse_spark.operators.dedup import (
-        incremental_minhash_dedup,
-        minhash_store,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    # materialize the ledger once (r12): the probe reads the store frame
-    # three times (param guard, bucket join, band-0 signature lookup) —
-    # against the REAL contract (a persisted parquet ledger) those are
-    # three pruned scans, so the entry simulates the ledger with one
-    # eager checkpoint instead of re-running the signature kernel 3x
-    store = minhash_store(docs.filter(F.col("doc_id") % 3 == 0)).localCheckpoint(
-        eager=True
-    )
-    batch = docs.filter(F.col("doc_id") % 3 != 0)
-    return incremental_minhash_dedup(batch, store, threshold=0.5).orderBy("doc_id")
-
-
-def _dsir_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR (Xie et al. 2023) over the fixtures: target = English docs,
-    raw pool = everything else; score the pool's target-likeness under
-    hashed uni+bigram models."""
-    from global_stock_data_warehouse_spark.operators.corpus import dsir_weights
-
-    docs = load_table(spark, "documents", sf_dir)
-    return dsir_weights(
-        docs.filter(F.col("lang") != "en"),
-        docs.filter(F.col("lang") == "en"),
-    )
-
-
-def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full DSIR verdict frame: the paper's log importance weight (EPS —
-    ln + float sum order) alongside the hash-exact fixed-point twin."""
-    return _dsir_frame(spark, sf_dir).orderBy("doc_id")
-
-
-def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR selection, driver-hashable: top-100 most target-like raw docs
-    by the integer fixed-point score (no float in the output)."""
-    return (
-        _dsir_frame(spark, sf_dir)
-        .select("doc_id", "score_fx", "n_grams")
-        .orderBy(F.col("score_fx").desc(), "doc_id")
-        .limit(100)
-    )
-
-
-def q_contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-modal contamination verdicts: the n-gram (exact overlap) and
-    embedding (semantic) decontamination checks joined into ONE per-doc
-    report — the release-gate view a dataset card wants. documents and
-    embeddings share the id space in the fixtures (doc_id = vec_id);
-    docs without an embedding keep NULL semantic scores (left join) and
-    the combined flag treats missing as clean."""
-    from global_stock_data_warehouse_spark.operators.corpus import decontaminate
-    from global_stock_data_warehouse_spark.operators.similarity import (
-        semantic_decontaminate,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    emb = load_table(spark, "embeddings", sf_dir)
-    ng = decontaminate(
-        docs.filter(F.col("doc_id") % 20 != 0),
-        docs.filter(F.col("doc_id") % 20 == 0),
-        n=5,
-    ).select(
-        "doc_id",
-        F.col("n_collisions").cast("long").alias("n_collisions"),
-        F.col("contaminated").alias("ngram_contaminated"),
-    )
-    sem = semantic_decontaminate(
-        emb.filter(F.col("vec_id") % 20 != 0),
-        emb.filter(F.col("vec_id") % 20 == 0),
-        threshold=0.3,
-    ).select(
-        F.col("vec_id"),
-        "max_cosine",
-        F.col("contaminated").alias("semantic_contaminated"),
-    )
-    return (
-        ng.join(sem, ng.doc_id == sem.vec_id, "left")
-        .select(
-            "doc_id",
-            "n_collisions",
-            "ngram_contaminated",
-            "max_cosine",
-            F.coalesce("semantic_contaminated", F.lit(False)).alias(
-                "semantic_contaminated"
-            ),
-            (
-                F.col("ngram_contaminated")
-                | F.coalesce("semantic_contaminated", F.lit(False))
-            ).alias("any_contaminated"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-def q_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-weighted mixture (alpha=0.5, budget=200 docs): the
-    multilingual-LM exponentiated-sampling recipe — low-resource languages
-    get a larger share than proportional sampling would give. Quotas
-    derive driver-side from exact counts (sqrt is correctly-rounded IEEE,
-    so the floor(budget * w/sum) arithmetic is engine-portable); selection
-    is the deterministic md5 order."""
-    return temperature_sample(
-        load_table(spark, "documents", sf_dir), budget=200, alpha=0.5, group_col="lang"
-    )
-
-
-def q_rebalance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-mixing rebalance: cap en at 100 docs, de/fr at 30 each, drop
-    other languages — deterministic md5-order selection, quota dim
-    broadcast. The language-distribution step of a training-mixture
-    build."""
-    out = rebalance_sample(
-        load_table(spark, "documents", sf_dir),
-        {"en": 100, "de": 30, "fr": 30},
-        group_col="lang",
-    )
-    return out.orderBy("lang", "rn")
-
-
-def q_quantile_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group exact quantiles (25/50/75) of order value — the
-    distribution-profile query every warehouse monitoring page runs.
-    EXACT `percentile` (sort-based within group) for oracle parity; the
-    100 TB path swaps in `approx_percentile` (one-pass sketch, map-side
-    combinable) — same query shape, bounded memory."""
-    orders = load_table(spark, "orders", sf_dir)
-    # one percentile(col, array(...)) per group: all three order
-    # statistics from a single per-group digest instead of three
-    qs = F.percentile(
-        "o_totalprice", F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75))
-    )
-    return (
-        orders.groupBy("o_orderpriority")
-        .agg(qs.alias("_qs"), F.count(F.lit(1)).alias("n_orders"))
-        .select(
-            "o_orderpriority",
-            F.round(F.col("_qs")[0], 6).alias("q25"),
-            F.round(F.col("_qs")[1], 6).alias("q50"),
-            F.round(F.col("_qs")[2], 6).alias("q75"),
-            "n_orders",
-        )
-        .orderBy("o_orderpriority")
-    )
-
-
-def q_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-doc repeated 4-token spans (boilerplate detection): spans in
-    >=2 distinct docs ranked by spread, member lists capped+sorted."""
-    return duplicate_spans(
-        load_table(spark, "documents", sf_dir), n=4, min_docs=2, k=100, max_members=20
-    )
-
-
-def q_remove_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact substring dedup REWRITE (Lee et al. 2022 scoped to 4-token
-    spans): non-first occurrences of corpus-duplicated spans are cut and
-    the text reassembled. All string/integer logic -> bit-exact oracle."""
-    return remove_duplicate_spans(
-        load_table(spark, "documents", sf_dir), n=4, min_count=2
-    )
-
-
-def q_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First BPE merge iteration: corpus-weighted adjacent char-pair
-    counts via the two-phase vocab trick (pair fan-out scales with
-    |vocab|, not corpus size). Top-40, integer counts -> bit-exact."""
-    return bpe_merge_candidates(load_table(spark, "documents", sf_dir), k=40)
-
-
-def q_class_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label embedding centroids (long format), fixed-point BIGINT
-    accumulation so float sum order can't drift between engines."""
-    return class_centroids(load_table(spark, "embeddings", sf_dir))
-
-
-def q_quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global per-dim min/max int8 scalar quantization (SQ-compressed ANN
-    prep); floor(x+0.5) tie-break, integral codes -> bit-exact."""
-    return quantize_embeddings(load_table(spark, "embeddings", sf_dir))
-
-
-def q_centroid_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-25 vectors farthest from their own class centroid (cleanlab-
-    style label-noise audit). Distance is integer arithmetic in the
-    shared fixed-point space -> bit-exact; only the final sqrt/scale is
-    float (IEEE-deterministic)."""
-    from global_stock_data_warehouse_spark.operators.similarity import (
-        centroid_outliers,
-    )
-
-    return centroid_outliers(load_table(spark, "embeddings", sf_dir), k=25)
-
-
-def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Part co-purchase graph with support >= 2 (shared by the graph
-    queries): one groupBy(order) shuffle + map-side in-array pair
-    expansion — no fact-table self-join."""
-    from global_stock_data_warehouse_spark.operators.behavior import (
-        sorted_array_pairs,
-    )
-
-    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_partkey")
-    # r13 NOTE: a pinned-wide keyed exchange on l_orderkey (fan_keyed) was
-    # A/B-measured ~neutral on every graph consumer warm (k_core -0.02,
-    # pagerank +0.09, triangle +0.02, link_prediction +0.02) — the raw-row
-    # exchange cancels the wide-aggregate gain at this scale; left on the
-    # AQE-managed plan.
-    baskets = li.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_partkey")).alias("ps")
-    )
-    pair_structs = sorted_array_pairs(F.col("ps"), "src", "dst")
-    return (
-        baskets.select(F.explode(pair_structs).alias("p"))
-        .groupBy(F.col("p.src").alias("src"), F.col("p.dst").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("n_cooccur"))
-        .filter(F.col("n_cooccur") >= 2)
-    )
-
-
-def q_source_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KL(source || corpus) unigram drift per document source — the
-    data-mixture health check. One (source, term) shuffle; corpus stats
-    re-aggregate that frame. Contributions are 1e-9 fixed-point before
-    summing; ln() can differ by an ulp across libms, so the mirror
-    compares under EPS (outside the driver hash window)."""
-    from global_stock_data_warehouse_spark.operators.corpus import (
-        source_kl_divergence,
-    )
-
-    return source_kl_divergence(load_table(spark, "documents", sf_dir))
-
-
-def q_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benford first-digit audit of order values — the fabricated-numbers
-    screen for a financial feed. Leading digit read from the integer-cents
-    string (engines stringify integers identically), expected shares are
-    fixed literals -> bit-exact."""
-    from global_stock_data_warehouse_spark.operators.profile import benford_audit
-
-    return benford_audit(load_table(spark, "orders", sf_dir), "o_totalprice")
-
-
-def q_collocations_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top co-occurring token pairs within a 3-position window across the
-    corpus — collocation mining (the count layer under PMI association
-    scores) and a template-detection diagnostic. One doc-keyed window pass
-    computes all offsets; counts are integral -> bit-exact."""
-    from global_stock_data_warehouse_spark.operators.corpus import collocations
-
-    return collocations(load_table(spark, "documents", sf_dir), window=3, k=50, min_count=2)
-
-
-def q_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source vocabulary audit: token volume, vocabulary size, hapax
-    count, type-token ratio, hapax share — the Heaps'-law corpus
-    diagnostics flagging template-heavy / synthetic sources. Two-level
-    integer aggregation; ratios rounded 6dp."""
-    from global_stock_data_warehouse_spark.operators.corpus import vocab_growth
-
-    return vocab_growth(load_table(spark, "documents", sf_dir))
-
-
-def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact pairwise vocabulary overlap between document sources
-    (intersection / union / Jaccard per source pair) — the duplication
-    audit behind mixing-weight decisions. Integer counts -> bit-exact."""
-    from global_stock_data_warehouse_spark.operators.corpus import (
-        source_overlap_exact,
-    )
-
-    return source_overlap_exact(load_table(spark, "documents", sf_dir))
-
-
-def q_source_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KMV-sketch estimate of pairwise source overlap (k minimum hash
-    values per source; Beyer et al. 2007) — the scale path when sources
-    hold billions of distinct tokens. Hash-valued -> rows-only; the
-    estimator error is property-tested against the exact operator."""
-    from global_stock_data_warehouse_spark.operators.corpus import (
-        source_overlap_kmv,
-    )
-
-    return source_overlap_kmv(load_table(spark, "documents", sf_dir), k=128)
-
-
-def q_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full distributed BPE training (Sennrich et al. 2016) over the
-    corpus: 16 merge rounds on the word-frequency table (corpus touched
-    once; each round = one vocab-sized pair agg + a map-only array-fold
-    merge). Deterministic (count-then-lexicographic tiebreak) but
-    iterative/driver-looped -> rows-only; the merge sequence is
-    equivalence-tested against an independent reference trainer in
-    tests/test_bpe.py."""
-    from global_stock_data_warehouse_spark.operators.corpus import bpe_train
-
-    merges, _ = bpe_train(
-        load_table(spark, "documents", sf_dir), n_merges=16, max_words=5000
-    )
-    return spark.createDataFrame(
-        [(i, a, b, a + b) for i, (a, b) in enumerate(merges)],
-        "rank int, left string, right string, merged string",
-    )
-
-
-def q_bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train-then-tokenize round trip: encode every doc with the learned
-    merges (zero-shuffle Arrow pass, rank-priority merging, per-batch word
-    memoization) and report per-doc BPE token count vs whitespace word
-    count. Rows-only (the merge list comes from the iterative trainer);
-    encoder≡in-order-replay is tested in tests/test_bpe.py."""
-    from global_stock_data_warehouse_spark.operators.corpus import (
-        bpe_encode,
-        bpe_train,
-    )
-    from global_stock_data_warehouse_spark.operators.text import token_count
-
-    docs = load_table(spark, "documents", sf_dir)
-    merges, _ = bpe_train(docs, n_merges=16, max_words=5000)
-    words = docs.select("doc_id", token_count("text").alias("n_words"))
-    return (
-        bpe_encode(docs, merges)
-        .select("doc_id", "n_tokens")
-        .join(words, "doc_id")
-        .orderBy("doc_id")
-    )
-
-
-def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shuffle-key skew diagnostic for lineitem keyed on l_suppkey: key
-    concentration stats as one row (the pre-flight check before keying a
-    100 TB shuffle). Exact integer counts + single divisions ->
-    bit-exact."""
-    from global_stock_data_warehouse_spark.operators.profile import skew_report
-
-    return skew_report(load_table(spark, "lineitem", sf_dir), keys=["l_suppkey"], top_n=10)
-
-
-def q_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-core of the part co-purchase graph (iterative peeling to the
-    dense sub-network — the spam-ring/boilerplate trim). Greatest
-    fixpoint, not SQL-recursive-CTE-expressible -> rows-only; brute-force
-    peeling equivalence is property-tested in tests/test_graph.py."""
-    from global_stock_data_warehouse_spark.operators.graph import k_core
-
-    return k_core(_copurchase_edges(spark, sf_dir), k=3)
-
-
-def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 triangle participants in the part co-purchase graph (parts
-    co-occurring in >= 2 orders — the support threshold is the standard
-    density control: the raw 1-co-occurrence graph is noise-dense, ~41M
-    wedges at sf0.1, while support>=2 keeps the signal edges). Degree-
-    ordered node-iterator (wedge volume bounded O(m^1.5), each triangle
-    generated once at its lowest-ranked corner); integer counts ->
-    bit-exact oracle."""
-    from global_stock_data_warehouse_spark.operators.graph import triangle_count
-
-    return triangle_count(_copurchase_edges(spark, sf_dir), k=20)
-
-
-def q_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-wide top-25 bigrams with min-support prune — wordcount at
-    scale: map-side partial agg absorbs the explode, deterministic
-    (count DESC, gram ASC) total order -> TakeOrderedAndProject."""
-    return ngram_topk(load_table(spark, "documents", sf_dir), n=2, k=25, min_count=2)
-
-
-def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unigram-LM mean log-prob quality score (CCNet/KenLM-filter shape):
-    corpus-trained top-V vocab broadcast, add-one smoothing, OOV bucket.
-    Mean-of-logs sums in engine-dependent order -> 4dp round + EPS
-    compare in the local mirror (outside the driver hash window)."""
-    from global_stock_data_warehouse_spark.operators.corpus import unigram_logprob
-
-    # vocab_size=16 < the corpus's 31 distinct tokens, so the OOV bucket
-    # is genuinely exercised
-    return unigram_logprob(
-        load_table(spark, "documents", sf_dir), vocab_size=16
-    ).orderBy("doc_id")
-
-
-def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup: k-means cells + within-cell greedy cosine dedup
-    (min-id representative kept). Approximate by construction (clustered
-    recall) -> rows-only; property/recall tests in
-    tests/test_dedup_similarity.py carry the correctness statement."""
-    from global_stock_data_warehouse_spark.operators.similarity import semantic_dedup
-
-    return semantic_dedup(
-        load_table(spark, "embeddings", sf_dir), threshold=0.97, n_cells=16
-    ).orderBy("vec_id")
-
-
-def q_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-wide paragraph-level exact dedup (Dolma/C4 pass): first
-    occurrence of each distinct paragraph wins, docs reassembled from
-    survivors. The synthetic corpus has no blank-line breaks, so the
-    query splits on a frequent token boundary to exercise the operator;
-    real corpora use the default '\\n\\n'."""
-    from global_stock_data_warehouse_spark.operators.dedup import paragraph_dedup
-
-    return paragraph_dedup(
-        load_table(spark, "documents", sf_dir), sep=" the "
-    ).orderBy("doc_id")
-
-
-def _cents(col: F.Column, scale: int = 10000) -> F.Column:
-    """Fixed-point bigint encoding of a money expression. Sums of bigints
-    are exact and order-independent, so ratios/totals derived from them
-    hash bit-identically across Spark and DuckDB regardless of partial-agg
-    ordering (the same trick q_market_share uses)."""
-    return F.round(col * scale, 0).cast("bigint")
-
-
-def q_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 shape: single-scan predicate-pushdown aggregate — the
-    year/discount/quantity filters must reach the parquet reader
-    (PushedFilters) and the whole query is one WholeStageCodegen span
-    with a map-side partial sum. Fixed-point sum for cross-engine
-    stability."""
-    li = load_table(spark, "lineitem", sf_dir).filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01"))
-        & (F.col("l_discount") >= 0.04)
-        & (F.col("l_discount") <= 0.06)
-        & (F.col("l_quantity") < 24)
-    )
-    return li.agg(
-        F.round(
-            F.sum(_cents(F.col("l_extendedprice") * F.col("l_discount"))) / 10000.0, 4
-        ).alias("revenue_delta"),
-        F.count(F.lit(1)).alias("n_lines"),
-    )
-
-
-def q_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 shape: revenue flow between two nations by ship year.
-    Both nation maps broadcast; the only shuffle of the fact table is the
-    lineitem->orders join + final tiny group. The symmetric pair filter
-    ((N1,N2) or (N2,N1)) is applied as soon as both nations are bound."""
-    li = load_table(spark, "lineitem", sf_dir).select(
-        "l_orderkey", "l_suppkey", "l_shipdate", "l_extendedprice", "l_discount"
-    )
-    o = load_table(spark, "orders", sf_dir).select("o_orderkey", "o_custkey")
-    n = load_table(spark, "nation", sf_dir).select("n_nationkey", "n_name")
-    s = (
-        load_table(spark, "supplier", sf_dir)
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select("s_suppkey", F.col("n_name").alias("supp_nation"))
-        .filter(F.col("supp_nation").isin("NATION_1", "NATION_2"))
-    )
-    c = (
-        load_table(spark, "customer", sf_dir)
-        .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
-        .select("c_custkey", F.col("n_name").alias("cust_nation"))
-        .filter(F.col("cust_nation").isin("NATION_1", "NATION_2"))
-    )
-    return (
-        li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .filter(F.col("supp_nation") != F.col("cust_nation"))
-        .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("ship_year"))
-        .agg(
-            F.round(
-                F.sum(_cents(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
-                / 10000.0,
-                4,
-            ).alias("revenue")
-        )
-        .orderBy("supp_nation", "cust_nation", "ship_year")
-    )
-
-
-def q_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 shape: profit by supplier nation and order year for a
-    part-name-filtered product line. No partsupp table in this schema, so
-    supply cost is modeled as 60% of p_retailprice (fixed deterministic
-    proxy). The selective part filter broadcasts into the fact scan
-    BEFORE the big lineitem->orders join, shrinking the shuffle."""
-    p = (
-        load_table(spark, "part", sf_dir)
-        .filter(F.col("p_name").contains("gear"))
-        .select("p_partkey", "p_retailprice")
-    )
-    li = load_table(spark, "lineitem", sf_dir).select(
-        "l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
-        "l_extendedprice", "l_discount",
-    )
-    o = load_table(spark, "orders", sf_dir).select("o_orderkey", "o_orderdate")
-    n = load_table(spark, "nation", sf_dir).select("n_nationkey", "n_name")
-    s = (
-        load_table(spark, "supplier", sf_dir)
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select("s_suppkey", F.col("n_name").alias("supp_nation"))
-    )
-    amount = _cents(
-        F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        - F.col("p_retailprice") * 0.6 * F.col("l_quantity")
-    )
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy("supp_nation", F.year("o_orderdate").alias("order_year"))
-        .agg(F.round(F.sum(amount) / 10000.0, 4).alias("profit"))
-        .orderBy("supp_nation", F.col("order_year").desc())
-    )
-
-
-def q_returned_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 shape: top-20 customers by revenue lost to returns in one
-    quarter. Orders carries the date filter; the R-flag filter rides the
-    lineitem scan; customer+nation broadcast; deterministic (revenue DESC,
-    custkey) TakeOrderedAndProject instead of a global sort."""
-    li = load_table(spark, "lineitem", sf_dir).filter(F.col("l_returnflag") == "R").select(
-        "l_orderkey", "l_extendedprice", "l_discount"
-    )
-    o = load_table(spark, "orders", sf_dir).filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01"))
-        & (F.col("o_orderdate") < F.lit("1996-04-01"))
-    ).select("o_orderkey", "o_custkey")
-    c = load_table(spark, "customer", sf_dir).select(
-        "c_custkey", "c_name", "c_acctbal", "c_nationkey"
-    )
-    n = load_table(spark, "nation", sf_dir).select("n_nationkey", "n_name")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(
-            F.round(
-                F.sum(_cents(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
-                / 10000.0,
-                4,
-            ).alias("revenue")
-        )
-        .orderBy(F.col("revenue").desc(), "c_custkey")
-        .limit(20)
-    )
-
-
-def q_priority_linestatus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shape (shipmode -> linestatus adapted to this schema):
-    per line status, how many 1997-shipped lines belong to high- vs
-    low-priority orders — the canonical conditional-count (CASE WHEN
-    inside SUM) pattern, one fact shuffle for the join, map-side partials
-    for the 2-row group."""
-    li = load_table(spark, "lineitem", sf_dir).filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01"))
-    ).select("l_orderkey", "l_linestatus")
-    o = load_table(spark, "orders", sf_dir).select("o_orderkey", "o_orderpriority")
-    is_high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy("l_linestatus")
-        .agg(
-            F.sum(F.when(is_high, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(is_high, 0).otherwise(1)).alias("low_line_count"),
-        )
-        .orderBy("l_linestatus")
-    )
-
-
-def q_custdist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 shape: distribution of customers by order count,
-    INCLUDING zero-order customers — a left outer join whose unmatched
-    side must survive into count(o_orderkey)=0, then a second tiny
-    aggregation over the per-customer counts."""
-    c = load_table(spark, "customer", sf_dir).select("c_custkey")
-    o = load_table(spark, "orders", sf_dir).filter(
-        F.col("o_orderpriority") != "4-NOT SPECIFIED"
-    ).select("o_orderkey", "o_custkey")
-    per_cust = (
-        c.join(o, c.c_custkey == o.o_custkey, "left_outer")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return (
-        per_cust.groupBy("c_count")
-        .agg(F.count(F.lit(1)).alias("custdist"))
-        .orderBy(F.col("custdist").desc(), F.col("c_count").desc())
-    )
-
-
-def q_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape: percentage of one month's revenue from PROMO
-    parts. Part dim broadcasts; numerator and denominator are exact
-    bigint sums in ONE aggregate pass, so the ratio is bit-stable."""
-    li = load_table(spark, "lineitem", sf_dir).filter(
-        (F.col("l_shipdate") >= F.lit("1996-03-01"))
-        & (F.col("l_shipdate") < F.lit("1996-04-01"))
-    ).select("l_partkey", "l_extendedprice", "l_discount")
-    p = load_table(spark, "part", sf_dir).select("p_partkey", "p_type")
-    rev = _cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .agg(
-            F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0))).alias("_num"),
-            F.sum(rev).alias("_den"),
-        )
-        .select(
-            F.round(F.col("_num") * 100.0 / F.col("_den"), 6).alias("promo_share_pct"),
-            F.round(F.col("_den") / 10000.0, 4).alias("total_revenue"),
-        )
-    )
-
-
-def q_top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15 shape: the supplier(s) with maximum quarterly revenue —
-    the correlated `rev = (SELECT max(...))` decorrelates into a window
-    max over the tiny per-supplier aggregate (|suppliers| rows), never a
-    second scan of the fact table. Exact bigint revenue makes the
-    max-equality tie semantics identical across engines."""
-    li = load_table(spark, "lineitem", sf_dir).filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01"))
-        & (F.col("l_shipdate") < F.lit("1996-04-01"))
-    ).select("l_suppkey", "l_extendedprice", "l_discount")
-    per_supp = li.groupBy("l_suppkey").agg(
-        F.sum(_cents(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias(
-            "rev_cents"
-        )
-    )
-    max_rev = F.max("rev_cents").over(Window.partitionBy())
-    s = load_table(spark, "supplier", sf_dir).select("s_suppkey", "s_name")
-    return (
-        per_supp.withColumn("_max", max_rev)
-        .filter(F.col("rev_cents") == F.col("_max"))
-        .join(F.broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-        .select(
-            "s_suppkey",
-            "s_name",
-            F.round(F.col("rev_cents") / 10000.0, 4).alias("total_revenue"),
-        )
-        .orderBy("s_suppkey")
-    )
-
-
-def q_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16 shape: distinct-supplier counts per part attribute combo,
-    excluding flagged suppliers via NOT IN -> left ANTI join (pushed below
-    the distinct). The part-supplier association comes from lineitem
-    (no partsupp table in this schema); the brand/size filters broadcast
-    with the part dim."""
-    p = load_table(spark, "part", sf_dir).filter(
-        (F.col("p_brand") != "Brand#1")
-        & F.col("p_size").isin(1, 5, 10, 15, 20, 25, 30, 35, 40, 45)
-    ).select("p_partkey", "p_brand", "p_type", "p_size")
-    bad_supp = load_table(spark, "supplier", sf_dir).filter(F.col("s_acctbal") < 0).select(
-        "s_suppkey"
-    )
-    assoc = (
-        load_table(spark, "lineitem", sf_dir)
-        .select("l_partkey", "l_suppkey")
-        .join(F.broadcast(bad_supp), F.col("l_suppkey") == F.col("s_suppkey"), "left_anti")
-        .join(F.broadcast(p), F.col("l_partkey") == p.p_partkey)
-    )
-    return (
-        assoc.groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.col("supplier_cnt").desc(), "p_brand", "p_type", "p_size")
-        .limit(100)
-    )
-
-
-def q_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19 shape: revenue under three OR'd brand/size/quantity
-    branches. The disjunction references both sides of the join, so it
-    evaluates post-join — but the IMPLIED union of the per-branch part
-    filters (brand IN ..., size ranges) is applied to the broadcast part
-    dim up front, the classic Q19 pre-filter derivation."""
-    p = load_table(spark, "part", sf_dir).filter(
-        F.col("p_brand").isin("Brand#1", "Brand#2", "Brand#3")
-        & (F.col("p_size") >= 1)
-        & (F.col("p_size") <= 35)
-    ).select("p_partkey", "p_brand", "p_size")
-    li = load_table(spark, "lineitem", sf_dir).filter(
-        (F.col("l_quantity") >= 1) & (F.col("l_quantity") <= 30)
-    ).select("l_partkey", "l_quantity", "l_extendedprice", "l_discount")
-    branch = (
-        (
-            (F.col("p_brand") == "Brand#1")
-            & F.col("p_size").between(1, 15)
-            & F.col("l_quantity").between(1, 11)
-        )
-        | (
-            (F.col("p_brand") == "Brand#2")
-            & F.col("p_size").between(1, 25)
-            & F.col("l_quantity").between(10, 20)
-        )
-        | (
-            (F.col("p_brand") == "Brand#3")
-            & F.col("p_size").between(1, 35)
-            & F.col("l_quantity").between(20, 30)
-        )
-    )
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .filter(branch)
-        .agg(
-            F.round(
-                F.sum(_cents(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
-                / 10000.0,
-                4,
-            ).alias("revenue"),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-    )
-
-
-def q_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20 shape: the correlated `qty > 0.5 * (SELECT sum ...)`
-    threshold decorrelates into a window total over the per-(part,supp)
-    aggregate — partitioned by part, so it scales with the widest part,
-    not the table. Suppliers shipping a majority of any PROMO part's
-    volume semi-join into the supplier dim (distinct BEFORE the join)."""
-    p = load_table(spark, "part", sf_dir).filter(F.col("p_type") == "PROMO").select("p_partkey")
-    li = load_table(spark, "lineitem", sf_dir).select("l_partkey", "l_suppkey", "l_quantity")
-    per_ps = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(F.sum("l_quantity").alias("qty"))
-    )
-    w = Window.partitionBy("l_partkey")
-    # "ships more than 2.5x the average supplier's volume of that part" —
-    # same correlated-threshold shape as Q20's availqty > 0.5*sum(qty),
-    # calibrated to this data's near-uniform part-supplier fan-out
-    dominant = (
-        per_ps.withColumn("_total", F.sum("qty").over(w))
-        .withColumn("_nsupp", F.count(F.lit(1)).over(w))
-        .filter(F.col("qty") * F.col("_nsupp") > 2.5 * F.col("_total"))
-        .select("l_suppkey")
-        .distinct()
-    )
-    s = load_table(spark, "supplier", sf_dir).select("s_suppkey", "s_name", "s_nationkey")
-    n = load_table(spark, "nation", sf_dir).select("n_nationkey", "n_name")
-    return (
-        s.join(F.broadcast(dominant), s.s_suppkey == F.col("l_suppkey"), "left_semi")
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .select("s_suppkey", "s_name", "n_name")
-        .orderBy("s_suppkey")
-    )
-
-
-_STOP = {
-    "en": ("the", "a", "and", "of", "to"),
-    "es": ("el", "la", "los", "de", "y"),
-    "de": ("der", "die", "das", "und", "nicht"),
-    "fr": ("le", "la", "les", "et", "des"),
-    "zh": ("的", "是", "了", "在", "我"),
-}
-
-
-def _sql_list(words: tuple[str, ...]) -> str:
-    return "[" + ", ".join(f"'{w}'" for w in words) + "]"
-
-
-_TEXT_STATS_ORACLE = f"""
-WITH base AS (
-  -- coalesce(text,'') mirrors the operator's NULL-text root
-  -- normalization (r7): NULL text means 0 tokens / empty-fingerprint /
-  -- 'und', NOT NULL-propagated cells — only n_chars_actual stays NULL
-  SELECT doc_id, text,
-         list_filter(string_split_regex(lower(trim(coalesce(text, ''))), '\\s+'), t -> t != '') AS toks,
-         length(text) AS n_chars_actual
-  FROM documents
-), ratios AS (
-  SELECT doc_id, text, toks, n_chars_actual,
-         len(toks) AS n_tokens,
-         CASE WHEN n_chars_actual > 0
-              THEN (n_chars_actual - length(regexp_replace(text, '[!-/:-@\\[-`{{-~]', '', 'g')))
-                   * 1.0 / n_chars_actual
-              ELSE 0.0 END AS praw,
-         CASE WHEN len(toks) > 0
-              THEN len(list_filter(toks, t -> list_contains({_sql_list(_STOP['en'])}, t)))
-                   * 1.0 / len(toks)
-              ELSE 0.0 END AS sraw,
-         len(list_filter(toks, t -> list_contains({_sql_list(_STOP['de'])}, t))) AS h_de,
-         len(list_filter(toks, t -> list_contains({_sql_list(_STOP['en'])}, t))) AS h_en,
-         len(list_filter(toks, t -> list_contains({_sql_list(_STOP['es'])}, t))) AS h_es,
-         len(list_filter(toks, t -> list_contains({_sql_list(_STOP['fr'])}, t))) AS h_fr,
-         len(list_filter(toks, t -> list_contains({_sql_list(_STOP['zh'])}, t))) AS h_zh
-  FROM base
-)
-SELECT doc_id, n_chars_actual, n_tokens,
-       round(praw, 4) AS punct_ratio,
-       round(sraw, 4) AS stopword_ratio,
-       round((least(n_chars_actual / 500.0, 1.0)
-              + 1.0 - least(praw * 5.0, 1.0)
-              + least(sraw * 4.0, 1.0)) / 3.0, 4) AS quality,
-       CASE WHEN greatest(h_de, h_en, h_es, h_fr, h_zh) = 0 THEN 'und'
-            WHEN h_zh = greatest(h_de, h_en, h_es, h_fr, h_zh) THEN 'zh'
-            WHEN h_fr = greatest(h_de, h_en, h_es, h_fr, h_zh) THEN 'fr'
-            WHEN h_es = greatest(h_de, h_en, h_es, h_fr, h_zh) THEN 'es'
-            WHEN h_en = greatest(h_de, h_en, h_es, h_fr, h_zh) THEN 'en'
-            ELSE 'de' END AS lang_pred,
-       md5(regexp_replace(lower(trim(coalesce(text, ''))), '\\s+', ' ', 'g')) AS fingerprint
-FROM ratios
-"""
-
-_LANG_CONFUSION_ORACLE = f"""
-WITH base AS (
-  SELECT coalesce(lang, 'und') AS declared,
-         list_filter(string_split_regex(lower(trim(coalesce(text, ''))), '\\s+'),
-                     t -> t != '') AS toks
-  FROM documents
-), scored AS (
-  SELECT declared,
-         len(list_filter(toks, t -> list_contains({_sql_list(_STOP['de'])}, t))) AS h_de,
-         len(list_filter(toks, t -> list_contains({_sql_list(_STOP['en'])}, t))) AS h_en,
-         len(list_filter(toks, t -> list_contains({_sql_list(_STOP['es'])}, t))) AS h_es,
-         len(list_filter(toks, t -> list_contains({_sql_list(_STOP['fr'])}, t))) AS h_fr,
-         len(list_filter(toks, t -> list_contains({_sql_list(_STOP['zh'])}, t))) AS h_zh
-  FROM base
-), pred AS (
-  SELECT declared,
-         CASE WHEN greatest(h_de, h_en, h_es, h_fr, h_zh) = 0 THEN 'und'
-              WHEN h_zh = greatest(h_de, h_en, h_es, h_fr, h_zh) THEN 'zh'
-              WHEN h_fr = greatest(h_de, h_en, h_es, h_fr, h_zh) THEN 'fr'
-              WHEN h_es = greatest(h_de, h_en, h_es, h_fr, h_zh) THEN 'es'
-              WHEN h_en = greatest(h_de, h_en, h_es, h_fr, h_zh) THEN 'en'
-              ELSE 'de' END AS detected
-  FROM scored
-)
-SELECT declared, detected, count(*) AS n_docs,
-       CASE WHEN declared = detected THEN 1 ELSE 0 END AS is_match
-FROM pred GROUP BY 1, 2
-"""
-
-_NGRAM_JACCARD_ORACLE = """
-WITH toks AS (
-  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'), t -> t != '') AS t
-  FROM documents
-), sh AS (
-  SELECT doc_id,
-         CASE WHEN len(t) >= 2
-              THEN list_distinct(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1]))
-              ELSE [] END AS s
-  FROM toks
-), inv AS (
-  SELECT doc_id, unnest(s) AS shingle FROM sh
-), common AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-  FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), sz AS (
-  SELECT doc_id, len(s) AS n FROM sh
-)
-SELECT id_a, id_b, n_common, jaccard FROM (
-  SELECT id_a, id_b, n_common,
-         round(n_common * 1.0 / (x.n + y.n - n_common), 6) AS jaccard
-  FROM common JOIN sz x ON id_a = x.doc_id JOIN sz y ON id_b = y.doc_id)
-WHERE jaccard >= 0.2
-"""
-
-_ANN_TOPK_ORACLE = """
-WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qvec FROM embeddings WHERE vec_id < 8),
-scored AS (
-  SELECT q.query_id, e.vec_id AS neighbor_id,
-         round(list_dot_product(q.qvec, e.embedding::DOUBLE[])
-               / (sqrt(list_dot_product(q.qvec, q.qvec))
-                  * sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))), 6)
-           AS cosine_sim
-  FROM embeddings e CROSS JOIN q
-  WHERE e.vec_id != q.query_id
-)
-SELECT query_id, rank, neighbor_id, cosine_sim
-FROM (SELECT query_id, neighbor_id, cosine_sim,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cosine_sim DESC, neighbor_id ASC) AS rank
-      FROM scored)
-WHERE rank <= 5
-"""
-
-_EMB_NEARDUP_ORACLE = """
-SELECT id_a, id_b, cosine_sim FROM (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         round(list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[])
-               / (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[]))
-                  * sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[]))), 6)
-           AS cosine_sim
-  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
-WHERE cosine_sim >= 0.4
-"""
-
-
-def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly cohort-retention triangle over the event stream: cohort =
-    Monday-aligned week of a user's first event, offset = whole weeks
-    since first touch, value = distinct active users. Dates + integer
-    arithmetic only — bit-exact across engines."""
-    from global_stock_data_warehouse_spark.operators.behavior import cohort_retention
-
-    return cohort_retention(load_table(spark, "events", sf_dir), period_days=7)
-
-
-def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition matrix of event types per user
-    stream. One window shuffle on user_id; the probability normalization
-    is a window over the |types|^2 aggregate. p is a single integer
-    division — order-independent, so exact at 6dp."""
-    from global_stock_data_warehouse_spark.operators.behavior import event_transitions
-
-    return event_transitions(load_table(spark, "events", sf_dir))
-
-
-def q_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlapping 14d/7d hopping windows via Spark's native
-    window(ts, size, slide) generator: map-side replication absorbed by
-    partial aggregation. Fixed-point value sums for engine-exact
-    totals."""
-    from global_stock_data_warehouse_spark.operators.behavior import hopping_window_agg
-
-    return hopping_window_agg(
-        load_table(spark, "events", sf_dir), size="14 days", slide="7 days"
-    )
-
-
-def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust per-source length-outlier profile on documents: median +
-    MAD (both exact order statistics — no float-sum drift) and the count
-    beyond 3*MAD. n_chars is integral, so med/mad are exact .0/.5
-    doubles."""
-    from global_stock_data_warehouse_spark.operators.behavior import mad_outliers
-
-    return mad_outliers(
-        load_table(spark, "documents", sf_dir), group_cols=("source",), value_col="n_chars", k=3.0
-    )
-
-
-def q_hist_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-width histogram of l_extendedprice (width 500): map-only
-    bin assignment (one IEEE division, bit-identical across engines) +
-    one tiny aggregate."""
-    from global_stock_data_warehouse_spark.operators.behavior import histogram_fixed
-
-    return histogram_fixed(load_table(spark, "lineitem", sf_dir), "l_extendedprice", 500.0)
-
-
-def q_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conjunctive keyword retrieval over a materialized inverted index:
-    posting build is one explode-absorbed shuffle; the query-term IN
-    filter prunes before the doc-keyed score shuffle; integer tf scoring
-    with a (score DESC, doc_id ASC) total order -> deterministic top-k
-    via TakeOrderedAndProject."""
-    from global_stock_data_warehouse_spark.operators.corpus import (
-        inverted_index,
-        keyword_search,
-    )
-
-    idx = inverted_index(load_table(spark, "documents", sf_dir))
-    return keyword_search(idx, ["spark", "hash"], k=15)
-
-
-def q_dense_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic contiguous surrogate keys for a dimension: distinct
-    sources ranked by (doc count DESC, source ASC) — a total order, so
-    ids are stable across runs and engines (monotonically_increasing_id
-    is neither contiguous nor rerun-stable; this is the warehouse-grade
-    alternative). The rank window runs over one-row-per-distinct-value."""
-    d = load_table(spark, "documents", sf_dir)
-    counts = d.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
-    w = Window.orderBy(F.col("n_docs").desc(), F.col("source").asc())
-    return counts.select(
-        (F.row_number().over(w) - 1).alias("source_id"), "source", "n_docs"
-    )
-
-
-def q_equi_depth_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-depth (decile) histogram of order value: boundaries from
-    exact interpolated percentiles (order statistics — identical IEEE
-    interpolation both engines), then a map-only bucket assignment by
-    value comparison (deterministic, unlike ntile over a non-unique
-    order). Two passes: one tiny percentile agg broadcast back, one
-    bucket count."""
-    o = load_table(spark, "orders", sf_dir).select("o_totalprice")
-    probs = [i / 10.0 for i in range(1, 10)]
-    # ONE percentile aggregate over the array of probabilities: all nine
-    # order statistics come from a single value-counts digest (nine
-    # separate percentile() aggs each rebuild that digest — measured ~2.5x
-    # slower); the array is unpacked into scalar bound columns after.
-    bounds = o.agg(
-        F.percentile("o_totalprice", F.array(*[F.lit(p) for p in probs])).alias("bs")
-    ).select(*[F.col("bs")[i].alias(f"b{i + 1}") for i in range(len(probs))])
-    j = o.crossJoin(F.broadcast(bounds))
-    bucket = sum(
-        (F.col("o_totalprice") > F.col(f"b{i}")).cast("int") for i in range(1, 10)
-    )
-    return (
-        j.withColumn("bucket", bucket)
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("o_totalprice").alias("lo"),
-            F.max("o_totalprice").alias("hi"),
-        )
-    )
-
-
-def q_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Path analysis: the ordered event-type journey per session,
-    frequency-counted. One scan (event_type rides the sessionization
-    projection); the ordered concatenation is array_sort over
-    (ts, event_id, type) structs collected in ONE grouped pass — fully
-    deterministic — and the path rollup is a tiny aggregate over
-    distinct journeys."""
-    sess = _sessionized(spark, sf_dir, extra_cols=("event_type",))
-    paths = sess.groupBy("user_id", "session_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("ts", "event_id", "event_type"))
-                ),
-                lambda x: x["event_type"],
-            ),
-            ">",
-        ).alias("path")
-    )
-    return paths.groupBy("path").agg(F.count(F.lit(1)).alias("n_sessions"))
-
-def q_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 TF-IDF terms per document from the materialized inverted
-    index: weight = tf * ln(N/df) with a fixed evaluation order (single
-    expression — engine-exact at 6dp); per-doc top-k via a rank window
-    with (weight DESC, term ASC) total order."""
-    from global_stock_data_warehouse_spark.operators.corpus import inverted_index
-
-    docs = load_table(spark, "documents", sf_dir)
-    n_docs = docs.count()
-    idx = inverted_index(docs)
-    weighted = idx.withColumn(
-        "w",
-        F.round(F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")), 6),
-    )
-    rw = Window.partitionBy("doc_id").orderBy(F.col("w").desc(), F.col("term").asc())
-    return (
-        weighted.withColumn("rnk", F.row_number().over(rw))
-        .filter(F.col("rnk") <= 3)
-        .select("doc_id", "rnk", "term", "w")
-    )
-
-
-def q_unpivot_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wide->long reshape (UNPIVOT/melt) of the weekly OHLC bars: the
-    4 price columns stack into (metric, value) rows map-side — no
-    shuffle beyond the resample's own; the melt itself is a pure
-    projection (Expand), engine-exact value copies."""
-    bars = _wmy_resample_returns(spark, sf_dir, "W").select(
-        "user_id", "period_end", "open", "high", "low", "close"
-    )
-    return bars.unpivot(
-        ids=["user_id", "period_end"],
-        values=["open", "high", "low", "close"],
-        variableColumnName="metric",
-        valueColumnName="value",
-    )
-
-
-def q_longest_up_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gaps-and-islands on a VALUE condition: longest run of consecutive
-    up-days per entity. Island id = running count of non-up days; the
-    run length is a count per (user, island) of up rows; all windows and
-    groups share one user-key shuffle. Integer output — bit-exact."""
-    from global_stock_data_warehouse_spark.operators.timeseries import daily_close
-
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
-    d = daily_close(ev)
-    w = Window.partitionBy("user_id").orderBy("d")
-    up = (F.col("close") > F.lag("close").over(w)).cast("int")
-    flagged = d.withColumn("up", F.coalesce(up, F.lit(0)))
-    grp = F.sum(1 - F.col("up")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    runs = (
-        flagged.withColumn("grp", grp)
-        .filter(F.col("up") == 1)
-        .groupBy("user_id", "grp")
-        .agg(F.count(F.lit(1)).alias("run_len"))
-    )
-    streaks = runs.groupBy("user_id").agg(F.max("run_len").alias("longest_up_streak"))
-    all_users = d.select("user_id").distinct()
-    return all_users.join(streaks, "user_id", "left_outer").select(
-        "user_id", F.coalesce("longest_up_streak", F.lit(0)).alias("longest_up_streak")
-    )
-
-
-def q_salted_flag_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hot-key aggregation through the two-phase salted plan: lineitem
-    grouped by l_returnflag (3 values — every partial funnels through 3
-    reducers unsalted). salted_agg spreads phase 1 over (key, salt)
-    reducers and merges factor rows per key in phase 2 — identical
-    results to the plain GROUP BY (the oracle IS the unsalted form).
-    Fixed-point sums keep the merge exact."""
-    from global_stock_data_warehouse_spark.operators.skew import salted_agg
-
-    li = load_table(spark, "lineitem", sf_dir).select(
-        "l_returnflag",
-        _cents(F.col("l_extendedprice"), 100).alias("cents"),
-        "l_quantity",
-    )
-    out = salted_agg(
-        li,
-        ["l_returnflag"],
-        [
-            ("cents", "sum", "sum_cents"),
-            ("l_quantity", "count", "n_lines"),
-            ("l_quantity", "max", "max_qty"),
-            ("l_quantity", "min", "min_qty"),
-        ],
-    )
-    return out.select(
-        "l_returnflag",
-        (F.col("sum_cents") / 100.0).alias("sum_price"),
-        "n_lines",
-        "max_qty",
-        "min_qty",
-    )
-
-
-def q_latency_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order->ship latency distribution per priority: exact interpolated
-    percentiles (order statistics — identical IEEE interpolation on both
-    engines) over integer day gaps; one fact co-partitioned join + one
-    grouped percentile pass."""
-    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_shipdate")
-    o = load_table(spark, "orders", sf_dir).select("o_orderkey", "o_orderdate", "o_orderpriority")
-    lat = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        "o_orderpriority",
-        F.datediff("l_shipdate", "o_orderdate").alias("lat"),
-    )
-    # single per-group percentile digest for all three points
-    ps = F.percentile("lat", F.array(F.lit(0.5), F.lit(0.9), F.lit(0.99)))
-    return (
-        lat.groupBy("o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("lat").alias("min_days"),
-            ps.alias("_ps"),
-            F.max("lat").alias("max_days"),
-        )
-        .select(
-            "o_orderpriority",
-            "n",
-            "min_days",
-            F.round(F.col("_ps")[0], 4).alias("p50"),
-            F.round(F.col("_ps")[1], 4).alias("p90"),
-            F.round(F.col("_ps")[2], 4).alias("p99"),
-            "max_days",
-        )
-    )
-
-
-def q_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Market-basket association rules over order baskets of brands:
-    co-occurrence, support, confidence, lift. The pair self-join is
-    co-partitioned on the basket key (pair volume quadratic only in
-    basket size); supports broadcast back; all metrics are single
-    divisions of exact integer counts."""
-    from global_stock_data_warehouse_spark.operators.behavior import basket_rules
-
-    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_partkey")
-    p = load_table(spark, "part", sf_dir).select("p_partkey", "p_brand")
-    baskets = li.join(F.broadcast(p), li.l_partkey == p.p_partkey).select(
-        F.col("l_orderkey").alias("basket_id"), F.col("p_brand").alias("item")
-    )
-    return basket_rules(baskets, min_pair_count=2)
-
-
-def q_vwap_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Volume-weighted average price per brand: the canonical weighted
-    aggregate (VWAP) — numerator and denominator both integer-exact
-    (price cents x integral quantity), ONE broadcast dim join + one fact
-    shuffle; the ratio is a single division, engine-exact at 6dp."""
-    li = load_table(spark, "lineitem", sf_dir).select(
-        "l_partkey", "l_quantity", "l_extendedprice"
-    )
-    p = load_table(spark, "part", sf_dir).select("p_partkey", "p_brand")
-    j = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-    qty = F.round(F.col("l_quantity"), 0)
-    return j.groupBy("p_brand").agg(
-        F.count(F.lit(1)).alias("n_lines"),
-        (F.sum(qty)).cast("bigint").alias("total_qty"),
-        F.round(
-            F.sum(_cents(F.col("l_extendedprice") * qty, 100)) / 100.0
-            / F.sum(qty),
-            6,
-        ).alias("vwap"),
-    )
-
-
-def q_market_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Advancers / decliners / unchanged per day from daily closes — the
-    market-breadth monitor. Daily close agg + lag window share one
-    entity-key shuffle; the day rollup is a tiny aggregate. Counts only:
-    bit-exact."""
-    from global_stock_data_warehouse_spark.operators.timeseries import daily_close
-
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
-    d = daily_close(ev)
-    w = Window.partitionBy("user_id").orderBy("d")
-    prev = F.lag("close").over(w)
-    chg = F.when(prev.isNull(), None).when(F.col("close") > prev, 1).when(
-        F.col("close") < prev, -1
-    ).otherwise(0)
-    return (
-        d.withColumn("chg", chg)
-        .filter(F.col("chg").isNotNull())
-        .groupBy("d")
-        .agg(
-            F.sum(F.when(F.col("chg") == 1, 1).otherwise(0)).alias("advancers"),
-            F.sum(F.when(F.col("chg") == -1, 1).otherwise(0)).alias("decliners"),
-            F.sum(F.when(F.col("chg") == 0, 1).otherwise(0)).alias("unchanged"),
-        )
-    )
-
-
-def q_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Peak simultaneous sessions + earliest instant it is reached, via
-    the DISTRIBUTED sweep line (two-phase prefix sum: per-bucket running
-    sums, one-row-per-bucket cumulative offsets broadcast back) — never
-    a global single-task sort of the points. Sessions are CLOSED
-    [min ts, max ts] intervals, so single-event sessions count at their
-    instant."""
-    from global_stock_data_warehouse_spark.operators.behavior import max_concurrency
-
-    sessions = _sessionized(spark, sf_dir).groupBy("user_id", "session_id").agg(
-        F.min("ts").alias("session_start"), F.max("ts").alias("session_end")
-    )
-    return max_concurrency(sessions)
-
-def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCD type-2 dimension history from the event stream: per-user
-    event_type episodes with valid_from/valid_to intervals and a current
-    flag. One user-keyed shuffle serves both windows (duplicate-collapse
-    lag + episode-closing lead). Timestamps copied, never computed ->
-    bit-exact."""
-    from global_stock_data_warehouse_spark.operators.cdc import scd2_history
-
-    ev = load_table(spark, "events", sf_dir)
-    return scd2_history(
-        ev,
-        key_cols=("user_id",),
-        value_col="event_type",
-        ts_col="ts",
-        tiebreak_cols=("event_id",),
-    )
-
-
-def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC round-trip: apply_changes(old, snapshot_diff(old, new)) must
-    reconstruct `new` EXACTLY — the oracle is the direct expression for
-    the new snapshot, so any drift in diff classification or apply
-    semantics (missed delete, stale update, dropped untouched row) is a
-    hash mismatch. One PK shuffle; work scales with |changes|."""
-    from global_stock_data_warehouse_spark.operators.cdc import (
-        apply_changes,
-        snapshot_diff,
-    )
-
-    # orders' o_orderkey is a true PK (the synthetic lineitem's
-    # (orderkey, linenumber) is NOT unique — CDC apply requires keyed rows)
-    o = load_table(spark, "orders", sf_dir).select(
-        "o_orderkey", "o_orderdate", "o_orderstatus", "o_totalprice"
-    )
-    old = o.filter(F.col("o_orderdate") < F.lit("1997-01-01")).select(
-        "o_orderkey", "o_totalprice"
-    )
-    new = o.filter(F.col("o_orderdate") >= F.lit("1996-01-01")).select(
-        "o_orderkey",
-        F.when(F.col("o_orderstatus") == "F", F.col("o_totalprice") + 100)
-        .otherwise(F.col("o_totalprice"))
-        .alias("o_totalprice"),
-    )
-    diff = snapshot_diff(old, new, ("o_orderkey",))
-    return apply_changes(old, diff, ("o_orderkey",))
-
-
-def q_repeat_purchase_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Repeat-purchase rate by market segment, implemented ENTIRELY in
-    the SQL API (spark.sql over registered views) — the engine's ANSI
-    surface is first-class, same Catalyst plan as the DataFrame path.
-    Date-windowed LEFT JOIN keeps zero-order customers in the base;
-    single-division rate at 6dp is engine-exact."""
-    load_table(spark, "customer", sf_dir).createOrReplaceTempView("v_customer")
-    load_table(spark, "orders", sf_dir).createOrReplaceTempView("v_orders")
-    return spark.sql(
-        """
-        WITH per_cust AS (
-          SELECT c_custkey, c_mktsegment, count(o_orderkey) AS n_orders
-          FROM v_customer LEFT JOIN v_orders
-            ON c_custkey = o_custkey
-           AND o_orderdate >= DATE '1996-01-01'
-           AND o_orderdate < DATE '1997-01-01'
-          GROUP BY 1, 2
-        )
-        SELECT c_mktsegment,
-               count(*) AS n_customers,
-               sum(CASE WHEN n_orders >= 2 THEN 1 ELSE 0 END) AS repeat_customers,
-               round(sum(CASE WHEN n_orders >= 2 THEN 1 ELSE 0 END)
-                     / CAST(count(*) AS DOUBLE), 6) AS repeat_rate
-        FROM per_cust GROUP BY c_mktsegment
-        """
-    )
-
-
-def q_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entity resolution over part names: brand-blocked candidate pairs
-    matched by Levenshtein <= 2 inside the join condition. One block-key
-    shuffle; the quadratic is bounded by the largest brand block."""
-    from global_stock_data_warehouse_spark.operators.dedup import record_linkage
-
-    return record_linkage(
-        load_table(spark, "part", sf_dir),
-        name_col="p_name",
-        block_cols=["p_brand"],
-        max_distance=2,
-        id_col="p_partkey",
-    )
-
-
-def q_price_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distribution-rank windows (percent_rank + cume_dist) of order
-    value within each priority class — orderkey tiebreak makes both
-    order-sensitive functions engine-exact. One window shuffle over the
-    orders table."""
-    o = load_table(spark, "orders", sf_dir)
-    w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
-    return o.select(
-        "o_orderkey",
-        "o_orderpriority",
-        "o_totalprice",
-        F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
-        F.round(F.cume_dist().over(w), 6).alias("cume"),
-    )
-
-
-def q_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Last-touch attribution: each purchase credited to the user's most
-    recent view/click within 7 days. One user-keyed window shuffle;
-    touch id and ts ride the same ignore-nulls carry-forward frame, so
-    they always come from the same touch row."""
-    from global_stock_data_warehouse_spark.operators.behavior import (
-        attribution_last_touch,
-    )
-
-    return attribution_last_touch(load_table(spark, "events", sf_dir))
-
-
-def q_gap_fill_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Date-spine regularization with LINEAR interpolation of interior
-    gaps (pandas interpolate(method='time'), distributed): prev/next
-    anchors via ignore-nulls last/first windows on one key partitioning;
-    the tail forward-fills. Identical arithmetic expression on both
-    engines -> 6dp-stable."""
-    from global_stock_data_warehouse_spark.operators.timeseries import (
-        daily_close,
-        gap_fill_ffill,
-    )
-
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
-    out = gap_fill_ffill(daily_close(ev), method="linear")
-    return out.select(
-        "user_id", "d", F.round("close", 6).alias("close"), "is_filled"
-    )
-
-
-def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM segmentation over orders: one fact shuffle to the per-customer
-    aggregate, then three ntile windows over one-row-per-customer with
-    customer-id tiebreaks (ntile is order-sensitive; the tiebreak makes
-    assignment engine-exact). Fixed-point monetary sums."""
-    from global_stock_data_warehouse_spark.operators.behavior import rfm_segments
-
-    return rfm_segments(load_table(spark, "orders", sf_dir))
-
-
-def q_rolling_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing-7d distinct users per day: the sliding-distinct shape —
-    events fan out map-side to the window-end days they influence
-    (bounded x7, absorbed by countDistinct partials), one day-keyed
-    shuffle; span bounds ride a broadcast 1-row aggregate."""
-    from global_stock_data_warehouse_spark.operators.behavior import (
-        rolling_distinct_users,
-    )
-
-    return rolling_distinct_users(load_table(spark, "events", sf_dir), window_days=7)
-
-
-def q_ngram_topk_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-memory heavy-hitters top-k bigrams: per-task vectorized
-    candidate counters (space-saving truncation) + broadcast exact
-    recount — only candidate grams ride the final shuffle. At this SF
-    capacity exceeds per-task distinct grams, so the result is identical
-    to exact ngram_topk and shares its oracle; the lossy regime's recall
-    is property-tested."""
-    from global_stock_data_warehouse_spark.operators.corpus import ngram_topk_sketch
-
-    return ngram_topk_sketch(load_table(spark, "documents", sf_dir), n=2, k=25, min_count=2)
-
-
-def q_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-entity OLS trend (slope/intercept/R² of daily close over epoch
-    days) — grouped regression in one shuffle. The five OLS sums run over
-    integer-valued doubles (x = epoch day, y = close*100), so they are
-    exact and order-independent; each output is one closed-form division
-    over exact sums -> bit-stable across engines."""
-    from global_stock_data_warehouse_spark.operators.timeseries import (
-        daily_close,
-        trend_ols,
-    )
-
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
-    return trend_ols(daily_close(ev))
-
-
-def q_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Date-spine regularization + forward fill (asfreq('D').ffill(),
-    distributed): the spine explodes from ONE row per key (min/max agg),
-    the join back and the ignore-nulls last window reuse the key hash
-    partitioning. Values are copied, never computed -> bit-exact."""
-    from global_stock_data_warehouse_spark.operators.timeseries import (
-        daily_close,
-        gap_fill_ffill,
-    )
-
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
-    return gap_fill_ffill(daily_close(ev)).select(
-        "user_id", "d", "close", "is_filled"
-    )
-
-
-def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank over the supplier->customer flow graph (who supplies
-    whom, via lineitem x orders). Iterative join+agg rounds with
-    dangling-mass conservation — rows-only (float fixpoint is
-    sum-order-dependent across engines); property tests in
-    tests/test_graph.py carry the correctness statement (uniform cycle,
-    closed-form two-node fixpoint, mass conservation)."""
-    from global_stock_data_warehouse_spark.operators.graph import pagerank
-
-    li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_suppkey")
-    o = load_table(spark, "orders", sf_dir).select("o_orderkey", "o_custkey")
-    # distinct on the INT pair, namespace-prefix afterwards: the distinct
-    # shuffles 16B keys instead of two strings (15.9 -> ~11 MB at sf0.1);
-    # the concat is a map-side projection over the already-unique rows
-    edges = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .select("l_suppkey", "o_custkey")
-        .distinct()
-        .select(
-            F.concat(F.lit("s"), F.col("l_suppkey")).alias("src"),
-            F.concat(F.lit("c"), F.col("o_custkey")).alias("dst"),
-        )
-    )
-    ranks = pagerank(edges, max_iter=8, tol=1e-6)
-    return ranks.orderBy(F.col("rank").desc(), F.col("node").asc()).limit(50)
-
-
-def q_autocorrelation_fx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hash-exact ACF twin (r6): same Pearson ACF at lags 1/2/3/5 as
-    q_autocorrelation, but from integer-cents sums — no libm anywhere in
-    the formula (IEEE /, sqrt are correctly rounded; ln is not), so this
-    variant is bit-identical across engines and driver-window-eligible
-    where the float original is EPS-only forever."""
-    from global_stock_data_warehouse_spark.operators.timeseries import (
-        autocorrelation_fx,
-        daily_close,
-    )
-
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
-    return autocorrelation_fx(daily_close(ev))
-
-
-def q_rolling_beta_fx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hash-exact rolling-beta twin (r6): 20-day beta/corr of each
-    entity's daily close vs the cross-sectional index level (sum of
-    closes), all accumulation in integer cents -> driver-hash-eligible
-    (q_rolling_beta's covar/var/corr float path stays EPS-only)."""
-    from global_stock_data_warehouse_spark.operators.timeseries import (
-        rolling_beta_fx,
-    )
-
-    ev = load_table(spark, "events", sf_dir).select("user_id", "event_id", "ts", "value")
-    return rolling_beta_fx(ev)
-
-
-def q_source_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hash-exact source-drift twin (r6): Pearson chi^2(source || corpus)
-    over unigram distributions — the same mixture-health check as
-    q_source_kl but transcendental-free, so it is bit-exact on any
-    engine and can carry the driver-grade evidence the KL version's
-    ln() ulp denies it."""
-    from global_stock_data_warehouse_spark.operators.corpus import source_chi2_drift
-
-    return source_chi2_drift(load_table(spark, "documents", sf_dir))
-
-
-def q_unigram_prob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hash-exact unigram-LM quality twin (r6): mean token PROBABILITY
-    (not log-prob) under the corpus-trained add-one top-16 LM — exact
-    integer-ratio arithmetic end-to-end. vocab_size=16 < the corpus's
-    distinct-token count so the OOV bucket is genuinely exercised, like
-    q_unigram_logprob."""
-    from global_stock_data_warehouse_spark.operators.corpus import unigram_prob_score
-
-    return unigram_prob_score(load_table(spark, "documents", sf_dir), vocab_size=16)
-
-
-def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL-corpus spherical k-means (Lloyd) assignments (r6): every
-    vector labeled, not just a sample-trained quantizer. Deterministic
-    (hash-ordered seeds, fixed-point int64 centroid accumulation,
-    first-max argmax ties) but iterative -> rows-only; the distributed
-    rounds are bit-equivalence-tested against the driver loop in
-    tests/test_kmeans.py."""
-    from global_stock_data_warehouse_spark.operators.similarity import kmeans
-
-    return kmeans(
-        load_table(spark, "embeddings", sf_dir), k=8, n_iter=10
-    ).orderBy("vec_id")
-
-
-def q_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Diversity-preserving selection (r6): full-corpus k-means + md5-order
-    per-cluster quotas — cap every semantic cluster at 32 survivors so no
-    dense embedding region dominates the mix. Rows-only (kmeans is
-    iterative); both stages individually equivalence/oracle-tested."""
-    from global_stock_data_warehouse_spark.operators.similarity import (
-        cluster_balanced_sample,
-    )
-
-    return cluster_balanced_sample(
-        load_table(spark, "embeddings", sf_dir), per_cluster=32, k=8, n_iter=10
-    ).orderBy("vec_id")
-
-
-def q_embedding_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-dimension fixed-point moments of the embedding corpus (r6):
-    n, sum and sum-of-squares of floor(x*1e6 + 0.5) as exact BIGINTs —
-    the distributed half of PCA (`pca_fit`'s moment pass) expressed in
-    oracle-able form, so the cross-engine exactness of integer moment
-    accumulation gets a driver-grade hash row (the eigensolve on top
-    stays rows-only in pca_variance, correctly). Quantized in DOUBLE
-    with the floor(+0.5) idiom every fx twin here uses."""
-    fx = F.expr("CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT)")
-    return (
-        load_table(spark, "embeddings", sf_dir)
-        .select(F.posexplode("embedding").alias("dim", "x"))
-        .select(F.col("dim").cast("bigint").alias("dim"), fx.alias("q"))
-        .groupBy("dim")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("q").alias("sum_fx"),
-            F.sum(F.col("q") * F.col("q")).alias("sumsq_fx"),
-        )
-        .orderBy("dim")
-    )
-
-
-def q_pca_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PCA explained-variance report over the embeddings table (r6): ONE
-    exact distributed moment pass (per-batch int64 Gram partials, d^2+d+1
-    rows per batch, aggregated as DECIMAL(38,0) — bit-identical under any
-    partitioning), then a driver-side (d x d) eigendecomposition.
-    Rows-only (eigensolve is LAPACK territory); moment exactness,
-    driver-reference equivalence, orthonormality, low-rank recovery, and
-    repartition determinism are tested in tests/test_pca.py."""
-    from global_stock_data_warehouse_spark.operators.similarity import pca_variance
-
-    return pca_variance(load_table(spark, "embeddings", sf_dir), k=8)
-
-
-def q_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The training-prep flagship (r6): gate -> exact dedup -> BPE
-    train+encode -> deterministic shard shuffle -> pack into 512-token
-    windows, as ONE composed plan — per surviving doc, where it lands in
-    the final packed training stream (shard, position, sequence span).
-    Rows-only (the BPE trainer is iterative and not SQL-expressible);
-    every stage is individually oracled/equivalence-tested, and the
-    composition's conservation + determinism properties are tested in
-    tests/test_training_prep.py."""
-    from global_stock_data_warehouse_spark.plans.training_prep import (
-        training_prep_pipeline,
-    )
-
-    return training_prep_pipeline(
-        load_table(spark, "documents", sf_dir),
-        ctx_len=512,
-        n_merges=16,
-        max_words=5000,
-        n_shards=16,
-    ).orderBy("doc_id")
-
-
-def q_shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic epoch-0 training-order shuffle (r6): md5(seed:id)
-    assigns every doc a shard and in-shard position — one shard-keyed
-    shuffle + within-shard sort, no global ordering materialized. Pure
-    function of (seed, id) -> bit-exact across engines and re-runs."""
-    from global_stock_data_warehouse_spark.operators.corpus import shard_shuffle
-
-    return shard_shuffle(
-        load_table(spark, "documents", sf_dir), n_shards=8, seed=42
-    ).orderBy("shard", "pos")
-
-
-def q_packed_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MATERIALIZED packed training stream (r6): md5 shard shuffle ->
-    concatenate each shard's docs in training order -> cut into 64-token
-    sequences, emitting the actual token content per sequence
-    (space-joined so the value hash sees one string cell). Everything is
-    integer/md5 arithmetic — oracled bit-exact including every token's
-    position in every sequence."""
-    from global_stock_data_warehouse_spark.operators.corpus import (
-        pack_token_sequences,
-        shard_shuffle,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    order = shard_shuffle(docs, n_shards=8, seed=42)
-    packed = pack_token_sequences(
-        docs.join(order, "doc_id"), ctx_len=64
-    )
-    return packed.select(
-        "shard",
-        "seq_id",
-        F.col("n_tokens").cast("bigint").alias("n_tokens"),
-        F.array_join("input_ids", " ").alias("token_str"),
-    ).orderBy("shard", "seq_id")
-
-
-def q_token_vote_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hash-exact source classifier (r6): every in-vocab token votes the
-    add-one-smoothed class posterior (c_tc+1)/(c_t+C) — exact rational,
-    1e-12 fixed-point — and the per-doc argmax (score desc, label asc
-    tiebreak) is a BIGINT comparison, so even the PREDICTED LABEL is
-    driver-hash-safe. vocab_size=64 over the 20 synthetic sources."""
-    from global_stock_data_warehouse_spark.operators.classify import (
-        token_vote_classify,
-    )
-
-    return token_vote_classify(load_table(spark, "documents", sf_dir), vocab_size=64)
-
-
-def q_classifier_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-class quality report over the hash-exact token-vote classifier
-    (r6): docs / predictions / correct counts plus recall and precision
-    as EXACT integer parts-per-million (``n*1e6 DIV d`` — integer
-    division, no float rounding anywhere, so the whole report is
-    driver-hash-safe like the classifier itself). The
-    evaluate-the-labeler step a source-balancing pipeline runs before
-    trusting predicted domains."""
-    from global_stock_data_warehouse_spark.operators.classify import (
-        token_vote_classify,
-    )
-
-    # two consumers (per-label + per-pred aggs) — materialize the
-    # classifier output once or the full vote plan executes twice
-    # (PLANS.md showed 25 exchanges vs token_vote's 12 before this cut)
-    out = token_vote_classify(
-        load_table(spark, "documents", sf_dir), vocab_size=64
-    ).localCheckpoint(eager=True)
-    per_label = out.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.when(F.col("is_correct"), 1).otherwise(0)).alias("n_correct"),
-    )
-    per_pred = (
-        out.filter(F.col("pred_source").isNotNull())
-        .groupBy(F.col("pred_source").alias("source"))
-        .agg(F.count(F.lit(1)).alias("n_pred"))
-    )
-    return (
-        per_label.join(per_pred, "source", "left")
-        .select(
-            "source",
-            F.col("n_docs").cast("bigint").alias("n_docs"),
-            F.coalesce("n_pred", F.lit(0)).cast("bigint").alias("n_pred"),
-            F.col("n_correct").cast("bigint").alias("n_correct"),
-            F.expr("CAST(n_correct * 1000000 DIV n_docs AS BIGINT)").alias(
-                "recall_ppm"
-            ),
-            F.expr(
-                "CASE WHEN coalesce(n_pred, 0) > 0 THEN "
-                "CAST(n_correct * 1000000 DIV n_pred AS BIGINT) END"
-            ).alias("precision_ppm"),
-        )
-        .orderBy("source")
-    )
-
-
-def q_nb_self_loglik(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multinomial-NB per-doc log-likelihood at the doc's own label
-    (add-one smoothing, top-64 vocab + OOV bucket, class prior): the
-    textbook companion to q_token_vote_classify's hash-exact argmax.
-    EPS-compared (ln is libm territory), like unigram_logprob."""
-    from global_stock_data_warehouse_spark.operators.classify import nb_self_loglik
-
-    return nb_self_loglik(load_table(spark, "documents", sf_dir), vocab_size=64)
-
-
-def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL media path, driver-oracled (r6, VERDICT r5 item 5): synthesize
-    deterministic PPM images / PCM16 WAV clips from doc ids
-    (closed-form bytes — synth_media_fixture), run the production
-    Arrow-batched decode + feature kernels (decode_ppm / decode_wav /
-    image_features / audio_features via extract_features_typed), and emit
-    the engine-exact feature subset as 1e-6 fixed-point BIGINTs:
-    integer-pixel channel means and w/h aspect for images; RMS /
-    zero-crossing rate / peak / duration for audio. Those features are
-    sums of integers or dyadic rationals — exactly representable, so the
-    independent DuckDB oracle reproduces the float32 values bit-for-bit
-    from the same closed forms (the rFFT spectral features and gradient
-    energies stay pytest-covered; their float sums are order-sensitive).
-    Plan: two map-only Arrow stages (synth, decode+featurize), then the
-    final sort's range exchange. ``fan_scan`` adds one round-robin
-    exchange ahead of the synth stage when the id scan yields fewer
-    partitions than cores (small inputs); at scale it adds none."""
-    from global_stock_data_warehouse_spark.operators.multimodal import (
-        extract_features_typed,
-        synth_media_fixture,
-    )
-
-    media = synth_media_fixture(load_table(spark, "documents", sf_dir))
-    feats = extract_features_typed(media)
-    is_img = F.col("media_type") == "image"
-
-    def fx(idx: int):
-        return F.floor(
-            F.element_at("feature", idx + 1).cast("double") * 1e6 + F.lit(0.5)
-        ).cast("long")
-
-    return feats.select(
-        "media_id",
-        "media_type",
-        "n_bytes",
-        fx(0).alias("feat_a"),  # image mean-R | audio RMS
-        fx(1).alias("feat_b"),  # image mean-G | audio zero-crossing Hz
-        F.when(is_img, fx(2)).otherwise(fx(6)).alias("feat_c"),  # mean-B | peak
-        F.when(is_img, fx(6)).otherwise(fx(7)).alias("feat_d"),  # aspect | duration
-    ).orderBy("media_id")
-
-
-def q_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11 shape (adapted: the fixtures carry no partsupp, so
-    "stock value" is lineitem revenue from one nation's suppliers): parts
-    whose revenue through NATION_7 suppliers exceeds 0.1% of that
-    nation's total — grouped agg + global-total scalar (broadcast cross
-    join of a single-row agg, never a partition-less window over the
-    fact) + share filter. The supplier side is a broadcast dim filter;
-    the only fact shuffle is the per-part agg."""
-    n = load_table(spark, "nation", sf_dir).filter(F.col("n_name") == "NATION_7")
-    s = load_table(spark, "supplier", sf_dir).join(
-        F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey")
-    )
-    li = load_table(spark, "lineitem", sf_dir)
-    per_part = (
-        li.join(F.broadcast(s.select("s_suppkey")), li.l_suppkey == F.col("s_suppkey"))
-        .groupBy("l_partkey")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("part_value")
-        )
-    )
-    tot = per_part.agg(F.sum("part_value").alias("_total"))
-    return (
-        per_part.crossJoin(F.broadcast(tot))
-        .filter(F.col("part_value") > 0.001 * F.col("_total"))
-        .select(
-            "l_partkey",
-            "part_value",
-            F.round(F.col("part_value") / F.col("_total"), 6).alias("share"),
-        )
-        .orderBy(F.col("part_value").desc(), F.col("l_partkey").asc())
-    )
-
-
-def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Common-neighbors link prediction on the part co-purchase graph:
-    top-25 NON-adjacent part pairs by neighborhood Jaccard — the
-    candidate-edge miner (Liben-Nowell & Kleinberg CIKM'03). Integer
-    wedge counts + one rounded division -> bit-exact oracle. Scale
-    caveats (hub wedge volume) documented on the operator."""
-    from global_stock_data_warehouse_spark.operators.graph import link_prediction
-
-    return link_prediction(_copurchase_edges(spark, sf_dir), k=25, min_common=2)
-
-
-def q_decay_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exponential time-decay weighted revenue per event type (half-life
-    7 days, anchored to the frame's max date). DYADIC fixed-point: the
-    weight is 2^-halvings with an integer halving count, so every
-    contribution is an exact BIGINT and the sum is order-independent —
-    decay weighting without the exp() that would be EPS-only forever."""
-    from global_stock_data_warehouse_spark.operators.behavior import decayed_totals
-
-    return decayed_totals(load_table(spark, "events", sf_dir))
-
-
-def q_snapshot_diff_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wide-payload CDC via the HASHED diff: the (pk, xxhash64) narrow
-    pass classifies changes, then only churn rows fetch their five
-    payload columns through broadcast-semi pruning — the wide snapshots
-    never shuffle. Same output contract as snapshot_diff; measured
-    7.7 -> 3.7 MB vs the plain full-outer diff on this demo even at its
-    unrealistically HIGH ~40% churn (the advantage scales with payload
-    width x (1 - churn): a 100-column table at 0.1% churn shuffles
-    ~0.1% of what the plain diff moves)."""
-    from global_stock_data_warehouse_spark.operators.cdc import snapshot_diff_hashed
-
-    # orders is the fixture table with a genuinely UNIQUE PK (lineitem's
-    # (orderkey, linenumber) is not unique here) — keyed snapshots are
-    # the CDC precondition
-    cols = [
-        "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate",
-        "o_orderpriority",
-    ]
-    o = load_table(spark, "orders", sf_dir).select("o_orderkey", *cols)
-    old = o.filter(F.col("o_orderkey") % 7 != 0)
-    new = o.filter(F.col("o_orderkey") % 5 != 0).withColumn(
-        "o_totalprice",
-        F.when(
-            F.col("o_orderpriority") == "1-URGENT", F.col("o_totalprice") + 1
-        ).otherwise(F.col("o_totalprice")),
-    )
-    return snapshot_diff_hashed(old, new, ["o_orderkey"], cols).orderBy(
-        "o_orderkey"
-    )
-
-
-def q_classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calibration report for the token-vote classifier: docs binned by
-    confidence (mean vote strength, 10 VALUE-bins between the corpus
-    min/max — two broadcast scalars, no global rank window funneling the
-    doc frame through one task) with per-bin accuracy in exact ppm. A
-    well-calibrated score is monotone: higher-confidence bins should be
-    more accurate — the report a curator reads before trusting the
-    classifier's labels for mixture weighting. Integer counts + single
-    correctly-rounded divisions -> bit-exact."""
-    tv = q_token_vote_classify(spark, sf_dir).filter(
-        F.col("pred_source").isNotNull()
-    )
-    # /1e9 first: score_fx is 1e9-grid fixed point, and a 6dp round of a
-    # ~6e10 raw value sits BELOW the double ulp (engines disagree in the
-    # last bit); in natural vote units the rounding is far above ulp
-    mv = (
-        F.col("score_fx").cast("double") / 1e9 / F.col("n_scored")
-    ).alias("_mv")
-    scored = tv.select(
-        "doc_id", F.col("is_correct").cast("int").alias("_ok"), mv
-    ).localCheckpoint(eager=True)
-    # localCheckpoint: scored feeds BOTH the min/max range aggregate and
-    # the binning pass — without it the 12-shuffle token_vote_classify
-    # subtree executes twice (the r7 PLANS.md row showed 23 shuffles)
-    rng = scored.agg(
-        F.min("_mv").alias("_lo"), F.max("_mv").alias("_hi")
-    )
-    binned = scored.crossJoin(F.broadcast(rng)).select(
-        "_ok",
-        "_mv",
-        F.when(F.col("_hi") > F.col("_lo"),
-               F.least(
-                   F.floor((F.col("_mv") - F.col("_lo"))
-                           / (F.col("_hi") - F.col("_lo")) * 10),
-                   F.lit(9),
-               ))
-        .otherwise(F.lit(0))
-        .cast("int")
-        .alias("bin"),
-    )
-    return (
-        binned.groupBy("bin")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("_ok").cast("long").alias("n_correct"),
-            F.expr("CAST(sum(_ok) * 1000000 DIV count(*) AS BIGINT)").alias(
-                "accuracy_ppm"
-            ),
-            F.round(F.min("_mv"), 6).alias("min_conf"),
-            F.round(F.max("_mv"), 6).alias("max_conf"),
-        )
-        .orderBy("bin")
-    )
-
-
-def q_agg_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental materialized-aggregate maintenance end-to-end: the
-    per-customer (count, cents-sum) aggregate of the OLD orders snapshot
-    is updated from the snapshot_diff changeset alone — no rescan of the
-    base — and the ORACLE recomputes the aggregate directly over the NEW
-    snapshot, so the driver hash proves maintain(agg(old), diff) ==
-    agg(new) bit-exactly (cents BIGINT sums: associative, drift-free
-    where float sums never could be)."""
-    from global_stock_data_warehouse_spark.operators.cdc import (
-        maintain_agg,
-        snapshot_diff,
-    )
-
-    o = load_table(spark, "orders", sf_dir).select(
-        "o_orderkey",
-        "o_custkey",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-    )
-    old = o.filter(F.col("o_orderkey") % 7 != 0)
-    new = o.filter(F.col("o_orderkey") % 5 != 0)
-    base = old.groupBy("o_custkey").agg(
-        F.count(F.lit(1)).alias("n_rows"), F.sum("cents").alias("cents")
-    )
-    changes = snapshot_diff(old, new, ["o_orderkey"])
-    # the group column (o_custkey) is a PAYLOAD column of the diff —
-    # maintain_agg reads it from the old_/new_ sides, handling rows that
-    # MOVE between groups
-    maintained = maintain_agg(base, changes, ["o_custkey"], ["cents"])
-    return maintained.select(
-        "o_custkey",
-        F.col("n_rows").cast("long").alias("n_orders"),
-        F.round(F.col("cents").cast("double") / 100, 2).alias("total_value"),
-    ).orderBy("o_custkey")
-
-
-def q_dup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup PROVENANCE matrix: which source pairs share text-level
-    near-dups (the "who is scraping whom" report a corpus curator runs
-    before trusting source-level mixture weights). Composes the oracled
-    bigram-Jaccard pair set with the doc->source dim, canonicalizes the
-    unordered source pair, and aggregates integer counts + max jaccard
-    (max is order-independent, unlike a float mean) -> bit-exact."""
-    pairs = ngram_jaccard_pairs(load_table(spark, "documents", sf_dir), threshold=0.2)
-    src = load_table(spark, "documents", sf_dir).select("doc_id", "source")
-    sa = src.select(F.col("doc_id").alias("id_a"), F.col("source").alias("_sa"))
-    sb = src.select(F.col("doc_id").alias("id_b"), F.col("source").alias("_sb"))
-    return (
-        pairs.join(F.broadcast(sa), "id_a")
-        .join(F.broadcast(sb), "id_b")
-        .select(
-            F.least("_sa", "_sb").alias("source_a"),
-            F.greatest("_sa", "_sb").alias("source_b"),
-            "jaccard",
-        )
-        .groupBy("source_a", "source_b")
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.max("jaccard").alias("max_jaccard"),
-        )
-        .orderBy("source_a", "source_b")
-    )
-
-
-def q_bigram_prob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mean bigram probability per doc under the corpus-trained add-one
-    bigram LM — the context-conditioned rung above unigram_prob_score
-    (word-salad detection). Bounded broadcast model, map-side bigram
-    generation, hash-exact fixed-point mean (no transcendental)."""
-    from global_stock_data_warehouse_spark.operators.corpus import (
-        bigram_prob_score,
-    )
-
-    # vocab_size=16 / bigram_size=64 < the corpus's distinct counts so
-    # both OOV paths (unknown bigram, unknown context) are exercised
-    return bigram_prob_score(
-        load_table(spark, "documents", sf_dir), vocab_size=16, bigram_size=64
-    )
-
-
-def q_length_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source two-sample KS drift of the doc-length distribution vs
-    the pooled corpus — the nonparametric drift monitor next to
-    source_kl (needs a token model) and source_chi2_drift (needs a term
-    domain). Integer ECDF counts divided once -> engine bit-exact."""
-    from global_stock_data_warehouse_spark.operators.profile import ks_drift
-
-    return ks_drift(load_table(spark, "documents", sf_dir), "source", "n_chars")
-
-
-def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-bitmap decontamination: same benchmark-overlap rule as
-    q_decontaminate but the eval gram set is compressed to a 2^20-bit
-    Bloom filter probed via k broadcast joins — the shape that still
-    works when the holdout ledger outgrows a raw-string broadcast.
-    One-sided error (never misses a true hit) -> rows-only; the
-    superset-of-exact property is pytest-enforced
-    (tests/test_corpus.py::test_bloom_decontaminate_superset_of_exact)."""
-    from global_stock_data_warehouse_spark.operators.corpus import (
-        bloom_decontaminate,
-    )
-
-    docs = load_table(spark, "documents", sf_dir)
-    return bloom_decontaminate(
-        docs.filter(F.col("doc_id") % 20 != 0),
-        docs.filter(F.col("doc_id") % 20 == 0),
-        n=5,
-    ).orderBy("doc_id")
-
-
-def q_term_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chi-square term/class feature selection over documents (class =
-    source): top-10 most discriminative terms per source by the 2x2
-    presence chi-square (Yang & Pedersen ICML'97). Pure integer-count
-    rational arithmetic — no transcendental — rounded at 6dp."""
-    from global_stock_data_warehouse_spark.operators.corpus import term_class_chi2
-
-    return term_class_chi2(load_table(spark, "documents", sf_dir), top_k=10, min_df=5)
-
-
-def q_line_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc boilerplate exposure (RefinedWeb line-frequency audit):
-    segments occurring in >=3 distinct docs are boilerplate; report each
-    doc's segment counts and boilerplate char ratio. Splits on ' the '
-    like q_paragraph_dedup (the synthetic corpus has no newlines)."""
-    from global_stock_data_warehouse_spark.operators.curation import (
-        line_boilerplate_stats,
-    )
-
-    return line_boilerplate_stats(
-        load_table(spark, "documents", sf_dir), sep=" the ", min_docs=3
-    )
-
-
-def q_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source quality percentile gate: keep the top 60% of each
-    source by a chars+stopwords fluency score; all-integer rank/count
-    gating with a deterministic (score desc, doc_id) tiebreak."""
-    from global_stock_data_warehouse_spark.operators.curation import (
-        quality_percentile_gate,
-    )
-
-    return quality_percentile_gate(
-        load_table(spark, "documents", sf_dir), keep_frac=0.6
-    )
-
-
-def q_novelty_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dedup-novelty decay over arrival order: 10 equal id-range
-    buckets, exact first-occurrence marking, per-bucket dup rate and
-    cumulative distinct count — the crawl-saturation curve."""
-    from global_stock_data_warehouse_spark.operators.curation import (
-        novelty_timeline,
-    )
-
-    return novelty_timeline(load_table(spark, "documents", sf_dir), n_buckets=10)
-
-
-def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipf rank-frequency OLS over the top 200 terms: one-row corpus
-    health diagnostic (natural language ~ -1). Top-k is a
-    TakeOrderedAndProject; regression runs on <= 200 rows."""
-    from global_stock_data_warehouse_spark.operators.curation import zipf_slope
-
-    return zipf_slope(load_table(spark, "documents", sf_dir), top_n=200)
+    return q_wmy_weekly_resample_returns(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDER MATTERS: the driver checks the first 50 entries against the
-    # DuckDB oracle; entries beyond 50 get a weaker rows-only record.
-    #
-    # WINDOW ROTATION RULE (re-review every round):
-    #  1. Only oracled queries (an oracle_sql() twin exists) may occupy the
-    #     window — a rows-only query in a window slot wastes the strongest
-    #     check available.
-    #  2. SURVEY §2 operator-evidence queries keep their slots (the judge
-    #     reads each op's correctness off its covering window row);
-    #     engine-extension queries — however new — go after the window,
-    #     with the bit-exact local mirror as their record. Within the
-    #     window, rank by risk: changed this round > complex
-    #     multi-operator plans > stable single-operator queries.
-    #  3. Every oracled query OUTSIDE the window must pass the local mirror
-    #     (tools/check_correctness.py, bit-exact via CHECK_EXACT=1) each
-    #     round, and that run is recorded in the round summary — the window
-    #     is a driver-visibility choice, not a correctness waiver.
-    #  4. Queries with engine-order-sensitive rounded floats (EPS_QUERIES
-    #     in tools/check_correctness.py) stay OUT of the window: the
-    #     driver's hash has no tolerance.
-    #
-    # ROUND-7 ROTATION: 30 anchor slots unchanged. Slots 31-50 (risk
-    # order per rule 2): (a) changed this round — benford_audit
-    # (empty-input coalesce) and llm_gold_pipeline (NULL-pred anti-join);
-    # dedup_last_writer also changed (multi-column order) but holds
-    # anchor slot 6; (b) the four r7 additions (important_stock,
-    # link_prediction, decay_weighted, term_chi2 — all CHECK_EXACT=1
-    # verified before promotion); (c) the eight r6-late oracled queries
-    # that never had a driver hash row (incremental_dedup, dsir_select,
-    # token_vote_classify, classifier_confusion, packed_sequences,
-    # shard_shuffle, embedding_moments, neardup_consensus); (d) six
-    # never-windowed pool fills (rebalance_sample, temperature_sample,
-    # split_assign, priority_linestatus, custdist, promo_revenue_share).
-    # Rotated OUT (all green driver rows in r6, code unchanged):
-    # autocorrelation_fx, rolling_beta_fx, source_chi2_drift,
-    # unigram_prob_score, multimodal_features, semantic_decontaminate,
-    # leakage_safe_split, dedup_keep_best, source_mix_report,
-    # contamination_report, dedup_funnel, min_cost_supplier,
-    # nation_revenue_share, dormant_rich_customers, hopping_window,
-    # mad_outliers, equi_depth_hist, triangle_count — every one stays
-    # oracled and bit-exact-mirrored via tools/check_correctness.py
-    # (rule 3).
-    #
-    # ROUND-9 ROTATION (executed): slots 31-50 lead with
-    # drift_alert_report (rounding idiom + ledger-read changed this
-    # round), then the ten never-driver-hashed oracled queries VERDICT
-    # r8 item 1 named (asof_join_tolerance, sessionize_skewsafe,
-    # pps_weighted_sample, ngram_topk, price_distribution, skew_report,
-    # class_centroids, quantize_embeddings, centroid_outliers), then —
-    # per rule 2, new-this-round outranks pool fill — the r9 additions:
-    # gopher_quality_flags, mixture_epoch_plan, stratified_quota_split
-    # (early r9) and seven of the nine late-r9 battery queries
-    # (split_adjusted_prices, overnight_intraday, liquidity_screen,
-    # line_boilerplate, quality_gate, novelty_timeline, zipf_slope);
-    # range_position and stale_price_runs hold the bit-exact mirror.
-    # Rotated OUT (all green r8 driver rows,
-    # code unchanged): length_ks_drift, bigram_prob_score,
-    # dup_source_matrix, snapshot_diff_wide, agg_maintain,
-    # classifier_calibration, decay_weighted, term_chi2,
-    # top_revenue_supplier, supplier_part_counts, disjunctive_revenue,
-    # dominant_suppliers, hist_bins, dense_ids, unpivot_ohlc,
-    # longest_up_streak, salted_flag_totals, vwap_brand,
-    # market_breadth, repeat_purchase_rate — all mirrored per rule 3.
-    #
-    # ROUND-10 ROTATION (executed): slots 31-50 lead with the two
-    # changed-this-round queries (liquidity_screen — floor-idiom cents
-    # quantization per r9 ADVICE; stale_price_runs — threshold-free
-    # n_stale_days per r9 ADVICE), then the remaining TEN never-windowed
-    # r9 queries VERDICT r9 item 1 named, then 8 pool fills in the
-    # VERDICT list's own order (paragraph_dedup, decontaminate,
-    # pii_scrub, bm25_score, pack_sequences, keyword_search,
-    # gap_fill_linear, rfm_segments). The 20 r9 occupants rotate out
-    # with green r9 driver rows and stay bit-exact-mirrored per rule 3.
-    #
-    # R11 ROTATION (executed — see the slot 31-50 comment below): the
-    # four r10-ADVICE-touched queries lead, then agg_pricing_summary,
-    # the three remaining never-windowed r10 queries, then 12 pool
-    # fills (win_rolling_frame .. snapshot_diff). EPS queries
-    # (rolling_beta, unigram_logprob, source_kl, autocorrelation,
-    # dsir_weights, nb_self_loglik) stay out per rule 4 — their
-    # hash-exact twins carry the driver-grade evidence (COVERAGE.md
-    # r11 EPS ledger maps each pair).
-    #
-    # R12 ROTATION (executed — see the window comment below): the
-    # rotation ledger's proposed window seated verbatim. Original
-    # guidance (COVERAGE.md r11
-    # "Invariant check"): anchors JOIN the rotation so all 50 slots
-    # turn over; each round seats the 50 STALEST oracled queries by the
-    # rotation ledger (changed-this-round still preempts). The 7
-    # remaining never-windowed pool names go first: profile_table,
-    # tech_indicators, drawdown_cumret, sessionize, stats_moments,
-    # repetition_stats, sample_per_group; then the r3/r4-last-hashed
-    # tail from the ledger. SURVEY §2 op evidence moves to "covering
-    # query driver-hashed <= 4 rounds ago + committed per-round mirror".
-    #
-    # R13 ROTATION (executed — see the window comment below): VERDICT
-    # r12 item 3 — changed-first over the 38 oracled queries the r12
-    # optimization phase rewrote (classify family, jaccard/embedding
-    # dense paths, components, llm_gold_pipeline, fan_scan sites), then
-    # the stalest remainder per a FRESH rotation-ledger run that reads
-    # CORRECTNESS_r12.json (the COVERAGE.md-committed proposal predated
-    # that artifact and its tail repeated just-hashed names).
-    return {
-        # --- R13 WINDOW (slots 1-50): tools/rotation_ledger.py
-        # --next-round 13 proposal seated verbatim (re-run against the
-        # committed CORRECTNESS_r12.json, which postdates the proposal
-        # embedded in COVERAGE.md r12 — the fresh run replaces that
-        # tail's just-r12-hashed names with the genuinely stalest).
-        # Slots 1-38: the r12 optimization-phase changed queries (rule
-        # 2, changed-first — VERDICT r12 item 3); slots 39-50: the
-        # stalest remainder (source_mix_report r6; 11 r7 names). Every
-        # r12 occupant rotates out with a green r12 driver row and
-        # stays bit-exact-mirrored per rule 3.
-        "token_vote_classify": q_token_vote_classify,
-        "classifier_confusion": q_classifier_confusion,
-        "classifier_calibration": q_classifier_calibration,
-        "ngram_topk": q_ngram_topk,
-        "ngram_topk_sketch": q_ngram_topk_sketch,
-        "collocations_topk": q_collocations_topk,
-        "source_chi2_drift": q_source_chi2_drift,
-        "unigram_prob_score": q_unigram_prob_score,
-        "term_chi2": q_term_chi2,
-        "bigram_prob_score": q_bigram_prob_score,
-        "dsir_select": q_dsir_select,
-        "remove_duplicate_spans": q_remove_duplicate_spans,
-        "duplicate_spans": q_duplicate_spans,
-        "decontaminate": q_decontaminate,
-        "contamination_report": q_contamination_report,
-        "source_overlap": q_source_overlap,
-        "repetition_stats": q_repetition_stats,
-        "text_stats": q_text_stats,
-        "chunk_documents": q_chunk_documents,
-        "gopher_quality_flags": q_gopher_quality_flags,
-        "lang_confusion": q_lang_confusion,
-        "corpus_clean": q_corpus_clean,
-        "pii_scrub": q_pii_scrub,
-        "paragraph_dedup": q_paragraph_dedup,
-        "record_linkage": q_record_linkage,
-        "dedup_components": q_dedup_components,
-        "dedup_funnel": q_dedup_funnel,
-        "dedup_keep_best": q_dedup_keep_best,
-        "dup_cluster_stats": q_dup_cluster_stats,
-        "dup_source_matrix": q_dup_source_matrix,
-        "neardup_consensus": q_neardup_consensus,
-        "ngram_jaccard_neardup": q_ngram_jaccard_neardup,
-        "embedding_neardup": q_embedding_neardup,
-        "leakage_safe_split": q_leakage_safe_split,
-        "llm_gold_pipeline": q_llm_gold_pipeline,
-        "packed_sequences": q_packed_sequences,
-        "triangle_count": q_triangle_count,
-        "link_prediction": q_link_prediction,
-        "source_mix_report": q_source_mix_report,
-        "benford_audit": q_benford_audit,
-        "custdist": q_custdist,
-        "embedding_moments": q_embedding_moments,
-        "important_stock": q_important_stock,
-        "incremental_dedup": q_incremental_dedup,
-        "priority_linestatus": q_priority_linestatus,
-        "promo_revenue_share": q_promo_revenue_share,
-        "rebalance_sample": q_rebalance_sample,
-        "shard_shuffle": q_shard_shuffle,
-        "split_assign": q_split_assign,
-        "temperature_sample": q_temperature_sample,
-        # --- oracled but beyond the driver's 50-row check window; all
-        # hold green driver rows from the round tagged below and are
-        # re-verified bit-exact each round via tools/check_correctness.py
-        # (rule 3). ---
-        # last driver-hashed r12
-        "drawdown_cumret": q_drawdown_cumret,
-        "profile_table": q_profile_table,
-        "sample_per_group": q_sample_per_group,
-        "sessionize": q_sessionize,
-        "stats_moments": q_stats_moments,
-        "tech_indicators": q_tech_indicators,
-        "basket_rules": q_basket_rules,
-        "bpe_merge_candidates": q_bpe_merge_candidates,
-        "cdc_apply": q_cdc_apply,
-        "market_share": q_market_share,
-        "max_concurrency": q_max_concurrency,
-        "scd2_history": q_scd2_history,
-        "tfidf_topterms": q_tfidf_topterms,
-        "trend_ols": q_trend_ols,
-        "attribution_last_touch": q_attribution_last_touch,
-        "cohort_retention": q_cohort_retention,
-        "event_transitions": q_event_transitions,
-        "forecast_revenue": q_forecast_revenue,
-        "gap_fill": q_gap_fill,
-        "latency_percentiles": q_latency_percentiles,
-        "order_priority_exists": q_order_priority_exists,
-        "product_profit": q_product_profit,
-        "quantile_summary": q_quantile_summary,
-        "returned_top_customers": q_returned_top_customers,
-        "rolling_distinct_users": q_rolling_distinct_users,
-        "session_paths": q_session_paths,
-        "vocab_growth": q_vocab_growth,
-        "volume_shipping": q_volume_shipping,
-        "waiting_suppliers": q_waiting_suppliers,
-        "autocorrelation_fx": q_autocorrelation_fx,
-        "dormant_rich_customers": q_dormant_rich_customers,
-        "equi_depth_hist": q_equi_depth_hist,
-        "hopping_window": q_hopping_window,
-        "mad_outliers": q_mad_outliers,
-        "min_cost_supplier": q_min_cost_supplier,
-        "multimodal_features": q_multimodal_features,
-        "nation_revenue_share": q_nation_revenue_share,
-        "rolling_beta_fx": q_rolling_beta_fx,
-        "semantic_decontaminate": q_semantic_decontaminate,
-        # last driver-hashed r11
-        "wmy_gold_pipeline": q_wmy_gold_pipeline,
-        "wmy_weekly_resample_returns": lambda s, d: _wmy_resample_returns(s, d, "W"),
-        "wmy_monthly_resample_returns": lambda s, d: _wmy_resample_returns(s, d, "M"),
-        "wmy_yearly_resample_returns": lambda s, d: _wmy_resample_returns(s, d, "Y"),
-        "agg_multi": q_agg_multi,
-        "dedup_last_writer": q_dedup_last_writer,
-        "filter_normalize": q_filter_normalize,
-        "join_broadcast_lookup": q_join_broadcast_lookup,
-        "join_facts_dim": q_join_facts_dim,
-        "join_anti_missing": q_join_anti_missing,
-        "join_semi_active": q_join_semi_active,
-        "win_rank_topk": q_win_rank_topk,
-        "agg_gap_max": q_agg_gap_max,
-        "agg_boolean_any": q_agg_boolean_any,
-        "agg_groupwise_stats": q_agg_groupwise_stats,
-        "scalar_chain": q_scalar_chain,
-        "json_extract": q_json_extract,
-        "sort_limit_topk": q_sort_limit_topk,
-        "filter_date_range": q_filter_date_range,
-        "summary_coverage": q_summary_coverage,
-        "asof_join_bars": q_asof_join_bars,
-        "set_ops": q_set_ops,
-        "dedup_exact": q_dedup_exact,
-        "ann_topk": q_ann_topk,
-        "amihud_illiquidity": q_amihud_illiquidity,
-        "turn_of_month": q_turn_of_month,
-        "lexical_diversity": q_lexical_diversity,
-        "calendar_coverage": q_calendar_coverage,
-        "agg_pricing_summary": q_agg_pricing_summary,
-        "underwater_spells": q_underwater_spells,
-        "volume_profile": q_volume_profile,
-        "win_rolling_frame": q_win_rolling_frame,
-        "cube_rollup": q_cube_rollup,
-        "pivot_status": q_pivot_status,
-        "window_tumbling_7d": q_window_tumbling_7d,
-        "shipping_priority": q_shipping_priority,
-        "regional_revenue": q_regional_revenue,
-        "funnel_3step": q_funnel_3step,
-        "small_qty_revenue": q_small_qty_revenue,
-        "big_orders": q_big_orders,
-        "range_join_shipments": q_range_join_shipments,
-        "multi_res_rollup": q_multi_res_rollup,
-        "snapshot_diff": q_snapshot_diff,
-        # last driver-hashed r10
-        "liquidity_screen": q_liquidity_screen,
-        "stale_price_runs": q_stale_price_runs,
-        "range_position": q_range_position,
-        "index_daily_return": q_index_daily_return,
-        "factor_rank_ic": q_factor_rank_ic,
-        "beta_vs_index": q_beta_vs_index,
-        "calendar_anomalies": q_calendar_anomalies,
-        "market_regime_streaks": q_market_regime_streaks,
-        "packing_efficiency": q_packing_efficiency,
-        "decile_spread": q_decile_spread,
-        "risk_summary": q_risk_summary,
-        "bm25_score": q_bm25_score,
-        "pack_sequences": q_pack_sequences,
-        "keyword_search": q_keyword_search,
-        "gap_fill_linear": q_gap_fill_linear,
-        "rfm_segments": q_rfm_segments,
-        # last driver-hashed r9
-        "drift_alert_report": q_drift_alert_report,
-        "mixture_epoch_plan": q_mixture_epoch_plan,
-        "stratified_quota_split": q_stratified_quota_split,
-        "asof_join_tolerance": q_asof_join_tolerance,
-        "sessionize_skewsafe": q_sessionize_skewsafe,
-        "pps_weighted_sample": q_pps_weighted_sample,
-        "price_distribution": q_price_distribution,
-        "skew_report": q_skew_report,
-        "class_centroids": q_class_centroids,
-        "quantize_embeddings": q_quantize_embeddings,
-        "centroid_outliers": q_centroid_outliers,
-        "split_adjusted_prices": q_split_adjusted_prices,
-        "overnight_intraday": q_overnight_intraday,
-        "line_boilerplate": q_line_boilerplate,
-        "quality_gate": q_quality_gate,
-        "novelty_timeline": q_novelty_timeline,
-        "zipf_slope": q_zipf_slope,
-        # last driver-hashed r8
-        "length_ks_drift": q_length_ks_drift,
-        "snapshot_diff_wide": q_snapshot_diff_wide,
-        "agg_maintain": q_agg_maintain,
-        "decay_weighted": q_decay_weighted,
-        "top_revenue_supplier": q_top_revenue_supplier,
-        "supplier_part_counts": q_supplier_part_counts,
-        "disjunctive_revenue": q_disjunctive_revenue,
-        "dominant_suppliers": q_dominant_suppliers,
-        "hist_bins": q_hist_bins,
-        "dense_ids": q_dense_ids,
-        "unpivot_ohlc": q_unpivot_ohlc,
-        "longest_up_streak": q_longest_up_streak,
-        "salted_flag_totals": q_salted_flag_totals,
-        "vwap_brand": q_vwap_brand,
-        "market_breadth": q_market_breadth,
-        "repeat_purchase_rate": q_repeat_purchase_rate,
-        # --- EPS queries (rule 4: engine-order-sensitive rounded floats;
-        # never windowed BY DESIGN — their hash-exact fixed-point twins
-        # carry the driver-grade evidence; see README "EPS queries") ---
-        "rolling_beta": q_rolling_beta,
-        "unigram_logprob": q_unigram_logprob,
-        "source_kl": q_source_kl,
-        "autocorrelation": q_autocorrelation,
-        "dsir_weights": q_dsir_weights,
-        "nb_self_loglik": q_nb_self_loglik,
-        # --- rows-only from here (approximate / hash-value-specific) ---
-        "approx_distinct": q_approx_distinct,
-        "winnow_fingerprints": q_winnow_fingerprints,
-        "minhash_neardup": q_minhash_neardup,
-        "simhash_neardup": q_simhash_neardup,
-        "simhash_multi_index": q_simhash_multi_index,
-        "ann_lsh_topk": q_ann_lsh_topk,
-        "ann_projected_topk": q_ann_projected_topk,
-        "k_core": q_k_core,
-        "ann_ivf_topk": q_ann_ivf_topk,
-        "embedding_neardup_lsh": q_embedding_neardup_lsh,
-        "semantic_dedup": q_semantic_dedup,
-        "pagerank": q_pagerank,
-        "source_overlap_kmv": q_source_overlap_kmv,
-        "bpe_vocab": q_bpe_vocab,
-        "bpe_encode_stats": q_bpe_encode_stats,
-        "kmeans_clusters": q_kmeans_clusters,
-        "cluster_balanced_sample": q_cluster_balanced_sample,
-        "training_prep": q_training_prep,
-        "pca_variance": q_pca_variance,
-        "incremental_minhash": q_incremental_minhash,
-        "bloom_decontaminate": q_bloom_decontaminate,
-    }
+    """The window, then the other oracled queries, then the rows-only
+    ones; past the window, in family order."""
+    qs = declared()
+    oracled = [n for n, fn in qs.items() if hasattr(fn, "oracle") and n not in WINDOW]
+    rows_only = [n for n, fn in qs.items() if not hasattr(fn, "oracle")]
+    return {n: qs[n] for n in (*WINDOW, *oracled, *rows_only)}
 
 
 def oracle_sql() -> dict[str, str]:
-    d = _oracle_sql_base()
-    d["neardup_consensus"] = f"""
-WITH tp AS ({d["ngram_jaccard_neardup"]}), ep AS ({d["embedding_neardup"]})
-SELECT coalesce(t.id_a, e.id_a) AS id_a,
-       coalesce(t.id_b, e.id_b) AS id_b,
-       t.jaccard, e.cosine_sim,
-       t.id_a IS NOT NULL AS text_dup,
-       e.id_a IS NOT NULL AS semantic_dup,
-       CASE WHEN t.id_a IS NOT NULL AND e.id_a IS NOT NULL THEN 'both'
-            WHEN t.id_a IS NOT NULL THEN 'text_only'
-            ELSE 'semantic_only' END AS agreement
-FROM tp t FULL OUTER JOIN ep e ON t.id_a = e.id_a AND t.id_b = e.id_b
-ORDER BY 1, 2
-"""
-    d["classifier_confusion"] = f"""
-WITH tv AS ({d["token_vote_classify"]}), per_label AS (
-  SELECT source, count(*) AS n_docs,
-         sum(CASE WHEN is_correct THEN 1 ELSE 0 END) AS n_correct
-  FROM tv GROUP BY source
-), per_pred AS (
-  SELECT pred_source AS source, count(*) AS n_pred FROM tv
-  WHERE pred_source IS NOT NULL GROUP BY pred_source
-)
-SELECT l.source, CAST(l.n_docs AS BIGINT) AS n_docs,
-       CAST(coalesce(p.n_pred, 0) AS BIGINT) AS n_pred,
-       CAST(l.n_correct AS BIGINT) AS n_correct,
-       CAST(l.n_correct * 1000000 // l.n_docs AS BIGINT) AS recall_ppm,
-       CASE WHEN coalesce(p.n_pred, 0) > 0
-            THEN CAST(l.n_correct * 1000000 // p.n_pred AS BIGINT) END AS precision_ppm
-FROM per_label l LEFT JOIN per_pred p USING (source)
-ORDER BY l.source
-"""
-    d["important_stock"] = """
-WITH per_part AS (
-  SELECT l_partkey,
-         round(sum(l_extendedprice * (1 - l_discount)), 2) AS part_value
-  FROM lineitem
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation ON s_nationkey = n_nationkey
-  WHERE n_name = 'NATION_7'
-  GROUP BY l_partkey
-), tot AS (
-  SELECT sum(part_value) AS total FROM per_part
-)
-SELECT l_partkey, part_value,
-       round(part_value / total, 6) AS share
-FROM per_part, tot
-WHERE part_value > 0.001 * total
-ORDER BY part_value DESC, l_partkey ASC
-"""
-    d["link_prediction"] = """
-WITH li AS (
-  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-), und AS (
-  SELECT x.l_partkey AS a, y.l_partkey AS b
-  FROM li x JOIN li y
-    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey
-  GROUP BY 1, 2 HAVING count(*) >= 2
-), adj AS (
-  SELECT a AS w, b AS n FROM und UNION ALL SELECT b AS w, a AS n FROM und
-), cn AS (
-  SELECT x.n AS u, y.n AS v, CAST(count(*) AS BIGINT) AS common_neighbors
-  FROM adj x JOIN adj y ON x.w = y.w AND x.n < y.n
-  GROUP BY 1, 2 HAVING count(*) >= 2
-), open_pairs AS (
-  SELECT cn.* FROM cn
-  WHERE NOT EXISTS (SELECT 1 FROM und WHERE und.a = cn.u AND und.b = cn.v)
-), deg AS (
-  SELECT w AS node, CAST(count(*) AS BIGINT) AS deg FROM adj GROUP BY w
-)
-SELECT u, v, common_neighbors, du.deg AS deg_u, dv.deg AS deg_v,
-       round(CAST(common_neighbors AS DOUBLE)
-             / CAST(du.deg + dv.deg - common_neighbors AS DOUBLE), 6) AS jaccard
-FROM open_pairs
-JOIN deg du ON u = du.node
-JOIN deg dv ON v = dv.node
-ORDER BY jaccard DESC, common_neighbors DESC, u ASC, v ASC
-LIMIT 25
-"""
-    d["decay_weighted"] = """
-WITH anchored AS (
-  SELECT event_type,
-         CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents,
-         least(CAST(floor(date_diff('day', CAST(ts AS DATE),
-                                    (SELECT max(CAST(ts AS DATE)) FROM events
-                                     -- anchor AFTER the same exclusion:
-                                     -- a NULL-value row holding the max
-                                     -- ts must not shift every h
-                                     WHERE ts IS NOT NULL
-                                       AND value IS NOT NULL))
-                          / 7) AS INTEGER), 10) AS h
-  FROM events
-  -- mirrors decayed_totals' up-front NULL exclusion: a NULL ts would
-  -- take the cap weight via least(NULL, 10) and a NULL value would
-  -- count in n_events without contributing to either sum
-  WHERE ts IS NOT NULL AND value IS NOT NULL
-)
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n_events,
-       round(CAST(sum(cents) AS DOUBLE) / 100, 2) AS raw_total,
-       round(CAST(sum(cents * (CAST(1 AS BIGINT) << (10 - h))) AS DOUBLE)
-             / (100.0 * 1024.0), 6) AS decayed_total
-FROM anchored
-GROUP BY event_type
-ORDER BY event_type
-"""
-    d["classifier_calibration"] = f"""
-WITH tv AS ({d["token_vote_classify"]}), scored AS (
-  SELECT doc_id, CASE WHEN is_correct THEN 1 ELSE 0 END AS ok,
-         CAST(score_fx AS DOUBLE) / 1e9 / n_scored AS mv
-  FROM tv WHERE pred_source IS NOT NULL
-), rng AS (
-  SELECT min(mv) AS lo, max(mv) AS hi FROM scored
-), binned AS (
-  SELECT ok, mv,
-         CAST(CASE WHEN hi > lo
-                   THEN least(floor((mv - lo) / (hi - lo) * 10), 9)
-                   ELSE 0 END AS INTEGER) AS bin
-  FROM scored, rng
-)
-SELECT bin, CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(ok) AS BIGINT) AS n_correct,
-       CAST(sum(ok) * 1000000 // count(*) AS BIGINT) AS accuracy_ppm,
-       round(min(mv), 6) AS min_conf,
-       round(max(mv), 6) AS max_conf
-FROM binned GROUP BY bin ORDER BY bin
-"""
-    d["agg_maintain"] = """
-WITH o AS (
-  SELECT o_orderkey, o_custkey,
-         CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
-  FROM orders
-)
-SELECT o_custkey,
-       CAST(count(*) AS BIGINT) AS n_orders,
-       round(CAST(sum(cents) AS DOUBLE) / 100, 2) AS total_value
-FROM o WHERE o_orderkey % 5 != 0
-GROUP BY o_custkey
-ORDER BY o_custkey
-"""
-    d["snapshot_diff_wide"] = """
-WITH old AS (
-  SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderdate,
-         o_orderpriority
-  FROM orders WHERE o_orderkey % 7 != 0
-), new AS (
-  SELECT o_orderkey, o_custkey, o_orderstatus,
-         CASE WHEN o_orderpriority = '1-URGENT' THEN o_totalprice + 1
-              ELSE o_totalprice END AS o_totalprice,
-         o_orderdate, o_orderpriority
-  FROM orders WHERE o_orderkey % 5 != 0
-), j AS (
-  SELECT coalesce(o.o_orderkey, n.o_orderkey) AS o_orderkey,
-         CASE WHEN o.o_orderkey IS NULL THEN 'insert'
-              WHEN n.o_orderkey IS NULL THEN 'delete'
-              WHEN NOT (o.o_custkey IS NOT DISTINCT FROM n.o_custkey
-                        AND o.o_orderstatus IS NOT DISTINCT FROM n.o_orderstatus
-                        AND o.o_totalprice IS NOT DISTINCT FROM n.o_totalprice
-                        AND o.o_orderdate IS NOT DISTINCT FROM n.o_orderdate
-                        AND o.o_orderpriority IS NOT DISTINCT FROM n.o_orderpriority)
-                   THEN 'update' END AS change_type,
-         o.o_custkey AS old_o_custkey, o.o_orderstatus AS old_o_orderstatus,
-         o.o_totalprice AS old_o_totalprice, o.o_orderdate AS old_o_orderdate,
-         o.o_orderpriority AS old_o_orderpriority,
-         n.o_custkey AS new_o_custkey, n.o_orderstatus AS new_o_orderstatus,
-         n.o_totalprice AS new_o_totalprice, n.o_orderdate AS new_o_orderdate,
-         n.o_orderpriority AS new_o_orderpriority
-  FROM old o FULL OUTER JOIN new n ON o.o_orderkey = n.o_orderkey
-)
-SELECT * FROM j WHERE change_type IS NOT NULL
-ORDER BY o_orderkey
-"""
-    d["dup_source_matrix"] = f"""
-WITH pairs AS ({d["ngram_jaccard_neardup"]})
-SELECT least(da.source, db.source) AS source_a,
-       greatest(da.source, db.source) AS source_b,
-       CAST(count(*) AS BIGINT) AS n_pairs,
-       max(p.jaccard) AS max_jaccard
-FROM pairs p
-JOIN documents da ON p.id_a = da.doc_id
-JOIN documents db ON p.id_b = db.doc_id
-GROUP BY 1, 2
-ORDER BY 1, 2
-"""
-    d["bigram_prob_score"] = """
-WITH arr AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                     x -> x != '') AS t
-  FROM documents
-), grams AS (
-  SELECT doc_id, t[i + 1] AS w1, t[i + 2] AS w2
-  FROM arr, UNNEST(range(0, len(t) - 1)) AS u(i)
-), big AS (
-  SELECT w1, w2, count(*) AS bc FROM grams GROUP BY 1, 2
-), top_big AS (
-  SELECT w1, w2, bc FROM big ORDER BY bc DESC, w1 ASC, w2 ASC LIMIT 64
-), ctx AS (
-  SELECT w1, count(*) AS cc FROM grams GROUP BY 1
-), top_ctx AS (
-  SELECT w1, cc FROM ctx ORDER BY cc DESC, w1 ASC LIMIT 16
-), scored AS (
-  SELECT g.doc_id,
-         CAST(floor((coalesce(tb.bc, 0) + 1)
-                    / (coalesce(tc.cc, 0) + 17) * 1e12 + 0.5) AS BIGINT) AS p_fx
-  FROM grams g
-  LEFT JOIN top_big tb ON g.w1 = tb.w1 AND g.w2 = tb.w2
-  LEFT JOIN top_ctx tc ON g.w1 = tc.w1
-)
-SELECT doc_id,
-       floor(sum(p_fx) / count(*) / 1e3 + 0.5) / 1e9 AS mean_bigram_prob,
-       CAST(count(*) AS BIGINT) AS n_bigrams
-FROM scored GROUP BY doc_id ORDER BY doc_id
-"""
-    d["length_ks_drift"] = """
-WITH counts AS (
-  SELECT source AS grp, n_chars AS v, CAST(count(*) AS BIGINT) AS n_gv
-  FROM documents
-  -- mirrors ks_drift's uniform NULL exclusion (NULL group/value rows
-  -- are outside every ECDF by contract)
-  WHERE source IS NOT NULL AND n_chars IS NOT NULL
-  GROUP BY 1, 2
-), domain AS (
-  SELECT v, sum(n_gv) AS n_v FROM counts GROUP BY v
-), dom_cum AS (
-  SELECT v, sum(n_v) OVER (ORDER BY v
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_v
-  FROM domain
-), grp_tot AS (
-  SELECT grp, sum(n_gv) AS n_g FROM counts GROUP BY grp
-), n AS (
-  SELECT sum(n_gv) AS n_total FROM counts
-), grid AS (
-  SELECT g.grp, g.n_g, d.v, d.cum_v, coalesce(c.n_gv, 0) AS n_gv
-  FROM grp_tot g CROSS JOIN dom_cum d
-  LEFT JOIN counts c ON c.grp = g.grp AND c.v = d.v
-), ecdf AS (
-  SELECT grp, v, n_g,
-         abs(CAST(sum(n_gv) OVER (PARTITION BY grp ORDER BY v
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-             / CAST(n_g AS DOUBLE)
-             - CAST(cum_v AS DOUBLE) / CAST(n_total AS DOUBLE)) AS d
-  FROM grid, n
-)
-SELECT grp AS source, CAST(max(n_g) AS BIGINT) AS n_docs,
-       round(max(d), 6) AS ks_d,
-       first(v ORDER BY d DESC, v ASC) AS at_value
-FROM ecdf GROUP BY grp ORDER BY grp
-"""
-    d["term_chi2"] = """
-WITH pres AS (
-  SELECT DISTINCT doc_id, source AS cls,
-         unnest(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                            t -> t != '')) AS term
-  FROM documents WHERE source IS NOT NULL
-), a AS (
-  SELECT cls, term, CAST(count(*) AS BIGINT) AS a FROM pres GROUP BY 1, 2
-), term_df AS (
-  SELECT term, sum(a) AS t_df FROM a GROUP BY term
-), cls_n AS (
-  -- mirrors term_class_chi2's NULL-class exclusion EVERYWHERE incl. N:
-  -- a NULL-source doc must sit outside every 2x2 cell, not inside N only
-  SELECT source AS cls, CAST(count(*) AS BIGINT) AS c_n
-  FROM documents WHERE source IS NOT NULL GROUP BY source
-), n AS (
-  SELECT CAST(count(*) AS BIGINT) AS n FROM documents
-  WHERE source IS NOT NULL
-), cells AS (
-  SELECT a.cls, a.term, a.a,
-         CAST(a.a AS DOUBLE) AS ad,
-         CAST(t_df - a.a AS DOUBLE) AS bd,
-         CAST(c_n - a.a AS DOUBLE) AS cd,
-         CAST(n - t_df - c_n + a.a AS DOUBLE) AS dd,
-         CAST(n AS DOUBLE) AS nd
-  FROM a JOIN term_df USING (term) JOIN cls_n USING (cls), n
-  WHERE t_df >= 5
-), scored AS (
-  SELECT cls, term, a AS df_in_class,
-         round(CASE WHEN (ad + bd) * (cd + dd) * (ad + cd) * (bd + dd) = 0
-                    THEN 0.0
-                    ELSE nd * ((ad * dd - bd * cd) * (ad * dd - bd * cd))
-                         / ((ad + bd) * (cd + dd) * (ad + cd) * (bd + dd))
-               END, 6) AS chi2
-  FROM cells
-)
-SELECT cls, rnk, term, df_in_class, chi2 FROM (
-  SELECT cls, term, df_in_class, chi2,
-         CAST(row_number() OVER (PARTITION BY cls ORDER BY chi2 DESC, term ASC)
-              AS INTEGER) AS rnk
-  FROM scored)
-WHERE rnk <= 10
-ORDER BY cls, rnk
-"""
-    d["asof_join_tolerance"] = """
-WITH bars AS (
-  SELECT user_id,
-         CAST(ts AS DATE) + CAST((5 - isodow(CAST(ts AS DATE)) + 7) % 7 AS INTEGER)
-           AS period_end,
-         last(value ORDER BY ts, event_id) AS bar_close
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL GROUP BY 1, 2
-), m AS (
-  SELECT e.user_id, e.event_id, CAST(e.ts AS DATE) AS d, e.value,
-         b.bar_close, b.period_end
-  FROM (SELECT * FROM events
-        WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL) e
-  ASOF LEFT JOIN bars b
-    ON e.user_id = b.user_id AND CAST(e.ts AS DATE) >= b.period_end
-)
-SELECT user_id, event_id, d, value,
-       CASE WHEN d - period_end > 14 THEN NULL ELSE bar_close END AS bar_close,
-       CASE WHEN d - period_end > 14 THEN NULL ELSE period_end END
-         AS bar_period_end
-FROM m
-"""
-    # the two-phase skew-bounded fold must produce IDENTICAL sessions:
-    # same oracle, verbatim — equivalence is driver-hash-checked
-    d["sessionize_skewsafe"] = d["sessionize"]
-    d["drift_alert_report"] = """
-WITH ev AS (
-  SELECT event_type, event_id,
-         CAST(round(value * 100, 0) AS BIGINT) AS cents
-  FROM events
-  WHERE event_type IS NOT NULL AND value IS NOT NULL
-    AND event_id IS NOT NULL
-), cur AS (
-  SELECT event_type AS grp, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(cents) AS BIGINT) AS vsum
-  FROM ev WHERE event_id % 5 = 0 GROUP BY 1
-), st AS (
-  SELECT event_type AS grp, CAST(count(*) AS BIGINT) AS base_n,
-         CAST(sum(cents) AS BIGINT) AS base_vsum
-  FROM ev WHERE event_id % 5 != 0 GROUP BY 1
-)
-SELECT c.grp AS event_type, c.n AS batch_n,
-       floor(CAST(c.vsum AS DOUBLE) / c.n * 1e6 + 0.5) / 1e6 AS batch_mean,
-       floor(CAST(s.base_vsum AS DOUBLE) / s.base_n * 1e6 + 0.5) / 1e6
-         AS trailing_mean
-FROM cur c JOIN st s USING (grp)
-WHERE c.n >= 20
-  AND abs(CAST(c.vsum AS DOUBLE) / c.n
-          - CAST(s.base_vsum AS DOUBLE) / s.base_n)
-      > 0.02 * abs(CAST(s.base_vsum AS DOUBLE) / s.base_n)
-ORDER BY event_type
-"""
-    d["pps_weighted_sample"] = """
-WITH src AS (
-  SELECT doc_id, CAST(n_chars AS BIGINT) AS w, doc_id % 64 AS st
-  FROM documents
-  WHERE doc_id IS NOT NULL AND n_chars IS NOT NULL AND n_chars > 0
-), cum AS (
-  SELECT doc_id, w, st,
-         sum(w) OVER (PARTITION BY st ORDER BY doc_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS cw_in
-  FROM src
-), offs AS (
-  SELECT st, sum(w) AS st_w FROM src GROUP BY st
-), offs2 AS (
-  SELECT st,
-         coalesce(sum(st_w) OVER (ORDER BY st
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           AS st_off,
-         sum(st_w) OVER () AS t
-  FROM offs
-), lined AS (
-  SELECT c.doc_id, c.w, c.cw_in + o.st_off AS cum_w, o.t
-  FROM cum c JOIN offs2 o USING (st)
-)
-SELECT doc_id, CAST(w AS BIGINT) AS weight,
-       CAST(cum_w - w AS BIGINT) AS line_start,
-       CAST(cum_w * 100 // t - (cum_w - w) * 100 // t AS BIGINT) AS n_picks
-FROM lined
-WHERE cum_w * 100 // t - (cum_w - w) * 100 // t > 0
-ORDER BY doc_id
-"""
-    d["gopher_quality_flags"] = r"""
-WITH src AS (
-  SELECT doc_id, coalesce(text, '') AS text
-  FROM documents WHERE doc_id IS NOT NULL
-), w AS (
-  SELECT doc_id, text,
-         list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '')
-           AS words,
-         list_filter(string_split(text, chr(10)), x -> trim(x) <> '')
-           AS lines
-  FROM src
-), m AS (
-  SELECT doc_id,
-    len(words) AS n_words,
-    coalesce(list_sum(list_transform(words, x -> length(x))), 0) AS wchars,
-    len(list_filter(words, x -> regexp_matches(x, '[A-Za-z]'))) AS n_alpha,
-    CAST(len(list_filter(words,
-         x -> lower(x) IN ('the','a','and','of','to'))) AS BIGINT)
-      AS n_stopwords,
-    length(text) - length(replace(text, '#', '')) AS n_hash,
-    (length(text) - length(replace(text, '...', ''))) // 3 AS n_ell,
-    len(lines) AS n_lines,
-    len(list_filter(lines, x -> starts_with(ltrim(x), '-')
-        OR starts_with(ltrim(x), '*') OR starts_with(ltrim(x), '•')))
-      AS n_bullet,
-    len(list_filter(lines, x -> ends_with(rtrim(x), '...')
-        OR ends_with(rtrim(x), '…'))) AS n_ell_lines
-  FROM w
-), r AS (
-  SELECT doc_id, n_words, n_stopwords,
-    CASE WHEN n_words > 0
-         THEN floor(wchars * 1.0 / n_words * 1e4 + 0.5) / 1e4
-         ELSE 0.0 END AS mean_word_len,
-    CASE WHEN n_words > 0
-         THEN floor((n_hash + n_ell) * 1.0 / n_words * 1e6 + 0.5) / 1e6
-         ELSE 0.0 END AS symbol_ratio,
-    CASE WHEN n_words > 0
-         THEN floor(n_alpha * 1.0 / n_words * 1e6 + 0.5) / 1e6
-         ELSE 0.0 END AS alpha_share,
-    CASE WHEN n_lines > 0
-         THEN floor(n_bullet * 1.0 / n_lines * 1e6 + 0.5) / 1e6
-         ELSE 0.0 END AS bullet_share,
-    CASE WHEN n_lines > 0
-         THEN floor(n_ell_lines * 1.0 / n_lines * 1e6 + 0.5) / 1e6
-         ELSE 0.0 END AS ellipsis_share
-  FROM m
-)
-SELECT doc_id, n_words, mean_word_len, symbol_ratio, alpha_share,
-       n_stopwords, bullet_share, ellipsis_share,
-  (n_words >= 20 AND n_words <= 100000) AS flag_word_count,
-  (mean_word_len >= 3.0 AND mean_word_len <= 10.0) AS flag_mean_word_len,
-  (symbol_ratio <= 0.1) AS flag_symbol,
-  (bullet_share <= 0.9) AS flag_bullet,
-  (ellipsis_share <= 0.3) AS flag_ellipsis,
-  (alpha_share >= 0.8) AS flag_alpha,
-  (n_stopwords >= 2) AS flag_stopwords,
-  ((n_words >= 20 AND n_words <= 100000)
-   AND (mean_word_len >= 3.0 AND mean_word_len <= 10.0)
-   AND symbol_ratio <= 0.1 AND bullet_share <= 0.9
-   AND ellipsis_share <= 0.3 AND alpha_share >= 0.8
-   AND n_stopwords >= 2) AS passes_gopher
-FROM r
-ORDER BY doc_id
-"""
-    d["mixture_epoch_plan"] = r"""
-WITH per AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(coalesce(sum(len(list_filter(
-           string_split_regex(lower(trim(text)), '\s+'), t -> t != ''))), 0)
-           AS BIGINT) AS avail_tokens
-  FROM documents WHERE source IS NOT NULL GROUP BY source
-), wt AS (
-  SELECT * FROM (VALUES ('src0', 5), ('src1', 3), ('src2', 2), ('src3', 1))
-    AS t(source, weight)
-), j AS (
-  SELECT p.source, p.n_docs, p.avail_tokens,
-         CAST(coalesce(w.weight, 0) AS BIGINT) AS weight
-  FROM per p LEFT JOIN wt w USING (source)
-), tot AS (
-  SELECT j.*, CAST(sum(weight) OVER () AS BIGINT) AS wt_total FROM j
-), alloc AS (
-  SELECT source, n_docs, avail_tokens, weight,
-         CAST(CASE WHEN wt_total > 0
-              THEN (1000000 * weight) // wt_total ELSE 0 END AS BIGINT)
-           AS allocated_tokens
-  FROM tot
-)
-SELECT source, n_docs, avail_tokens, weight, allocated_tokens,
-  CAST(CASE WHEN avail_tokens > 0 AND allocated_tokens > 0
-       THEN (allocated_tokens + avail_tokens - 1) // avail_tokens
-       ELSE 0 END AS BIGINT) AS epochs,
-  CASE WHEN avail_tokens > 0
-       THEN floor(allocated_tokens * 1.0 / avail_tokens * 1e6 + 0.5) / 1e6
-       ELSE 0.0 END AS sample_rate
-FROM alloc
-ORDER BY source
-"""
-    d["stratified_quota_split"] = """
-WITH ranked AS (
-  SELECT doc_id, source,
-         row_number() OVER (PARTITION BY source
-           ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn,
-         count(*) OVER (PARTITION BY source) AS n
-  FROM documents WHERE doc_id IS NOT NULL
-)
-SELECT doc_id, source,
-  CASE WHEN rn > (n * 0 + 999) // 1000 AND rn <= (n * 50 + 999) // 1000
-         THEN 'test'
-       WHEN rn > (n * 50 + 999) // 1000 AND rn <= (n * 150 + 999) // 1000
-         THEN 'val'
-       ELSE 'train' END AS split
-FROM ranked
-ORDER BY doc_id
-"""
-    return d
-
-
-def _oracle_sql_base() -> dict[str, str]:
-    return {
-        "embedding_moments": """
-WITH stream AS (
-  SELECT unnest(range(0, len(embedding))) AS dim,
-         unnest(embedding) AS x
-  FROM embeddings
-), q AS (
-  SELECT dim, CAST(floor(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS q
-  FROM stream
-)
-SELECT CAST(dim AS BIGINT) AS dim,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(q) AS BIGINT) AS sum_fx,
-       CAST(sum(q * q) AS BIGINT) AS sumsq_fx
-FROM q GROUP BY dim ORDER BY dim
-""",
-
-        "packed_sequences": """
-WITH keyed AS (
-  SELECT doc_id, text, md5('42:' || CAST(doc_id AS VARCHAR)) AS k
-  FROM documents
-), ordered AS (
-  SELECT text,
-         CAST(('0x' || substr(k, 1, 8))::UBIGINT % 8 AS BIGINT) AS shard,
-         row_number() OVER (
-           PARTITION BY ('0x' || substr(k, 1, 8))::UBIGINT % 8
-           ORDER BY k ASC, doc_id ASC) AS pos
-  FROM keyed
-), toks AS (
-  SELECT shard, pos,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                     x -> x != '') AS tk
-  FROM ordered
-), offs AS (
-  SELECT shard, tk,
-         coalesce(sum(len(tk)) OVER (
-           PARTITION BY shard ORDER BY pos
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
-  FROM toks
-), stream AS (
-  SELECT shard,
-         off + unnest(range(0, len(tk))) AS gpos,
-         unnest(tk) AS tok
-  FROM offs
-)
-SELECT shard, CAST(gpos // 64 AS BIGINT) AS seq_id,
-       CAST(count(*) AS BIGINT) AS n_tokens,
-       string_agg(tok, ' ' ORDER BY gpos % 64) AS token_str
-FROM stream GROUP BY shard, gpos // 64
-ORDER BY shard, seq_id
-""",
-
-        "wmy_gold_pipeline": """
-WITH bars AS (
-  SELECT user_id, CAST(ts AS DATE) AS d, ts, event_id, value FROM events
-  WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL
-), gapped AS (
-  -- gap counted only when the PREVIOUS bar is already past the cutoff:
-  -- diffs within the date >= cutoff subset, boundary gap excluded
-  -- (downloader_wmy.py:103-107 filters first, then diffs)
-  SELECT user_id, value,
-         CASE WHEN lag(d) OVER (PARTITION BY user_id ORDER BY d) >= DATE '2024-01-01'
-              THEN date_diff('day', lag(d) OVER (PARTITION BY user_id ORDER BY d), d)
-         END AS gap
-  FROM bars
-), gates AS (
-  SELECT user_id,
-         max(CASE WHEN value <= 0 THEN 1 ELSE 0 END) = 1 AS invalid_price,
-         coalesce(max(gap) > 14, FALSE) AS gap_too_large
-  FROM gapped GROUP BY user_id
-), clean AS (
-  SELECT b.* FROM bars b JOIN gates g ON b.user_id = g.user_id
-  WHERE NOT g.invalid_price AND NOT g.gap_too_large
-), res AS (
-  SELECT user_id, 'W' AS freq,
-         d + CAST((5 - isodow(d) + 7) % 7 AS INTEGER) AS period_end,
-         first(value ORDER BY ts, event_id) AS open,
-         max(value) AS high, min(value) AS low,
-         last(value ORDER BY ts, event_id) AS close,
-         sum(value) AS sum_value
-  FROM clean GROUP BY 1, 3
-  UNION ALL
-  SELECT user_id, 'M', last_day(d), first(value ORDER BY ts, event_id), max(value),
-         min(value), last(value ORDER BY ts, event_id), sum(value)
-  FROM clean GROUP BY 1, 3
-)
-SELECT user_id, freq, period_end, open, high, low, close,
-       round(sum_value, 4) AS sum_value,
-       round(close / lag(close) OVER (PARTITION BY user_id, freq ORDER BY period_end) - 1, 4)
-         AS period_return
-FROM res
-""",
-        "wmy_weekly_resample_returns": _wmy_oracle("W"),
-        "wmy_monthly_resample_returns": _wmy_oracle("M"),
-        "wmy_yearly_resample_returns": _wmy_oracle("Y"),
-        "agg_multi": """
-SELECT count(DISTINCT l_partkey) AS n_parts, max(l_shipdate) AS max_shipdate,
-       count(*) AS n_rows FROM lineitem
-""",
-        "agg_pricing_summary": """
-SELECT l_returnflag, l_linestatus,
-       sum(l_quantity) AS sum_qty,
-       sum(l_extendedprice) AS sum_base_price,
-       sum(l_extendedprice * (1 - l_discount)) AS sum_disc_price,
-       avg(l_quantity) AS avg_qty,
-       avg(l_discount) AS avg_disc,
-       count(*) AS count_order
-FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-""",
-        "dedup_last_writer": """
-SELECT l_partkey, l_suppkey, l_orderkey, l_linenumber, l_shipdate
-FROM (SELECT l_partkey, l_suppkey, l_orderkey, l_linenumber, l_shipdate,
-             row_number() OVER (PARTITION BY l_partkey, l_suppkey
-                                ORDER BY (l_shipdate, l_orderkey, l_linenumber) DESC) AS rn
-      FROM lineitem) WHERE rn = 1
-""",
-        "filter_normalize": """
-SELECT p_partkey,
-       upper(trim(p_brand)) AS brand_id,
-       lpad(CAST(p_size AS VARCHAR), 3, '0') AS size_code,
-       split_part(p_type, ' ', 1) AS type_head
-FROM part
-WHERE p_size >= 4
-  AND regexp_matches(p_brand, '^[A-Za-z0-9#]+$')
-  AND NOT regexp_matches(upper(p_type), 'ANODIZED|BURNISHED')
-""",
-        "join_broadcast_lookup": """
-SELECT c_custkey, coalesce(n_name, c_mktsegment, 'Unknown') AS nation
-FROM customer LEFT JOIN nation ON c_nationkey = n_nationkey
-""",
-        "join_facts_dim": """
-SELECT c_mktsegment, count(*) AS n_orders, round(sum(o_totalprice), 2) AS total_revenue
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY c_mktsegment
-""",
-        "join_anti_missing": """
-SELECT c_custkey, c_name FROM customer
-WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
-""",
-        "join_semi_active": """
-SELECT s_suppkey, s_name FROM supplier
-WHERE s_suppkey IN (SELECT l_suppkey FROM lineitem)
-""",
-        "win_rank_topk": """
-SELECT o_orderpriority, rk, o_orderkey, o_totalprice
-FROM (SELECT o_orderpriority, o_orderkey, o_totalprice,
-             row_number() OVER (PARTITION BY o_orderpriority
-                                ORDER BY o_totalprice DESC, o_orderkey ASC) AS rk
-      FROM orders) WHERE rk <= 3
-""",
-        "agg_gap_max": """
-WITH g AS (
-  SELECT user_id,
-         date_diff('day',
-                   lag(CAST(ts AS DATE)) OVER (PARTITION BY user_id ORDER BY CAST(ts AS DATE)),
-                   CAST(ts AS DATE)) AS gap_days
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL)
-SELECT user_id, max(gap_days) AS max_gap_days FROM g GROUP BY user_id
-""",
-        "agg_boolean_any": """
-SELECT l_returnflag,
-       max(CASE WHEN l_discount > 0.08 THEN 1 ELSE 0 END) = 1 AS any_deep_discount,
-       max(CASE WHEN l_quantity <= 0 THEN 1 ELSE 0 END) = 1 AS any_nonpositive_qty
-FROM lineitem GROUP BY l_returnflag
-""",
-        # CAST(sum(...) AS BIGINT): DuckDB's integer sum() is HUGEINT, which
-        # pandas renders as float64 — the driver's value hash then mismatches
-        # Spark's bigint even when the numbers are equal
-        "agg_groupwise_stats": """
-SELECT o_orderpriority, total, finished, success_rate,
-       CASE WHEN success_rate >= 30.0 THEN 'OK' ELSE 'WARN' END AS status
-FROM (SELECT o_orderpriority, count(*) AS total,
-             CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS finished,
-             round(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) * 100.0 / count(*), 2)
-               AS success_rate
-      FROM orders GROUP BY o_orderpriority)
-""",
-        "scalar_chain": """
-SELECT o_orderkey,
-       upper(trim(o_orderpriority)) AS prio_canon,
-       lpad(CAST(o_orderkey AS VARCHAR), 12, '0') AS key_padded,
-       split_part(o_orderpriority, '-', 1) AS prio_code,
-       CAST(o_orderdate AS DATE) AS order_date,
-       strftime(o_orderdate, '%Y-%m-%d') AS order_date_str,
-       round(o_totalprice / 7.0, 4) AS price_per_week,
-       CAST(o_orderdate AS DATE)
-         + CAST((5 - isodow(CAST(o_orderdate AS DATE)) + 7) % 7 AS INTEGER) AS week_end,
-       last_day(CAST(o_orderdate AS DATE)) AS month_end
-FROM orders
-""",
-        "json_extract": """
--- json_valid guard: DuckDB's json functions THROW on malformed/empty
--- JSON where Spark's get_json_object returns NULL — mirror the NULL
--- TRY_CAST: a non-numeric extracted value ('[1,2]') must NULL like
--- Spark's non-ANSI cast, not throw
-SELECT TRY_CAST(CASE WHEN props IS NOT NULL AND json_valid(props)
-                     THEN json_extract_string(props, '$.k') END AS BIGINT) AS k,
-       count(*) AS n
-FROM events GROUP BY 1
-""",
-        "sort_limit_topk": """
-SELECT l_orderkey, l_linenumber, l_extendedprice
-FROM lineitem ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber LIMIT 10
-""",
-        "filter_date_range": """
-SELECT date_trunc('month', CAST(l_shipdate AS DATE)) AS ship_month,
-       count(*) AS n, round(sum(l_extendedprice), 2) AS revenue
-FROM lineitem WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-GROUP BY 1
-""",
-        "summary_coverage": """
-WITH per_cust AS (SELECT o_custkey, count(*) AS n_orders FROM orders GROUP BY 1)
-SELECT n_name AS nation, count(*) AS expected,
-       CAST(sum(CASE WHEN n_orders IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS active,
-       round(sum(CASE WHEN n_orders IS NOT NULL THEN 1 ELSE 0 END) * 100.0 / count(*), 2)
-         AS coverage,
-       CASE WHEN round(sum(CASE WHEN n_orders IS NOT NULL THEN 1 ELSE 0 END) * 100.0
-                       / count(*), 2) >= 80.0 THEN 'OK' ELSE 'WARN' END AS status
-FROM customer
-LEFT JOIN per_cust ON c_custkey = o_custkey
-JOIN nation ON c_nationkey = n_nationkey
-GROUP BY n_name
-""",
-        "asof_join_bars": f"""
-WITH bars AS (
-  SELECT user_id,
-         CAST(ts AS DATE) + CAST((5 - isodow(CAST(ts AS DATE)) + 7) % 7 AS INTEGER)
-           AS period_end,
-         last(value ORDER BY ts, event_id) AS bar_close
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL GROUP BY 1, 2
-)
-SELECT e.user_id, e.event_id, CAST(e.ts AS DATE) AS d, e.value,
-       b.bar_close, b.period_end AS bar_period_end
-FROM (SELECT * FROM events
-      WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL) e
-ASOF LEFT JOIN bars b
-  ON e.user_id = b.user_id AND CAST(e.ts AS DATE) >= b.period_end
-""",
-        "win_rolling_frame": """
-SELECT user_id, event_id,
-       round(avg(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                              ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 4) AS avg_7row,
-       round(sum(value) OVER (PARTITION BY user_id
-                              ORDER BY date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
-                              RANGE BETWEEN 13 PRECEDING AND CURRENT ROW), 4) AS sum_14day
-FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL
-""",
-        "cube_rollup": """
-SELECT coalesce(n_name, '(all)') AS nation,
-       coalesce(c_mktsegment, '(all)') AS segment,
-       count(*) AS n_customers, round(sum(c_acctbal), 2) AS sum_acctbal,
-       GROUPING(n_name, c_mktsegment) AS gid
-FROM customer JOIN nation ON c_nationkey = n_nationkey
-GROUP BY CUBE (n_name, c_mktsegment)
--- empty-input mirror: ANSI CUBE emits the () grand-total row (count 0)
--- even over zero rows, Spark's cube() emits nothing — align on Spark
-HAVING count(*) > 0
-""",
-        "set_ops": """
-WITH both_k AS (
-  SELECT c_nationkey AS nationkey FROM customer
-  INTERSECT ALL SELECT s_nationkey FROM supplier
-), only_c AS (
-  SELECT c_nationkey AS nationkey FROM customer
-  EXCEPT ALL SELECT s_nationkey FROM supplier
-), uni AS (
-  SELECT DISTINCT nationkey FROM (
-    SELECT c_nationkey AS nationkey FROM customer
-    UNION ALL SELECT s_nationkey FROM supplier)
-), tagged AS (
-  SELECT 'intersect' AS op, nationkey FROM both_k
-  UNION ALL SELECT 'except' AS op, nationkey FROM only_c
-  UNION ALL SELECT 'union' AS op, nationkey FROM uni
-)
-SELECT op, nationkey, count(*) AS n FROM tagged GROUP BY op, nationkey
-""",
-        # count(*) FILTER returns BIGINT, matching Spark's pivot-count type
-        # (sum(CASE) would be HUGEINT -> float64 in the driver's comparison)
-        "pivot_status": """
-SELECT o_orderpriority,
-       count(*) FILTER (o_orderstatus = 'F') AS n_f,
-       count(*) FILTER (o_orderstatus = 'O') AS n_o,
-       count(*) FILTER (o_orderstatus = 'P') AS n_p
-FROM orders GROUP BY o_orderpriority
-""",
-        "window_tumbling_7d": """
-SELECT user_id,
-       time_bucket(INTERVAL '7 days', ts, TIMESTAMP '1970-01-01') AS window_start,
-       count(*) AS n_events,
-       round(sum(value), 4) AS sum_value
-FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL
-GROUP BY 1, 2
-""",
-        "shipping_priority": """
-SELECT l_orderkey, o_orderdate, o_orderpriority,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-FROM customer
-JOIN orders ON c_custkey = o_custkey
-JOIN lineitem ON o_orderkey = l_orderkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1997-01-01'
-  AND l_shipdate > TIMESTAMP '1997-01-01'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, o_orderdate, l_orderkey
-LIMIT 10
-""",
-        "regional_revenue": """
-SELECT n_name, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-FROM customer
-JOIN orders ON c_custkey = o_custkey
-JOIN lineitem ON o_orderkey = l_orderkey
-JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-JOIN nation ON s_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-WHERE r_name = 'ASIA'
-  AND o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o_orderdate < TIMESTAMP '1997-01-01'
-GROUP BY n_name
-""",
-        "funnel_3step": """
-WITH s1 AS (
-  SELECT user_id, min(ts) AS t1 FROM events WHERE event_type = 'view' GROUP BY user_id
-), s2 AS (
-  SELECT e.user_id, min(e.ts) AS t2
-  FROM events e JOIN s1 ON e.user_id = s1.user_id
-  WHERE e.event_type = 'click' AND e.ts > s1.t1 GROUP BY e.user_id
-), s3 AS (
-  SELECT e.user_id, min(e.ts) AS t3
-  FROM events e JOIN s2 ON e.user_id = s2.user_id
-  WHERE e.event_type = 'purchase' AND e.ts > s2.t2 GROUP BY e.user_id
-)
-SELECT (SELECT count(DISTINCT user_id) FROM s1) AS n_viewed,
-       (SELECT count(DISTINCT user_id) FROM s2) AS n_clicked,
-       (SELECT count(DISTINCT user_id) FROM s3) AS n_purchased
-""",
-        "small_qty_revenue": """
-SELECT round(sum(l_extendedprice) / 7.0, 4) AS avg_yearly
-FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-WHERE p.p_brand = 'Brand#1'
-  AND l.l_quantity < (
-    SELECT 0.2 * avg(l2.l_quantity) FROM lineitem l2
-    WHERE l2.l_partkey = p.p_partkey)
-""",
-        "big_orders": """
-SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice, sum_qty
-FROM orders
-JOIN (SELECT l_orderkey, sum(l_quantity) AS sum_qty
-      FROM lineitem GROUP BY l_orderkey HAVING sum(l_quantity) > 250) big
-  ON o_orderkey = big.l_orderkey
-JOIN customer ON o_custkey = c_custkey
-ORDER BY o_totalprice DESC, o_orderkey
-LIMIT 100
-""",
-        "snapshot_diff": """
-WITH old_s AS (
-  SELECT l_orderkey, l_linenumber, l_quantity
-  FROM lineitem WHERE l_linenumber <= 4
-), new_s AS (
-  SELECT l_orderkey, l_linenumber,
-         CASE WHEN l_returnflag = 'R' THEN l_quantity + 5 ELSE l_quantity END AS l_quantity
-  FROM lineitem WHERE l_linenumber >= 2
-)
-SELECT * FROM (
-  SELECT coalesce(o.l_orderkey, n.l_orderkey) AS l_orderkey,
-         coalesce(o.l_linenumber, n.l_linenumber) AS l_linenumber,
-         CASE WHEN o.l_orderkey IS NULL THEN 'insert'
-              WHEN n.l_orderkey IS NULL THEN 'delete'
-              WHEN o.l_quantity IS DISTINCT FROM n.l_quantity THEN 'update'
-         END AS change_type,
-         o.l_quantity AS old_l_quantity,
-         n.l_quantity AS new_l_quantity
-  FROM old_s o FULL OUTER JOIN new_s n
-    ON o.l_orderkey = n.l_orderkey AND o.l_linenumber = n.l_linenumber)
-WHERE change_type IS NOT NULL
-""",
-        "profile_table": """
-WITH w AS (
-  SELECT count(*) AS n_rows,
-         count(*) FILTER (o_orderkey IS NULL) AS nulls_k,
-         count(DISTINCT o_orderkey) AS dist_k,
-         CAST(min(o_orderkey) AS VARCHAR) AS min_k, CAST(max(o_orderkey) AS VARCHAR) AS max_k,
-         count(*) FILTER (o_custkey IS NULL) AS nulls_c,
-         count(DISTINCT o_custkey) AS dist_c,
-         CAST(min(o_custkey) AS VARCHAR) AS min_c, CAST(max(o_custkey) AS VARCHAR) AS max_c,
-         count(*) FILTER (o_orderstatus IS NULL) AS nulls_s,
-         count(DISTINCT o_orderstatus) AS dist_s,
-         min(o_orderstatus) AS min_s, max(o_orderstatus) AS max_s,
-         count(*) FILTER (o_totalprice IS NULL) AS nulls_t,
-         count(DISTINCT o_totalprice) AS dist_t,
-         CAST(min(o_totalprice) AS VARCHAR) AS min_t, CAST(max(o_totalprice) AS VARCHAR) AS max_t,
-         count(*) FILTER (o_orderpriority IS NULL) AS nulls_p,
-         count(DISTINCT o_orderpriority) AS dist_p,
-         min(o_orderpriority) AS min_p, max(o_orderpriority) AS max_p
-  FROM orders
-)
-SELECT 'o_orderkey' AS column_name, n_rows, nulls_k AS n_nulls, dist_k AS n_distinct, min_k AS min_value, max_k AS max_value FROM w
-UNION ALL SELECT 'o_custkey', n_rows, nulls_c, dist_c, min_c, max_c FROM w
-UNION ALL SELECT 'o_orderstatus', n_rows, nulls_s, dist_s, min_s, max_s FROM w
-UNION ALL SELECT 'o_totalprice', n_rows, nulls_t, dist_t, min_t, max_t FROM w
-UNION ALL SELECT 'o_orderpriority', n_rows, nulls_p, dist_p, min_p, max_p FROM w
-""",
-        "range_join_shipments": """
-SELECT o_orderkey,
-       count(*) AS n_shipments,
-       round(sum(l_quantity), 2) AS sum_qty
-FROM orders o
-JOIN lineitem l
-  ON l.l_shipdate >= o.o_orderdate
- AND l.l_shipdate < o.o_orderdate + INTERVAL 7 DAY
-WHERE o.o_orderpriority = '1-URGENT'
-GROUP BY o_orderkey
-""",
-        "multi_res_rollup": """
-WITH base AS (
-  SELECT user_id, value,
-         date_trunc('day', ts) AS rd,
-         date_trunc('week', ts) AS rw,
-         date_trunc('month', ts) AS rm
-  FROM events
-)
-SELECT user_id,
-       CASE WHEN GROUPING(rd) = 0 THEN 'day'
-            WHEN GROUPING(rw) = 0 THEN 'week'
-            ELSE 'month' END AS resolution,
-       CAST(coalesce(rd, rw, rm) AS DATE) AS bucket_start,
-       count(*) AS n_rows,
-       round(sum(value), 6) AS sum_value,
-       round(min(value), 6) AS min_value,
-       round(max(value), 6) AS max_value
-FROM base
-GROUP BY GROUPING SETS ((user_id, rd), (user_id, rw), (user_id, rm))
-""",
-        "tech_indicators": """
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         last(value ORDER BY ts, event_id) AS close
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL GROUP BY 1, 2
-), diffs AS (
-  SELECT user_id, d, close,
-         close - lag(close) OVER pk AS diff,
-         CASE WHEN close > 0 AND lag(close) OVER pk > 0
-              THEN ln(close / lag(close) OVER pk) END AS lr
-  FROM daily
-  WINDOW pk AS (PARTITION BY user_id ORDER BY d)
-), gl AS (
-  SELECT *,
-         CASE WHEN diff > 0 THEN diff WHEN diff IS NOT NULL THEN 0.0 END AS gain,
-         CASE WHEN diff < 0 THEN -diff WHEN diff IS NOT NULL THEN 0.0 END AS loss
-  FROM diffs
-), win AS (
-  SELECT user_id, d, close,
-         list(close) OVER w20 AS vals,
-         avg(close) OVER w20 AS boll_mid,
-         stddev_samp(close) OVER w20 AS sd20,
-         stddev_samp(lr) OVER w20 AS vol20,
-         avg(gain) OVER w14 AS ag,
-         avg(loss) OVER w14 AS al
-  FROM gl
-  WINDOW w20 AS (PARTITION BY user_id ORDER BY d ROWS BETWEEN 19 PRECEDING AND CURRENT ROW),
-         w14 AS (PARTITION BY user_id ORDER BY d ROWS BETWEEN 13 PRECEDING AND CURRENT ROW)
-)
-SELECT user_id, d,
-       round(close, 6) AS close,
-       round(list_sum(list_transform(vals, (x, i) -> x * pow(0.9, len(vals) - i)))
-             / ((1 - pow(0.9, len(vals))) / 0.1), 6) AS ewma20,
-       round(vol20, 6) AS vol20,
-       round(CASE WHEN al = 0 THEN 100.0
-                  ELSE 100.0 - 100.0 / (1.0 + ag / al) END, 6) AS rsi14,
-       round(boll_mid, 6) AS boll_mid,
-       round(boll_mid + 2.0 * sd20, 6) AS boll_up,
-       round(boll_mid - 2.0 * sd20, 6) AS boll_dn
-FROM win
-""",
-        "autocorrelation": """
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         last(value ORDER BY ts, event_id) AS close
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL GROUP BY 1, 2
-), lagged AS (
-  SELECT user_id, close,
-         lag(close, 1) OVER w AS l1,
-         lag(close, 2) OVER w AS l2,
-         lag(close, 3) OVER w AS l3,
-         lag(close, 5) OVER w AS l5
-  FROM daily
-  WINDOW w AS (PARTITION BY user_id ORDER BY d)
-)
-SELECT user_id,
-       CAST(count(*) AS BIGINT) AS n_days,
-       round(corr(close, l1), 4) AS acf1,
-       round(corr(close, l2), 4) AS acf2,
-       round(corr(close, l3), 4) AS acf3,
-       round(corr(close, l5), 4) AS acf5
-FROM lagged GROUP BY user_id
-ORDER BY user_id
-""",
-        "drawdown_cumret": """
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         last(value ORDER BY ts, event_id) AS close
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL GROUP BY 1, 2
-), dd AS (
-  SELECT user_id, d, close,
-         close / max(close) OVER (PARTITION BY user_id ORDER BY d
-                                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - 1.0
-           AS drawdown
-  FROM daily
-)
-SELECT user_id,
-       round(min(drawdown), 6) AS max_drawdown,
-       round(last(close ORDER BY d) / first(close ORDER BY d) - 1.0, 6) AS cum_return
-FROM dd GROUP BY user_id
-""",
-        "split_adjusted_prices": """
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         last(value ORDER BY ts, event_id) AS close
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL GROUP BY 1, 2
-), r AS (
-  SELECT user_id, d, close,
-         lag(close) OVER (PARTITION BY user_id ORDER BY d) AS prev
-  FROM daily
-), s AS (
-  SELECT user_id, d, close,
-         CASE WHEN prev IS NOT NULL AND close > 0
-                   AND floor(prev / close + 0.5) BETWEEN 2 AND 10
-                   AND abs(prev / close - floor(prev / close + 0.5))
-                       <= 0.02 * floor(prev / close + 0.5)
-              THEN CAST(floor(prev / close + 0.5) AS BIGINT)
-              ELSE CAST(1 AS BIGINT) END AS split_ratio
-  FROM r
-), f AS (
-  SELECT user_id, d, close, split_ratio,
-         CAST(floor(exp(coalesce(
-             sum(ln(CAST(split_ratio AS DOUBLE))) OVER (
-               PARTITION BY user_id ORDER BY d DESC
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0.0e0)) + 0.5)
-           AS BIGINT) AS adj_factor
-  FROM s
-)
-SELECT user_id, d, close, split_ratio, adj_factor,
-       floor(close / adj_factor * 1e6 + 0.5) / 1e6 AS adj_close
-FROM f
-""",
-        "range_position": """
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         last(value ORDER BY ts, event_id) AS close
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL GROUP BY 1, 2
-), w AS (
-  SELECT user_id, d, close,
-         max(close) OVER fr AS hi, min(close) OVER fr AS lo
-  FROM daily
-  WINDOW fr AS (PARTITION BY user_id ORDER BY d
-                ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
-), e AS (
-  SELECT user_id, d,
-         CASE WHEN hi > lo
-              THEN floor((close - lo) / (hi - lo) * 1e6 + 0.5) / 1e6
-              ELSE 0.5e0 END AS pos,
-         CASE WHEN close >= hi THEN 1 ELSE 0 END AS nh,
-         CASE WHEN close <= lo THEN 1 ELSE 0 END AS nl
-  FROM w
-)
-SELECT user_id, count(*) AS n_days,
-       CAST(sum(nh) AS BIGINT) AS n_new_highs,
-       CAST(sum(nl) AS BIGINT) AS n_new_lows,
-       last(pos ORDER BY d) AS last_pos
-FROM e GROUP BY user_id
-""",
-        "overnight_intraday": """
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         first(value ORDER BY ts, event_id) AS op,
-         last(value ORDER BY ts, event_id) AS cl
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL GROUP BY 1, 2
-), legs AS (
-  SELECT user_id,
-         CASE WHEN op > 0
-              THEN CAST(floor((cl / op - 1.0) * 1e8 + 0.5) AS BIGINT) END AS intra,
-         CASE WHEN lag(cl) OVER w > 0
-              THEN CAST(floor((op / lag(cl) OVER w - 1.0) * 1e8 + 0.5) AS BIGINT)
-              END AS ovn
-  FROM daily
-  WINDOW w AS (PARTITION BY user_id ORDER BY d)
-)
-SELECT user_id,
-       count(intra) AS n_intraday,
-       count(ovn) AS n_overnight,
-       floor(CAST(sum(intra) AS DOUBLE) / count(intra) / 1e8 * 1e6 + 0.5) / 1e6
-         AS mean_intraday,
-       floor(CAST(sum(ovn) AS DOUBLE) / count(ovn) / 1e8 * 1e6 + 0.5) / 1e6
-         AS mean_overnight
-FROM legs GROUP BY user_id
-""",
-        "liquidity_screen": """
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS dvol_c
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL GROUP BY 1, 2
-), tr AS (
-  SELECT user_id, d,
-         CAST(sum(dvol_c) OVER fr AS DOUBLE) / count(*) OVER fr AS adv_c
-  FROM daily
-  WINDOW fr AS (PARTITION BY user_id ORDER BY d
-                ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
-), latest AS (
-  SELECT user_id, max(d) AS as_of, last(adv_c ORDER BY d) AS adv_c
-  FROM tr GROUP BY user_id
-)
-SELECT user_id, as_of,
-       floor(adv_c / 100.0 * 1e4 + 0.5) / 1e4 AS adv,
-       ntile(10) OVER rk AS adv_decile,
-       CASE WHEN ntile(10) OVER rk = 1 THEN 1 ELSE 0 END AS is_liquid
-FROM latest
-WINDOW rk AS (ORDER BY adv_c DESC, user_id)
-""",
-        "stale_price_runs": """
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         last(value ORDER BY ts, event_id) AS close
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL GROUP BY 1, 2
-), q AS (
-  SELECT user_id, d,
-         CAST(floor(close / 2.0 + 0.5) AS BIGINT) AS qv
-  FROM daily
-), ch AS (
-  SELECT user_id, d,
-         CASE WHEN lag(qv) OVER w IS NULL OR qv <> lag(qv) OVER w
-              THEN 1 ELSE 0 END AS changed
-  FROM q WINDOW w AS (PARTITION BY user_id ORDER BY d)
-), runs AS (
-  SELECT user_id,
-         sum(changed) OVER (PARTITION BY user_id ORDER BY d
-                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS run_id
-  FROM ch
-), per_run AS (
-  SELECT user_id, run_id, count(*) AS run_len FROM runs GROUP BY 1, 2
-)
-SELECT user_id,
-       CAST(sum(run_len - 1) AS BIGINT)
-         AS n_stale_days,
-       CAST(sum(CASE WHEN run_len >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_stale_runs,
-       max(run_len) AS max_run_len
-FROM per_run GROUP BY user_id
-""",
-        "amihud_illiquidity": """
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         last(value ORDER BY ts, event_id) AS close,
-         sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS dvol_c
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL GROUP BY 1, 2
-), legs AS (
-  SELECT user_id, dvol_c,
-         CASE WHEN lag(close) OVER w > 0
-              THEN greatest(CAST(-10000 AS BIGINT),
-                            least(CAST(10000 AS BIGINT),
-                                  CAST(floor((close / lag(close) OVER w - 1.0) * 1e4 + 0.5)
-                                       AS BIGINT)))
-         END AS ret_bp
-  FROM daily WINDOW w AS (PARTITION BY user_id ORDER BY d)
-), days AS (
-  SELECT user_id,
-         (abs(ret_bp) * CAST(10000000000 AS BIGINT)) // dvol_c AS day_fx
-  FROM legs WHERE ret_bp IS NOT NULL AND dvol_c > 0
-)
-SELECT user_id,
-       count(*) AS n_days,
-       floor(CAST(sum(day_fx) AS DOUBLE) / count(*) / 1e6 * 1e6 + 0.5) / 1e6
-         AS amihud,
-       floor(CAST(max(day_fx) AS DOUBLE) / 1e6 * 1e6 + 0.5) / 1e6
-         AS amihud_worst_day
-FROM days GROUP BY user_id
-""",
-        "underwater_spells": """
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         last(value ORDER BY ts, event_id) AS close
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL GROUP BY 1, 2
-), uw AS (
-  SELECT user_id, d,
-         CASE WHEN close < max(close) OVER (PARTITION BY user_id ORDER BY d
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              THEN 1 ELSE 0 END AS is_uw
-  FROM daily
-), ch AS (
-  SELECT user_id, d, is_uw,
-         CASE WHEN lag(is_uw) OVER w IS NULL OR is_uw <> lag(is_uw) OVER w
-              THEN 1 ELSE 0 END AS changed
-  FROM uw WINDOW w AS (PARTITION BY user_id ORDER BY d)
-), runs AS (
-  SELECT user_id, is_uw,
-         sum(changed) OVER (PARTITION BY user_id ORDER BY d
-                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS run_id
-  FROM ch
-), per_run AS (
-  SELECT user_id, run_id, max(is_uw) AS is_uw, count(*) AS run_len
-  FROM runs GROUP BY 1, 2
-)
-SELECT user_id,
-       CAST(sum(CASE WHEN is_uw = 1 THEN run_len ELSE 0 END) AS BIGINT)
-         AS n_underwater_days,
-       CAST(sum(CASE WHEN is_uw = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_spells,
-       CAST(max(CASE WHEN is_uw = 1 THEN run_len ELSE 0 END) AS BIGINT)
-         AS longest_spell
-FROM per_run GROUP BY user_id
-""",
-        "turn_of_month": """
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         last(value ORDER BY ts, event_id) AS close
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL GROUP BY 1, 2
-), pos AS (
-  SELECT user_id, d, close,
-         row_number() OVER (PARTITION BY user_id, date_trunc('month', d)
-                            ORDER BY d) AS rn,
-         row_number() OVER (PARTITION BY user_id, date_trunc('month', d)
-                            ORDER BY d DESC) AS rnd,
-         lag(close) OVER (PARTITION BY user_id ORDER BY d) AS prev
-  FROM daily
-), legs AS (
-  SELECT CASE WHEN rnd <= 3 THEN 'last3'
-              WHEN rn <= 3 THEN 'first3'
-              ELSE 'middle' END AS month_bucket,
-         CAST(floor((close / prev - 1.0) * 1e6 + 0.5) AS BIGINT) AS ret_fx
-  FROM pos WHERE prev > 0
-)
-SELECT month_bucket,
-       count(*) AS n_obs,
-       floor(CAST(sum(ret_fx) AS DOUBLE) / count(*) / 1e6 * 1e6 + 0.5) / 1e6
-         AS mean_return,
-       floor(sum(CASE WHEN ret_fx > 0 THEN 1 ELSE 0 END) * 1.0 / count(*)
-             * 1e6 + 0.5) / 1e6 AS up_share
-FROM legs GROUP BY month_bucket
-""",
-        "lexical_diversity": """
-WITH toks AS (
-  SELECT source,
-         list_filter(string_split_regex(lower(trim(coalesce(text, ''))), '\\s+'),
-                     t -> t != '') AS tk
-  FROM documents
-), per_doc AS (
-  SELECT source,
-         len(list_distinct(tk)) * CAST(1000000 AS BIGINT) // len(tk) AS ttr_fx
-  FROM toks WHERE len(tk) > 0
-)
-SELECT source,
-       count(*) AS n_docs,
-       floor(CAST(sum(ttr_fx) AS DOUBLE) / count(*) / 1e6 * 1e6 + 0.5) / 1e6
-         AS mean_ttr,
-       floor(sum(CASE WHEN ttr_fx < 500000 THEN 1 ELSE 0 END) * 1.0 / count(*)
-             * 1e6 + 0.5) / 1e6 AS low_diversity_share
-FROM per_doc GROUP BY source
-""",
-        "calendar_coverage": """
-WITH daily AS (
-  SELECT DISTINCT user_id, CAST(ts AS DATE) AS d
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL
-), cal AS (
-  SELECT d, row_number() OVER (ORDER BY d) AS idx
-  FROM (SELECT DISTINCT d FROM daily)
-), per AS (
-  SELECT user_id, min(d) AS fd, max(d) AS ld, count(*) AS n_days
-  FROM daily GROUP BY user_id
-)
-SELECT p.user_id, p.n_days,
-       CAST(h.idx - l.idx + 1 AS BIGINT) AS n_expected,
-       CAST((p.n_days * CAST(1000000 AS BIGINT)) // (h.idx - l.idx + 1)
-            AS DOUBLE) / 1e6 AS coverage,
-       CASE WHEN (p.n_days * CAST(1000000 AS BIGINT)) // (h.idx - l.idx + 1)
-                 >= 950000
-            THEN 1 ELSE 0 END AS is_complete
-FROM per p JOIN cal l ON p.fd = l.d JOIN cal h ON p.ld = h.d
-""",
-        "volume_profile": """
-WITH legs AS (
-  SELECT hour(ts) AS hour_of_day,
-         CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL
-), per AS (
-  SELECT hour_of_day, count(*) AS n_events,
-         CAST(sum(cents) AS BIGINT) AS cents
-  FROM legs GROUP BY 1
-), tot AS (
-  SELECT hour_of_day, n_events, cents,
-         cents // CAST(100 AS BIGINT) AS dollars,
-         sum(cents // CAST(100 AS BIGINT)) OVER () AS total_d
-  FROM per
-)
-SELECT hour_of_day, n_events,
-       floor(CAST(cents AS DOUBLE) / 100.0 * 1e4 + 0.5) / 1e4 AS dollar_volume,
-       CAST((dollars * CAST(1000000 AS BIGINT)) // nullif(total_d, 0)
-            AS DOUBLE) / 1e6 AS volume_share
-FROM tot
-""",
-        "index_daily_return": """
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         last(value ORDER BY ts, event_id) AS close
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL GROUP BY 1, 2
-), legs AS (
-  SELECT user_id, d,
-         CASE WHEN lag(close) OVER w > 0
-              THEN CAST(floor((close / lag(close) OVER w - 1.0) * 1e6 + 0.5)
-                        AS BIGINT) END AS ret_fx,
-         greatest(CAST(1 AS BIGINT),
-                  CAST(floor(first_value(close) OVER (
-                         PARTITION BY user_id ORDER BY d
-                         ROWS BETWEEN UNBOUNDED PRECEDING
-                         AND UNBOUNDED FOLLOWING) + 0.5) AS BIGINT)) AS w_d
-  FROM daily
-  WINDOW w AS (PARTITION BY user_id ORDER BY d)
-)
-SELECT d,
-       count(*) AS n_members,
-       CAST(sum(CASE WHEN ret_fx > 0 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_advancers,
-       CAST(sum(CASE WHEN ret_fx < 0 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_decliners,
-       floor(CAST(sum(w_d * ret_fx) AS DOUBLE) / sum(w_d) / 1e6 * 1e6 + 0.5)
-         / 1e6 AS index_return
-FROM legs WHERE ret_fx IS NOT NULL GROUP BY d
-""",
-        "factor_rank_ic": """
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         last(value ORDER BY ts, event_id) AS close
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL GROUP BY 1, 2
-), rets AS (
-  SELECT user_id, d,
-         CASE WHEN lag(close) OVER w > 0
-              THEN close / lag(close) OVER w - 1.0 END AS ret
-  FROM daily
-  WINDOW w AS (PARTITION BY user_id ORDER BY d)
-), paired AS (
-  SELECT user_id, d, ret,
-         lead(ret) OVER (PARTITION BY user_id ORDER BY d) AS fwd
-  FROM rets
-), ranked AS (
-  SELECT d,
-         row_number() OVER (PARTITION BY d ORDER BY ret, user_id)
-           - row_number() OVER (PARTITION BY d ORDER BY fwd, user_id) AS dd
-  FROM paired WHERE ret IS NOT NULL AND fwd IS NOT NULL
-), agg AS (
-  SELECT d, count(*) AS n_members,
-         CAST(sum(dd * dd) AS BIGINT) AS sd2
-  FROM ranked GROUP BY d
-)
-SELECT d, n_members,
-       floor((1.0 - 6.0 * sd2 / (CAST(n_members AS BIGINT)
-              * (CAST(n_members AS BIGINT) * n_members - 1))) * 1e6 + 0.5)
-         / 1e6 AS rank_ic
-FROM agg WHERE n_members >= 3
-""",
-        "risk_summary": """
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         last(value ORDER BY ts, event_id) AS close
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL GROUP BY 1, 2
-), legs AS (
-  SELECT user_id,
-         close / lag(close) OVER w - 1.0 AS ret,
-         greatest(CAST(-10000 AS BIGINT),
-                  least(CAST(10000 AS BIGINT),
-                        CAST(floor((close / lag(close) OVER w - 1.0) * 1e4
-                                   + 0.5) AS BIGINT))) AS x
-  FROM daily
-  WINDOW w AS (PARTITION BY user_id ORDER BY d)
-), l2 AS (
-  SELECT * FROM legs WHERE ret IS NOT NULL
-), agg AS (
-  SELECT user_id, count(*) AS n_days,
-         CAST(sum(x) AS DOUBLE) AS sx,
-         CAST(sum(x * x) AS DOUBLE) AS sxx,
-         CAST(sum(x * x * x) AS DOUBLE) AS sxxx,
-         quantile_cont(ret, 0.05) AS var95
-  FROM l2 GROUP BY user_id
-), calc AS (
-  SELECT user_id, n_days, var95,
-         sx / n_days AS mean_bp,
-         CASE WHEN n_days >= 2
-              THEN (n_days * sxx - sx * sx) / (n_days * (n_days - 1.0)) END
-           AS var_bp2,
-         sxx / n_days - (sx / n_days) * (sx / n_days) AS m2,
-         sxxx / n_days - 3.0 * (sx / n_days) * sxx / n_days
-           + 2.0 * (sx / n_days) * (sx / n_days) * (sx / n_days) AS m3
-  FROM agg
-)
-SELECT user_id, n_days,
-       floor(mean_bp / 1e4 * 1e6 + 0.5) / 1e6 AS mean_return,
-       floor(sqrt(var_bp2) / 1e4 * 1e6 + 0.5) / 1e6 AS volatility,
-       CASE WHEN n_days >= 5 AND sqrt(var_bp2) > 0
-            THEN floor(mean_bp / sqrt(var_bp2) * 1e6 + 0.5) / 1e6 END AS sharpe,
-       CASE WHEN n_days >= 5 AND m2 > 0
-            THEN floor(m3 / pow(m2, 1.5) * 1e6 + 0.5) / 1e6 END AS skewness,
-       floor(var95 * 1e6 + 0.5) / 1e6 AS var95
-FROM calc WHERE n_days >= 2
-""",
-        "decile_spread": """
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         last(value ORDER BY ts, event_id) AS close
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL GROUP BY 1, 2
-), rets AS (
-  SELECT user_id, d,
-         CASE WHEN lag(close) OVER w > 0
-              THEN close / lag(close) OVER w - 1.0 END AS ret
-  FROM daily
-  WINDOW w AS (PARTITION BY user_id ORDER BY d)
-), paired AS (
-  SELECT user_id, d, ret,
-         CASE WHEN lead(ret) OVER (PARTITION BY user_id ORDER BY d) IS NOT NULL
-              THEN CAST(floor(lead(ret) OVER (PARTITION BY user_id ORDER BY d)
-                              * 1e6 + 0.5) AS BIGINT) END AS fwd_fx
-  FROM rets
-), tiled AS (
-  SELECT d, fwd_fx,
-         ntile(5) OVER (PARTITION BY d ORDER BY ret DESC, user_id) AS tile
-  FROM paired WHERE ret IS NOT NULL AND fwd_fx IS NOT NULL
-), agg AS (
-  SELECT d, count(*) AS n_members,
-         CAST(sum(CASE WHEN tile = 1 THEN fwd_fx END) AS BIGINT) AS top_sum,
-         sum(CASE WHEN tile = 1 THEN 1 ELSE 0 END) AS top_n,
-         CAST(sum(CASE WHEN tile = 5 THEN fwd_fx END) AS BIGINT) AS bot_sum,
-         sum(CASE WHEN tile = 5 THEN 1 ELSE 0 END) AS bot_n
-  FROM tiled GROUP BY d
-)
-SELECT d, n_members,
-       floor(CAST(top_sum AS DOUBLE) / top_n / 1e6 * 1e6 + 0.5) / 1e6
-         AS top_tile_return,
-       floor(CAST(bot_sum AS DOUBLE) / bot_n / 1e6 * 1e6 + 0.5) / 1e6
-         AS bottom_tile_return,
-       floor((CAST(top_sum AS DOUBLE) / top_n / 1e6
-              - CAST(bot_sum AS DOUBLE) / bot_n / 1e6) * 1e6 + 0.5) / 1e6
-         AS spread
-FROM agg WHERE n_members >= 10
-""",
-        "dup_cluster_stats": """
-WITH RECURSIVE toks AS (
-  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'), t -> t != '') AS t
-  FROM documents
-), sh AS (
-  SELECT doc_id,
-         CASE WHEN len(t) >= 2
-              THEN list_distinct(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1]))
-              ELSE [] END AS s
-  FROM toks
-), inv AS (
-  SELECT doc_id, unnest(s) AS shingle FROM sh
-), common AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-  FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), sz AS (
-  SELECT doc_id, len(s) AS n FROM sh
-), pairs AS (
-  SELECT id_a, id_b FROM (
-    SELECT id_a, id_b,
-           round(n_common * 1.0 / (x.n + y.n - n_common), 6) AS jaccard
-    FROM common JOIN sz x ON id_a = x.doc_id JOIN sz y ON id_b = y.doc_id)
-  WHERE jaccard >= 0.2
-), sym AS (
-  SELECT id_a AS s, id_b AS d FROM pairs
-  UNION
-  SELECT id_b, id_a FROM pairs
-), reach(a, b) AS (
-  SELECT s, s FROM sym
-  UNION
-  SELECT r.a, s.d FROM reach r JOIN sym s ON r.b = s.s
-), comp AS (
-  SELECT a AS id, min(b) AS comp FROM reach GROUP BY a
-), clusters AS (
-  SELECT comp, count(*) AS group_size FROM comp GROUP BY comp
-)
-SELECT CAST(group_size AS BIGINT) AS cluster_size,
-       count(*) AS n_clusters,
-       CAST(count(*) * group_size AS BIGINT) AS n_docs,
-       CAST(count(*) * (group_size - 1) AS BIGINT) AS n_removable
-FROM clusters GROUP BY group_size
-""",
-        "packing_efficiency": """
-WITH keyed AS (
-  SELECT doc_id, md5('42:' || CAST(doc_id AS VARCHAR)) AS k
-  FROM documents
-), sharded AS (
-  SELECT doc_id,
-         CAST(('0x' || substr(k, 1, 8))::UBIGINT % 8 AS BIGINT) AS shard
-  FROM keyed
-), counted AS (
-  SELECT s.shard,
-         len(list_filter(string_split_regex(lower(trim(coalesce(d.text, ''))), '\\s+'),
-                         t -> t != '')) AS n_toks
-  FROM documents d JOIN sharded s USING (doc_id)
-), per_shard AS (
-  SELECT shard, count(*) AS n_docs,
-         CAST(sum(n_toks) AS BIGINT) AS total_tokens
-  FROM counted GROUP BY shard
-)
-SELECT shard, n_docs, total_tokens,
-       (total_tokens + 63) // 64 AS n_seqs,
-       total_tokens // 64 AS n_full_seqs,
-       ((total_tokens + 63) // 64) * 64 - total_tokens AS pad_waste,
-       CASE WHEN (total_tokens + 63) // 64 > 0
-            THEN floor(CAST(total_tokens AS DOUBLE)
-                       / (((total_tokens + 63) // 64) * 64) * 1e6 + 0.5) / 1e6
-            END AS fill_rate
-FROM per_shard
-""",
-        "beta_vs_index": """
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         last(value ORDER BY ts, event_id) AS close
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL GROUP BY 1, 2
-), legs AS (
-  SELECT user_id, d,
-         CASE WHEN lag(close) OVER w > 0
-              THEN greatest(CAST(-50000 AS BIGINT),
-                            least(CAST(50000 AS BIGINT),
-                                  CAST(floor((close / lag(close) OVER w - 1.0)
-                                             * 1e4 + 0.5) AS BIGINT)))
-              END AS y,
-         greatest(CAST(1 AS BIGINT),
-                  CAST(floor(first_value(close) OVER (
-                         PARTITION BY user_id ORDER BY d
-                         ROWS BETWEEN UNBOUNDED PRECEDING
-                         AND UNBOUNDED FOLLOWING) + 0.5) AS BIGINT)) AS w_d
-  FROM daily
-  WINDOW w AS (PARTITION BY user_id ORDER BY d)
-), l2 AS (
-  SELECT * FROM legs WHERE y IS NOT NULL
-), idx AS (
-  SELECT d, CAST(floor(CAST(sum(w_d * y) AS DOUBLE) / sum(w_d) + 0.5)
-                 AS BIGINT) AS x
-  FROM l2 GROUP BY d
-), agg AS (
-  SELECT user_id, count(*) AS n_days,
-         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(x * y) AS BIGINT) AS sxy,
-         CAST(sum(x * x) AS BIGINT) AS sxx
-  FROM l2 JOIN idx USING (d) GROUP BY user_id
-)
-SELECT user_id, n_days,
-       CASE WHEN n_days >= 5 AND n_days * sxx - sx * sx > 0
-            THEN floor((n_days * sxy - sx * sy) * 1.0
-                       / (n_days * sxx - sx * sx) * 1e6 + 0.5) / 1e6
-            END AS beta,
-       CASE WHEN n_days >= 5 AND n_days * sxx - sx * sx > 0
-            THEN floor((sy - (n_days * sxy - sx * sy) * 1.0
-                             / (n_days * sxx - sx * sx) * sx)
-                       / n_days / 1e4 * 1e6 + 0.5) / 1e6
-            END AS alpha
-FROM agg
-""",
-        "calendar_anomalies": """
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         last(value ORDER BY ts, event_id) AS close
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL GROUP BY 1, 2
-), legs AS (
-  SELECT d,
-         CASE WHEN lag(close) OVER (PARTITION BY user_id ORDER BY d) > 0
-              THEN CAST(floor((close / lag(close)
-                        OVER (PARTITION BY user_id ORDER BY d) - 1.0)
-                        * 1e6 + 0.5) AS BIGINT) END AS ret_fx
-  FROM daily
-)
-SELECT CAST(isodow(d) AS BIGINT) AS iso_dow,
-       count(*) AS n_obs,
-       floor(CAST(sum(ret_fx) AS DOUBLE) / count(*) / 1e6 * 1e6 + 0.5) / 1e6
-         AS mean_return,
-       CAST(sum(CASE WHEN ret_fx > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_up,
-       floor(CAST(sum(CASE WHEN ret_fx > 0 THEN 1 ELSE 0 END) AS DOUBLE)
-             / count(*) * 1e6 + 0.5) / 1e6 AS up_share
-FROM legs WHERE ret_fx IS NOT NULL GROUP BY 1
-""",
-        "market_regime_streaks": """
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         last(value ORDER BY ts, event_id) AS close
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL GROUP BY 1, 2
-), legs AS (
-  SELECT user_id, d,
-         CASE WHEN lag(close) OVER (PARTITION BY user_id ORDER BY d) > 0
-              THEN CAST(floor((close / lag(close)
-                        OVER (PARTITION BY user_id ORDER BY d) - 1.0)
-                        * 1e6 + 0.5) AS BIGINT) END AS ret_fx
-  FROM daily
-), per_date AS (
-  SELECT d,
-         sum(CASE WHEN ret_fx > 0 THEN 1 ELSE 0 END) AS adv,
-         sum(CASE WHEN ret_fx < 0 THEN 1 ELSE 0 END) AS dec
-  FROM legs WHERE ret_fx IS NOT NULL GROUP BY d
-), tagged AS (
-  SELECT d,
-         CASE WHEN adv > dec THEN 'risk_on'
-              WHEN adv < dec THEN 'risk_off'
-              ELSE 'flat' END AS regime
-  FROM per_date
-), chg AS (
-  SELECT d, regime,
-         CASE WHEN lag(regime) OVER w IS NULL
-                   OR regime <> lag(regime) OVER w
-              THEN 1 ELSE 0 END AS changed
-  FROM tagged WINDOW w AS (ORDER BY d)
-), runs AS (
-  SELECT regime,
-         sum(changed) OVER (ORDER BY d
-                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS run_id
-  FROM chg
-), per_run AS (
-  SELECT regime, run_id, count(*) AS run_len FROM runs GROUP BY 1, 2
-)
-SELECT regime,
-       CAST(sum(run_len) AS BIGINT) AS n_days,
-       count(*) AS n_runs,
-       max(run_len) AS longest_run
-FROM per_run GROUP BY regime
-""",
-        "line_boilerplate": """
-WITH segs AS (
-  SELECT doc_id, trim(s) AS seg
-  FROM documents, unnest(string_split(coalesce(text, ''), ' the ')) AS t(s)
-  WHERE doc_id IS NOT NULL AND trim(s) <> ''
-), freq AS (
-  SELECT seg, count(DISTINCT doc_id) AS nd FROM segs GROUP BY seg
-)
-SELECT doc_id,
-       count(*) AS n_segs,
-       CAST(sum(CASE WHEN nd >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_boiler,
-       CAST(sum(length(seg)) AS BIGINT) AS total_chars,
-       CAST(sum(CASE WHEN nd >= 3 THEN length(seg) ELSE 0 END) AS BIGINT)
-         AS boiler_chars,
-       floor(CAST(sum(CASE WHEN nd >= 3 THEN length(seg) ELSE 0 END) AS DOUBLE)
-             / sum(length(seg)) * 1e6 + 0.5) / 1e6 AS boiler_ratio
-FROM segs JOIN freq USING (seg)
-GROUP BY doc_id
-""",
-        "quality_gate": """
-WITH scored AS (
-  SELECT doc_id, source,
-         CAST(length(coalesce(text, '')) AS BIGINT)
-           + 10 * CAST(len(list_filter(
-               string_split_regex(lower(coalesce(text, '')), '\\s+'),
-               x -> x IN ('the', 'a', 'and', 'of', 'to'))) AS BIGINT)
-           AS score
-  FROM documents WHERE doc_id IS NOT NULL
-), ranked AS (
-  SELECT source, score,
-         row_number() OVER (PARTITION BY source
-                            ORDER BY score DESC, doc_id) AS rn,
-         count(*) OVER (PARTITION BY source) AS n
-  FROM scored
-), gated AS (
-  SELECT source, score,
-         CASE WHEN rn <= ceil(0.6 * n) THEN 1 ELSE 0 END AS kept
-  FROM ranked
-)
-SELECT source,
-       count(*) AS n_docs,
-       CAST(sum(kept) AS BIGINT) AS n_kept,
-       min(CASE WHEN kept = 1 THEN score END) AS min_kept_score,
-       floor(CAST(sum(CASE WHEN kept = 1 THEN score END) AS DOUBLE)
-             / sum(kept) * 1e6 + 0.5) / 1e6 AS mean_kept_score
-FROM gated GROUP BY source
-""",
-        "novelty_timeline": """
-WITH docs AS (
-  SELECT doc_id, md5(text) AS h
-  FROM documents WHERE doc_id IS NOT NULL AND text IS NOT NULL
-), bounds AS (
-  SELECT min(doc_id) AS lo, max(doc_id) AS hi FROM docs
-), marked AS (
-  SELECT least(CAST(10 AS BIGINT),
-               ((doc_id - lo) * 10) // (hi - lo + 1) + 1) AS bucket,
-         row_number() OVER (PARTITION BY h ORDER BY doc_id) AS rn
-  FROM docs, bounds
-), per_bucket AS (
-  SELECT bucket, count(*) AS n_docs,
-         CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_new
-  FROM marked GROUP BY bucket
-)
-SELECT bucket, n_docs, n_new,
-       floor(CAST(n_docs - n_new AS DOUBLE) / n_docs * 1e6 + 0.5) / 1e6
-         AS dup_rate,
-       CAST(sum(n_new) OVER (ORDER BY bucket
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            AS BIGINT) AS cum_distinct
-FROM per_bucket
-""",
-        "zipf_slope": """
-WITH toks AS (
-  SELECT unnest(string_split_regex(lower(coalesce(text, '')), '\\s+')) AS term
-  FROM documents
-), counts AS (
-  SELECT term, count(*) AS cnt FROM toks WHERE term <> ''
-  GROUP BY term ORDER BY cnt DESC, term LIMIT 200
-), ranked AS (
-  SELECT ln(CAST(row_number() OVER (ORDER BY cnt DESC, term) AS DOUBLE)) AS x,
-         ln(CAST(cnt AS DOUBLE)) AS y
-  FROM counts
-), s AS (
-  SELECT CAST(count(*) AS DOUBLE) AS n, sum(x) AS sx, sum(y) AS sy,
-         sum(x * y) AS sxy, sum(x * x) AS sxx
-  FROM ranked
-)
-SELECT CAST(n AS BIGINT) AS n_terms,
-       CASE WHEN n * sxx - sx * sx > 0
-            THEN floor((n * sxy - sx * sy) / (n * sxx - sx * sx) * 1e6 + 0.5)
-                 / 1e6 END AS slope,
-       CASE WHEN n * sxx - sx * sx > 0
-            THEN floor((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx)
-                       / n * 1e6 + 0.5) / 1e6 END AS intercept
-FROM s
-""",
-        "sessionize": """
-WITH flagged AS (
-  SELECT user_id, event_id, ts, value,
-         CASE WHEN date_diff('second',
-                             lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id),
-                             ts) > 2 * 86400
-              OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-              THEN 1 ELSE 0 END AS is_new
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-), tagged AS (
-  SELECT user_id, ts, value,
-         CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS session_id
-  FROM flagged
-)
-SELECT user_id, session_id, count(*) AS n_events,
-       min(ts) AS session_start, max(ts) AS session_end,
-       sum(round(value * 100, 0)) / 100.0 AS sum_value
-FROM tagged GROUP BY user_id, session_id
-""",
-        "stats_moments": """
-SELECT l_returnflag,
-       round(corr(l_quantity, l_extendedprice), 6) AS corr_qty_price,
-       round(stddev_samp(l_discount), 6) AS sd_discount,
-       round(var_samp(l_quantity), 6) AS var_qty,
-       round(median(l_extendedprice), 6) AS median_price,
-       round(quantile_cont(l_extendedprice, 0.75), 6) AS p75_price
-FROM lineitem GROUP BY l_returnflag
-""",
-        "text_stats": _TEXT_STATS_ORACLE,
-        "lang_confusion": _LANG_CONFUSION_ORACLE,
-        "chunk_documents": """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(trim(coalesce(text, '')), '\\s+'), t -> t != '') AS t
-  FROM documents
-), bounds AS (
-  SELECT doc_id, t,
-         CASE WHEN len(t) > 32
-              THEN CAST(floor((len(t) - 8 - 1) / 24.0) AS BIGINT) * 24 + 1
-              ELSE 1 END AS last_start
-  FROM toks
-), expanded AS (
-  SELECT doc_id, t, unnest(range(1, last_start + 1, 24)) AS s
-  FROM bounds
-)
-SELECT doc_id,
-       CAST((s - 1) / 24 AS INTEGER) AS chunk_idx,
-       len(list_slice(t, s, s + 31)) AS n_chunk_tokens,
-       coalesce(array_to_string(list_slice(t, s, s + 31), ' '), '') AS chunk_text
-FROM expanded
-""",
-        "corpus_clean": f"""
-WITH stats AS ({_TEXT_STATS_ORACLE})
-SELECT doc_id, n_tokens, lang_pred, quality FROM (
-  SELECT doc_id, n_tokens, lang_pred, quality,
-         row_number() OVER (PARTITION BY fingerprint ORDER BY doc_id) AS rn
-  FROM stats WHERE quality >= 0.5)
-WHERE rn = 1
-""",
-        "dedup_exact": """
-SELECT md5(regexp_replace(lower(trim(coalesce(text, ''))), '\\s+', ' ', 'g')) AS fp,
-       min(doc_id) AS keep_id, count(*) AS n_dups
-FROM documents GROUP BY 1
-""",
-        "ngram_jaccard_neardup": _NGRAM_JACCARD_ORACLE,
-        "repetition_stats": """
-WITH toks AS (
-  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'), t -> t != '') AS t
-  FROM documents
-), grams AS (
-  SELECT doc_id,
-         unnest(CASE WHEN len(t) >= 2
-                     THEN list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])
-                     ELSE [] END) AS g
-  FROM toks
-), per_gram AS (
-  SELECT doc_id, g, count(*) AS c FROM grams GROUP BY 1, 2
-)
-SELECT doc_id,
-       CAST(sum(c) AS BIGINT) AS n_grams,
-       count(*) AS n_distinct_grams,
-       round(count(*) * 1.0 / sum(c), 6) AS distinct_share,
-       round(max(c) * 1.0 / sum(c), 6) AS top_gram_share
-FROM per_gram GROUP BY doc_id
-""",
-        "sample_per_group": """
-SELECT event_type, event_id, rn FROM (
-  SELECT event_type, event_id,
-         row_number() OVER (
-           PARTITION BY event_type
-           ORDER BY md5(CAST(event_id AS VARCHAR)), event_id) AS rn
-  FROM events)
-WHERE rn <= 100
-""",
-        "dedup_components": f"""
-WITH RECURSIVE toks AS (
-  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'), t -> t != '') AS t
-  FROM documents
-), sh AS (
-  SELECT doc_id,
-         CASE WHEN len(t) >= 2
-              THEN list_distinct(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1]))
-              ELSE [] END AS s
-  FROM toks
-), inv AS (
-  SELECT doc_id, unnest(s) AS shingle FROM sh
-), common AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-  FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), sz AS (
-  SELECT doc_id, len(s) AS n FROM sh
-), pairs AS (
-  SELECT id_a, id_b FROM (
-    SELECT id_a, id_b,
-           round(n_common * 1.0 / (x.n + y.n - n_common), 6) AS jaccard
-    FROM common JOIN sz x ON id_a = x.doc_id JOIN sz y ON id_b = y.doc_id)
-  WHERE jaccard >= 0.2
-), sym AS (
-  SELECT id_a AS s, id_b AS d FROM pairs
-  UNION
-  SELECT id_b, id_a FROM pairs
-), reach(a, b) AS (
-  SELECT s, s FROM sym
-  UNION
-  SELECT r.a, s.d FROM reach r JOIN sym s ON r.b = s.s
-), comp AS (
-  SELECT a AS id, min(b) AS comp FROM reach GROUP BY a
-)
-SELECT min(id) AS keep_id,
-       count(*) AS group_size,
-       string_agg(CAST(id AS VARCHAR), ',' ORDER BY id) AS members
-FROM comp GROUP BY comp
-""",
-        "ann_topk": _ANN_TOPK_ORACLE,
-        "embedding_neardup": _EMB_NEARDUP_ORACLE,
-        "llm_gold_pipeline": """
-WITH RECURSIVE stats AS (
-  WITH base AS (
-    SELECT doc_id, text,
-           list_filter(string_split_regex(lower(trim(coalesce(text, ''))), '\\s+'), t -> t != '') AS toks,
-           length(text) AS n_chars_actual
-    FROM documents
-  ), ratios AS (
-    SELECT doc_id, text, toks, n_chars_actual,
-           len(toks) AS n_tokens,
-           CASE WHEN n_chars_actual > 0
-                THEN (n_chars_actual - length(regexp_replace(text, '[!-/:-@\\[-`{-~]', '', 'g')))
-                     * 1.0 / n_chars_actual
-                ELSE 0.0 END AS praw,
-           CASE WHEN len(toks) > 0
-                THEN len(list_filter(toks, t -> list_contains(['the', 'a', 'and', 'of', 'to'], t)))
-                     * 1.0 / len(toks)
-                ELSE 0.0 END AS sraw,
-           len(list_filter(toks, t -> list_contains(['der', 'die', 'das', 'und', 'nicht'], t))) AS h_de,
-           len(list_filter(toks, t -> list_contains(['the', 'a', 'and', 'of', 'to'], t))) AS h_en,
-           len(list_filter(toks, t -> list_contains(['el', 'la', 'los', 'de', 'y'], t))) AS h_es,
-           len(list_filter(toks, t -> list_contains(['le', 'la', 'les', 'et', 'des'], t))) AS h_fr,
-           len(list_filter(toks, t -> list_contains(['的', '是', '了', '在', '我'], t))) AS h_zh
-    FROM base
-  )
-  SELECT doc_id, n_tokens,
-         round((least(n_chars_actual / 500.0, 1.0)
-                + 1.0 - least(praw * 5.0, 1.0)
-                + least(sraw * 4.0, 1.0)) / 3.0, 4) AS quality,
-         CASE WHEN greatest(h_de, h_en, h_es, h_fr, h_zh) = 0 THEN 'und'
-              WHEN h_zh = greatest(h_de, h_en, h_es, h_fr, h_zh) THEN 'zh'
-              WHEN h_fr = greatest(h_de, h_en, h_es, h_fr, h_zh) THEN 'fr'
-              WHEN h_es = greatest(h_de, h_en, h_es, h_fr, h_zh) THEN 'es'
-              WHEN h_en = greatest(h_de, h_en, h_es, h_fr, h_zh) THEN 'en'
-              ELSE 'de' END AS lang_pred,
-         md5(regexp_replace(lower(trim(coalesce(text, ''))), '\\s+', ' ', 'g')) AS fingerprint
-  FROM ratios
-), clean AS (
-  SELECT doc_id, n_tokens, lang_pred, quality FROM (
-    SELECT doc_id, n_tokens, lang_pred, quality,
-           row_number() OVER (PARTITION BY fingerprint ORDER BY doc_id) AS rn
-    FROM stats WHERE quality >= 0.5)
-  WHERE rn = 1
-), toks AS (
-  SELECT doc_id, list_filter(string_split_regex(trim(lower(coalesce(text, ''))), '\\s+'), t -> t != '') AS t
-  FROM documents
-), grams5 AS (
-  SELECT doc_id, array_to_string(list_slice(t, i + 1, i + 5), ' ') AS gram
-  FROM toks, UNNEST(range(0, greatest(len(t) - 4, 0))) AS u(i)
-), eg AS (
-  SELECT DISTINCT gram FROM grams5 WHERE doc_id % 20 = 0
-), train AS (
-  SELECT c.doc_id FROM clean c WHERE c.doc_id % 20 != 0
-), kept AS (
-  SELECT doc_id FROM train
-  WHERE doc_id NOT IN (
-    SELECT DISTINCT g.doc_id FROM grams5 g
-    JOIN eg USING (gram) WHERE g.doc_id IN (SELECT doc_id FROM train))
-), sh AS (
-  SELECT k.doc_id,
-         CASE WHEN len(t.t) >= 2
-              THEN list_distinct(list_transform(range(1, len(t.t)), i -> t.t[i] || ' ' || t.t[i+1]))
-              ELSE [] END AS s
-  FROM kept k JOIN toks t ON k.doc_id = t.doc_id
-), inv AS (
-  SELECT doc_id, unnest(s) AS shingle FROM sh
-), common AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-  FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), sz AS (
-  SELECT doc_id, len(s) AS n FROM sh
-), pairs AS (
-  SELECT id_a, id_b FROM (
-    SELECT id_a, id_b,
-           round(n_common * 1.0 / (x.n + y.n - n_common), 6) AS jaccard
-    FROM common JOIN sz x ON id_a = x.doc_id JOIN sz y ON id_b = y.doc_id)
-  WHERE jaccard >= 0.2
-), sym AS (
-  SELECT id_a AS s, id_b AS d FROM pairs
-  UNION
-  SELECT id_b, id_a FROM pairs
-), reach(a, b) AS (
-  SELECT s, s FROM sym
-  UNION
-  SELECT r.a, s2.d FROM reach r JOIN sym s2 ON r.b = s2.s
-), comp AS (
-  SELECT a AS id, min(b) AS comp FROM reach GROUP BY a
-), keyed AS (
-  SELECT k.doc_id, COALESCE(c.comp, k.doc_id) AS group_key
-  FROM kept k LEFT JOIN comp c ON k.doc_id = c.id
-)
-SELECT cl.doc_id, cl.n_tokens, cl.lang_pred, cl.quality, ky.group_key,
-       CASE WHEN bkt < 5 THEN 'test'
-            WHEN bkt < 95 THEN 'train'
-            ELSE 'val' END AS split
-FROM clean cl
-JOIN (SELECT doc_id, group_key,
-             ('0x' || substr(md5(CAST(group_key AS VARCHAR)), 1, 8))::UBIGINT % 100 AS bkt
-      FROM keyed) ky
-  ON cl.doc_id = ky.doc_id
-ORDER BY cl.doc_id
-""",
-        "dedup_funnel": """
-WITH RECURSIVE fp AS (
-  SELECT md5(regexp_replace(lower(trim(coalesce(text, ''))), '\\s+', ' ', 'g')) AS f,
-         min(doc_id) AS keep_id, count(*) AS n_dups
-  FROM documents GROUP BY 1
-), surv AS (
-  SELECT d.doc_id, d.text FROM documents d JOIN fp ON d.doc_id = fp.keep_id
-), toks AS (
-  SELECT doc_id, list_filter(string_split_regex(lower(trim(coalesce(text, ''))), '\\s+'), t -> t != '') AS t
-  FROM surv
-), sh AS (
-  SELECT doc_id,
-         CASE WHEN len(t) >= 2
-              THEN list_distinct(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1]))
-              ELSE [] END AS s
-  FROM toks
-), inv AS (
-  SELECT doc_id, unnest(s) AS shingle FROM sh
-), common AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-  FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), sz AS (
-  SELECT doc_id, len(s) AS n FROM sh
-), pairs AS (
-  SELECT id_a, id_b FROM (
-    SELECT id_a, id_b,
-           round(n_common * 1.0 / (x.n + y.n - n_common), 6) AS jaccard
-    FROM common JOIN sz x ON id_a = x.doc_id JOIN sz y ON id_b = y.doc_id)
-  WHERE jaccard >= 0.2
-), sym AS (
-  SELECT id_a AS s, id_b AS d FROM pairs
-  UNION
-  SELECT id_b, id_a FROM pairs
-), reach(a, b) AS (
-  SELECT s, s FROM sym
-  UNION
-  SELECT r.a, s2.d FROM reach r JOIN sym s2 ON r.b = s2.s
-), comp AS (
-  SELECT a AS id, min(b) AS comp FROM reach GROUP BY a
-), ndstats AS (
-  SELECT CAST(coalesce(sum(n - 1), 0) AS BIGINT) AS nd_removed
-  FROM (SELECT comp, count(*) AS n FROM comp GROUP BY comp)
-), ex AS (
-  SELECT CAST(count(*) AS BIGINT) AS groups, CAST(sum(n_dups) AS BIGINT) AS docs FROM fp
-)
-SELECT ex.docs AS n_docs,
-       ex.docs - ex.groups AS n_exact_removed,
-       ndstats.nd_removed AS n_neardup_removed,
-       ex.groups - ndstats.nd_removed AS n_final,
-       round((ex.groups - ndstats.nd_removed) * 1.0 / GREATEST(ex.docs, 1), 6)
-         AS retention_rate
-FROM ex CROSS JOIN ndstats
-""",
-        "contamination_report": """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'), t -> t != '') AS t
-  FROM documents
-), grams AS (
-  SELECT doc_id, array_to_string(list_slice(t, i + 1, i + 5), ' ') AS gram
-  FROM toks, UNNEST(range(0, greatest(len(t) - 4, 0))) AS u(i)
-), tg AS (
-  SELECT DISTINCT doc_id, gram FROM grams WHERE doc_id % 20 != 0
-), eg AS (
-  SELECT DISTINCT gram FROM grams WHERE doc_id % 20 = 0
-), hits AS (
-  SELECT doc_id, count(*) AS n_collisions FROM tg JOIN eg USING (gram) GROUP BY doc_id
-), ng AS (
-  SELECT d.doc_id,
-         CAST(coalesce(h.n_collisions, 0) AS BIGINT) AS n_collisions,
-         coalesce(h.n_collisions, 0) > 0 AS ngram_contaminated
-  FROM (SELECT doc_id FROM documents WHERE doc_id % 20 != 0) d
-  LEFT JOIN hits h USING (doc_id)
-), ev AS (
-  SELECT vec_id AS eval_id, embedding::DOUBLE[] AS v
-  FROM embeddings WHERE vec_id % 20 = 0
-), tr AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v
-  FROM embeddings WHERE vec_id % 20 != 0
-), scored AS (
-  SELECT tr.vec_id,
-         round(list_dot_product(tr.v, ev.v)
-               / (sqrt(list_dot_product(tr.v, tr.v))
-                  * sqrt(list_dot_product(ev.v, ev.v))), 6) AS c
-  FROM tr CROSS JOIN ev
-), sem AS (
-  SELECT vec_id, max(c) AS max_cosine, max(c) >= 0.3 AS semantic_contaminated
-  FROM scored GROUP BY vec_id
-)
-SELECT ng.doc_id, ng.n_collisions, ng.ngram_contaminated,
-       sem.max_cosine,
-       coalesce(sem.semantic_contaminated, FALSE) AS semantic_contaminated,
-       ng.ngram_contaminated OR coalesce(sem.semantic_contaminated, FALSE)
-         AS any_contaminated
-FROM ng LEFT JOIN sem ON ng.doc_id = sem.vec_id
-ORDER BY ng.doc_id
-""",
-        "source_mix_report": """
-WITH per AS (
-  SELECT source,
-         CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(len(list_filter(string_split_regex(lower(trim(text)), '\\s+'), t -> t != ''))) AS BIGINT) AS n_tokens
-  FROM documents GROUP BY source
-)
-SELECT source, n_docs, n_tokens,
-       round(n_tokens * 1.0 / GREATEST(sum(n_tokens) OVER (), 1), 6) AS share,
-       round(1000000 * (n_tokens * 1.0 / GREATEST(sum(n_tokens) OVER (), 1))
-             / GREATEST(n_tokens, 1), 6) AS effective_epochs
-FROM per
-ORDER BY source
-""",
-        "dedup_keep_best": """
-WITH RECURSIVE toks AS (
-  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'), t -> t != '') AS t
-  FROM documents
-), sh AS (
-  SELECT doc_id,
-         CASE WHEN len(t) >= 2
-              THEN list_distinct(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1]))
-              ELSE [] END AS s
-  FROM toks
-), inv AS (
-  SELECT doc_id, unnest(s) AS shingle FROM sh
-), common AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-  FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), sz AS (
-  SELECT doc_id, len(s) AS n FROM sh
-), pairs AS (
-  SELECT id_a, id_b FROM (
-    SELECT id_a, id_b,
-           round(n_common * 1.0 / (x.n + y.n - n_common), 6) AS jaccard
-    FROM common JOIN sz x ON id_a = x.doc_id JOIN sz y ON id_b = y.doc_id)
-  WHERE jaccard >= 0.2
-), sym AS (
-  SELECT id_a AS s, id_b AS d FROM pairs
-  UNION
-  SELECT id_b, id_a FROM pairs
-), reach(a, b) AS (
-  SELECT s, s FROM sym
-  UNION
-  SELECT r.a, s2.d FROM reach r JOIN sym s2 ON r.b = s2.s
-), comp AS (
-  SELECT a AS id, min(b) AS comp FROM reach GROUP BY a
-), labeled AS (
-  SELECT d.doc_id, d.n_chars, COALESCE(c.comp, d.doc_id) AS group_key
-  FROM documents d LEFT JOIN comp c ON d.doc_id = c.id
-), winners AS (
-  SELECT group_key,
-         first(doc_id ORDER BY n_chars DESC, doc_id ASC) AS keep_id,
-         CAST(count(*) AS BIGINT) AS group_size
-  FROM labeled GROUP BY group_key
-)
-SELECT l.doc_id, l.group_key, w.keep_id,
-       l.doc_id = w.keep_id AS kept, w.group_size
-FROM labeled l JOIN winners w USING (group_key)
-ORDER BY l.doc_id
-""",
-        "leakage_safe_split": """
-WITH RECURSIVE toks AS (
-  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'), t -> t != '') AS t
-  FROM documents
-), sh AS (
-  SELECT doc_id,
-         CASE WHEN len(t) >= 2
-              THEN list_distinct(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1]))
-              ELSE [] END AS s
-  FROM toks
-), inv AS (
-  SELECT doc_id, unnest(s) AS shingle FROM sh
-), common AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-  FROM inv a JOIN inv b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-), sz AS (
-  SELECT doc_id, len(s) AS n FROM sh
-), pairs AS (
-  SELECT id_a, id_b FROM (
-    SELECT id_a, id_b,
-           round(n_common * 1.0 / (x.n + y.n - n_common), 6) AS jaccard
-    FROM common JOIN sz x ON id_a = x.doc_id JOIN sz y ON id_b = y.doc_id)
-  WHERE jaccard >= 0.2
-), sym AS (
-  SELECT id_a AS s, id_b AS d FROM pairs
-  UNION
-  SELECT id_b, id_a FROM pairs
-), reach(a, b) AS (
-  SELECT s, s FROM sym
-  UNION
-  SELECT r.a, s.d FROM reach r JOIN sym s ON r.b = s.s
-), comp AS (
-  SELECT a AS id, min(b) AS comp FROM reach GROUP BY a
-), keyed AS (
-  SELECT d.doc_id, COALESCE(c.comp, d.doc_id) AS group_key
-  FROM documents d LEFT JOIN comp c ON d.doc_id = c.id
-)
-SELECT doc_id, group_key,
-       CASE WHEN bkt < 5 THEN 'test'
-            WHEN bkt < 95 THEN 'train'
-            ELSE 'val' END AS split
-FROM (SELECT doc_id, group_key,
-             ('0x' || substr(md5(CAST(group_key AS VARCHAR)), 1, 8))::UBIGINT % 100 AS bkt
-      FROM keyed)
-ORDER BY doc_id
-""",
-        "semantic_decontaminate": """
-WITH ev AS (
-  SELECT vec_id AS eval_id, embedding::DOUBLE[] AS v
-  FROM embeddings WHERE vec_id % 20 = 0
-), tr AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v
-  FROM embeddings WHERE vec_id % 20 != 0
-), scored AS (
-  SELECT tr.vec_id, ev.eval_id,
-         round(list_dot_product(tr.v, ev.v)
-               / (sqrt(list_dot_product(tr.v, tr.v))
-                  * sqrt(list_dot_product(ev.v, ev.v))), 6) AS c
-  FROM tr CROSS JOIN ev
-)
-SELECT vec_id, eval_id AS nearest_eval_id, c AS max_cosine,
-       c >= 0.3 AS contaminated
-FROM (SELECT *, row_number() OVER (PARTITION BY vec_id
-                                   ORDER BY c DESC, eval_id ASC) AS rn
-      FROM scored)
-WHERE rn = 1
-ORDER BY vec_id
-""",
-        "decontaminate": """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'), t -> t != '') AS t
-  FROM documents
-), grams AS (
-  SELECT doc_id, array_to_string(list_slice(t, i + 1, i + 5), ' ') AS gram
-  FROM toks, UNNEST(range(0, greatest(len(t) - 4, 0))) AS u(i)
-), tg AS (
-  SELECT DISTINCT doc_id, gram FROM grams WHERE doc_id % 20 != 0
-), eg AS (
-  SELECT DISTINCT gram FROM grams WHERE doc_id % 20 = 0
-), hits AS (
-  SELECT doc_id, count(*) AS n_collisions FROM tg JOIN eg USING (gram) GROUP BY doc_id
-)
-SELECT d.doc_id,
-       CAST(coalesce(h.n_collisions, 0) AS BIGINT) AS n_collisions,
-       coalesce(h.n_collisions, 0) > 0 AS contaminated
-FROM (SELECT doc_id FROM documents WHERE doc_id % 20 != 0) d
-LEFT JOIN hits h USING (doc_id)
-ORDER BY doc_id
-""",
-        "pii_scrub": f"""
-WITH salted AS (
-  SELECT doc_id,
-         concat(coalesce(text, ''), ' mail u', CAST(doc_id AS VARCHAR), '@ex.com ip 10.0.0.',
-                CAST(doc_id % 200 AS VARCHAR), ' tel 555-123-',
-                lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')) AS text
-  FROM documents
-)
-SELECT doc_id,
-       CAST(len(regexp_extract_all(text, '{PII_PATTERNS["email"]}')) AS BIGINT) AS n_emails,
-       CAST(len(regexp_extract_all(text, '{PII_PATTERNS["ipv4"]}')) AS BIGINT) AS n_ips,
-       CAST(len(regexp_extract_all(text, '{PII_PATTERNS["phone"]}')) AS BIGINT) AS n_phones,
-       regexp_replace(
-         regexp_replace(
-           regexp_replace(text, '{PII_PATTERNS["email"]}', '[EMAIL]', 'g'),
-           '{PII_PATTERNS["ipv4"]}', '[IP]', 'g'),
-         '{PII_PATTERNS["phone"]}', '[PHONE]', 'g') AS clean_text
-FROM salted
-ORDER BY doc_id
-""",
-        # literals carry e0 so DuckDB parses DOUBLE (bare decimals are
-        # DECIMAL there); expression parenthesization mirrors the Spark
-        # plan exactly, and the score is rounded at 6dp in both twins
-        "bm25_score": """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'), t -> t != '') AS t
-  FROM documents
-), per_doc AS (
-  SELECT doc_id, CAST(len(t) AS BIGINT) AS dl,
-         CAST(len(list_filter(t, x -> x = 'spark')) AS BIGINT) AS tf_0,
-         CAST(len(list_filter(t, x -> x = 'hash'))  AS BIGINT) AS tf_1,
-         CAST(len(list_filter(t, x -> x = 'table')) AS BIGINT) AS tf_2
-  FROM toks
-), stats AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(dl) AS BIGINT) AS sum_dl,
-         CAST(sum(CASE WHEN tf_0 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_0,
-         CAST(sum(CASE WHEN tf_1 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_1,
-         CAST(sum(CASE WHEN tf_2 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS df_2
-  FROM per_doc
-), scored AS (
-  SELECT doc_id, dl,
-    (ln(((n_docs - df_0) + 0.5e0) / (df_0 + 0.5e0) + 1.0e0)
-       * (tf_0 * 2.2e0) / (tf_0 + 1.2e0 * (0.25e0 + (0.75e0 * dl) / (sum_dl / n_docs))))
-  + (ln(((n_docs - df_1) + 0.5e0) / (df_1 + 0.5e0) + 1.0e0)
-       * (tf_1 * 2.2e0) / (tf_1 + 1.2e0 * (0.25e0 + (0.75e0 * dl) / (sum_dl / n_docs))))
-  + (ln(((n_docs - df_2) + 0.5e0) / (df_2 + 0.5e0) + 1.0e0)
-       * (tf_2 * 2.2e0) / (tf_2 + 1.2e0 * (0.25e0 + (0.75e0 * dl) / (sum_dl / n_docs))))
-    AS score
-  FROM per_doc, stats
-)
-SELECT doc_id, dl, round(score, 6) AS score
-FROM scored
-WHERE score > 0
-ORDER BY doc_id
-""",
-        "pack_sequences": """
-WITH toks AS (
-  SELECT source, doc_id,
-         CAST(len(list_filter(string_split_regex(trim(lower(coalesce(text, ''))), '\\s+'), t -> t != '')) AS BIGINT) AS n_tokens
-  FROM documents
-), c AS (
-  SELECT source, doc_id, n_tokens,
-         CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-                                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
-  FROM toks
-), spans AS (
-  SELECT source, doc_id, n_tokens, cum_tokens,
-         (cum_tokens - n_tokens) // 64 AS seq_first,
-         greatest((cum_tokens - 1) // 64, (cum_tokens - n_tokens) // 64) AS seq_last
-  FROM c
-)
-SELECT source, doc_id, n_tokens, cum_tokens, seq_first, seq_last,
-       seq_last - seq_first + 1 AS n_seqs
-FROM spans
-ORDER BY source, doc_id
-""",
-        "rebalance_sample": """
-WITH q(lang, quota) AS (VALUES ('de', 30), ('en', 100), ('fr', 30)),
-ranked AS (
-  SELECT d.lang, d.doc_id,
-         row_number() OVER (
-           PARTITION BY d.lang
-           ORDER BY md5(CAST(d.doc_id AS VARCHAR)), d.doc_id) AS rn,
-         q.quota
-  FROM documents d JOIN q USING (lang)
-)
-SELECT lang, doc_id, rn FROM ranked
-WHERE rn <= quota
-ORDER BY lang, rn
-""",
-        "temperature_sample": """
-WITH c AS (SELECT lang, CAST(count(*) AS DOUBLE) AS n FROM documents
-           -- null group = no quota (operator contract) and must not
-           -- pollute the total weight either
-           WHERE lang IS NOT NULL GROUP BY lang),
-w AS (SELECT lang, n, sqrt(n) AS wt FROM c),
--- ORDER BY inside the aggregate pins the float-summation order to the
--- engine-independent sorted-key order the Spark side uses, so the
--- floor() boundary cannot flip on summation-order ulps
-t AS (SELECT sum(wt ORDER BY lang) AS tw FROM w),
-q AS (SELECT lang, CAST(least(n, floor(200 * wt / tw)) AS BIGINT) AS quota
-      FROM w, t),
-ranked AS (
-  SELECT d.lang, d.doc_id,
-         row_number() OVER (
-           PARTITION BY d.lang
-           ORDER BY md5(CAST(d.doc_id AS VARCHAR)), d.doc_id) AS rn
-  FROM documents d
-)
-SELECT r.lang, r.doc_id, r.rn
-FROM ranked r JOIN q USING (lang)
-WHERE r.rn <= q.quota
-""",
-        "split_assign": """
-WITH b AS (
-  SELECT lang,
-         ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::UBIGINT % 100 AS bkt
-  FROM documents
-)
-SELECT lang,
-       CASE WHEN bkt < 5 THEN 'test'
-            WHEN bkt < 95 THEN 'train'
-            ELSE 'val' END AS split,
-       CAST(count(*) AS BIGINT) AS n_docs
-FROM b
-GROUP BY 1, 2
-ORDER BY lang, split
-""",
-        "market_share": """
-WITH asia_cust AS (
-  SELECT c_custkey FROM customer
-  JOIN nation ON c_nationkey = n_nationkey
-  JOIN region ON n_regionkey = r_regionkey
-  WHERE r_name = 'ASIA'
-), supp_nat AS (
-  SELECT s_suppkey, n_name AS supp_nation FROM supplier
-  JOIN nation ON s_nationkey = n_nationkey
-)
-SELECT year(o_orderdate) AS yr,
-       round(sum(CASE WHEN supp_nation = 'NATION_3'
-                      THEN CAST(round(l_extendedprice*(1-l_discount)*10000, 0) AS BIGINT)
-                      ELSE 0 END)
-             / CAST(sum(CAST(round(l_extendedprice*(1-l_discount)*10000, 0) AS BIGINT)) AS DOUBLE),
-             6) AS mkt_share
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN asia_cust ON o_custkey = c_custkey
-JOIN supp_nat ON l_suppkey = s_suppkey
-GROUP BY 1
-ORDER BY yr
-""",
-        "min_cost_supplier": """
-WITH per AS (
-  SELECT l_partkey, l_suppkey,
-         floor(sum(round(l_extendedprice * 100, 0)) / count(*) + 0.5) / 100.0 AS avg_price
-  FROM lineitem GROUP BY l_partkey, l_suppkey
-)
-SELECT l_partkey,
-       first(l_suppkey ORDER BY avg_price, l_suppkey) AS best_suppkey,
-       first(avg_price ORDER BY avg_price, l_suppkey) AS best_price,
-       CAST(count(*) AS BIGINT) AS n_suppliers
-FROM per
-GROUP BY l_partkey
-ORDER BY l_partkey
-LIMIT 500
-""",
-        "nation_revenue_share": """
-WITH rev AS (
-  SELECT n_name, sum(l_extendedprice * (1 - l_discount)) AS rev
-  FROM lineitem
-  JOIN supplier ON l_suppkey = s_suppkey
-  JOIN nation ON s_nationkey = n_nationkey
-  GROUP BY n_name
-), t AS (SELECT sum(rev) AS total FROM rev),
-shares AS (
-  SELECT n_name, round(rev, 2) AS revenue,
-         round(rev * 100.0e0 / total, 4) AS share_pct
-  FROM rev, t
-)
-SELECT n_name, revenue, share_pct FROM shares
-WHERE share_pct > 3.0
-ORDER BY share_pct DESC, n_name
-""",
-        "dormant_rich_customers": """
-WITH a AS (SELECT avg(c_acctbal) AS avg_bal FROM customer),
-dormant AS (
-  SELECT c.* FROM customer c, a
-  WHERE c.c_acctbal > a.avg_bal
-    AND NOT EXISTS (SELECT 1 FROM orders o
-                    WHERE o.o_custkey = c.c_custkey
-                      AND o.o_orderpriority = '1-URGENT')
-)
-SELECT c_mktsegment,
-       CAST(count(*) AS BIGINT) AS n_customers,
-       round(sum(c_acctbal), 2) AS total_balance
-FROM dormant
-GROUP BY c_mktsegment
-ORDER BY c_mktsegment
-""",
-        "order_priority_exists": """
-SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
-FROM orders o
-WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o.o_orderdate < TIMESTAMP '1996-04-01'
-  AND EXISTS (SELECT 1 FROM lineitem l
-              WHERE l.l_orderkey = o.o_orderkey
-                AND l.l_shipdate > o.o_orderdate + INTERVAL 30 DAY)
-GROUP BY o_orderpriority
-ORDER BY o_orderpriority
-""",
-        "waiting_suppliers": """
-SELECT s_name, CAST(count(DISTINCT l1.l_orderkey) AS BIGINT) AS numwait
-FROM supplier
-JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
-JOIN orders ON o_orderkey = l1.l_orderkey
-WHERE l1.l_shipdate > o_orderdate + INTERVAL 60 DAY
-  AND EXISTS (SELECT 1 FROM lineitem l2
-              WHERE l2.l_orderkey = l1.l_orderkey
-                AND l2.l_suppkey <> l1.l_suppkey)
-  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-                  WHERE l3.l_orderkey = l1.l_orderkey
-                    AND l3.l_suppkey <> l1.l_suppkey
-                    AND l3.l_shipdate > o_orderdate + INTERVAL 60 DAY)
-GROUP BY s_name
-ORDER BY numwait DESC, s_name
-LIMIT 20
-""",
-        "rolling_beta": """
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS d, avg(value) AS v
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL
-  GROUP BY user_id, CAST(ts AS DATE)
-), idx AS (
-  SELECT CAST(ts AS DATE) AS d, avg(value) AS m
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL
-  GROUP BY CAST(ts AS DATE)
-), joined AS (
-  SELECT daily.user_id, daily.d, daily.v, idx.m FROM daily JOIN idx USING (d)
-), windowed AS (
-  SELECT user_id, d,
-         round(covar_samp(v, m) OVER w / var_samp(m) OVER w, 4) AS beta,
-         round(corr(v, m) OVER w, 4) AS corr_vm,
-         CAST(count(*) OVER w AS BIGINT) AS n_obs
-  FROM joined
-  WINDOW w AS (PARTITION BY user_id ORDER BY d ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
-)
-SELECT user_id, d, beta, corr_vm, n_obs FROM windowed
-WHERE n_obs >= 5
-ORDER BY user_id, d
-""",
-        "quantile_summary": """
-SELECT o_orderpriority,
-       round(quantile_cont(o_totalprice, 0.25), 6) AS q25,
-       round(quantile_cont(o_totalprice, 0.5), 6) AS q50,
-       round(quantile_cont(o_totalprice, 0.75), 6) AS q75,
-       CAST(count(*) AS BIGINT) AS n_orders
-FROM orders
-GROUP BY o_orderpriority
-ORDER BY o_orderpriority
-""",
-        "duplicate_spans": """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'), t -> t != '') AS t
-  FROM documents
-), grams AS (
-  SELECT DISTINCT doc_id, array_to_string(list_slice(t, i + 1, i + 4), ' ') AS span
-  FROM toks, UNNEST(range(0, greatest(len(t) - 3, 0))) AS u(i)
-), g AS (
-  SELECT span, CAST(count(*) AS BIGINT) AS n_docs,
-         array_to_string(
-           list_transform(list_slice(list_sort(list(doc_id)), 1, 20),
-                          x -> CAST(x AS VARCHAR)), ',') AS members
-  FROM grams GROUP BY span
-)
-SELECT span, n_docs, members FROM g
-WHERE n_docs >= 2
-ORDER BY n_docs DESC, span ASC
-LIMIT 100
-""",
-        "incremental_dedup": """
-WITH fp AS (
-  SELECT doc_id,
-         md5(regexp_replace(lower(trim(coalesce(text, ''))), '\\s+', ' ', 'g')) AS fp
-  FROM documents
-), store AS (
-  SELECT DISTINCT fp FROM fp WHERE doc_id % 3 = 0
-), batch AS (
-  SELECT doc_id, fp,
-         min(doc_id) OVER (PARTITION BY fp) AS first_in_batch
-  FROM fp WHERE doc_id % 3 != 0
-)
-SELECT b.doc_id, b.fp,
-       s.fp IS NOT NULL AS dup_of_store,
-       b.doc_id != b.first_in_batch AS dup_in_batch,
-       (s.fp IS NULL AND b.doc_id = b.first_in_batch) AS keep
-FROM batch b LEFT JOIN store s USING (fp)
-ORDER BY doc_id
-""",
-        "dsir_weights": """
-WITH toks AS (
-  SELECT doc_id, lang,
-         list_filter(string_split_regex(lower(trim(text)), '\\s+'), t -> t != '') AS t
-  FROM documents
-), grams AS (
-  SELECT doc_id, lang, unnest(t) AS g FROM toks
-  UNION ALL
-  SELECT doc_id, lang, t[i] || ' ' || t[i+1] AS g
-  FROM toks, UNNEST(range(1, len(t))) AS u(i)
-), b AS (
-  SELECT doc_id, lang, ('0x' || substr(md5(g), 1, 8))::UBIGINT % 8192 AS bkt
-  FROM grams
-), ct AS (
-  SELECT bkt, count(*) AS c FROM b WHERE lang = 'en' GROUP BY 1
-), cr AS (
-  SELECT bkt, count(*) AS c FROM b WHERE lang != 'en' GROUP BY 1
-), nt AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM ct),
-   nr AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM cr),
-model AS (
-  SELECT COALESCE(ct.bkt, cr.bkt) AS bkt,
-         ln((COALESCE(ct.c, 0) + 1) / (nt.n + 8192))
-           - ln((COALESCE(cr.c, 0) + 1) / (nr.n + 8192)) AS llr,
-         CAST(floor(((COALESCE(ct.c, 0) + 1) / (nt.n + 8192)
-                     - (COALESCE(cr.c, 0) + 1) / (nr.n + 8192)) * 1e12 + 0.5)
-              AS BIGINT) AS dfx
-  FROM ct FULL OUTER JOIN cr ON ct.bkt = cr.bkt, nt, nr
-), sc AS (
-  SELECT b.doc_id, sum(m.llr) AS lw,
-         CAST(sum(m.dfx) AS BIGINT) AS sfx, count(*) AS ng
-  FROM b JOIN model m ON b.bkt = m.bkt WHERE b.lang != 'en' GROUP BY 1
-)
-SELECT d.doc_id, round(COALESCE(sc.lw, 0.0), 6) AS logw,
-       COALESCE(sc.sfx, 0) AS score_fx,
-       CAST(COALESCE(sc.ng, 0) AS BIGINT) AS n_grams
-FROM (SELECT doc_id FROM documents WHERE lang != 'en') d
-LEFT JOIN sc USING (doc_id)
-ORDER BY doc_id
-""",
-        "dsir_select": """
-WITH toks AS (
-  SELECT doc_id, lang,
-         list_filter(string_split_regex(lower(trim(text)), '\\s+'), t -> t != '') AS t
-  FROM documents
-), grams AS (
-  SELECT doc_id, lang, unnest(t) AS g FROM toks
-  UNION ALL
-  SELECT doc_id, lang, t[i] || ' ' || t[i+1] AS g
-  FROM toks, UNNEST(range(1, len(t))) AS u(i)
-), b AS (
-  SELECT doc_id, lang, ('0x' || substr(md5(g), 1, 8))::UBIGINT % 8192 AS bkt
-  FROM grams
-), ct AS (
-  SELECT bkt, count(*) AS c FROM b WHERE lang = 'en' GROUP BY 1
-), cr AS (
-  SELECT bkt, count(*) AS c FROM b WHERE lang != 'en' GROUP BY 1
-), nt AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM ct),
-   nr AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM cr),
-model AS (
-  SELECT COALESCE(ct.bkt, cr.bkt) AS bkt,
-         CAST(floor(((COALESCE(ct.c, 0) + 1) / (nt.n + 8192)
-                     - (COALESCE(cr.c, 0) + 1) / (nr.n + 8192)) * 1e12 + 0.5)
-              AS BIGINT) AS dfx
-  FROM ct FULL OUTER JOIN cr ON ct.bkt = cr.bkt, nt, nr
-), sc AS (
-  SELECT b.doc_id, CAST(sum(m.dfx) AS BIGINT) AS sfx, count(*) AS ng
-  FROM b JOIN model m ON b.bkt = m.bkt WHERE b.lang != 'en' GROUP BY 1
-)
-SELECT d.doc_id, COALESCE(sc.sfx, 0) AS score_fx,
-       CAST(COALESCE(sc.ng, 0) AS BIGINT) AS n_grams
-FROM (SELECT doc_id FROM documents WHERE lang != 'en') d
-LEFT JOIN sc USING (doc_id)
-ORDER BY score_fx DESC, doc_id
-LIMIT 100
-""",
-        "remove_duplicate_spans": """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(coalesce(text, ''))), '\\s+'), t -> t != '') AS t
-  FROM documents
-), occ AS (
-  SELECT doc_id, i AS pos,
-         array_to_string(list_slice(t, i + 1, i + 4), ' ') AS span
-  FROM toks, UNNEST(range(0, greatest(len(t) - 3, 0))) AS u(i)
-), stats AS (
-  SELECT span FROM occ GROUP BY span HAVING count(*) >= 2
-), dup AS (
-  SELECT doc_id, pos FROM (
-    SELECT o.doc_id, o.pos,
-           row_number() OVER (PARTITION BY o.span ORDER BY o.doc_id, o.pos) AS rn
-    FROM occ o JOIN stats s USING (span)
-  ) WHERE rn > 1
-), covered AS (
-  SELECT DISTINCT doc_id, pos + j AS tpos
-  FROM dup, UNNEST(range(0, 4)) AS v(j)
-), tok_rows AS (
-  SELECT doc_id, i AS tpos, t[i + 1] AS tok
-  FROM toks, UNNEST(range(0, len(t))) AS w(i)
-), kept AS (
-  SELECT tr.doc_id, tr.tpos, tr.tok FROM tok_rows tr
-  ANTI JOIN covered c ON tr.doc_id = c.doc_id AND tr.tpos = c.tpos
-), agg AS (
-  SELECT doc_id, string_agg(tok, ' ' ORDER BY tpos) AS clean_text,
-         count(*) AS n_kept
-  FROM kept GROUP BY doc_id
-)
-SELECT t.doc_id,
-       coalesce(a.clean_text, '') AS clean_text,
-       CAST(len(t.t) - coalesce(a.n_kept, 0) AS BIGINT) AS n_removed
-FROM toks t LEFT JOIN agg a USING (doc_id)
-ORDER BY doc_id
-""",
-        "bpe_merge_candidates": """
-WITH vocab AS (
-  SELECT word, count(*) AS wcount FROM (
-    SELECT unnest(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                              t -> t != '')) AS word
-    FROM documents
-  ) GROUP BY word
-), pairs AS (
-  SELECT substr(word, i, 2) AS pair, wcount
-  FROM vocab, UNNEST(range(1, greatest(len(word), 1))) AS u(i)
-)
-SELECT pair, CAST(sum(wcount) AS BIGINT) AS n
-FROM pairs GROUP BY pair
-ORDER BY n DESC, pair ASC
-LIMIT 40
-""",
-        "class_centroids": """
-SELECT label, i AS dim,
-       round(sum(CAST(round(CAST(embedding[i + 1] AS DOUBLE) * 1000000, 0) AS BIGINT))
-             / (count(*) * 1000000.0), 6) AS centroid,
-       CAST(count(*) AS BIGINT) AS n_vectors
-FROM embeddings, UNNEST(range(0, len(embedding))) AS u(i)
-GROUP BY label, dim
-ORDER BY label, dim
-""",
-        "autocorrelation_fx": _acf_fx_oracle(),
-        "multimodal_features": """
-WITH img AS (
-  SELECT doc_id, 8 + doc_id % 5 AS h, 8 + doc_id % 7 AS w
-  FROM documents WHERE doc_id % 2 = 0
-), ipx AS (
-  SELECT doc_id, h, w, CAST(i % 3 AS INT) AS chan,
-         (doc_id * 31 + i * 7) % 256 AS v
-  FROM img, UNNEST(range(0, CAST(h * w * 3 AS BIGINT))) AS u(i)
-), istats AS (
-  SELECT doc_id, max(h) AS h, max(w) AS w,
-         sum(CASE WHEN chan = 0 THEN v END) AS sr,
-         sum(CASE WHEN chan = 1 THEN v END) AS sg,
-         sum(CASE WHEN chan = 2 THEN v END) AS sb
-  FROM ipx GROUP BY doc_id
-), image_out AS (
-  SELECT doc_id AS media_id, 'image' AS media_type,
-         CAST(3 + length(CAST(w AS VARCHAR)) + 1 + length(CAST(h AS VARCHAR))
-              + 1 + 4 + h * w * 3 AS BIGINT) AS n_bytes,
-         CAST(floor(CAST(CAST(CAST(sr AS DOUBLE) / CAST(h * w AS DOUBLE) AS REAL)
-                         AS DOUBLE) * 1e6 + 0.5) AS BIGINT) AS feat_a,
-         CAST(floor(CAST(CAST(CAST(sg AS DOUBLE) / CAST(h * w AS DOUBLE) AS REAL)
-                         AS DOUBLE) * 1e6 + 0.5) AS BIGINT) AS feat_b,
-         CAST(floor(CAST(CAST(CAST(sb AS DOUBLE) / CAST(h * w AS DOUBLE) AS REAL)
-                         AS DOUBLE) * 1e6 + 0.5) AS BIGINT) AS feat_c,
-         CAST(floor(CAST(CAST(CAST(w AS DOUBLE) / CAST(h AS DOUBLE) AS REAL)
-                         AS DOUBLE) * 1e6 + 0.5) AS BIGINT) AS feat_d
-  FROM istats
-), aud AS (
-  SELECT doc_id, 256 + doc_id % 64 AS n
-  FROM documents WHERE doc_id % 2 = 1
-), smp AS (
-  SELECT doc_id, n, i, (doc_id * 7 + i * 13) % 4096 - 2048 AS s
-  FROM aud, UNNEST(range(0, CAST(n AS BIGINT))) AS u(i)
-), lagged AS (
-  SELECT doc_id, n, i, s,
-         lag(s) OVER (PARTITION BY doc_id ORDER BY i) AS prev
-  FROM smp
-), astats AS (
-  SELECT doc_id, max(n) AS n,
-         sum(CAST(s AS HUGEINT) * s) AS ss,
-         max(abs(s)) AS pk,
-         sum(CASE WHEN prev IS NOT NULL AND (s < 0) != (prev < 0)
-                  THEN 1 ELSE 0 END) AS zc
-  FROM lagged GROUP BY doc_id
-), audio_out AS (
-  SELECT doc_id AS media_id, 'audio' AS media_type,
-         CAST(44 + 2 * n AS BIGINT) AS n_bytes,
-         CAST(floor(CAST(CAST(sqrt((CAST(ss AS DOUBLE) / 1073741824.0)
-                                   / CAST(n AS DOUBLE)) AS REAL) AS DOUBLE)
-                    * 1e6 + 0.5) AS BIGINT) AS feat_a,
-         CAST(floor(CAST(CAST((CAST(zc AS DOUBLE) / 2.0)
-                              / (CAST(n AS DOUBLE) / 16000.0) AS REAL) AS DOUBLE)
-                    * 1e6 + 0.5) AS BIGINT) AS feat_b,
-         CAST(floor(CAST(CAST(CAST(pk AS DOUBLE) / 32768.0 AS REAL) AS DOUBLE)
-                    * 1e6 + 0.5) AS BIGINT) AS feat_c,
-         CAST(floor(CAST(CAST(CAST(n AS DOUBLE) / 16000.0 AS REAL) AS DOUBLE)
-                    * 1e6 + 0.5) AS BIGINT) AS feat_d
-  FROM astats
-)
-SELECT * FROM image_out UNION ALL SELECT * FROM audio_out ORDER BY media_id
-""",
-        "rolling_beta_fx": """
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         CAST(floor(last(value ORDER BY ts, event_id) * 100 + 0.5) AS BIGINT) AS x
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL
-  GROUP BY user_id, CAST(ts AS DATE)
-), idx AS (
-  SELECT d, sum(CAST(x AS HUGEINT)) AS m FROM daily GROUP BY d
-), s AS (
-  SELECT daily.user_id, daily.d,
-         count(*) OVER w AS n,
-         sum(CAST(daily.x AS HUGEINT)) OVER w AS sx,
-         sum(idx.m) OVER w AS sm,
-         sum(CAST(daily.x AS HUGEINT) * idx.m) OVER w AS sxm,
-         sum(CAST(daily.x AS HUGEINT) * daily.x) OVER w AS sxx,
-         sum(idx.m * idx.m) OVER w AS smm
-  FROM daily JOIN idx USING (d)
-  WINDOW w AS (PARTITION BY daily.user_id ORDER BY daily.d
-               ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
-)
-SELECT user_id, d,
-       CASE WHEN (n*smm - sm*sm) > 0
-            THEN floor(CAST(n*sxm - sx*sm AS DOUBLE) / CAST(n*smm - sm*sm AS DOUBLE)
-                       * 1e6 + 0.5) / 1e6 END AS beta,
-       CASE WHEN (n*sxx - sx*sx) > 0 AND (n*smm - sm*sm) > 0
-            THEN floor(CAST(n*sxm - sx*sm AS DOUBLE)
-                       / (sqrt(CAST(n*sxx - sx*sx AS DOUBLE))
-                          * sqrt(CAST(n*smm - sm*sm AS DOUBLE)))
-                       * 1e6 + 0.5) / 1e6 END AS corr_vm,
-       CAST(n AS BIGINT) AS n_obs
-FROM s WHERE n >= 5 ORDER BY user_id, d
-""",
-        "source_chi2_drift": """
-WITH counts AS (
-  SELECT source AS grp, t, count(*) AS n_gt FROM (
-    SELECT source,
-           unnest(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                              x -> x != '')) AS t
-    FROM documents
-  ) GROUP BY grp, t
-), grp_tot AS (
-  SELECT grp, sum(n_gt) AS n_g FROM counts GROUP BY grp
-), term_tot AS (
-  SELECT t, sum(n_gt) AS n_t FROM counts GROUP BY t
-), corpus_tot AS (
-  SELECT sum(n_gt) AS n_corpus FROM counts
-), fx AS (
-  SELECT c.grp, g.n_g,
-         CAST(floor((c.n_gt / g.n_g - tt.n_t / ct.n_corpus)
-                    * (c.n_gt / g.n_g - tt.n_t / ct.n_corpus)
-                    / (tt.n_t / ct.n_corpus) * 1e9 + 0.5) AS BIGINT) AS a_fx,
-         CAST(floor((tt.n_t / ct.n_corpus) * 1e9 + 0.5) AS BIGINT) AS b_fx
-  FROM counts c
-  JOIN grp_tot g ON c.grp = g.grp
-  JOIN term_tot tt ON c.t = tt.t
-  CROSS JOIN corpus_tot ct
-)
-SELECT grp AS source, CAST(max(n_g) AS BIGINT) AS n_tokens,
-       floor(CAST(sum(a_fx) + (1000000000 - sum(b_fx)) AS DOUBLE) / 1e3 + 0.5)
-         / 1e6 AS chi2
-FROM fx GROUP BY grp ORDER BY source
-""",
-        "unigram_prob_score": """
-WITH toks AS (
-  SELECT doc_id,
-         unnest(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                            t -> t != '')) AS tok
-  FROM documents
-), counts AS (
-  SELECT tok, count(*) AS c FROM toks GROUP BY tok
-), tot AS (
-  SELECT sum(c) AS n_total FROM counts
-), vocab AS (
-  SELECT tok, c FROM counts ORDER BY c DESC, tok ASC LIMIT 16
-)
-SELECT t.doc_id,
-       floor(sum(CAST(floor((coalesce(v.c, 0) + 1) / (tot.n_total + 17) * 1e12
-                            + 0.5) AS BIGINT))
-             / count(*) / 1e3 + 0.5) / 1e9 AS mean_prob,
-       CAST(count(*) AS BIGINT) AS n_tokens
-FROM toks t LEFT JOIN vocab v ON t.tok = v.tok, tot
-GROUP BY t.doc_id
-ORDER BY t.doc_id
-""",
-        "shard_shuffle": """
-WITH keyed AS (
-  SELECT doc_id, md5('42:' || CAST(doc_id AS VARCHAR)) AS k
-  FROM documents
-)
-SELECT doc_id,
-       CAST(('0x' || substr(k, 1, 8))::UBIGINT % 8 AS BIGINT) AS shard,
-       row_number() OVER (
-         PARTITION BY ('0x' || substr(k, 1, 8))::UBIGINT % 8
-         ORDER BY k ASC, doc_id ASC) AS pos
-FROM keyed
-ORDER BY shard, pos
-""",
-        "token_vote_classify": """
-WITH toks AS (
-  SELECT doc_id, source,
-         unnest(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                            x -> x != '')) AS tok
-  FROM documents
-), vocab AS (
-  SELECT tok FROM (SELECT tok, count(*) AS c FROM toks GROUP BY tok
-                   ORDER BY c DESC, tok ASC LIMIT 64)
-), vtoks AS (
-  SELECT t.doc_id, t.source, t.tok FROM toks t JOIN vocab v USING (tok)
-), ctc AS (
-  SELECT tok, source, count(*) AS ctc FROM vtoks GROUP BY tok, source
-), ct AS (
-  SELECT tok, CAST(sum(ctc) AS BIGINT) AS ct FROM ctc GROUP BY tok
-), classes AS (
-  SELECT DISTINCT source AS cls FROM vtoks
-), ncls AS (
-  SELECT count(*) AS n_cls FROM classes
-), votes AS (
-  SELECT ct.tok, c.cls,
-         CAST(floor((coalesce(x.ctc, 0) + 1) / (ct.ct + n.n_cls) * 1e12 + 0.5)
-              AS BIGINT) AS vote_fx
-  FROM ct CROSS JOIN classes c
-  LEFT JOIN ctc x ON x.tok = ct.tok AND x.source = c.cls
-  CROSS JOIN ncls n
-), scores AS (
-  SELECT t.doc_id, v.cls,
-         CAST(sum(v.vote_fx) AS BIGINT) AS score_fx,
-         count(*) AS n_scored
-  FROM vtoks t JOIN votes v ON t.tok = v.tok
-  GROUP BY t.doc_id, v.cls
-), best AS (
-  SELECT doc_id, cls, score_fx, n_scored,
-         row_number() OVER (PARTITION BY doc_id
-                            ORDER BY score_fx DESC, cls ASC) AS rn
-  FROM scores
-)
-SELECT d.doc_id, d.source,
-       b.cls AS pred_source, b.score_fx,
-       CAST(coalesce(b.n_scored, 0) AS BIGINT) AS n_scored,
-       b.cls = d.source AS is_correct
-FROM documents d LEFT JOIN (SELECT * FROM best WHERE rn = 1) b USING (doc_id)
-ORDER BY d.doc_id
-""",
-        "nb_self_loglik": """
-WITH toks AS (
-  SELECT doc_id, source,
-         unnest(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                            x -> x != '')) AS tok
-  FROM documents
-), vocab AS (
-  SELECT tok FROM (SELECT tok, count(*) AS c FROM toks GROUP BY tok
-                   ORDER BY c DESC, tok ASC LIMIT 64)
-), vtoks AS (
-  SELECT t.doc_id, t.source, t.tok FROM toks t JOIN vocab v USING (tok)
-), ctc AS (
-  SELECT tok, source, count(*) AS ctc FROM vtoks GROUP BY tok, source
-), cls AS (
-  SELECT source, count(*) AS n_c FROM vtoks GROUP BY source
-), priors AS (
-  SELECT source, count(*) AS n_docs_c FROM documents GROUP BY source
-), alldocs AS (
-  SELECT count(*) AS n_docs_all FROM documents
-), tok_ll AS (
-  SELECT t.doc_id, t.source, count(*) AS n_tokens,
-         sum(ln((coalesce(c.ctc, 0) + 1) / (coalesce(k.n_c, 0) + 65)))
-           AS ll_toks
-  FROM toks t
-  LEFT JOIN ctc c ON c.tok = t.tok AND c.source = t.source
-  LEFT JOIN cls k ON k.source = t.source
-  GROUP BY t.doc_id, t.source
-)
-SELECT d.doc_id, d.source,
-       CAST(coalesce(l.n_tokens, 0) AS BIGINT) AS n_tokens,
-       round(ln(p.n_docs_c / a.n_docs_all) + coalesce(l.ll_toks, 0.0), 4)
-         AS loglik
-FROM documents d
-LEFT JOIN tok_ll l ON l.doc_id = d.doc_id
-JOIN priors p ON p.source = d.source
-CROSS JOIN alldocs a
-ORDER BY d.doc_id
-""",
-        "source_kl": """
-WITH counts AS (
-  SELECT source AS grp, t, count(*) AS n_gt FROM (
-    SELECT source,
-           unnest(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                              x -> x != '')) AS t
-    FROM documents
-  ) GROUP BY grp, t
-), grp_tot AS (
-  SELECT grp, sum(n_gt) AS n_g FROM counts GROUP BY grp
-), term_tot AS (
-  SELECT t, sum(n_gt) AS n_t FROM counts GROUP BY t
-), corpus_tot AS (
-  SELECT sum(n_gt) AS n_corpus FROM counts
-)
-SELECT c.grp AS source,
-       CAST(max(g.n_g) AS BIGINT) AS n_tokens,
-       round(sum(CAST(round((c.n_gt / g.n_g) * ln((c.n_gt / g.n_g) / (tt.n_t / ct.n_corpus)) * 1e9, 0) AS BIGINT)) / 1e9, 4) AS kl_nats
-FROM counts c
-JOIN grp_tot g ON c.grp = g.grp
-JOIN term_tot tt ON c.t = tt.t
-CROSS JOIN corpus_tot ct
-GROUP BY c.grp
-ORDER BY source
-""",
-        "benford_audit": """
-WITH digits AS (
-  SELECT CAST(substr(CAST(CAST(round(o_totalprice * 100, 0) AS BIGINT) AS VARCHAR), 1, 1) AS INT) AS digit
-  FROM orders
-  WHERE CAST(round(o_totalprice * 100, 0) AS BIGINT) > 0
-), counts AS (
-  SELECT digit, CAST(count(*) AS BIGINT) AS n FROM digits GROUP BY digit
-), exp AS (
-  SELECT * FROM (VALUES
-    (1, 0.301029995664), (2, 0.176091259056), (3, 0.124938736608),
-    (4, 0.096910013008), (5, 0.079181246048), (6, 0.066946789631),
-    (7, 0.057991946978), (8, 0.051152522447), (9, 0.045757490561)
-  ) AS v(digit, p)
-), joined AS (
-  -- mirror the Spark plan: total via a partition-less window over the
-  -- joined 9-row frame — the fact table is scanned exactly once
-  SELECT exp.digit, CAST(COALESCE(c.n, 0) AS BIGINT) AS n, exp.p,
-         sum(CAST(COALESCE(c.n, 0) AS BIGINT)) OVER () AS t
-  FROM exp LEFT JOIN counts c ON c.digit = exp.digit
-)
-SELECT digit, n,
-       round(n / GREATEST(t, 1), 6) AS observed,
-       round(CAST(p AS DOUBLE), 6) AS expected,
-       round(abs(round(n / GREATEST(t, 1), 6) - round(CAST(p AS DOUBLE), 6)), 6) AS deviation
-FROM joined
-ORDER BY digit
-""",
-        "collocations_topk": """
-WITH toks AS (
-  SELECT doc_id, i AS pos, t[i + 1] AS tok
-  FROM (
-    SELECT doc_id,
-           list_filter(string_split_regex(trim(lower(text)), '\\s+'), x -> x != '') AS t
-    FROM documents
-  ), UNNEST(range(0, len(t))) AS u(i)
-), pairs AS (
-  SELECT least(t1.tok, t2.tok) AS a, greatest(t1.tok, t2.tok) AS b
-  FROM toks t1 JOIN toks t2
-    ON t1.doc_id = t2.doc_id AND t2.pos > t1.pos AND t2.pos <= t1.pos + 3
-)
-SELECT a, b, CAST(count(*) AS BIGINT) AS n
-FROM pairs GROUP BY a, b HAVING count(*) >= 2
-ORDER BY n DESC, a ASC, b ASC
-LIMIT 50
-""",
-        "vocab_growth": """
-WITH tok AS (
-  SELECT source AS grp,
-         unnest(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                            x -> x != '')) AS t
-  FROM documents
-), per_tok AS (
-  SELECT grp, t, count(*) AS n FROM tok GROUP BY grp, t
-)
-SELECT grp AS source,
-       CAST(sum(n) AS BIGINT) AS n_tokens,
-       CAST(count(*) AS BIGINT) AS n_vocab,
-       CAST(sum(CASE WHEN n = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax,
-       round(count(*) / CAST(sum(n) AS DOUBLE), 6) AS ttr,
-       round(sum(CASE WHEN n = 1 THEN 1 ELSE 0 END) / CAST(count(*) AS DOUBLE), 6) AS hapax_ratio
-FROM per_tok
-GROUP BY grp
-ORDER BY source
-""",
-        "source_overlap": """
-WITH items AS (
-  SELECT DISTINCT source AS grp, t FROM (
-    SELECT source,
-           unnest(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                              x -> x != '')) AS t
-    FROM documents
-  )
-), sizes AS (
-  SELECT grp, count(*) AS n FROM items GROUP BY grp
-), inter AS (
-  SELECT a.grp AS src_a, b.grp AS src_b, CAST(count(*) AS BIGINT) AS n_inter
-  FROM items a JOIN items b ON a.t = b.t AND a.grp < b.grp
-  GROUP BY 1, 2
-)
-SELECT i.src_a, i.src_b, i.n_inter,
-       CAST(na.n + nb.n - i.n_inter AS BIGINT) AS n_union,
-       round(CAST(i.n_inter AS DOUBLE) / (na.n + nb.n - i.n_inter), 6) AS jaccard
-FROM inter i
-JOIN sizes na ON i.src_a = na.grp
-JOIN sizes nb ON i.src_b = nb.grp
-ORDER BY src_a, src_b
-""",
-        "skew_report": """
-WITH counts AS (
-  SELECT l_suppkey, count(*) AS n FROM lineitem GROUP BY l_suppkey
-), totals AS (
-  SELECT CAST(sum(n) AS BIGINT) AS n_rows,
-         CAST(count(*) AS BIGINT) AS n_keys,
-         CAST(max(n) AS BIGINT) AS max_key_rows,
-         round(quantile_cont(n, 0.5), 6) AS p50_key_rows
-  FROM counts
-), topn AS (
-  SELECT CAST(sum(n) AS BIGINT) AS top_rows FROM (
-    SELECT n FROM counts ORDER BY n DESC, l_suppkey ASC LIMIT 10
-  )
-)
-SELECT n_rows, n_keys, max_key_rows, p50_key_rows,
-       round(CAST(max_key_rows AS DOUBLE) / n_rows, 6) AS top1_share,
-       round(CAST(top_rows AS DOUBLE) / n_rows, 6) AS topn_share,
-       round(CAST(max_key_rows AS DOUBLE) * n_keys / n_rows, 6) AS skew_ratio
-FROM totals, topn
-""",
-        "centroid_outliers": """
-WITH dims AS (
-  SELECT vec_id, label, i AS dim,
-         CAST(round(CAST(embedding[i + 1] AS DOUBLE) * 1000000, 0) AS BIGINT) AS fxv
-  FROM embeddings, UNNEST(range(0, len(embedding))) AS u(i)
-), cents AS (
-  SELECT label, dim,
-         CAST(round(round(sum(fxv) / (count(*) * 1000000.0), 6) * 1000000, 0) AS BIGINT) AS fxc
-  FROM dims GROUP BY label, dim
-), dist2 AS (
-  SELECT d.vec_id, d.label,
-         CAST(sum((d.fxv - c.fxc) * (d.fxv - c.fxc)) AS BIGINT) AS dist2_fx
-  FROM dims d JOIN cents c ON d.label = c.label AND d.dim = c.dim
-  GROUP BY d.vec_id, d.label
-)
-SELECT vec_id, label, round(sqrt(dist2_fx) / 1000000.0, 6) AS dist
-FROM dist2
-ORDER BY dist DESC, vec_id ASC
-LIMIT 25
-""",
-        "triangle_count": """
-WITH li AS (
-  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-), und AS (
-  SELECT x.l_partkey AS a, y.l_partkey AS b
-  FROM li x JOIN li y
-    ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey
-  GROUP BY 1, 2 HAVING count(*) >= 2
-), deg AS (
-  SELECT node, count(*) AS deg FROM (
-    SELECT a AS node FROM und UNION ALL SELECT b AS node FROM und
-  ) GROUP BY node
-), e AS (
-  SELECT CASE WHEN (da.deg, und.a) < (db.deg, und.b) THEN und.a ELSE und.b END AS u,
-         CASE WHEN (da.deg, und.a) < (db.deg, und.b) THEN und.b ELSE und.a END AS v,
-         CASE WHEN (da.deg, und.a) < (db.deg, und.b) THEN db.deg ELSE da.deg END AS dv
-  FROM und
-  JOIN deg da ON und.a = da.node
-  JOIN deg db ON und.b = db.node
-), tri AS (
-  SELECT e1.u, e1.v AS v1, e2.v AS v2
-  FROM e e1 JOIN e e2 ON e1.u = e2.u AND (e1.dv, e1.v) < (e2.dv, e2.v)
-  WHERE EXISTS (SELECT 1 FROM e c WHERE c.u = e1.v AND c.v = e2.v)
-), corners AS (
-  SELECT node, CAST(count(*) AS BIGINT) AS n_triangles FROM (
-    SELECT u AS node FROM tri
-    UNION ALL SELECT v1 AS node FROM tri
-    UNION ALL SELECT v2 AS node FROM tri
-  ) GROUP BY node
-)
-SELECT node, n_triangles FROM corners
-ORDER BY n_triangles DESC, node ASC
-LIMIT 20
-""",
-        "quantize_embeddings": """
-WITH dims AS (
-  SELECT vec_id, i AS dim, CAST(embedding[i + 1] AS DOUBLE) AS v
-  FROM embeddings, UNNEST(range(0, len(embedding))) AS u(i)
-), stats AS (
-  SELECT dim, min(v) AS lo, max(v) AS hi FROM dims GROUP BY dim
-)
-SELECT d.vec_id, d.dim,
-       CAST(CASE WHEN s.hi = s.lo THEN 0
-                 ELSE floor((d.v - s.lo) / (s.hi - s.lo) * 255 + 0.5)
-            END AS INT) AS code
-FROM dims d JOIN stats s USING (dim)
-ORDER BY d.vec_id, d.dim
-""",
-        "ngram_topk": """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'), t -> t != '') AS t
-  FROM documents
-), grams AS (
-  SELECT array_to_string(list_slice(t, i + 1, i + 2), ' ') AS gram
-  FROM toks, UNNEST(range(0, greatest(len(t) - 1, 0))) AS u(i)
-), counts AS (
-  SELECT gram, CAST(count(*) AS BIGINT) AS n FROM grams GROUP BY gram
-)
-SELECT gram, n FROM counts WHERE n >= 2
-ORDER BY n DESC, gram ASC
-LIMIT 25
-""",
-        "forecast_revenue": """
-SELECT round(sum(CAST(round(l_extendedprice * l_discount * 10000, 0) AS BIGINT)) / 10000.0, 4)
-         AS revenue_delta,
-       CAST(count(*) AS BIGINT) AS n_lines
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-  AND l_discount >= 0.04 AND l_discount <= 0.06 AND l_quantity < 24
-""",
-        "volume_shipping": """
-SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
-       CAST(year(l.l_shipdate) AS INTEGER) AS ship_year,
-       round(sum(CAST(round(l.l_extendedprice * (1 - l.l_discount) * 10000, 0) AS BIGINT)) / 10000.0, 4)
-         AS revenue
-FROM lineitem l
-JOIN supplier s ON l.l_suppkey = s.s_suppkey
-JOIN nation sn ON s.s_nationkey = sn.n_nationkey
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation cn ON c.c_nationkey = cn.n_nationkey
-WHERE sn.n_name IN ('NATION_1', 'NATION_2')
-  AND cn.n_name IN ('NATION_1', 'NATION_2')
-  AND sn.n_name <> cn.n_name
-GROUP BY 1, 2, 3
-ORDER BY 1, 2, 3
-""",
-        "product_profit": """
-SELECT sn.n_name AS supp_nation,
-       CAST(year(o.o_orderdate) AS INTEGER) AS order_year,
-       round(sum(CAST(round((l.l_extendedprice * (1 - l.l_discount)
-                             - p.p_retailprice * 0.6 * l.l_quantity) * 10000, 0) AS BIGINT)) / 10000.0, 4)
-         AS profit
-FROM lineitem l
-JOIN part p ON l.l_partkey = p.p_partkey
-JOIN supplier s ON l.l_suppkey = s.s_suppkey
-JOIN nation sn ON s.s_nationkey = sn.n_nationkey
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-WHERE p.p_name LIKE '%gear%'
-GROUP BY 1, 2
-ORDER BY 1 ASC, 2 DESC
-""",
-        "returned_top_customers": """
-SELECT c.c_custkey, c.c_name, c.c_acctbal, n.n_name,
-       round(sum(CAST(round(l.l_extendedprice * (1 - l.l_discount) * 10000, 0) AS BIGINT)) / 10000.0, 4)
-         AS revenue
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-WHERE l.l_returnflag = 'R'
-  AND o.o_orderdate >= TIMESTAMP '1996-01-01'
-  AND o.o_orderdate < TIMESTAMP '1996-04-01'
-GROUP BY 1, 2, 3, 4
-ORDER BY revenue DESC, c.c_custkey
-LIMIT 20
-""",
-        "priority_linestatus": """
-SELECT l.l_linestatus,
-       CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT)
-         AS high_line_count,
-       CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 0 ELSE 1 END) AS BIGINT)
-         AS low_line_count
-FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-WHERE l.l_shipdate >= TIMESTAMP '1997-01-01' AND l.l_shipdate < TIMESTAMP '1998-01-01'
-GROUP BY 1 ORDER BY 1
-""",
-        "custdist": """
-WITH per_cust AS (
-  SELECT c.c_custkey, CAST(count(o.o_orderkey) AS BIGINT) AS c_count
-  FROM customer c
-  LEFT OUTER JOIN (SELECT o_orderkey, o_custkey FROM orders
-                   WHERE o_orderpriority <> '4-NOT SPECIFIED') o
-    ON c.c_custkey = o.o_custkey
-  GROUP BY c.c_custkey
-)
-SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
-FROM per_cust GROUP BY c_count
-ORDER BY custdist DESC, c_count DESC
-""",
-        "promo_revenue_share": """
-WITH j AS (
-  SELECT CAST(round(l.l_extendedprice * (1 - l.l_discount) * 10000, 0) AS BIGINT) AS rev,
-         p.p_type
-  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-  WHERE l.l_shipdate >= TIMESTAMP '1996-03-01' AND l.l_shipdate < TIMESTAMP '1996-04-01'
-)
-SELECT round(sum(CASE WHEN p_type = 'PROMO' THEN rev ELSE 0 END) * 100.0 / sum(rev), 6)
-         AS promo_share_pct,
-       round(sum(rev) / 10000.0, 4) AS total_revenue
-FROM j
-""",
-        "top_revenue_supplier": """
-WITH per_supp AS (
-  SELECT l_suppkey,
-         sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000, 0) AS BIGINT)) AS rev_cents
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1996-04-01'
-  GROUP BY l_suppkey
-)
-SELECT s.s_suppkey, s.s_name, round(ps.rev_cents / 10000.0, 4) AS total_revenue
-FROM per_supp ps JOIN supplier s ON ps.l_suppkey = s.s_suppkey
-WHERE ps.rev_cents = (SELECT max(rev_cents) FROM per_supp)
-ORDER BY s.s_suppkey
-""",
-        "supplier_part_counts": """
-SELECT p.p_brand, p.p_type, p.p_size,
-       CAST(count(DISTINCT l.l_suppkey) AS BIGINT) AS supplier_cnt
-FROM lineitem l
-JOIN part p ON l.l_partkey = p.p_partkey
-WHERE p.p_brand <> 'Brand#1'
-  AND p.p_size IN (1, 5, 10, 15, 20, 25, 30, 35, 40, 45)
-  AND l.l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-GROUP BY 1, 2, 3
-ORDER BY supplier_cnt DESC, p.p_brand, p.p_type, p.p_size
-LIMIT 100
-""",
-        "disjunctive_revenue": """
-SELECT round(sum(CAST(round(l.l_extendedprice * (1 - l.l_discount) * 10000, 0) AS BIGINT)) / 10000.0, 4)
-         AS revenue,
-       CAST(count(*) AS BIGINT) AS n_lines
-FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 15 AND l.l_quantity BETWEEN 1 AND 11)
-   OR (p.p_brand = 'Brand#2' AND p.p_size BETWEEN 1 AND 25 AND l.l_quantity BETWEEN 10 AND 20)
-   OR (p.p_brand = 'Brand#3' AND p.p_size BETWEEN 1 AND 35 AND l.l_quantity BETWEEN 20 AND 30)
-""",
-        "dominant_suppliers": """
-WITH per_ps AS (
-  SELECT l.l_partkey, l.l_suppkey, sum(l.l_quantity) AS qty
-  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-  WHERE p.p_type = 'PROMO'
-  GROUP BY 1, 2
-), dominant AS (
-  SELECT DISTINCT l_suppkey
-  FROM (SELECT l_suppkey, qty,
-               sum(qty) OVER (PARTITION BY l_partkey) AS total,
-               count(*) OVER (PARTITION BY l_partkey) AS nsupp
-        FROM per_ps)
-  WHERE qty * nsupp > 2.5 * total
-)
-SELECT s.s_suppkey, s.s_name, n.n_name
-FROM supplier s
-JOIN nation n ON s.s_nationkey = n.n_nationkey
-WHERE s.s_suppkey IN (SELECT l_suppkey FROM dominant)
-ORDER BY s.s_suppkey
-""",
-        "paragraph_dedup": """
-WITH paras AS (
-  SELECT doc_id, trim(u.s.p) AS para, u.s.i AS idx
-  FROM (SELECT doc_id,
-               list_transform(string_split(text, ' the '), (x, i) -> {'p': x, 'i': i}) AS ps
-        FROM documents), UNNEST(ps) AS u(s)
-  WHERE trim(u.s.p) <> ''
-), ranked AS (
-  SELECT doc_id, idx, para,
-         row_number() OVER (PARTITION BY para ORDER BY doc_id, idx) AS rn
-  FROM paras
-)
-SELECT doc_id,
-       string_agg(CASE WHEN rn = 1 THEN para END, ' the ' ORDER BY idx) AS text,
-       CAST(count(*) AS BIGINT) AS n_paras,
-       CAST(count(CASE WHEN rn = 1 THEN 1 END) AS BIGINT) AS n_kept
-FROM ranked GROUP BY doc_id
-HAVING n_kept > 0
-ORDER BY doc_id
-""",
-        "unigram_logprob": """
-WITH toks AS (
-  SELECT doc_id,
-         unnest(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                            t -> t != '')) AS tok
-  FROM documents
-), counts AS (
-  SELECT tok, count(*) AS c FROM toks GROUP BY tok
-), tot AS (
-  SELECT sum(c) AS n_total FROM counts
-), vocab AS (
-  SELECT tok, c FROM counts ORDER BY c DESC, tok ASC LIMIT 16
-)
-SELECT t.doc_id,
-       round(avg(ln((coalesce(v.c, 0) + 1.0) / (tot.n_total + 17.0))), 4)
-         AS avg_logprob,
-       CAST(count(*) AS BIGINT) AS n_tokens
-FROM toks t LEFT JOIN vocab v ON t.tok = v.tok, tot
-GROUP BY t.doc_id
-ORDER BY t.doc_id
-""",
-        "cohort_retention": """
-WITH d AS (
-  SELECT user_id, CAST(ts AS DATE) AS d FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-), firsts AS (
-  SELECT user_id, min(d) AS first_d FROM d GROUP BY user_id
-)
-SELECT DATE '1970-01-05'
-         + CAST(CAST(f.first_d - DATE '1970-01-05' AS BIGINT) // 7 * 7 AS INTEGER)
-         AS cohort_start,
-       CAST(CAST(d.d - f.first_d AS BIGINT) // 7 AS INTEGER) AS period_offset,
-       count(DISTINCT d.user_id) AS n_users
-FROM d JOIN firsts f USING (user_id)
-GROUP BY 1, 2
-""",
-        "event_transitions": """
-WITH pairs AS (
-  SELECT event_type AS from_type,
-         lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           AS to_type
-  FROM events
-  WHERE user_id IS NOT NULL AND ts IS NOT NULL AND event_type IS NOT NULL
-), m AS (
-  SELECT from_type, to_type, count(*) AS n
-  FROM pairs WHERE to_type IS NOT NULL GROUP BY 1, 2
-)
-SELECT from_type, to_type, n,
-       round(n * 1.0 / sum(n) OVER (PARTITION BY from_type), 6) AS p
-FROM m
-""",
-        "hopping_window": """
-WITH slots AS (
-  SELECT time_bucket(INTERVAL '14 days', ts, TIMESTAMP '1970-01-01')
-           AS window_start, value FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-  UNION ALL
-  SELECT time_bucket(INTERVAL '14 days', ts, TIMESTAMP '1970-01-08')
-           AS window_start, value FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-)
-SELECT window_start,
-       window_start + INTERVAL '14 days' AS window_end,
-       count(*) AS n_events,
-       sum(round(value * 100, 0)) / 100.0 AS sum_value
-FROM slots GROUP BY 1
-""",
-        "mad_outliers": """
-WITH med AS (
-  SELECT source, quantile_cont(n_chars, 0.5) AS med
-  FROM documents GROUP BY source
-), j AS (
-  SELECT d.source, d.n_chars, m.med
-  FROM documents d JOIN med m USING (source)
-), mads AS (
-  SELECT source, quantile_cont(abs(n_chars - med), 0.5) AS mad,
-         any_value(med) AS med, count(*) AS n
-  FROM j GROUP BY source
-)
-SELECT j.source, m.med, m.mad, CAST(m.n AS BIGINT) AS n,
-       CAST(sum(CASE WHEN abs(j.n_chars - m.med) > 3.0 * m.mad
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-FROM j JOIN mads m USING (source)
-GROUP BY j.source, m.med, m.mad, m.n
-""",
-        "hist_bins": """
-WITH binned AS (
-  SELECT CAST(floor(l_extendedprice / 500.0) AS BIGINT) AS bin_id,
-         l_extendedprice
-  FROM lineitem
-)
-SELECT bin_id, count(*) AS n,
-       min(l_extendedprice) AS min_v, max(l_extendedprice) AS max_v,
-       bin_id * 500.0 AS bin_lo
-FROM binned GROUP BY bin_id
-""",
-        "dense_ids": """
-WITH counts AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n_docs
-  FROM documents GROUP BY source
-)
-SELECT CAST(row_number() OVER (ORDER BY n_docs DESC, source ASC) - 1 AS INTEGER)
-         AS source_id,
-       source, n_docs
-FROM counts
-""",
-        "equi_depth_hist": """
-WITH bounds AS (
-  SELECT quantile_cont(o_totalprice, 0.1) AS b1,
-         quantile_cont(o_totalprice, 0.2) AS b2,
-         quantile_cont(o_totalprice, 0.3) AS b3,
-         quantile_cont(o_totalprice, 0.4) AS b4,
-         quantile_cont(o_totalprice, 0.5) AS b5,
-         quantile_cont(o_totalprice, 0.6) AS b6,
-         quantile_cont(o_totalprice, 0.7) AS b7,
-         quantile_cont(o_totalprice, 0.8) AS b8,
-         quantile_cont(o_totalprice, 0.9) AS b9
-  FROM orders
-)
-SELECT (CAST(o_totalprice > b1 AS INTEGER) + CAST(o_totalprice > b2 AS INTEGER)
-      + CAST(o_totalprice > b3 AS INTEGER) + CAST(o_totalprice > b4 AS INTEGER)
-      + CAST(o_totalprice > b5 AS INTEGER) + CAST(o_totalprice > b6 AS INTEGER)
-      + CAST(o_totalprice > b7 AS INTEGER) + CAST(o_totalprice > b8 AS INTEGER)
-      + CAST(o_totalprice > b9 AS INTEGER)) AS bucket,
-       CAST(count(*) AS BIGINT) AS n,
-       min(o_totalprice) AS lo,
-       max(o_totalprice) AS hi
-FROM orders, bounds
-GROUP BY 1
-""",
-        "session_paths": """
-WITH flagged AS (
-  SELECT user_id, event_id, ts, event_type,
-         CASE WHEN date_diff('second',
-                             lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id),
-                             ts) > 2 * 86400
-              OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-              THEN 1 ELSE 0 END AS is_new
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-), tagged AS (
-  SELECT user_id, ts, event_id, event_type,
-         sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS session_id
-  FROM flagged
-), p AS (
-  SELECT user_id, session_id,
-         string_agg(event_type, '>' ORDER BY ts, event_id) AS path
-  FROM tagged GROUP BY 1, 2
-)
-SELECT path, CAST(count(*) AS BIGINT) AS n_sessions FROM p GROUP BY path
-""",
-        "tfidf_topterms": """
-WITH toks AS (
-  SELECT doc_id,
-         unnest(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                            t -> t != '')) AS term
-  FROM documents
-), postings AS (
-  SELECT term, doc_id, CAST(count(*) AS BIGINT) AS tf FROM toks GROUP BY 1, 2
-), wdf AS (
-  SELECT term, doc_id, tf,
-         CAST(count(*) OVER (PARTITION BY term) AS BIGINT) AS df
-  FROM postings
-), n AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents
-), wt AS (
-  SELECT doc_id, term, round(tf * ln(CAST(n_docs AS DOUBLE) / df), 6) AS w
-  FROM wdf, n
-)
-SELECT doc_id, rnk, term, w FROM (
-  SELECT doc_id, term, w,
-         row_number() OVER (PARTITION BY doc_id ORDER BY w DESC, term ASC) AS rnk
-  FROM wt)
-WHERE rnk <= 3
-""",
-        "unpivot_ohlc": """
-WITH bars AS (
-  SELECT user_id,
-         CAST(ts AS DATE) + CAST((5 - isodow(CAST(ts AS DATE)) + 7) % 7 AS INTEGER)
-           AS period_end,
-         first(value ORDER BY ts, event_id) AS open,
-         max(value) AS high,
-         min(value) AS low,
-         last(value ORDER BY ts, event_id) AS close
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL GROUP BY 1, 2
-)
-SELECT user_id, period_end, 'open' AS metric, open AS value FROM bars
-UNION ALL SELECT user_id, period_end, 'high', high FROM bars
-UNION ALL SELECT user_id, period_end, 'low', low FROM bars
-UNION ALL SELECT user_id, period_end, 'close', close FROM bars
-""",
-        "longest_up_streak": """
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         last(value ORDER BY ts, event_id) AS close
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL GROUP BY 1, 2
-), f AS (
-  SELECT user_id, d,
-         CASE WHEN close > lag(close) OVER (PARTITION BY user_id ORDER BY d)
-              THEN 1 ELSE 0 END AS up
-  FROM daily
-), g AS (
-  SELECT user_id, up,
-         sum(1 - up) OVER (PARTITION BY user_id ORDER BY d
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp
-  FROM f
-), runs AS (
-  SELECT user_id, grp, CAST(count(*) AS BIGINT) AS run_len
-  FROM g WHERE up = 1 GROUP BY 1, 2
-), s AS (
-  SELECT user_id, max(run_len) AS m FROM runs GROUP BY 1
-)
-SELECT du.user_id, CAST(coalesce(s.m, 0) AS BIGINT) AS longest_up_streak
-FROM (SELECT DISTINCT user_id FROM daily) du LEFT JOIN s USING (user_id)
-""",
-        "salted_flag_totals": """
-SELECT l_returnflag,
-       sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT)) / 100.0 AS sum_price,
-       CAST(count(l_quantity) AS BIGINT) AS n_lines,
-       max(l_quantity) AS max_qty,
-       min(l_quantity) AS min_qty
-FROM lineitem GROUP BY l_returnflag
-""",
-        "latency_percentiles": """
-WITH lat AS (
-  SELECT o_orderpriority,
-         date_diff('day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE)) AS lat
-  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-)
-SELECT o_orderpriority,
-       CAST(count(*) AS BIGINT) AS n,
-       min(lat) AS min_days,
-       round(quantile_cont(lat, 0.5), 4) AS p50,
-       round(quantile_cont(lat, 0.9), 4) AS p90,
-       round(quantile_cont(lat, 0.99), 4) AS p99,
-       max(lat) AS max_days
-FROM lat GROUP BY o_orderpriority
-""",
-        "basket_rules": """
-WITH b AS (
-  SELECT DISTINCT l_orderkey AS bid, p_brand AS item
-  FROM lineitem JOIN part ON l_partkey = p_partkey
-), n AS (
-  SELECT count(DISTINCT bid) AS n_baskets FROM b
-), ic AS (
-  SELECT item, CAST(count(*) AS BIGINT) AS n_item FROM b GROUP BY item
-), pairs AS (
-  SELECT a.item AS item_a, c.item AS item_b, CAST(count(*) AS BIGINT) AS n_ab
-  FROM b a JOIN b c ON a.bid = c.bid AND a.item < c.item
-  GROUP BY 1, 2 HAVING count(*) >= 2
-)
-SELECT item_a, item_b, n_ab,
-       round(n_ab / CAST(n_baskets AS DOUBLE), 6) AS support,
-       round(n_ab / CAST(ca.n_item AS DOUBLE), 6) AS confidence,
-       round(n_ab * CAST(n_baskets AS DOUBLE) / (ca.n_item * cb.n_item), 6) AS lift
-FROM pairs
-JOIN ic ca ON item_a = ca.item
-JOIN ic cb ON item_b = cb.item, n
-""",
-        "vwap_brand": """
-SELECT p_brand,
-       CAST(count(*) AS BIGINT) AS n_lines,
-       CAST(sum(round(l_quantity, 0)) AS BIGINT) AS total_qty,
-       round(sum(CAST(round(l_extendedprice * round(l_quantity, 0) * 100, 0) AS BIGINT))
-             / 100.0 / sum(round(l_quantity, 0)), 6) AS vwap
-FROM lineitem JOIN part ON l_partkey = p_partkey
-GROUP BY p_brand
-""",
-        "market_breadth": """
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         last(value ORDER BY ts, event_id) AS close
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL GROUP BY 1, 2
-), ch AS (
-  SELECT d,
-         CASE WHEN close > lag(close) OVER w THEN 1
-              WHEN close < lag(close) OVER w THEN -1
-              ELSE 0 END AS chg,
-         lag(close) OVER w IS NULL AS firstrow
-  FROM daily WINDOW w AS (PARTITION BY user_id ORDER BY d)
-)
-SELECT d,
-       CAST(sum(CASE WHEN chg = 1 THEN 1 ELSE 0 END) AS BIGINT) AS advancers,
-       CAST(sum(CASE WHEN chg = -1 THEN 1 ELSE 0 END) AS BIGINT) AS decliners,
-       CAST(sum(CASE WHEN chg = 0 THEN 1 ELSE 0 END) AS BIGINT) AS unchanged
-FROM ch WHERE NOT firstrow GROUP BY d
-""",
-        "max_concurrency": """
-WITH flagged AS (
-  SELECT user_id, event_id, ts,
-         CASE WHEN date_diff('second',
-                             lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id),
-                             ts) > 2 * 86400
-              OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-              THEN 1 ELSE 0 END AS is_new
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-), tagged AS (
-  SELECT user_id, ts,
-         sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS session_id
-  FROM flagged
-), sessions AS (
-  SELECT user_id, session_id, min(ts) AS s, max(ts) AS e
-  FROM tagged GROUP BY 1, 2
-), pts AS (
-  SELECT s AS ts, 1 AS delta FROM sessions
-  UNION ALL
-  SELECT e AS ts, -1 AS delta FROM sessions
-), runs AS (
-  SELECT ts, CAST(sum(delta) OVER (ORDER BY ts ASC, delta DESC
-                                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS run
-  FROM pts
-)
-SELECT max_concurrent, min(ts) AS at_ts
-FROM (SELECT ts, run, max(run) OVER () AS max_concurrent FROM runs)
-WHERE run = max_concurrent
-GROUP BY max_concurrent
-""",
-        "scd2_history": """
-WITH s AS (
-  SELECT user_id, ts, event_id, event_type,
-         (lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-          OR event_type IS DISTINCT FROM
-             lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id))
-           AS is_start
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-), ep AS (
-  SELECT user_id, ts, event_id, event_type FROM s WHERE is_start
-)
-SELECT user_id, event_type AS value, ts AS valid_from,
-       lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to,
-       lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-         AS is_current
-FROM ep
-""",
-        "cdc_apply": """
-SELECT o_orderkey,
-       CASE WHEN o_orderstatus = 'F' THEN o_totalprice + 100
-            ELSE o_totalprice END AS o_totalprice
-FROM orders WHERE o_orderdate >= DATE '1996-01-01'
-""",
-        "repeat_purchase_rate": """
-WITH per_cust AS (
-  SELECT c_custkey, c_mktsegment, count(o_orderkey) AS n_orders
-  FROM customer LEFT JOIN orders
-    ON c_custkey = o_custkey
-   AND o_orderdate >= DATE '1996-01-01'
-   AND o_orderdate < DATE '1997-01-01'
-  GROUP BY 1, 2
-)
-SELECT c_mktsegment,
-       CAST(count(*) AS BIGINT) AS n_customers,
-       CAST(sum(CASE WHEN n_orders >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-         AS repeat_customers,
-       round(sum(CASE WHEN n_orders >= 2 THEN 1 ELSE 0 END) * 1.0
-             / count(*), 6) AS repeat_rate
-FROM per_cust GROUP BY c_mktsegment
-""",
-        "record_linkage": """
-WITH l AS (SELECT p_brand, p_partkey AS id_a, p_name AS name_a FROM part),
-     r AS (SELECT p_brand, p_partkey AS id_b, p_name AS name_b FROM part)
-SELECT id_a, id_b, name_a, name_b,
-       CAST(levenshtein(name_a, name_b) AS INTEGER) AS distance
-FROM l JOIN r ON l.p_brand = r.p_brand
-             AND id_a < id_b
-             AND levenshtein(name_a, name_b) <= 2
-""",
-        "price_distribution": """
-SELECT o_orderkey, o_orderpriority, o_totalprice,
-       round(percent_rank() OVER w, 6) AS pct_rank,
-       round(cume_dist() OVER w, 6) AS cume
-FROM orders
-WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey)
-""",
-        "attribution_last_touch": """
-WITH tagged AS (
-  SELECT event_id, user_id, ts, event_type,
-         last_value(CASE WHEN event_type IN ('view', 'click') THEN event_id END
-                    IGNORE NULLS)
-           OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS t_id,
-         last_value(CASE WHEN event_type IN ('view', 'click') THEN ts END
-                    IGNORE NULLS)
-           OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS t_ts
-  FROM events
-)
-SELECT event_id AS conversion_id, user_id, ts AS conversion_ts,
-       CASE WHEN t_ts IS NOT NULL AND date_diff('second', t_ts, ts) <= 7 * 86400
-            THEN t_id END AS touch_id,
-       CASE WHEN t_ts IS NOT NULL AND date_diff('second', t_ts, ts) <= 7 * 86400
-            THEN t_ts END AS touch_ts,
-       CASE WHEN t_ts IS NOT NULL AND date_diff('second', t_ts, ts) <= 7 * 86400
-            THEN date_diff('second', t_ts, ts) END AS gap_sec
-FROM tagged WHERE event_type = 'purchase'
-""",
-        "gap_fill_linear": """
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         last(value ORDER BY ts, event_id) AS close
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL GROUP BY 1, 2
-), spans AS (
-  SELECT user_id, min(d) AS d0, max(d) AS d1 FROM daily GROUP BY user_id
-), spine AS (
-  SELECT user_id, CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE) AS d
-  FROM spans
-), j AS (
-  SELECT s.user_id, s.d, dl.close, dl.user_id IS NULL AS is_filled
-  FROM spine s LEFT JOIN daily dl ON s.user_id = dl.user_id AND s.d = dl.d
-), anch AS (
-  SELECT user_id, d, close, is_filled,
-         last_value(close IGNORE NULLS) OVER wb AS pv,
-         last_value(CASE WHEN close IS NOT NULL THEN d END IGNORE NULLS) OVER wb AS pd,
-         first_value(close IGNORE NULLS) OVER wf AS nv,
-         first_value(CASE WHEN close IS NOT NULL THEN d END IGNORE NULLS) OVER wf AS nd
-  FROM j
-  WINDOW wb AS (PARTITION BY user_id ORDER BY d
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-         wf AS (PARTITION BY user_id ORDER BY d
-                ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-)
-SELECT user_id, d,
-       round(CASE WHEN NOT is_filled THEN close
-                  WHEN nd IS NOT NULL
-                  THEN pv + (nv - pv) * (CAST(d - pd AS DOUBLE) / CAST(nd - pd AS DOUBLE))
-                  ELSE pv END, 6) AS close,
-       is_filled
-FROM anch
-""",
-        "rfm_segments": """
-WITH per_cust AS (
-  SELECT o_custkey AS custkey, max(o_orderdate) AS last_order,
-         CAST(count(*) AS BIGINT) AS frequency,
-         sum(round(o_totalprice * 100, 0)) / 100.0 AS monetary
-  FROM orders GROUP BY 1
-)
-SELECT custkey, last_order, frequency, monetary,
-       CAST(ntile(5) OVER (ORDER BY last_order DESC, custkey) AS INTEGER) AS r_score,
-       CAST(ntile(5) OVER (ORDER BY frequency DESC, custkey) AS INTEGER) AS f_score,
-       CAST(ntile(5) OVER (ORDER BY monetary DESC, custkey) AS INTEGER) AS m_score
-FROM per_cust
-""",
-        "rolling_distinct_users": """
-WITH b AS (
-  SELECT min(CAST(ts AS DATE)) AS d0, max(CAST(ts AS DATE)) AS d1 FROM events
-), fan AS (
-  SELECT user_id, CAST(ts AS DATE) + CAST(i AS INTEGER) AS day
-  FROM events, b, UNNEST(range(0, 7)) AS u(i)
-  WHERE CAST(ts AS DATE) + CAST(i AS INTEGER) <= b.d1
-)
-SELECT day, count(DISTINCT user_id) AS users_7d FROM fan GROUP BY day
-""",
-        "ngram_topk_sketch": """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(trim(lower(text)), '\\s+'), t -> t != '') AS t
-  FROM documents
-), grams AS (
-  SELECT array_to_string(list_slice(t, i + 1, i + 2), ' ') AS gram
-  FROM toks, UNNEST(range(0, greatest(len(t) - 1, 0))) AS u(i)
-), counts AS (
-  SELECT gram, CAST(count(*) AS BIGINT) AS n FROM grams GROUP BY gram
-)
-SELECT gram, n FROM counts WHERE n >= 2
-ORDER BY n DESC, gram ASC
-LIMIT 25
-""",
-        "trend_ols": """
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         last(value ORDER BY ts, event_id) AS close
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL GROUP BY 1, 2
-), sums AS (
-  SELECT user_id,
-         CAST(count(*) AS BIGINT) AS n,
-         sum(CAST(d - DATE '1970-01-01' AS DOUBLE)) AS sx,
-         sum(round(close * 100, 0)) AS sy,
-         sum(CAST(d - DATE '1970-01-01' AS DOUBLE)
-             * CAST(d - DATE '1970-01-01' AS DOUBLE)) AS sxx,
-         sum(CAST(d - DATE '1970-01-01' AS DOUBLE) * round(close * 100, 0)) AS sxy,
-         sum(round(close * 100, 0) * round(close * 100, 0)) AS syy
-  FROM daily GROUP BY user_id
-)
-SELECT user_id, n,
-       round(CASE WHEN n * sxx - sx * sx > 0
-                  THEN (n * sxy - sx * sy) / (n * sxx - sx * sx) / 100
-             END, 6) AS slope,
-       round(CASE WHEN n * sxx - sx * sx > 0
-                  THEN (sy / 100 - (n * sxy - sx * sy) / (n * sxx - sx * sx) / 100 * sx) / n
-             END, 4) AS intercept,
-       round(CASE WHEN n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
-                  THEN ((n * sxy - sx * sy) * (n * sxy - sx * sy))
-                       / ((n * sxx - sx * sx) * (n * syy - sy * sy))
-             END, 6) AS r2
-FROM sums
-""",
-        "gap_fill": """
-WITH daily AS (
-  SELECT user_id, CAST(ts AS DATE) AS d,
-         last(value ORDER BY ts, event_id) AS close
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL GROUP BY 1, 2
-), spans AS (
-  SELECT user_id, min(d) AS d0, max(d) AS d1 FROM daily GROUP BY user_id
-), spine AS (
-  SELECT user_id, CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE) AS d
-  FROM spans
-)
-SELECT s.user_id, s.d,
-       last_value(dl.close IGNORE NULLS)
-         OVER (PARTITION BY s.user_id ORDER BY s.d
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS close,
-       dl.user_id IS NULL AS is_filled
-FROM spine s LEFT JOIN daily dl ON s.user_id = dl.user_id AND s.d = dl.d
-""",
-        "keyword_search": """
-WITH toks AS (
-  SELECT doc_id,
-         unnest(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                            t -> t != '')) AS term
-  FROM documents
-), postings AS (
-  SELECT term, doc_id, count(*) AS tf FROM toks GROUP BY 1, 2
-), hits AS (
-  SELECT * FROM postings WHERE term IN ('spark', 'hash')
-), scored AS (
-  SELECT doc_id, count(DISTINCT term) AS n_terms, CAST(sum(tf) AS BIGINT) AS score
-  FROM hits GROUP BY doc_id
-)
-SELECT doc_id, n_terms, score
-FROM scored WHERE n_terms = 2
-ORDER BY score DESC, doc_id ASC LIMIT 15
-""",
-        # minhash_neardup / simhash_neardup / ann_lsh_topk: approximate by
-        # design -> no SQL oracle; driver records rows-only checks.
-    }
+    """name -> DuckDB SQL of every oracled query; a twin given as a
+    function is built from the plain-SQL ones."""
+    twins = {n: fn.oracle for n, fn in declared().items() if hasattr(fn, "oracle")}
+    sql = {n: t for n, t in twins.items() if isinstance(t, str)}
+    return {**sql, **{n: t(sql) for n, t in twins.items() if callable(t)}}

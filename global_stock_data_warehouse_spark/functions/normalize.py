@@ -32,16 +32,6 @@ def zero_pad(col: Column | str, width: int) -> Column:
     return F.lpad(_c(col).cast("string"), width, "0")
 
 
-def strip_leading_zeros(col: Column | str) -> Column:
-    """HK alternate-key form (``'00001'`` -> ``'1'``)."""
-    return F.regexp_replace(_c(col).cast("string"), "^0+", "")
-
-
-def drop_excel_float_suffix(col: Column | str) -> Column:
-    """``'7203.0' -> '7203'`` (JPX Excel float-code fix)."""
-    return F.substring_index(_c(col).cast("string"), ".", 1)
-
-
 def code_with_suffix(code: Column | str, market: Column | str) -> Column:
     """Exchange-suffixed ticker construction.
 

@@ -736,31 +736,6 @@ def minhash_neardup(
 # ---------------------------------------------------------------------------
 
 
-def simhash64(col: Column | str) -> Column:
-    """64-bit SimHash of the token set, as bigint.
-
-    bit_i = majority over tokens of bit_i(xxhash64(token)). Expressed as 64
-    per-bit sums over the token-hash array — all array expressions, fused
-    by codegen; no explode, no shuffle.
-    """
-    hashes = F.transform(tokens(col), lambda t: F.xxhash64(t))
-    n = F.size(hashes)
-
-    def bit_set(i: int):
-        # factory, not default-arg lambda (F.filter would pass the index)
-        mask = F.shiftleft(F.lit(1).cast("bigint"), i)
-        return lambda h: h.bitwiseAND(mask) != 0
-
-    acc = F.lit(0).cast("bigint")
-    for i in range(64):
-        ones = F.size(F.filter(hashes, bit_set(i)))
-        bit = F.when(
-            ones * 2 >= n, F.shiftleft(F.lit(1).cast("bigint"), i)
-        ).otherwise(F.lit(0).cast("bigint"))
-        acc = acc.bitwiseOR(bit)
-    return F.when(n > 0, acc).otherwise(F.lit(None).cast("bigint"))
-
-
 def simhash_signatures(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:

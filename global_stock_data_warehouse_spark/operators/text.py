@@ -45,18 +45,6 @@ def token_count(col: Column | str) -> Column:
     return F.size(tokens(col))
 
 
-def bpe_ish_token_count(col: Column | str) -> Column:
-    """Sub-word-ish token estimate: word chunks + digits + punctuation
-    counted separately (a cheap BPE proxy; one regexp pass, no UDF)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.size(
-        F.filter(
-            F.split(c, r"(?<=[\W_])|(?=[\W_])"),
-            lambda t: (t != "") & (t != " "),
-        )
-    )
-
-
 def char_count(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.length(c)

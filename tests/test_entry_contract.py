@@ -47,6 +47,27 @@ def test_oracle_keys_subset_of_queries():
     assert qs - oracles <= approx_ok, f"missing oracles: {qs - oracles - approx_ok}"
 
 
+def test_every_family_query_is_declared_once():
+    """Each top-level ``def q_<name>`` of a family module is ``queries()``
+    entry ``<name>``, in no other family: a query left out of the registry
+    would escape every oracle check, and one name in two families would
+    shadow the other."""
+    import ast
+    import pathlib
+
+    from global_stock_data_warehouse_spark import queries as families
+
+    owner: dict[str, list[str]] = {}
+    for path in sorted(pathlib.Path(families.__file__).parent.glob("*.py")):
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, ast.FunctionDef) and node.name.startswith("q_"):
+                owner.setdefault(node.name[2:], []).append(path.stem)
+    assert not {n: f for n, f in owner.items() if len(f) > 1}
+    qs = entrymod.queries()
+    assert set(owner) == set(qs), set(owner) ^ set(qs)
+    assert all(qs[n].__module__ == f"{families.__name__}.{f[0]}" for n, f in owner.items())
+
+
 def test_oracled_queries_lead_the_dict():
     """The driver checks the FIRST 50 queries() entries: that window must
     be 100% oracled, and every oracled query must precede every rows-only
@@ -143,7 +164,8 @@ def test_lang_marker_lists_match_oracle_stopwords():
     as SQL literals (_STOP); if the engine's LANG_MARKERS ever drift from
     them the oracle would diverge silently — pin them equal."""
     from global_stock_data_warehouse_spark.operators.text import LANG_MARKERS
+    from global_stock_data_warehouse_spark.queries.text import _STOP
 
     assert {k: tuple(v) for k, v in LANG_MARKERS.items()} == {
-        k: tuple(v) for k, v in entrymod._STOP.items()
+        k: tuple(v) for k, v in _STOP.items()
     }

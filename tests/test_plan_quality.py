@@ -38,7 +38,7 @@ def test_column_pruning_reaches_scan(spark, sf_dir):
 
 
 def test_dim_join_broadcasts(spark, sf_dir):
-    plan = _plan(entry.q_regional_revenue(spark, sf_dir))
+    plan = _plan(entry.queries()["regional_revenue"](spark, sf_dir))
     assert "BroadcastHashJoin" in plan
     # region/nation dims must never shuffle the fact side through a
     # sort-merge join
@@ -46,12 +46,12 @@ def test_dim_join_broadcasts(spark, sf_dir):
 
 
 def test_topk_is_take_ordered_not_global_sort(spark, sf_dir):
-    plan = _plan(entry.q_shipping_priority(spark, sf_dir))
+    plan = _plan(entry.queries()["shipping_priority"](spark, sf_dir))
     assert "TakeOrderedAndProject" in plan
 
 
 def test_corpus_clean_single_scan_whole_stage_codegen(spark, sf_dir):
-    plan = _plan(entry.q_corpus_clean(spark, sf_dir))
+    plan = _plan(entry.queries()["corpus_clean"](spark, sf_dir))
     # the whole score -> gate -> dedup pipeline: one scan of documents and
     # exactly one KEYED exchange (the fingerprint window) — nothing else
     # shuffles by key. A single ROUND-ROBIN exchange is the r12
@@ -104,7 +104,7 @@ def test_benford_audit_single_fact_scan(spark, sf_dir):
     100 TB that's two table scans for one number), and since r6 no
     domain join / window either (the whole tail is post-agg constant
     work on one row)."""
-    plan = _plan(entry.q_benford_audit(spark, sf_dir))
+    plan = _plan(entry.queries()["benford_audit"](spark, sf_dir))
     assert plan.count("FileScan parquet") == 1, plan
     assert "Join" not in plan and "Window" not in plan, plan
 
@@ -113,7 +113,7 @@ def test_range_join_preaggregates_fact_side(spark):
     """The interval join must consume per-day partial aggregates, not raw
     lineitem rows: a HashAggregate keyed on l_shipdate sits BELOW the
     join in the plan."""
-    plan = _plan(entry.q_range_join_shipments(spark, "/root/testdata/sf0.001"))
+    plan = _plan(entry.queries()["range_join_shipments"](spark, "/root/testdata/sf0.001"))
     join_at = plan.find("Join")
     agg_at = plan.find("HashAggregate(keys=[l_shipdate")
     assert join_at != -1 and agg_at != -1

@@ -34,12 +34,10 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod  # noqa: E402
+from tools.check_correctness import EPS_QUERIES  # noqa: E402
 
-# rule-4 exclusions, mirrored from tools/check_correctness.py EPS_QUERIES
-EPS = {
-    "rolling_beta", "unigram_logprob", "source_kl",
-    "autocorrelation", "dsir_weights", "nb_self_loglik",
-}
+# rule 4: queries compared under a tolerance are never windowed
+EPS = EPS_QUERIES.keys()
 MAX_AGE_ROUNDS = 4
 
 
